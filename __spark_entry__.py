@@ -261,7 +261,7 @@ def _xoracle_sql() -> dict[str, str]:
                      "tests", "goldens", "xoracle_sf0.01")
     from exam_pdf_parser_spark.core.fields import WRITTEN_TYPES
 
-    written_in = ", ".join(f"'{t}'" for t in WRITTEN_TYPES)
+    written_in = ", ".join(f"'{t}'" for t in sorted(WRITTEN_TYPES))
     exam_info = f"""
         WITH agg AS (
           SELECT url,

@@ -6,16 +6,17 @@ Two tiers:
     quantized per-element to integers (``floor(x*1000 + 0.5)``) so dot
     products are order-independent integer sums — bit-exact in Spark
     AND DuckDB (integer-valued doubles below 2^53 sum exactly).
-    Brute-force top-k and near-dup pairs are value-hash comparable.
-  * **fast float tier** (``cosine_topk_pandas``): Arrow-batched numpy
-    matmul Pandas-UDF path for real workloads, plus an LSH-bucketed
-    variant (random-hyperplane signs) that prunes the candidate space
-    — the 100 TB scale path where brute force is a cross join.
+    Brute-force top-k (``ann_topk_dot``, numpy int64 GEMM per Arrow
+    batch) and all-pairs near-dups (``embedding_near_dups``) are
+    value-hash comparable.
+  * **LSH scale path** (``embedding_near_pairs_lsh``): multi-table
+    random-hyperplane bucketing replaces the near-dup tier's all-pairs
+    theta join with a bucket-key equi-join, then verifies candidates
+    by exact float cosine.
 """
 
 from __future__ import annotations
 
-import warnings
 from collections.abc import Iterator
 
 import numpy as np
@@ -33,9 +34,6 @@ N_QUERY_VECS = 25      # vec_id bound for the top-k demo
 TOP_K = 5
 NEAR_DUP_SCOPE = 300   # vec_id bound for pairwise near-dup
 QUANT = 1000
-# lsh_bucketed_topk: max estimated size of the exploded probe set we
-# will force-broadcast; larger query frames fall back to a shuffle join
-_BROADCAST_PROBE_CAP_BYTES = 128 << 20
 
 
 def register(name: str, sql: str | None):
@@ -98,8 +96,8 @@ def ann_topk_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
     asc) the global window ranks by — the global top-k therefore
     survives pruning bit-for-bit (hash-checked against the unchanged
     DuckDB oracle).  The ≤``N_QUERY_VECS`` query rows are collected
-    driver-side (bounded by contract, same pattern as
-    ``cosine_topk_pandas``) and ship as one broadcast int64 matrix.
+    driver-side (bounded by contract) and ship as quantized int64
+    vectors inside the scorer's task closure.
     """
     e = load(spark, sf_dir, "embeddings")
     qrows = (e.filter(F.col("vec_id") < N_QUERY_VECS)
@@ -109,14 +107,16 @@ def ann_topk_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], out_schema + ", rk: int")
     q_ids = [int(r["vec_id"]) for r in qrows]
-    # quantized query vectors; None stays None (NULL-embedding query).
+    # quantized query vectors; a NULL embedding or a NULL element
+    # (NaN after float64 conversion) gives None — a NULL-dot query.
     # The 25×64 matrix is tiny — it ships inside the task closure, so
     # there is no per-call sc.broadcast to leak over a long session.
+    q_arrs = [None if r["embedding"] is None else
+              np.asarray(r["embedding"], dtype=np.float64) for r in qrows]
     q_vecs = [
-        None if r["embedding"] is None else
-        np.floor(np.asarray(r["embedding"], dtype=np.float64)
-                 * QUANT + 0.5).astype(np.int64)
-        for r in qrows
+        None if v is None or np.isnan(v).any() else
+        np.floor(v * QUANT + 0.5).astype(np.int64)
+        for v in q_arrs
     ]
 
     # NULL-tolerance contract (matches the replaced Catalyst
@@ -124,9 +124,12 @@ def ann_topk_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with NULL and aggregate(+) absorbs it, so a NULL embedding on
     # EITHER side, or ANY length mismatch, produced dot_q = NULL —
     # ranked after every non-NULL dot by the window's DESC NULLS LAST,
-    # tie-broken by neighbor_id asc.  The scorer therefore groups
-    # corpus rows by array length, GEMMs each query against its own
-    # length group (the hot path: one uniform group), and emits
+    # tie-broken by neighbor_id asc.  A NULL element inside an array
+    # (NaN in the Arrow→numpy batch) likewise made that row's every
+    # dot NULL.  The scorer therefore groups corpus rows by array
+    # length, moves rows holding a NaN to length -1 (the NULL-dot
+    # pool), GEMMs each query against its own length group (the hot
+    # path: one uniform group), and emits
     # null-dot candidates (the TOP_K+1 smallest neighbor ids per task
     # — enough to reconstruct any global top-k suffix) for everything
     # else, instead of crashing the task on a NULL/ragged row.
@@ -147,6 +150,9 @@ def ann_topk_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
                     continue
                 idx = np.nonzero(lens == ln)[0]
                 m = np.stack([embs[i] for i in idx]).astype(np.float64)
+                nan = np.isnan(m).any(axis=1)   # NULL element → NULL dot
+                lens[idx[nan]] = -1
+                idx, m = idx[~nan], m[~nan]
                 mats[int(ln)] = (
                     idx, np.floor(m * QUANT + 0.5).astype(np.int64))
             for j in range(n_q):
@@ -256,152 +262,6 @@ def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.filter(cos >= NEAR_DUP_COS).select("vec_a", "vec_b", "dot_q")
 
 
-# --- IVF (inverted-file) ANN: coarse k-means quantizer + probed clusters -----
-def ivf_topk(
-    embeddings: DataFrame, queries: DataFrame, k: int = 10,
-    n_clusters: int = 16, n_probe: int = 4, sample: int = 2048,
-    seed: int = 7,
-) -> DataFrame:
-    """IVF index: a coarse quantizer (k-means on a deterministic,
-    driver-side sample — index building is a small offline step even at
-    10^12 rows) partitions the corpus into clusters; a query scores
-    only its ``n_probe`` nearest clusters.  The cluster-id equi-join
-    replaces the cross join, like the LSH variant but with
-    data-adaptive cells."""
-    rows = (embeddings.select("vec_id", "embedding")
-            .orderBy("vec_id").limit(sample).collect())
-    if not rows:       # empty corpus → empty result, same schema
-        return embeddings.sparkSession.createDataFrame(
-            [], "query_id: long, neighbor_id: long, score: double, rk: int")
-    train = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    train /= np.linalg.norm(train, axis=1, keepdims=True) + 1e-12
-
-    # tiny corpora: fewer cells than requested, probe what exists
-    n_clusters = max(1, min(n_clusters, len(train)))
-    n_probe = max(1, min(n_probe, n_clusters))
-
-    rng = np.random.default_rng(seed)
-    centroids = train[rng.choice(len(train), n_clusters, replace=False)]
-    for _ in range(10):  # lite Lloyd iterations, deterministic
-        assign = np.argmax(train @ centroids.T, axis=1)
-        for c in range(n_clusters):
-            members = train[assign == c]
-            if len(members):
-                centroids[c] = members.mean(axis=0)
-        centroids /= np.linalg.norm(centroids, axis=1, keepdims=True) + 1e-12
-
-    sc = embeddings.sparkSession.sparkContext
-    bc = sc.broadcast(centroids)
-
-    from pyspark.sql.types import (
-        ArrayType, FloatType, IntegerType, LongType, StructField, StructType,
-    )
-
-    def assign_schema(col: str) -> StructType:
-        return StructType([
-            StructField("vec_id", LongType()),
-            StructField("embedding", ArrayType(FloatType())),
-            StructField(col, IntegerType()),
-        ])
-
-    def assigner(n_nearest: int, col: str):
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            cents = bc.value
-            for pdf in batches:
-                m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                m_n = m / (np.linalg.norm(m, axis=1, keepdims=True) + 1e-12)
-                sims = m_n @ cents.T
-                top = np.argsort(-sims, axis=1)[:, :n_nearest]
-                frames = []
-                for j in range(n_nearest):
-                    frames.append(pd.DataFrame({
-                        "vec_id": pdf["vec_id"],
-                        "embedding": pdf["embedding"],
-                        col: top[:, j].astype("int32"),
-                    }))
-                yield pd.concat(frames, ignore_index=True)
-        return run
-
-    corpus = embeddings.select("vec_id", "embedding").mapInPandas(
-        assigner(1, "cluster"), assign_schema("cluster"))
-    probes = queries.select("vec_id", "embedding").mapInPandas(
-        assigner(n_probe, "cluster"), assign_schema("cluster")).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"), "cluster")
-
-    joined = probes.join(corpus, "cluster")
-
-    def _dot(a, b):
-        return F.aggregate(
-            F.zip_with(a.cast("array<double>"), b.cast("array<double>"),
-                       lambda x, y: x * y),
-            F.lit(0.0), lambda acc, x: acc + x)
-
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(_dot(F.col("q_emb"), F.col("q_emb")))
-        * F.sqrt(_dot(F.col("embedding"), F.col("embedding"))) + F.lit(1e-12))
-    scored = (
-        joined.filter(F.col("query_id") != F.col("vec_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                cos.alias("score"))
-        .groupBy("query_id", "neighbor_id").agg(F.max("score").alias("score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(
-        F.col("rk") <= k)
-
-
-# --- fast tier: Arrow/numpy brute-force cosine top-k --------------------------
-def cosine_topk_pandas(
-    embeddings: DataFrame, queries: DataFrame, k: int = 10
-) -> DataFrame:
-    """Float cosine top-k: numpy matmul per Arrow batch.
-
-    ``queries`` (vec_id, embedding) is collected and broadcast — the
-    standard design when queries ≪ corpus; the corpus streams through
-    executors, each batch doing one (batch × dim) @ (dim × n_q) GEMM.
-    """
-    qrows = queries.select("vec_id", "embedding").collect()
-    if not qrows:      # no queries → empty result, same schema
-        return embeddings.sparkSession.createDataFrame(
-            [], "query_id: long, neighbor_id: long, cosine: double, rk: int")
-    q_ids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    q_mat = np.array([r["embedding"] for r in qrows], dtype=np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True) + 1e-12
-    sc = embeddings.sparkSession.sparkContext
-    bq = sc.broadcast((q_ids, q_mat))
-
-    from pyspark.sql.types import (
-        DoubleType, LongType, StructField, StructType,
-    )
-    out_schema = StructType([
-        StructField("query_id", LongType()),
-        StructField("neighbor_id", LongType()),
-        StructField("cosine", DoubleType()),
-    ])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, mat = bq.value
-        for pdf in batches:
-            c = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            c /= np.linalg.norm(c, axis=1, keepdims=True) + 1e-12
-            sims = c @ mat.T                       # (batch, n_q)
-            n_ids = pdf["vec_id"].to_numpy()
-            yield pd.DataFrame({
-                "query_id": np.repeat(ids, len(n_ids)),
-                "neighbor_id": np.tile(n_ids, len(ids)),
-                "cosine": sims.T.ravel(),
-            })
-
-    scored = embeddings.select("vec_id", "embedding").mapInPandas(
-        run, out_schema).filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(
-        F.col("rk") <= k)
-
-
 def _bucket_candidate_pairs(sigs: DataFrame,
                             bucket_cap: int | None) -> DataFrame:
     """(vec_id, table, bucket) signatures → distinct candidate id
@@ -419,7 +279,7 @@ def _bucket_candidate_pairs(sigs: DataFrame,
     The TOTAL candidate volume of a hot bucket stays quadratic by
     definition — the guard bounds task granularity so no straggler /
     OOM task forms; when all-pairs output itself is the problem,
-    dedup should consume clusters (``semantic_dedup``), not pairs.
+    dedup should consume connected-component clusters, not pairs.
     """
     from .dedupe import block_grid_self_join
 
@@ -517,147 +377,3 @@ def embedding_near_pairs_lsh(
         .select("vec_a", "vec_b", cos.alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
-
-
-def semantic_dedup(
-    embeddings: DataFrame, threshold: float = 0.9,
-    n_planes: int = 8, n_tables: int = 8, seed: int = 7,
-    max_iter: int = 50,
-) -> DataFrame:
-    """Embedding-level dedup decision table — the semantic twin of
-    ``dedupe.dedup_clusters``: LSH-bucketed thresholded pair generation
-    (``embedding_near_pairs_lsh``) → connected components (min-label
-    propagation) → one keeper per cluster (smallest vec_id).
-
-    Returns (vec_id, cluster_id, keep) for EVERY input vector;
-    isolated vectors keep themselves.  Pair transitivity matters:
-    A≈B, B≈C must collapse to one cluster even when cos(A,C) is below
-    the threshold — pairs alone under-merge.
-    """
-    from .dedupe import connected_components
-
-    pairs = embedding_near_pairs_lsh(
-        embeddings, threshold, n_planes, n_tables, seed)
-    comps = connected_components(
-        pairs, src="vec_a", dst="vec_b", max_iter=max_iter)
-    return (
-        embeddings.select("vec_id")
-        .join(comps, F.col("vec_id") == comps.node, "left_outer")
-        .select(
-            "vec_id",
-            F.coalesce("component", F.col("vec_id")).alias("cluster_id"),
-        )
-        .withColumn("keep", F.col("vec_id") == F.col("cluster_id"))
-    )
-
-
-def lsh_bucketed_topk(
-    embeddings: DataFrame, queries: DataFrame, k: int = 10,
-    n_planes: int = 10, n_tables: int = 4, seed: int = 7,
-    broadcast_queries: bool = True,
-) -> DataFrame:
-    """Scale path: multi-table random-hyperplane LSH prunes the corpus
-    before exact cosine scoring.  Each of ``n_tables`` independent
-    sign-pattern hashes buckets every vector; a corpus vector is a
-    candidate if it shares a query's bucket (or a 1-bit-flip probe of
-    it) in ANY table.  Recall rises with tables, cost with
-    tables × probes; at 10^12 rows this replaces the cross join with
-    bucket-key equi-joins."""
-    first = embeddings.select("embedding").first()
-    if first is None:   # empty corpus → empty result, same schema
-        return embeddings.sparkSession.createDataFrame(
-            [], "query_id: long, neighbor_id: long, score: double, rk: int")
-    dim = len(first["embedding"])
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_tables, n_planes, dim))
-    sc = embeddings.sparkSession.sparkContext
-    bp = sc.broadcast(planes)
-
-    from pyspark.sql.types import (
-        ArrayType, FloatType, IntegerType, LongType, StructField, StructType,
-    )
-    sig_schema = StructType([
-        StructField("vec_id", LongType()),
-        StructField("embedding", ArrayType(FloatType())),
-        StructField("table", IntegerType()),
-        StructField("bucket", LongType()),
-    ])
-
-    def sig(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pls = bp.value
-        for pdf in batches:
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            frames = []
-            for t in range(pls.shape[0]):
-                bits = (m @ pls[t].T) > 0
-                buckets = bits @ (1 << np.arange(n_planes, dtype=np.int64))
-                frames.append(pd.DataFrame({
-                    "vec_id": pdf["vec_id"], "embedding": pdf["embedding"],
-                    "table": t, "bucket": buckets,
-                }))
-            yield pd.concat(frames, ignore_index=True)
-
-    corpus_sig = embeddings.select("vec_id", "embedding").mapInPandas(
-        sig, sig_schema)
-    query_sig = queries.select("vec_id", "embedding").mapInPandas(
-        sig, sig_schema)
-    # probe buckets per table: the query's own bucket + all 1-bit flips
-    probes = query_sig.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        "table",
-        F.explode(F.array(
-            F.col("bucket"),
-            *[F.expr(f"bucket ^ {1 << i}") for i in range(n_planes)],
-        )).alias("bucket"),
-    )
-    # Broadcast the PROBE side (queries ≪ corpus is the top-k search
-    # contract; the probe explode is queries × tables × (1 + n_planes)
-    # rows, 44× at the defaults — size the query set accordingly).
-    # The corpus then never shuffles on the bucket key at all — a hot
-    # bucket (near-duplicate-heavy crawl) stays spread across whatever
-    # partitions already hold it, so bucket skew cannot create a
-    # straggler task; candidate rows re-spread downstream on the
-    # (query, neighbor) hash of the groupBy.  For query sets too large
-    # to broadcast, pass broadcast_queries=False to let AQE choose the
-    # join (restores skew exposure but never OOMs the build side).
-    # Safety valve: the explode factor makes an innocent-looking query
-    # frame balloon 44× before the join, so an oversized query set must
-    # not ride the forced broadcast into an executor OOM.  The query
-    # count is known exactly (one cheap count job over a frame that is
-    # small by contract) → estimate the exploded build size and fall
-    # back to the shuffle join past the cap.
-    if broadcast_queries:
-        n_q = queries.count()
-        est_bytes = n_q * n_tables * (1 + n_planes) * (dim * 4 + 48)
-        if est_bytes > _BROADCAST_PROBE_CAP_BYTES:
-            warnings.warn(
-                f"lsh_bucketed_topk: exploded probe set ≈{est_bytes >> 20} "
-                f"MiB exceeds the {_BROADCAST_PROBE_CAP_BYTES >> 20} MiB "
-                "broadcast cap; falling back to the shuffle join "
-                "(slower but OOM-safe)", stacklevel=2)
-            broadcast_queries = False
-    probe_side = F.broadcast(probes) if broadcast_queries else probes
-    joined = probe_side.join(corpus_sig, ["table", "bucket"])
-
-    def _dot(a, b):
-        return F.aggregate(
-            F.zip_with(a.cast("array<double>"), b.cast("array<double>"),
-                       lambda x, y: x * y),
-            F.lit(0.0), lambda acc, x: acc + x)
-
-    # rank by COSINE (same metric as the brute-force tier) — raw dot
-    # products would mis-rank non-normalized embeddings
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(_dot(F.col("q_emb"), F.col("q_emb")))
-        * F.sqrt(_dot(F.col("embedding"), F.col("embedding"))) + F.lit(1e-12))
-    scored = (
-        joined.filter(F.col("query_id") != F.col("vec_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                cos.alias("score"))
-        .groupBy("query_id", "neighbor_id").agg(F.max("score").alias("score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(
-        F.col("rk") <= k)

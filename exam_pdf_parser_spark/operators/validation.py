@@ -45,6 +45,18 @@ def validate(
     the parse runs ONCE regardless of caller discipline; the
     checkpointed frames are the small parsed/key tables, not the
     corpus.  Callers that already cache pay one extra tiny copy.
+
+    Release: the checkpoint blocks belong to Spark's ContextCleaner,
+    not to the caller, and there is no handle to unpersist them.
+    Measured with ``getRDDStorageInfo()`` (200 docs, ``local[2]``):
+    the first action caches two RDDs (parsed 4.9 MB + key 3.9 MB);
+    they stay while the result is alive, so reuse never re-parses;
+    after the last Python reference goes they stay until the next
+    driver-JVM GC, which unpersists both (one to two forced
+    ``System.gc()`` rounds in the probe; otherwise Spark's periodic
+    GC, ``spark.cleaner.periodicGC.interval``, 30 min by default).
+    A long-lived service calling ``validate()`` repeatedly keeps each
+    call's tables until such a GC.
     """
     p = parsed.localCheckpoint(eager=False)
     if answer_key is not None:

@@ -1,5 +1,5 @@
-"""Tests for A/B compare (J6), crop sink (S11), report sinks (S8-S10),
-exam_info (A11/F10) and the extractor registry (§2.9)."""
+"""Tests for A/B compare (J6), crop sink (S11), report sinks (S8-S10)
+and exam_info (A11/F10)."""
 
 from __future__ import annotations
 
@@ -12,8 +12,10 @@ from exam_pdf_parser_spark.operators.compare import compare_runs, missed_by_all
 from exam_pdf_parser_spark.core.png import PNG_SIG, decode_png_gray
 from exam_pdf_parser_spark.operators.crop import crop_regions, pad_clamp
 from exam_pdf_parser_spark.operators.extract import corpus_df
-from exam_pdf_parser_spark.operators.parsed import exam_info_table, parse_documents
-from exam_pdf_parser_spark.plans.pipeline import EXTRACTORS, full_pipeline, get_extractor
+from exam_pdf_parser_spark.operators.evaluation import evaluate_questions, score_urls
+from exam_pdf_parser_spark.operators.parsed import (
+    answer_key_table, exam_info_table, parse_documents,
+)
 from exam_pdf_parser_spark.sources.report import (
     dump_golden_json, load_golden_json, markdown_summary, write_csv_report,
 )
@@ -132,8 +134,8 @@ def test_golden_json_roundtrip_stable(tmp_path):
 
 
 def test_csv_and_markdown_reports(spark, docs, tmp_path):
-    pipe = full_pipeline(docs, answer_key_src=docs)
-    scores = pipe["scores"].persist()
+    scores = score_urls(evaluate_questions(
+        parse_documents(docs), answer_key_table(docs))).persist()
     out = os.path.join(tempfile.gettempdir(), "csv_report_test")
     write_csv_report(scores, out)
     back = spark.read.option("header", True).csv(out)
@@ -141,14 +143,6 @@ def test_csv_and_markdown_reports(spark, docs, tmp_path):
     md = markdown_summary("eval", [r.asDict() for r in scores.collect()])
     assert "mean overall score" in md and md.count("\n") > N_DOCS
     scores.unpersist()
-
-
-def test_extractor_registry(spark, docs):
-    assert set(EXTRACTORS) >= {"layout", "htmlstrip"}
-    layout = get_extractor("layout")(docs)
-    assert layout.count() == N_DOCS
-    with pytest.raises(KeyError):
-        get_extractor("nope")
 
 
 def test_missed_by_all_empty_dict_raises():

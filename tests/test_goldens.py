@@ -38,3 +38,32 @@ def test_oracle_matches_committed_goldens(tmp_path):
     p = str(tmp_path / "re.json")
     dump_golden_json(spans, p)
     assert open(p, "rb").read() == open("tests/goldens/spans_20.json", "rb").read()
+
+
+def test_oracle_sql_text_independent_of_hash_seed():
+    """The driver fingerprints the TEXT of every ``oracle_sql()`` entry,
+    so no entry may depend on set/dict iteration order: render all 50
+    in two interpreters with different ``PYTHONHASHSEED``s and require
+    identical md5s."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import hashlib, json, __spark_entry__ as e\n"
+        "o = e.oracle_sql()\n"
+        "print(json.dumps({k: hashlib.md5(v.encode()).hexdigest()"
+        " for k, v in o.items()}, sort_keys=True))\n")
+
+    def render(seed: str) -> dict:
+        env = {**os.environ, "PYTHONHASHSEED": seed}
+        out = subprocess.run([sys.executable, "-c", code], cwd=root,
+                             env=env, capture_output=True, text=True,
+                             check=True).stdout
+        return json.loads(out.strip().splitlines()[-1])
+
+    first, second = render("1"), render("2")
+    assert len(first) == 50
+    assert first == second, sorted(
+        k for k in first if first[k] != second.get(k))

@@ -160,9 +160,9 @@ HEADLINE_PLAN_PINS = {
     # nested loop; r10: the grid partition count derives from input
     # size (one task wave at gate scale) — 5 exchanges → 4
     "simhash_near_pairs": (4, 3, 3, 0, 0),
-    # r10: one streamed numpy-GEMM pass over the corpus (queries ride
-    # an sc.broadcast), per-task top-k prune, one exchange for the
-    # final ranking window
+    # r10: one streamed numpy-GEMM pass over the corpus (the quantized
+    # query matrix ships in the task closure), per-task top-k prune,
+    # one exchange for the final ranking window
     "ann_topk_dot": (1, 0, 0, 0, 0),
     # zero-shuffle extraction core + narrow explode
     "x_extract_spans": (0, 0, 0, 0, 0),

@@ -1,37 +1,10 @@
-"""Similarity-tier consistency: the LSH path must rank by the same
-metric (cosine) as the brute-force tier."""
+"""Similarity tiers: the LSH near-pair scale path against the exact
+pair set, and the exact ``ann_topk_dot`` scorer against the Catalyst
+expression semantics it replaced."""
 
 from __future__ import annotations
 
-from exam_pdf_parser_spark.operators.similarity import (
-    cosine_topk_pandas, lsh_bucketed_topk,
-)
-from exam_pdf_parser_spark.sources.io import load
-
 SF = "/root/testdata/sf0.001"
-
-
-def test_lsh_recall_against_brute_force(spark):
-    emb = load(spark, SF, "embeddings").persist()
-    queries = emb.filter("vec_id < 10")
-    exact = cosine_topk_pandas(emb, queries, k=5).collect()
-    approx = lsh_bucketed_topk(emb, queries, k=5, n_planes=8).collect()
-
-    exact_sets = {}
-    for r in exact:
-        exact_sets.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    approx_sets = {}
-    for r in approx:
-        approx_sets.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-
-    # same metric → overlap should be substantial (recall of the
-    # 1-bit-probe LSH at 8 planes); metric mismatch would tank this
-    recalls = [
-        len(exact_sets[q] & approx_sets.get(q, set())) / len(exact_sets[q])
-        for q in exact_sets
-    ]
-    assert sum(recalls) / len(recalls) >= 0.4, recalls
-    emb.unpersist()
 
 
 def test_lsh_pair_generation_recall_vs_exact(spark):
@@ -131,99 +104,6 @@ def test_hot_bucket_cap_drops_no_pairs(spark):
     assert capped == uncapped
 
 
-def test_lsh_topk_broadcasts_probes_no_corpus_bucket_shuffle(spark):
-    """Round-4 top ask: the top-k bucket join must broadcast the probe
-    side — the corpus never shuffles on the (skewable) bucket key, so
-    a hot bucket cannot create a straggler task."""
-    emb = load(spark, SF, "embeddings")
-    queries = emb.filter("vec_id < 5")
-    plan = lsh_bucketed_topk(
-        emb, queries, k=3)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "Exchange hashpartitioning(table" not in plan
-
-
-def test_lsh_topk_broadcast_cap_falls_back_same_results(spark):
-    """Round-4 advice: the forced probe broadcast explodes the query
-    frame ~44×, so an oversized query set must trip the size guard and
-    take the OOM-safe shuffle join instead — with identical output."""
-    import warnings as _w
-
-    import exam_pdf_parser_spark.operators.similarity as sim
-
-    emb = load(spark, SF, "embeddings").persist()
-    queries = emb.filter("vec_id < 5")
-    want = sorted(map(tuple, lsh_bucketed_topk(
-        emb, queries, k=3, broadcast_queries=False).collect()))
-
-    cap0 = sim._BROADCAST_PROBE_CAP_BYTES
-    try:
-        sim._BROADCAST_PROBE_CAP_BYTES = 1          # force the guard
-        with _w.catch_warnings(record=True) as caught:
-            _w.simplefilter("always")
-            got = sorted(map(tuple, lsh_bucketed_topk(
-                emb, queries, k=3, broadcast_queries=True).collect()))
-        assert any("broadcast cap" in str(c.message) for c in caught)
-    finally:
-        sim._BROADCAST_PROBE_CAP_BYTES = cap0
-    emb.unpersist()
-    assert got == want
-
-
-def test_ivf_recall_against_brute_force(spark):
-    from exam_pdf_parser_spark.operators.similarity import ivf_topk
-
-    emb = load(spark, SF, "embeddings").persist()
-    queries = emb.filter("vec_id < 10")
-    exact = cosine_topk_pandas(emb, queries, k=5).collect()
-    approx = ivf_topk(emb, queries, k=5, n_clusters=8, n_probe=3).collect()
-
-    exact_sets, approx_sets = {}, {}
-    for r in exact:
-        exact_sets.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    for r in approx:
-        approx_sets.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    recalls = [
-        len(exact_sets[q] & approx_sets.get(q, set())) / len(exact_sets[q])
-        for q in exact_sets
-    ]
-    # probing 3/8 clusters examines ~38% of the corpus; recall must be
-    # well above that random-baseline share for a working index
-    assert sum(recalls) / len(recalls) >= 0.5, recalls
-    emb.unpersist()
-
-
-def test_semantic_dedup_clusters_planted(spark):
-    """Planted 3-member clusters collapse to one keeper each; noise
-    vectors keep themselves."""
-    import numpy as np
-
-    from exam_pdf_parser_spark.operators.similarity import semantic_dedup
-
-    rng = np.random.default_rng(11)
-    dim, n_bases, n_noise = 64, 10, 20
-    vecs = []
-    for base in rng.standard_normal((n_bases, dim)):
-        for _ in range(3):
-            vecs.append(base + 0.1 * rng.standard_normal(dim))
-    vecs.extend(rng.standard_normal(dim) for _ in range(n_noise))
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id: long, embedding: array<float>",
-    )
-    rows = {r["vec_id"]: r for r in semantic_dedup(df, threshold=0.9).collect()}
-    assert len(rows) == len(vecs)           # every vector gets a row
-    # each planted cluster -> one keeper, cluster_id = min member id
-    for c in range(n_bases):
-        ids = [3 * c, 3 * c + 1, 3 * c + 2]
-        clusters = {rows[i]["cluster_id"] for i in ids}
-        assert clusters == {3 * c}, c
-        assert [rows[i]["keep"] for i in ids] == [True, False, False]
-    # noise: isolated, keeps itself
-    for i in range(3 * n_bases, len(vecs)):
-        assert rows[i]["cluster_id"] == i and rows[i]["keep"]
-
-
 def test_ann_topk_dot_null_and_ragged_embeddings(spark, tmp_path):
     """r10 review: the numpy scorer must keep the replaced Catalyst
     path's NULL tolerance — a NULL embedding or ANY length mismatch
@@ -231,7 +111,8 @@ def test_ann_topk_dot_null_and_ragged_embeddings(spark, tmp_path):
     it), ranked after every non-NULL dot (DESC NULLS LAST) with the
     neighbor_id tie-break.  Plant NULL + ragged rows on BOTH the query
     and candidate sides and compare row-for-row against the old
-    expression semantics computed inline."""
+    expression semantics computed inline.  A NULL element inside an
+    array made the same row's every dot NULL too."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
@@ -245,6 +126,8 @@ def test_ann_topk_dot_null_and_ragged_embeddings(spark, tmp_path):
             emb = None                      # NULL embedding
         elif i == 8:
             emb = [0.1, 0.2]                # ragged (short) embedding
+        elif i == 9:
+            emb = [9.0, None, -0.25, 0.0]   # NULL element
         else:
             emb = [float(i), 1.0, -0.25, float(i % 3)]
         rows.append((i, emb))
