@@ -13,7 +13,8 @@ anything but format 1), so compressed-WAV payloads decode natively:
     the module)
   * Sun AU (``.snd``): μ-law (1), 8-bit signed PCM (2), 16-bit PCM
     (3), a-law (27)
-  * FLAC via ``core/flac.py`` (native Rice/LPC decode, CRC-guarded)
+  * AVI audio tracks (re-dispatched through the WAV path) and the
+    PCM/G.711 tracks of ISO BMFF and Matroska
 
 mp3/ogg/aac stay fail-loud ``NotImplementedError`` — their
 perceptual decoders hinge on literal spec Huffman codebooks that
@@ -267,10 +268,6 @@ def decode_audio_any(payload: bytes) -> tuple[np.ndarray, int]:
         return _decode_aiff(payload)
     if payload[:4] == b".snd":
         return _decode_au(payload)
-    if payload[:4] == b"fLaC":
-        from .flac import decode_flac
-
-        return decode_flac(payload)
     if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
         # an AVI's interleaved audio track: synthesized into a WAV
         # (auds strf IS a WAVEFORMATEX) and re-dispatched through the
@@ -283,7 +280,7 @@ def decode_audio_any(payload: bytes) -> tuple[np.ndarray, int]:
     if payload[:4] == b"\x1aE\xdf\xa3":
         return _decode_ebml_audio(payload)
     raise NotImplementedError(
-        "only WAV (PCM/µ-law/a-law/IMA-ADPCM), AIFF, AU and FLAC "
+        "only WAV (PCM/µ-law/a-law/IMA-ADPCM), AIFF and AU "
         "decode natively; mp3/ogg/aac need perceptual codecs whose "
         "spec Huffman codebooks cannot be verified in this sandbox — "
         "fail-loud by design")

@@ -141,9 +141,9 @@ def encode_mkv_mjpeg(jpeg_frames: list[bytes], width: int, height: int,
     track in a minimal Matroska file — unlaced SimpleBlocks in one
     Cluster, real Info (TimestampScale × Duration) and Video
     (PixelWidth/PixelHeight) so ``ebml_meta`` reports dims and
-    duration.  Exists (like ``encode_avi_mjpeg`` / ``encode_flac``) to
-    generate test vectors and the mixed-format corpus; it is NOT a
-    general-purpose muxer."""
+    duration.  Exists (like ``encode_avi_mjpeg``) to generate test
+    vectors and the mixed-format corpus; it is NOT a general-purpose
+    muxer."""
     if not jpeg_frames:
         raise ValueError("encode_mkv_mjpeg needs at least one frame")
 

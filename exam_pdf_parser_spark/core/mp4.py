@@ -60,9 +60,9 @@ def encode_mp4_mjpeg(jpeg_frames: list[bytes], width: int, height: int,
     """Forward writer: wrap whole JPEG streams as an MJPEG ('jpeg')
     video track in a minimal ISO BMFF file — one mdat chunk, per-sample
     stsz, a single stsc rule, real mvhd/tkhd so ``mp4_meta`` reports
-    dims and duration.  Exists (like ``encode_avi_mjpeg`` /
-    ``encode_flac``) to generate test vectors and the mixed-format
-    corpus; it is NOT a general-purpose muxer."""
+    dims and duration.  Exists (like ``encode_avi_mjpeg``) to
+    generate test vectors and the mixed-format corpus; it is NOT a
+    general-purpose muxer."""
     if not jpeg_frames:
         raise ValueError("encode_mp4_mjpeg needs at least one frame")
 

@@ -48,7 +48,8 @@ def assert_exact_tier(df, n_max: int, scale_twin: str):
     (already filtered/pruned) input is one cheap job; above ``n_max``
     the call fails LOUDLY naming the bucketed scale twin instead of
     launching a quadratic join that would never finish at corpus
-    scale."""
+    scale.  Build-time job: the ``df.count()`` runs as one Spark job
+    while the caller builds its DataFrame, before any action on it."""
     n = df.count()
     if n > n_max:
         raise ValueError(
@@ -274,6 +275,9 @@ def block_grid_self_join(keys: DataFrame, id_col: str,
     that ride along both sides into the output (e.g. the simhash
     value for in-join verification).  They must be functionally
     dependent on the id so the pair-dedup pick is stable.
+
+    Build-time job: when ``cap`` is set, ``keys.count()`` (which sizes
+    the grid) runs as one Spark job while the DataFrame is built.
     """
     if cap is not None:
         # three consumers read `keys` (hot counts + both join sides);
@@ -355,6 +359,11 @@ def lsh_pairs_from_tokens(t: DataFrame,
     amplifier.  Verification joins the small candidate-pair set back
     to one (doc_id, toks, n) table: two narrow hash joins sized by
     the number of colliding pairs, not by corpus × bands.
+
+    Build-time job: ``cands.count()`` (which picks the broadcast hint
+    for the first verification join) runs the band join as a Spark
+    job while the DataFrame is built, after ``block_grid_self_join``'s
+    own ``keys.count()`` when ``band_cap`` is set.
     """
     sigs = t.groupBy("doc_id").agg(
         *[F.min(F.md5(F.concat(F.lit(f"{s}:"), F.col("token"))))

@@ -4,11 +4,10 @@ style — north rule).
 
 Two layers:
   * :func:`strip_html_bytes` — per-document pure function over raw
-    HTML: parse blocks (lxml when importable, regex fallback —
-    deterministic either way because the block segmentation is
-    tag-driven), score each block by link density / text density /
-    length, keep content blocks.  Shared by pytest oracle + the
-    ``mapInPandas`` stage.
+    HTML: segment blocks with tag-driven regexes (deterministic on
+    every machine, no parser dependency), score each block by link
+    density / text density / length, keep content blocks.  Shared by
+    pytest oracle + the ``mapInPandas`` stage.
   * :func:`strip_text_lines` — Spark-native line-level variant for the
     pre-extracted ``text`` column (nav/footer markers) using only JVM
     expressions: split → per-line density filters → re-join.
@@ -52,55 +51,9 @@ def _text_of(fragment: str) -> str:
     return _WS_RE.sub(" ", _TAG_RE.sub(" ", fragment)).strip()
 
 
-_BLOCK_XPATH = ("//p|//div|//article|//section|//li|//h1|//h2|//h3|//h4"
-                "|//h5|//h6|//td|//blockquote|//pre")
-_DROP_XPATH = "//script|//style|//nav|//header|//footer|//aside"
-
-
-def _block_scores_lxml(html: str) -> list[dict] | None:
-    """Real-DOM segmentation via lxml (OPT-IN: segmentation differs
-    from the regex path on nested block elements, so it must be chosen
-    explicitly rather than silently activating wherever lxml happens
-    to be installed — byte determinism is environment-independent by
-    default)."""
-    try:
-        from lxml import html as lhtml
-    except ImportError:
-        return None
-    try:
-        tree = lhtml.fromstring(html)
-    except Exception:
-        return []
-    for el in tree.xpath(_DROP_XPATH):
-        el.drop_tree()
-    blocks = []
-    for el in tree.xpath(_BLOCK_XPATH):
-        text = _WS_RE.sub(" ", el.text_content()).strip()
-        if not text:
-            continue
-        link_chars = sum(
-            len(_WS_RE.sub(" ", a.text_content()).strip())
-            for a in el.xpath(".//a"))
-        n = len(text)
-        blocks.append({
-            "text": text,
-            "n_chars": n,
-            "link_density": link_chars / n if n else 1.0,
-        })
-    return blocks
-
-
-def block_scores(html: str, use_lxml: bool = False) -> list[dict]:
-    """Segment HTML into blocks with (text, link_density, n_chars).
-
-    Default: deterministic regex segmentation (identical on every
-    machine).  ``use_lxml=True`` switches to real-DOM parsing where
-    lxml is installed — note nested block elements then contribute one
-    block per ancestor, a different segmentation."""
-    if use_lxml:
-        via_lxml = _block_scores_lxml(html)
-        if via_lxml is not None:
-            return via_lxml
+def block_scores(html: str) -> list[dict]:
+    """Segment HTML into blocks with (text, link_density, n_chars) by
+    deterministic regex segmentation (identical on every machine)."""
     html = _SCRIPT_RE.sub(" ", html)
     blocks = []
     for m in _BLOCK_RE.finditer(html):

@@ -7,33 +7,25 @@ compositing), baseline/progressive JPEG incl. EXIF orientation,
 12-bit precision and 4-component Adobe CMYK/YCCK frames,
 TIFF (none/LZW+predictor/
 JPEG-strips/deflate/PackBits, strip- or tile-organized, gray incl.
-16-bit/RGB/RGBA/palette/CMYK/YCbCr), BMP (1/4/8/16/24/32-bit,
-BI_BITFIELDS, RLE4/RLE8, OS/2 core header) and lossless WebP
-(``core/vp8l.py`` — full VP8L bitstream: prefix codes, meta groups,
-color cache, LZ77 distance map, all four inverse transforms) decode
-via the repo's stdlib codecs
-(``core/{png,gif,jpeg,tiff,bmp,vp8l}.py``), with genuine pixel
-features (``image_pixel_features``) and pixel-level block-mean
+16-bit/RGB/RGBA/palette/CMYK/YCbCr) and BMP (1/4/8/16/24/32-bit,
+BI_BITFIELDS, RLE4/RLE8, OS/2 core header) decode via the repo's
+stdlib codecs (``core/{png,gif,jpeg,tiff,bmp}.py``), with genuine
+pixel features (``image_pixel_features``) and pixel-level block-mean
 resize.  The AUDIO path (``core/audio.py``): WAV PCM 8/16/24/32 +
 WAVE_FORMAT_EXTENSIBLE, G.711 µ-law/a-law, mono+stereo IMA-ADPCM,
-AIFF/AIFF-C, Sun AU, and native FLAC (``core/flac.py`` — the full
-mandatory decode surface) — ``decode_audio`` + ``wav_audio_features``
-(duration, RMS, peak, zero crossings).  The VIDEO path: MJPEG-in-AVI
-(``core/avi.py`` RIFF walk + per-frame JPEG) and animated GIF —
-``decode_video`` + per-frame ``video_frame_features`` (dims, mean
-intensity, motion) with image-style quarantine.  ``parse_meta`` also
-reads real headers for formats whose PAYLOAD cannot decode here:
-WebP dims, MP3 frame header (+Xing/Info/VBRI frame counts), ADTS
-AAC frame trains, Ogg/Vorbis+Opus ident with last-page granule
-duration, ISO BMFF mp4/m4a (``core/mp4.py``: mvhd duration, tkhd
-dims, hdlr kinds) and Matroska/WebM (``core/ebml.py``: Info
-duration, Tracks dims).  Perceptual codecs (mp3/ogg/aac samples,
-mp4/webm/mkv SAMPLES, lossy VP8 pixels) stay honestly stubbed
-(``NotImplementedError``) — their decoders hinge on literal spec
-Huffman codebooks unverifiable in this sandbox — while everything
-Spark-side is real and tested: schemas, batch shapes,
-``mapInPandas`` signatures, partitioning, and a codec-free
-byte-histogram embedding.
+AIFF/AIFF-C, Sun AU, AVI audio tracks and the PCM/G.711 tracks of
+ISO BMFF and Matroska — ``decode_audio`` + ``wav_audio_features``
+(duration, RMS, peak, zero crossings).  The VIDEO path: MJPEG/rawvideo-in-AVI
+(``core/avi.py`` RIFF walk + per-frame JPEG/BMP), MJPEG-in-BMFF
+(``core/mp4.py``), MJPEG-in-Matroska (``core/ebml.py``) and animated
+GIF — ``decode_video`` + per-frame ``video_frame_features`` (dims,
+mean intensity, motion) with image-style quarantine.  ``parse_meta``
+and ``track_inventory`` recognize only containers that some decoder
+here handles; BMFF/Matroska tracks in other codecs (H.264, VP9, AAC…)
+report their header metadata and ``decodable=false`` and fail loudly
+(``NotImplementedError``) at sample decode.  Spark-side everything is
+real and tested: schemas, batch shapes, ``mapInPandas`` signatures,
+partitioning, and a codec-free byte-histogram embedding.
 
 XMED1 payload format (synthetic): b"XMED1" + kind(1B: I/A/V) +
 width(2B) + height(2B) + n_frames(2B) + body bytes (seeded).
@@ -106,29 +98,23 @@ def media_corpus(spark: SparkSession, n: int, seed: int = 42,
 
 def parse_meta(payload: bytes) -> dict:
     """Decode the typed header: the synthetic container, plus REAL
-    header-only metadata for every recognized format — PNG IHDR, JPEG
-    SOF, GIF screen descriptor + frame count, TIFF first IFD, BMP,
-    WebP (VP8/VP8L/VP8X), AVI avih, ISO BMFF mp4/mov/m4a (moov/mvhd
+    header-only metadata for every container the decoders here handle
+    — PNG IHDR, JPEG SOF, GIF screen descriptor + frame count, TIFF
+    first IFD, BMP, AVI avih, ISO BMFF mp4/mov/m4a (moov/mvhd
     duration, tkhd dims, hdlr kinds), Matroska/WebM EBML (Segment/Info
     duration, Tracks dims), WAV fmt (incl. compressed codecs), AIFF,
-    AU, MP3 frame header, Ogg first packet.  Header probes never need
-    a pixel/sample codec; see ``decode_image`` / ``decode_audio`` /
-    ``decode_video`` for what PAYLOAD decode covers.  BMFF/EBML
-    results carry an extra ``duration_ms`` key for Python callers."""
+    AU.  Header probes never need a pixel/sample codec; see
+    ``decode_image`` / ``decode_audio`` / ``decode_video`` for what
+    PAYLOAD decode covers.  BMFF/EBML results carry an extra
+    ``duration_ms`` key for Python callers."""
     if payload[:5] == MAGIC and len(payload) >= 12:
         kind = KINDS.get(chr(payload[5]))
         w, h, f = struct.unpack(">HHH", payload[6:12])
         return {"kind": kind, "width": w, "height": h, "n_frames": f,
                 "valid": "ok"}
-    # the two weak-sync probes (_adts_meta 12 bits, _mp3_meta 11
-    # bits) run LAST: any container with an early 0xFF Ex byte pair
-    # must get claimed by its real probe first.  Both demand a second
-    # consecutive frame header, and their layer bits are disjoint, so
-    # neither can claim the other's stream.
     for probe in (_png_dims, _jpeg_dims, _gif_dims, _tiff_bmp_dims,
-                  _webp_dims, _avi_dims, _bmff_meta, _ebml_probe,
-                  _wav_meta, _flac_meta, _aiff_au_meta, _ogg_meta,
-                  _adts_meta, _mp3_meta):
+                  _avi_dims, _bmff_meta, _ebml_probe, _wav_meta,
+                  _aiff_au_meta):
         meta = probe(payload)
         if meta is not None:
             return meta
@@ -206,23 +192,6 @@ def _wav_meta(payload: bytes) -> dict | None:
             "n_frames": info["n_frames"], "valid": "ok"}
 
 
-def _flac_meta(payload: bytes) -> dict | None:
-    """FLAC STREAMINFO → audio metadata (rate, channels, total sample
-    frames) with no frame decode (``core/flac.py``)."""
-    if payload[:4] != b"fLaC":
-        return None
-    from ..core.flac import parse_streaminfo
-
-    try:
-        info = parse_streaminfo(payload)
-    except Exception:
-        return {"kind": "audio", "width": None, "height": None,
-                "n_frames": None, "valid": "corrupt"}
-    return {"kind": "audio", "width": info["rate"],
-            "height": info["channels"],
-            "n_frames": info["total_samples"] or None, "valid": "ok"}
-
-
 def _aiff_au_meta(payload: bytes) -> dict | None:
     """AIFF/AIFF-C and Sun AU headers → audio metadata."""
     from ..core.audio import aiff_info, au_info
@@ -251,226 +220,6 @@ def _tiff_bmp_dims(payload: bytes) -> dict | None:
         return None
     return {"kind": "image", "width": dims[0], "height": dims[1],
             "n_frames": 1, "valid": "ok"}
-
-
-def _webp_dims(payload: bytes) -> dict | None:
-    """WebP header dims without any VP8 decode: RIFF/WEBP container
-    with VP8 (lossy frame header), VP8L (lossless signature word) or
-    VP8X (extended canvas) payloads."""
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WEBP" \
-            or len(payload) < 16:
-        return None
-    four = payload[12:16]
-    try:
-        if four == b"VP8 " and len(payload) >= 30:
-            # lossy: 3-byte frame tag, then 0x9D012A sync, then dims
-            if payload[23:26] != b"\x9d\x01\x2a":
-                raise ValueError
-            w, h = struct.unpack("<HH", payload[26:30])
-            return {"kind": "image", "width": w & 0x3FFF,
-                    "height": h & 0x3FFF, "n_frames": 1, "valid": "ok"}
-        if four == b"VP8L" and len(payload) >= 25:
-            if payload[20] != 0x2F:      # lossless signature byte
-                raise ValueError
-            (bits,) = struct.unpack("<I", payload[21:25])
-            return {"kind": "image", "width": (bits & 0x3FFF) + 1,
-                    "height": ((bits >> 14) & 0x3FFF) + 1,
-                    "n_frames": 1, "valid": "ok"}
-        if four == b"VP8X" and len(payload) >= 30:
-            w = int.from_bytes(payload[24:27], "little") + 1
-            h = int.from_bytes(payload[27:30], "little") + 1
-            return {"kind": "image", "width": w, "height": h,
-                    "n_frames": None, "valid": "ok"}
-    except Exception:
-        pass
-    return {"kind": "image", "width": None, "height": None,
-            "n_frames": None, "valid": "corrupt"}
-
-
-_MP3_BITRATES = (0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192,
-                 224, 256, 320, 0)              # MPEG-1 Layer III, kbps
-_MP3_RATES = (44100, 48000, 32000, 0)
-
-
-def _mp3_frame_len(payload: bytes, pos: int) -> int | None:
-    """Frame length in bytes iff a valid MPEG-1 Layer III frame header
-    starts at POS (incl. the padding bit), else None."""
-    if pos + 4 > len(payload):
-        return None
-    h = payload[pos:pos + 4]
-    if h[0] != 0xFF or (h[1] & 0xE0) != 0xE0 \
-            or ((h[1] >> 3) & 0x03) != 3 or ((h[1] >> 1) & 0x03) != 1:
-        return None
-    bitrate = _MP3_BITRATES[(h[2] >> 4) & 0x0F]
-    rate = _MP3_RATES[(h[2] >> 2) & 0x03]
-    if not bitrate or not rate:
-        return None
-    return 144 * bitrate * 1000 // rate + ((h[2] >> 1) & 0x01)
-
-
-def _mp3_meta(payload: bytes) -> dict | None:
-    """MPEG audio frame-header metadata (no decode): sample rate,
-    channels, and a duration-derived frame estimate from the first
-    MPEG-1 Layer III sync found near the head (ID3v2 tags skipped).
-
-    The 11-bit sync is weak — ~1-in-8 random blobs carry one 0xFF
-    Ex pair somewhere in a 4 KB window — so a lone header is NOT
-    accepted: a second consecutive valid frame header must sit exactly
-    at ``sync + frame_len`` (the defining self-consistency of an MPEG
-    frame stream) before the payload is reported as audio."""
-    pos = 0
-    if payload[:3] == b"ID3" and len(payload) >= 10:
-        size = ((payload[6] & 0x7F) << 21) | ((payload[7] & 0x7F) << 14) \
-            | ((payload[8] & 0x7F) << 7) | (payload[9] & 0x7F)
-        pos = 10 + size
-    # scan FORWARD through the window: stray 0xFF bytes in leading
-    # junk must not end the probe before the real frame sync
-    sync = None
-    search = pos
-    while True:
-        cand = payload.find(b"\xff", search, pos + 4096)
-        if cand < 0:
-            return None
-        frame_bytes = _mp3_frame_len(payload, cand)
-        if frame_bytes is not None \
-                and _mp3_frame_len(payload, cand + frame_bytes) is not None:
-            sync = cand
-            break
-        search = cand + 1
-    h = payload[sync:sync + 4]
-    rate = _MP3_RATES[(h[2] >> 2) & 0x03]
-    channels = 1 if ((h[3] >> 6) & 0x03) == 3 else 2
-    # VBR headers beat byte-count estimation: a Xing/Info (or VBRI)
-    # tag in the first frame carries the true frame count, which a
-    # constant-bitrate extrapolation gets wrong on VBR files
-    n_frames = None
-    side = 17 if channels == 1 else 32   # MPEG-1 side-info bytes
-    crc = 0 if (h[1] & 0x01) else 2      # protection bit 0 → CRC-16
-    tag_off = sync + 4 + crc + side
-    tag = payload[tag_off:tag_off + 4]
-    if tag in (b"Xing", b"Info") and tag_off + 12 <= len(payload):
-        (flags,) = struct.unpack_from(">I", payload, tag_off + 4)
-        if flags & 0x01:
-            (frames,) = struct.unpack_from(">I", payload, tag_off + 8)
-            n_frames = frames * 1152
-    elif payload[sync + 36:sync + 40] == b"VBRI" \
-            and sync + 36 + 18 <= len(payload):
-        (frames,) = struct.unpack_from(">I", payload, sync + 36 + 14)
-        n_frames = frames * 1152
-    if n_frames is None:
-        # 1152 samples per MPEG-1 Layer III frame
-        n_frames = (len(payload) - sync) // max(1, frame_bytes) * 1152
-    return {"kind": "audio", "width": rate, "height": channels,
-            "n_frames": n_frames, "valid": "ok"}
-
-
-_ADTS_RATES = (96000, 88200, 64000, 48000, 44100, 32000, 24000,
-               22050, 16000, 12000, 11025, 8000, 7350, 0, 0, 0)
-
-
-def _adts_frame_len(payload: bytes, pos: int) -> int | None:
-    """Frame length iff a plausible ADTS AAC frame header starts at
-    POS (12-bit sync, layer 00, a defined sampling index)."""
-    if pos + 7 > len(payload):
-        return None
-    h = payload[pos:pos + 7]
-    if h[0] != 0xFF or (h[1] & 0xF6) != 0xF0:
-        return None
-    if not _ADTS_RATES[(h[2] >> 2) & 0x0F]:
-        return None
-    fl = ((h[3] & 0x03) << 11) | (h[4] << 3) | (h[5] >> 5)
-    return fl if fl >= 7 else None
-
-
-def _adts_meta(payload: bytes) -> dict | None:
-    """ADTS AAC frame-header metadata (no decode).  Same rigor as the
-    MP3 probe: the sync is weak, so a second consecutive valid header
-    must sit exactly at ``sync + frame_len`` before the payload is
-    reported as audio; frames are then counted by walking the chain
-    (1024 samples per raw data block)."""
-    pos = 0
-    if payload[:3] == b"ID3" and len(payload) >= 10:
-        size = ((payload[6] & 0x7F) << 21) | ((payload[7] & 0x7F) << 14) \
-            | ((payload[8] & 0x7F) << 7) | (payload[9] & 0x7F)
-        pos = 10 + size
-    sync = None
-    search = pos
-    while True:
-        cand = payload.find(b"\xff", search, pos + 4096)
-        if cand < 0:
-            return None
-        fl = _adts_frame_len(payload, cand)
-        if fl is not None and _adts_frame_len(payload, cand + fl):
-            sync = cand
-            break
-        search = cand + 1
-    h = payload[sync:sync + 7]
-    rate = _ADTS_RATES[(h[2] >> 2) & 0x0F]
-    chan_cfg = ((h[2] & 0x01) << 2) | (h[3] >> 6)
-    frames = 0
-    at = sync
-    while True:
-        fl = _adts_frame_len(payload, at)
-        if fl is None:
-            break
-        blocks = (payload[at + 6] & 0x03) + 1
-        frames += blocks
-        at += fl
-    return {"kind": "audio", "width": rate,
-            "height": chan_cfg or None,
-            "n_frames": frames * 1024, "valid": "ok"}
-
-
-def _ogg_last_granule(payload: bytes) -> int | None:
-    """Granule position of the last plausible Ogg page header —
-    scanned from the tail so packet bytes that merely contain "OggS"
-    are rejected by the version/header-type plausibility check."""
-    idx = payload.rfind(b"OggS")
-    while idx >= 0:
-        # 27 = the minimal page header (capture + version + type +
-        # granule + serial + seq + crc + segment count)
-        if idx + 27 <= len(payload) and payload[idx + 4] == 0 \
-                and payload[idx + 5] <= 0x07:
-            (g,) = struct.unpack_from("<q", payload, idx + 6)
-            if g >= 0:
-                return g
-        idx = payload.rfind(b"OggS", 0, idx)
-    return None
-
-
-def _ogg_meta(payload: bytes) -> dict | None:
-    """Ogg container: codec-aware first-packet probe — Vorbis and
-    Opus report rate/channels and a duration-bearing sample count
-    from the LAST page's granule position (PCM samples for Vorbis;
-    48 kHz ticks minus pre-skip for Opus), FLAC/Speex report as audio
-    and Theora as video with null parameters; unknown codecs stay
-    corrupt."""
-    if payload[:4] != b"OggS":
-        return None
-    head = payload[:512]
-    idx = head.find(b"\x01vorbis")
-    if idx >= 0 and idx + 16 <= len(payload):
-        channels = payload[idx + 11]
-        (rate,) = struct.unpack_from("<I", payload, idx + 12)
-        return {"kind": "audio", "width": rate, "height": channels,
-                "n_frames": _ogg_last_granule(payload), "valid": "ok"}
-    idx = head.find(b"OpusHead")
-    if idx >= 0 and idx + 16 <= len(payload):
-        channels = payload[idx + 9]
-        (pre_skip,) = struct.unpack_from("<H", payload, idx + 10)
-        (rate,) = struct.unpack_from("<I", payload, idx + 12)
-        g = _ogg_last_granule(payload)
-        n = max(0, g - pre_skip) if g is not None else None
-        return {"kind": "audio", "width": rate, "height": channels,
-                "n_frames": n, "valid": "ok"}
-    if head.find(b"\x7fFLAC") >= 0 or head.find(b"Speex   ") >= 0:
-        return {"kind": "audio", "width": None, "height": None,
-                "n_frames": None, "valid": "ok"}
-    if head.find(b"\x80theora") >= 0:
-        return {"kind": "video", "width": None, "height": None,
-                "n_frames": None, "valid": "ok"}
-    return {"kind": None, "width": None, "height": None,
-            "n_frames": None, "valid": "corrupt"}
 
 
 def _avi_dims(payload: bytes) -> dict | None:
@@ -535,10 +284,10 @@ _I32_MAX = (1 << 31) - 1
 
 
 def _sat32(v: int | None) -> int | None:
-    """Saturate to the int32 schema column.  FLAC total_samples is a
-    36-bit field, Ogg granules are int64 and Xing counts uint32×1152 —
-    all spec-legal beyond int32; silent Arrow wraparound would report
-    a wrong (possibly negative) count, so clamp at the schema max."""
+    """Saturate to the int32 schema column.  WAV frame counts are
+    uint32 (data size / block align), spec-legal beyond int32; silent
+    Arrow wraparound would report a wrong (possibly negative) count,
+    so clamp at the schema max."""
     return v if v is None or v <= _I32_MAX else _I32_MAX
 
 
@@ -709,11 +458,12 @@ def decode_audio(payload: bytes) -> tuple[np.ndarray, int]:
     float64 samples in [-1, 1], sample rate).  Supported: WAV with
     PCM 8/16/24/32-bit, G.711 µ-law/a-law, and IMA-ADPCM (the
     RIFF fmt chunk is walked directly — the stdlib ``wave`` module
-    refuses non-PCM); AIFF/AIFF-C; Sun AU (µ-law/a-law/PCM); FLAC;
-    and an AVI's interleaved audio track (reassembled as a WAV from
-    the auds WAVEFORMATEX + ``..wb`` chunks, then re-dispatched).
-    Multi-channel input is averaged to mono.  mp3/ogg/aac need
-    perceptual codecs with no stdlib path — they raise loudly."""
+    refuses non-PCM); AIFF/AIFF-C; Sun AU (µ-law/a-law/PCM); an
+    AVI's interleaved audio track (reassembled as a WAV from the auds
+    WAVEFORMATEX + ``..wb`` chunks, then re-dispatched); and the
+    PCM/G.711 audio tracks of ISO BMFF and Matroska.  Multi-channel
+    input is averaged to mono.  Anything else raises
+    ``NotImplementedError``."""
     from ..core.audio import decode_audio_any
 
     return decode_audio_any(payload)
@@ -773,14 +523,10 @@ def decode_image(payload: bytes) -> np.ndarray:
     approximation + IDCT, luma plane; 4-component Adobe CMYK/YCCK via
     the ink transform), TIFF (``core/tiff.py`` —
     none/LZW+predictor/JPEG-strips/deflate/PackBits, gray/RGB/RGBA/
-    palette/CMYK/YCbCr incl. subsampled data units), BMP
+    palette/CMYK/YCbCr incl. subsampled data units) and BMP
     (``core/bmp.py``, 1/4/8/16/24/32-bit incl. BI_BITFIELDS,
-    RLE4/RLE8 and the OS/2 core header) and lossless WebP
-    (``core/vp8l.py`` — full VP8L:
-    prefix codes, meta groups, color cache, LZ77 distance map, all
-    four inverse transforms) — all REAL, no raster library.  Only
-    containers with no native path (lossy VP8, arithmetic JPEG…)
-    fall back to Pillow when available, else raise loudly."""
+    RLE4/RLE8 and the OS/2 core header) — all REAL, no raster
+    library.  Any other container raises ``NotImplementedError``."""
     from ..core.bmp import BMP_SIG, decode_bmp_gray
     from ..core.gif import GIF_SIGS, decode_gif_gray
     from ..core.jpeg import decode_jpeg_gray
@@ -797,21 +543,6 @@ def decode_image(payload: bytes) -> np.ndarray:
         return decode_tiff_gray(payload)
     if payload[:2] == BMP_SIG:
         return decode_bmp_gray(payload)
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        from ..core.vp8l import decode_webp_gray
-
-        # VP8L decodes natively; lossy VP8 raises from core/vp8l.py
-        return decode_webp_gray(payload)
-    try:
-        from PIL import Image  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "lossy-VP8 WebP decoding requires Pillow; PNG, GIF, "
-            "baseline/progressive JPEG, baseline TIFF, BMP and "
-            "LOSSLESS WebP decode natively via "
-            "core/{png,gif,jpeg,tiff,bmp,vp8l}.py — swap this "
-            "fallback for Image.open(...) in a full environment"
-        ) from e
     raise NotImplementedError("unrecognized image container stubbed")
 
 
@@ -998,7 +729,7 @@ def real_media_corpus(spark: SparkSession, n: int, seed: int = 42,
     """Deterministic media table that rotates through the REAL
     encoders this repo carries — the shape of a mixed crawl batch:
     images cycle PNG/GIF/JPEG/TIFF (codec-rotated)/BMP, audio cycles
-    WAV-PCM/µ-law/IMA-ADPCM/FLAC/AIFF/AU, video cycles the four
+    WAV-PCM/µ-law/IMA-ADPCM/AIFF/AU, video cycles the four
     container paths MJPEG-AVI / rawvideo-AVI / MJPEG-in-BMFF /
     MJPEG-in-Matroska.  Every payload round-trips through parse_meta
     and its kind's feature operator (see ``test_real_media_corpus_mixed``
@@ -1007,7 +738,6 @@ def real_media_corpus(spark: SparkSession, n: int, seed: int = 42,
     from ..core.avi import encode_avi_raw8
     from ..core.bmp import encode_bmp_gray
     from ..core.ebml import encode_mkv_mjpeg
-    from ..core.flac import encode_flac
     from ..core.gif import encode_gif_gray
     from ..core.jpeg import encode_jpeg_gray
     from ..core.mp4 import encode_mp4_mjpeg
@@ -1038,7 +768,7 @@ def real_media_corpus(spark: SparkSession, n: int, seed: int = 42,
         if kind == "audio":
             t = np.arange(2000 + (i % 5) * 400) / 8000.0
             sine = 0.4 * np.sin(2 * np.pi * (200 + i % 7 * 60) * t)
-            enc = (i // 3) % 6
+            enc = (i // 3) % 5
             if enc == 0:
                 return kind, encode_wav(sine, 8000, "pcm")
             if enc == 1:
@@ -1046,10 +776,6 @@ def real_media_corpus(spark: SparkSession, n: int, seed: int = 42,
             if enc == 2:
                 return kind, encode_wav(sine, 8000, "adpcm")
             if enc == 3:
-                pcm = (np.clip(sine, -1, 1) * 32767).astype(np.int64)
-                return kind, encode_flac(pcm, 8000, bps=16,
-                                         blocksize=1024)
-            if enc == 4:
                 return kind, encode_aiff(sine, 8000)
             return kind, encode_au(sine, 8000, "pcm16")
         frames = [np.full((16, 16), (f * 37 + i) % 255, np.uint8)
@@ -1318,18 +1044,6 @@ def track_inventory(payload: bytes) -> list[dict]:
         return [row("tiff", 0, "image", "tiff", 1, True)]
     if payload[:2] == b"BM":
         return [row("bmp", 0, "image", "bmp", 1, True)]
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        from ..core.avi import riff_chunks
-
-        # real chunk walk (not a byte scan): VP8X-extended files put
-        # ICCP/EXIF/ALPH before the frame chunk, and 'VP8L' can occur
-        # as data inside a lossy VP8 stream
-        end = min(len(payload),
-                  8 + struct.unpack_from("<I", payload, 4)[0])
-        fourccs = [f for f, _, _ in riff_chunks(payload, 12, end)]
-        lossless = b"VP8L" in fourccs
-        return [row("webp", 0, "image",
-                    "vp8l" if lossless else "vp8", 1, lossless)]
     if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
         from ..core.audio import wav_info
 
@@ -1357,17 +1071,6 @@ def track_inventory(payload: bytes) -> list[dict]:
                     f"au_enc{info.get('encoding')}", n,
                     info.get("encoding") in (1, 2, 3, 27)
                     and bool(info.get("rate")))]
-    if payload[:4] == b"fLaC":
-        return [row("flac", 0, "audio", "flac", n, True)]
-    if payload[:4] == b"OggS":
-        codec = ("opus" if b"OpusHead" in payload[:128] else
-                 "vorbis" if b"vorbis" in payload[:128] else None)
-        return [row("ogg", 0, "audio", codec, n, False)]
-    if payload[:2] in (b"\xff\xfb", b"\xff\xfa", b"\xff\xf3",
-                       b"\xff\xf2", b"\xff\xe3") or payload[:3] == b"ID3":
-        return [row("mp3", 0, "audio", "mpeg-audio", n, False)]
-    if payload[:2] in (b"\xff\xf1", b"\xff\xf9"):
-        return [row("adts", 0, "audio", "aac", n, False)]
     # parse_meta recognized it but no container branch did: report the
     # kind without codec detail rather than invent one
     return [row("unknown", 0, meta["kind"], None, n, False)]

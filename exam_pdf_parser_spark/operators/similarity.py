@@ -97,7 +97,9 @@ def ann_topk_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
     survives pruning bit-for-bit (hash-checked against the unchanged
     DuckDB oracle).  The ≤``N_QUERY_VECS`` query rows are collected
     driver-side (bounded by contract) and ship as quantized int64
-    vectors inside the scorer's task closure.
+    vectors inside the scorer's task closure.  Build-time job: that
+    query-row ``collect()`` runs as one Spark job while the DataFrame
+    is built.
     """
     e = load(spark, sf_dir, "embeddings")
     qrows = (e.filter(F.col("vec_id") < N_QUERY_VECS)

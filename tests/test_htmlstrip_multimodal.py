@@ -224,6 +224,11 @@ def test_header_only_media_dims():
     for bad in (b"\xff\xd8\x00\x00", b"GIF89a\x01", b"\x89PNG\r\n\x1a\n", b""):
         assert parse_meta(bad)["valid"] == "corrupt"
 
+    # int32 saturation of the Spark n_frames column
+    from exam_pdf_parser_spark.operators.multimodal import _sat32
+    assert _sat32(3 << 31) == (1 << 31) - 1
+    assert _sat32(None) is None and _sat32(7) == 7
+
 
 def test_header_only_dims_through_spark(spark):
     """The extract_metadata stage reads real-format headers end-to-end."""
@@ -1477,8 +1482,7 @@ def test_tiff_bmp_real_system_files():
 def test_review_regressions_round4b(spark):
     """Second review pass pins: resize_media never crashes on real-
     format payloads (quarantine contract), empty RLE8 raises instead
-    of fabricating black pixels, off-screen GIF frames clamp, Opus
-    probes as audio, and a stray 0xFF before the MP3 sync is skipped."""
+    of fabricating black pixels, and off-screen GIF frames clamp."""
     import struct
 
     import numpy as np
@@ -1491,12 +1495,10 @@ def test_review_regressions_round4b(spark):
         _lzw_uncompressed, decode_gif_frames,
     )
     from exam_pdf_parser_spark.operators.multimodal import (
-        MEDIA_SCHEMA, parse_meta, resize_media,
+        MEDIA_SCHEMA, resize_media,
     )
 
     # resize_media passes real-format and weird-meta payloads through
-    # (128 kbps 44.1 kHz Layer III → 417-byte frames; the probe demands
-    # two CONSECUTIVE headers, so plant a proper frame train)
     mp3 = (b"\xff\xfb\x90\x00" + b"\x00" * 413) * 10
     ogg = b"OggS" + b"\x00" * 22 + b"\x01\x13" + b"OpusHead" \
         + bytes([1, 2]) + b"\x00\x00" + struct.pack("<I", 48000) + b"\x00"
@@ -1506,13 +1508,6 @@ def test_review_regressions_round4b(spark):
     out = {r["media_id"]: bytes(r["payload"])
            for r in resize_media(media).collect()}
     assert out[1] == mp3 and out[2] == ogg           # untouched, no crash
-
-    # Opus identifies as playable audio
-    m = parse_meta(ogg)
-    assert (m["kind"], m["width"], m["height"], m["valid"]) == \
-        ("audio", 48000, 2, "ok")
-    # stray 0xFF before the real sync is skipped
-    assert parse_meta(b"\xff\x00junk" + mp3)["width"] == 44100
 
     # empty RLE8 stream raises (no fabricated black image)
     blob = bytearray(encode_bmp_gray(
@@ -1605,37 +1600,13 @@ def test_codec_fuzz_no_hang_no_silent_success():
 
 
 def test_header_meta_for_undecodable_formats():
-    """WebP / MP3 / Ogg payloads can't pixel/sample-decode here (no
-    stdlib codec), but parse_meta reads their REAL headers: dims from
-    VP8/VP8L/VP8X, rate+channels+frame estimate from the MPEG frame
-    header (ID3 skipped), rate+channels from the Vorbis ident."""
-    import os
+    """parse_meta reads REAL ISO BMFF and Matroska/WebM headers with
+    no sample codec: dims from tkhd / Tracks, duration from mvhd /
+    Info, kind from the track handlers.  A moov-less init segment
+    reports corrupt; flipped or truncated headers never raise."""
     import struct
 
     from exam_pdf_parser_spark.operators.multimodal import parse_meta
-
-    # real-file pin: same stdlib logo as the BMP/TIFF pins, as VP8X
-    p = ("/root/.pyenv/versions/3.13.0/lib/python3.13/test/"
-         "test_email/data/python.webp")
-    if os.path.exists(p):
-        m = parse_meta(open(p, "rb").read())
-        assert (m["kind"], m["width"], m["height"], m["valid"]) == \
-            ("image", 16, 16, "ok")
-
-    # synthetic lossy VP8 header
-    vp8 = (b"RIFF" + struct.pack("<I", 40) + b"WEBP" + b"VP8 "
-           + struct.pack("<I", 20) + b"\x00" * 3 + b"\x9d\x01\x2a"
-           + struct.pack("<HH", 320, 240) + b"\x00" * 8)
-    m = parse_meta(vp8)
-    assert (m["kind"], m["width"], m["height"]) == ("image", 320, 240)
-
-    # synthetic VP8L signature word: (w-1) in 14 bits, (h-1) next 14
-    bits = (127 - 1) | ((63 - 1) << 14)
-    vp8l = (b"RIFF" + struct.pack("<I", 30) + b"WEBP" + b"VP8L"
-            + struct.pack("<I", 10) + b"\x2f" + struct.pack("<I", bits)
-            + b"\x00" * 8)
-    m = parse_meta(vp8l)
-    assert (m["width"], m["height"]) == (127, 63)
 
     # --- ISO BMFF (mp4/m4a) and Matroska/WebM header metadata --------
     def box(t, body):
@@ -1708,44 +1679,12 @@ def test_header_meta_for_undecodable_formats():
             parse_meta(bytes(b))
             parse_meta(bytes(b[: _rng.integers(1, len(b))]))
 
-    # MPEG-1 Layer III frame train: 128 kbps, 44100 Hz, stereo
-    # (417-byte frames; two consecutive headers required)
-    mp3 = (b"\xff\xfb\x90\x00" + b"\x00" * 413) * 5
-    m = parse_meta(mp3)
-    assert (m["kind"], m["width"], m["height"], m["valid"]) == \
-        ("audio", 44100, 2, "ok")
-    assert m["n_frames"] > 0
-
-    # ID3v2-prefixed variant still finds the frame
-    id3 = b"ID3\x04\x00\x00\x00\x00\x00\x0a" + b"\x00" * 10 + mp3
-    assert parse_meta(id3)["width"] == 44100
-
-    # a LONE pseudo-sync is no longer enough: random-ish blobs with a
-    # single FF FB pair report corrupt, not fabricated audio (the
-    # round-4 advice's 1-in-8 false-positive class)
-    lone = b"\xff\xfb\x90\x00" + bytes(range(256)) * 8
-    assert parse_meta(lone)["valid"] == "corrupt"
-    # an Ogg payload carrying an early pseudo-sync stays Ogg (probe
-    # order: container magics before the weak MPEG sync)
-    oggish = b"OggS" + b"\x00" * 22 + b"\x01\x13" + b"OpusHead" \
-        + bytes([1, 2]) + b"\x00\x00" + struct.pack("<I", 48000) \
-        + b"\xff\xfb\x90\x00" * 2
-    assert parse_meta(oggish)["width"] == 48000
-
-    # Ogg/Vorbis identification header
-    ident = (b"\x01vorbis" + struct.pack("<I", 0) + bytes([1])
-             + struct.pack("<I", 22050) + b"\x00" * 16)
-    ogg = b"OggS" + b"\x00" * 22 + b"\x01\x1e" + ident
-    m = parse_meta(ogg)
-    assert (m["kind"], m["width"], m["height"], m["valid"]) == \
-        ("audio", 22050, 1, "ok")
-
 
 def test_real_media_corpus_mixed(spark):
     """A mixed batch of REAL formats — the shape of a crawl's media
     partition — flows through every stage: metadata for all rows,
     pixel features for every image, audio features for every audio
-    row (incl. FLAC), frame stats for every video across all FOUR
+    row, frame stats for every video across all FOUR
     container paths (MJPEG-AVI, rawvideo-AVI, MJPEG-in-BMFF,
     MJPEG-in-Matroska).  Nothing quarantines and every format family
     is actually present."""
@@ -1795,97 +1734,6 @@ def test_real_media_corpus_mixed(spark):
         assert set(vids.map(container)) == {"avi", "mp4", "mkv"}
     finally:
         media.unpersist()
-
-
-def test_adts_ogg_granule_xing_metadata():
-    """Round-5 metadata closure: ADTS AAC frame trains report
-    rate/channels/sample count (two-consecutive-header rigor like the
-    MP3 probe), Ogg duration comes from the LAST page's granule
-    position (minus Opus pre-skip), and a Xing/Info or VBRI header
-    overrides the MP3 CBR frame estimate."""
-    import struct
-
-    from exam_pdf_parser_spark.operators.multimodal import parse_meta
-
-    # --- ADTS: 3 frames of 9 bytes, AAC-LC, 44100 Hz, 2 channels
-    hdr = bytes([0xFF, 0xF1, 0x50, 0x80, 9 >> 3, (9 & 7) << 5, 0x00])
-    adts = (hdr + b"\xAB\xCD") * 3
-    m = parse_meta(adts)
-    assert (m["kind"], m["width"], m["height"], m["n_frames"],
-            m["valid"]) == ("audio", 44100, 2, 3 * 1024, "ok")
-    # a lone ADTS header in junk is rejected (weak-sync rigor)
-    assert parse_meta(hdr + bytes(range(200)))["valid"] == "corrupt"
-
-    # --- Ogg/Vorbis: a trailing EOS page carries the PCM length
-    ident = (b"\x01vorbis" + struct.pack("<I", 0) + bytes([1])
-             + struct.pack("<I", 22050) + b"\x00" * 16)
-    first = b"OggS" + b"\x00" * 22 + b"\x01\x1e" + ident
-    last = (b"OggS" + bytes([0, 0x04]) + struct.pack("<q", 12345)
-            + b"\x00" * 12 + bytes([0]))
-    m = parse_meta(first + last)
-    assert (m["width"], m["height"], m["n_frames"]) == (22050, 1, 12345)
-
-    # --- Ogg/Opus: granule is 48 kHz ticks; pre-skip subtracted
-    opus_id = (b"OpusHead" + bytes([1, 2]) + struct.pack("<H", 312)
-               + struct.pack("<I", 48000))
-    first = b"OggS" + b"\x00" * 22 + bytes([1, len(opus_id)]) + opus_id
-    last = (b"OggS" + bytes([0, 0x04]) + struct.pack("<q", 48312)
-            + b"\x00" * 12 + bytes([0]))
-    m = parse_meta(first + last)
-    assert (m["width"], m["height"], m["n_frames"]) == (48000, 2, 48000)
-
-    # --- MP3 + Xing (stereo, side info 32): true frame count beats
-    # the byte-length estimate
-    mp3h = b"\xff\xfb\x90\x00"                 # 128kbps 44.1k stereo
-    frame1 = bytearray(mp3h + b"\x00" * 413)   # 417-byte frame
-    frame1[4 + 32:4 + 32 + 12] = (b"Xing" + struct.pack(">I", 1)
-                                  + struct.pack(">I", 7))
-    m = parse_meta(bytes(frame1) + mp3h + b"\x00" * 413)
-    assert m["n_frames"] == 7 * 1152
-
-    # --- MP3 + VBRI (always at header+32, frames at +14)
-    frame1 = bytearray(mp3h + b"\x00" * 413)
-    frame1[36:40] = b"VBRI"
-    frame1[36 + 14:36 + 18] = struct.pack(">I", 9)
-    m = parse_meta(bytes(frame1) + mp3h + b"\x00" * 413)
-    assert m["n_frames"] == 9 * 1152
-
-    # plain CBR train still estimates from the byte count
-    m = parse_meta((mp3h + b"\x00" * 413) * 5)
-    assert m["n_frames"] == 5 * 1152
-
-    # review fixes: a payload truncated right after the Xing tag must
-    # not crash parse_meta (quarantine contract — extract_metadata has
-    # no per-document try/except around it)
-    head = mp3h + b"\x00" * 32 + b"Xing"        # ends mid-tag-body
-    m = parse_meta(head + mp3h + b"\x00" * 373)  # 2nd hdr at +417 gone
-    assert m["valid"] in ("ok", "corrupt")      # no exception is the pin
-
-    # CRC-protected frame (protection bit 0): side info starts after
-    # the 2-byte CRC, so the Xing tag sits at sync+6+32
-    crc_hdr = b"\xff\xfa\x90\x00"               # protection_absent=0
-    f1 = bytearray(crc_hdr + b"\x00" * 413)
-    f1[4 + 2 + 32:4 + 2 + 32 + 12] = (b"Xing" + struct.pack(">I", 1)
-                                      + struct.pack(">I", 5))
-    m = parse_meta(bytes(f1) + crc_hdr + b"\x00" * 413)
-    assert m["n_frames"] == 5 * 1152
-
-    # int32 saturation: a spec-legal 36-bit FLAC total_samples keeps
-    # its exact value in parse_meta and clamps in the Spark schema
-    from exam_pdf_parser_spark.operators.multimodal import _sat32
-    big = 3 << 31                               # > int32 max
-    w = []
-    acc, nb = 0, 0
-    for v, n in ((16, 16), (16, 16), (0, 24), (0, 24), (8000, 20),
-                 (0, 3), (15, 5), (big, 36)):
-        acc = (acc << n) | v
-        nb += n
-    si = acc.to_bytes(nb // 8, "big") + b"\x00" * 16
-    flac = b"fLaC" + bytes([0x80]) + len(si).to_bytes(3, "big") + si
-    m = parse_meta(flac)
-    assert m["n_frames"] == big                 # exact for Python callers
-    assert _sat32(big) == (1 << 31) - 1
-    assert _sat32(None) is None and _sat32(7) == 7
 
 
 def test_compressed_audio_codecs_decode():
@@ -3107,8 +2955,8 @@ def test_media_track_inventory(spark):
     """The routing pass before any decode: per-track container/codec/
     count/decodability rows without touching a single sample.  Every
     corpus payload inventories ok and decodable (the corpus only uses
-    shipped codecs); stubbed codecs (VP9 video, lossy-VP8 WebP, MP3)
-    report decodable=false instead of surfacing as decode exceptions;
+    shipped codecs); stubbed codecs (VP9 video, AU G.721) report
+    decodable=false instead of surfacing as decode exceptions;
     garbage quarantines as one corrupt row."""
     import numpy as np
 
@@ -3125,7 +2973,7 @@ def test_media_track_inventory(spark):
     assert (inv["valid"] == "ok").all()
     assert inv["decodable"].all()
     assert {"avi", "mp4", "mkv"} <= set(inv["container"])
-    assert {"wav", "flac", "aiff", "au"} <= set(
+    assert {"wav", "aiff", "au"} <= set(
         inv[inv["kind"] == "audio"]["container"])
     # the AVI counting walk reports real frame counts (3..6 frames)
     avi_vid = inv[(inv["container"] == "avi") & (inv["kind"] == "video")]
@@ -3139,30 +2987,6 @@ def test_media_track_inventory(spark):
     assert (r["container"], r["codec"], r["decodable"]) == \
         ("mkv", "V_VP9", False)
     import struct
-    vp8 = (b"RIFF" + struct.pack("<I", 40) + b"WEBP" + b"VP8 "
-           + struct.pack("<I", 20) + b"\x00" * 3 + b"\x9d\x01\x2a"
-           + struct.pack("<HH", 32, 24) + b"\x00" * 8)
-    [r] = track_inventory(vp8)
-    assert (r["codec"], r["decodable"]) == ("vp8", False)
-    mp3 = b"\xff\xfb\x90\x00" + b"\x00" * 413 + b"\xff\xfb\x90\x00" \
-        + b"\x00" * 413
-    [r] = track_inventory(mp3)
-    assert (r["container"], r["decodable"]) == ("mp3", False)
-
-    # VP8X-extended lossless WebP with a chunk BEFORE the frame: the
-    # chunk walk (not a byte scan) still finds VP8L → decodable
-    def chunk(fourcc, body):
-        pad = b"\x00" if len(body) & 1 else b""
-        return fourcc + struct.pack("<I", len(body)) + body + pad
-
-    vp8x = chunk(b"VP8X", b"\x00" * 4
-                 + (15).to_bytes(3, "little")
-                 + (15).to_bytes(3, "little"))
-    body = b"WEBP" + vp8x + chunk(b"ICCP", b"\x00" * 40) \
-        + chunk(b"VP8L", b"\x2f" + b"\x00" * 12)
-    webpx = b"RIFF" + struct.pack("<I", len(body)) + body
-    [r] = track_inventory(webpx)
-    assert (r["codec"], r["decodable"]) == ("vp8l", True)
 
     # AU with a non-PCM/G.711 encoding (G.721 = 23): routed, not True
     au = b".snd" + struct.pack(">5I", 24, 100, 23, 8000, 1) \

@@ -1,0 +1,62 @@
+"""Import-layering gates, checked from source with ``ast`` (nothing is
+imported, so a forbidden import is caught even on a path no other test
+executes)."""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+PKG = "exam_pdf_parser_spark"
+
+# The multimodal media tier: reached only by its own tests.  core.png
+# is not part of it — crop encodes with it.
+MEDIA_TIER = {f"{PKG}.operators.multimodal"} | {
+    f"{PKG}.core.{m}"
+    for m in ("jpeg", "tiff", "bmp", "gif", "audio", "avi", "mp4", "ebml")}
+
+
+def _module_name(path: Path) -> str:
+    parts = path.relative_to(ROOT).with_suffix("").parts
+    if parts[-1] == "__init__":
+        parts = parts[:-1]
+    return ".".join(parts)
+
+
+def _imported_modules(path: Path) -> set[str]:
+    """Absolute names of every module PATH imports, relative imports
+    resolved.  ``from X import y`` yields both ``X`` and ``X.y``, since
+    ``y`` may be a submodule."""
+    name = _module_name(path).split(".")
+    package = name if path.name == "__init__.py" else name[:-1]
+    out: set[str] = set()
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Import):
+            out.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                base = package[:len(package) - node.level + 1]
+                mod = ".".join(base + [node.module] if node.module
+                               else base)
+            else:
+                mod = node.module
+            out.add(mod)
+            out.update(f"{mod}.{a.name}" for a in node.names)
+    return out
+
+
+def test_media_tier_reached_only_by_tests():
+    """No package module outside the media tier, no script, no
+    benchmark and not ``__spark_entry__.py`` imports the tier — so the
+    tier can be deleted slice by slice without touching a query."""
+    tier_files = {ROOT / (m.replace(".", "/") + ".py") for m in MEDIA_TIER}
+    scope = [p for p in sorted((ROOT / PKG).rglob("*.py"))
+             if p not in tier_files]
+    scope += sorted((ROOT / "scripts").rglob("*.py"))
+    scope += sorted((ROOT / "perfbench").rglob("*.py"))
+    scope += [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+    assert len(scope) > 40            # the scan really covers the tree
+    reached = {str(p.relative_to(ROOT)):
+               sorted(_imported_modules(p) & MEDIA_TIER) for p in scope}
+    assert {k: v for k, v in reached.items() if v} == {}
