@@ -62,7 +62,7 @@ def _rows(pdf: pd.DataFrame, fields: list[str]) -> list[dict]:
 def evaluate_questions(parsed: DataFrame, answer_key: DataFrame) -> DataFrame:
     """Per-question eval table via url-cogrouped shared scoring."""
 
-    def score(key, pgroup: pd.DataFrame, kgroup: pd.DataFrame) -> pd.DataFrame:
+    def score(key, pgroup, kgroup):
         url = key[0]
         prows = _rows(pgroup, ["number", "question_text", "passage", "choices"])
         krows = _rows(kgroup, ["number", "question_text", "passage", "choices"])
@@ -80,7 +80,7 @@ def evaluate_questions(parsed: DataFrame, answer_key: DataFrame) -> DataFrame:
 def score_urls(qevals: DataFrame) -> DataFrame:
     """Per-url summary from per-question rows (deterministic order)."""
 
-    def roll(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def roll(key, pdf):
         rows = pdf.sort_values("number").to_dict("records")
         return pd.DataFrame([{"url": key[0], **summarize(rows)}])
 

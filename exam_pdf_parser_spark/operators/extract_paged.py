@@ -1,25 +1,31 @@
-"""Giant-document skew path (SURVEY.md §7.3.5): page-granularity
-stage A, url-regrouped stage B.
+"""Giant-document skew path (SURVEY.md §7.3.5): page rows regrouped by
+url for the stateful detection.
 
 The whole-doc ``extract()`` is optimal when documents are small and
 numerous.  One pathological document (thousands of pages) would stall
-a task there — this variant takes a PAGED input table
-``(url, page_idx, page_html)`` (one payload per page, the shape an
-Iceberg ingest of chunked WARC records would produce), decodes pages
-fully in parallel, then shuffles blocks by url for the stateful
-detection — "page-level parallelism inside one url, then a url-keyed
-group; the shuffle is the price of balance".
+a task there.  Two entry points feed the same url-keyed stage B
+(:func:`_detect_pages`):
+
+* ``extract_paged`` takes a PAGED input table
+  ``(url, page_idx, page_html)`` (one payload per page, the shape an
+  Iceberg ingest of chunked WARC records would produce), decodes the
+  pages fully in parallel (stage A), then shuffles them by url to
+  stage B — "page-level parallelism inside one url, then a url-keyed
+  group; the shuffle is the price of balance".
+* ``extract_auto`` routes whole documents by size: the router decodes
+  a giant once and emits its page JSON rows, which go through ONE url
+  shuffle to stage B (router decode → url shuffle → stage B).
 
 Byte-identity: stage B rebuilds the exact pages list (sorted by
 page_idx) and calls the same shared ``detect_regions``/
 ``assemble_text`` — output equals the whole-doc path bit for bit
 (asserted in tests/test_extract_paged.py).
 
-Cost: measured 3.6× slower than the whole-doc path at 120k ordinary
-docs (1,669 vs 6,038 docs/sec at local[16]) — the url shuffle plus the
-page JSON round-trip.  Route accordingly: whole-doc ``extract()`` for
-the bulk, this path only for documents above a page-count threshold
-(e.g. ``F.size`` on a page-index column, or input-source partitioning)
+Cost: ``extract_paged`` measured 3.6× slower than the whole-doc path
+at 120k ordinary docs (1,669 vs 6,038 docs/sec at local[16]) — the url
+shuffle plus the page JSON round-trip.  Route accordingly: whole-doc
+``extract()`` for the bulk, the paged path only for documents above a
+page-count threshold (``extract_auto`` does this by payload size)
 where one row would otherwise stall a task.
 """
 
@@ -31,7 +37,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
-    BinaryType, IntegerType, StringType, StructField, StructType,
+    BinaryType, IntegerType, LongType, StringType, StructField, StructType,
 )
 
 from ..core.assemble import (
@@ -87,71 +93,66 @@ def paged_corpus_df(spark: SparkSession, n_docs: int, seed: int = 42,
     return spark.range(0, n_docs, 1, parts).mapInPandas(gen, PAGED_SCHEMA)
 
 
-def extract_paged(paged: DataFrame, min_q: int = 1, max_q: int = 50,
-                  shard_chars: int | None = None,
-                  shard_spans: int | None = None) -> DataFrame:
-    """(url, page_idx, page_html) → EXTRACT_SCHEMA rows, byte-identical
-    to ``extract()`` over the equivalent whole-doc table.
+def _page_json(page) -> str:
+    """One page (or marker) as stage B reads it.  Stage A and the
+    ``extract_auto`` router both encode through here, so a page is the
+    same string whichever way it reaches stage B."""
+    return json.dumps(page, ensure_ascii=False, sort_keys=True)
 
-    ``shard_chars`` (opt-in, round-7 ask #1): bound the OUTPUT row size
-    — a document whose assembled text exceeds ``shard_chars`` chars or
-    whose span list exceeds ``shard_spans`` (default
-    ``core.shard.DEFAULT_SHARD_SPANS``) is emitted as multiple
-    SHARDED_EXTRACT_SCHEMA rows under the ``core/shard.py`` rule, so the
-    durable write never has to materialize one hundreds-of-MB row
-    (the measured ~250 MB/slot OOM).  Byte identity holds under the
-    documented reassembly rule (:func:`reassemble_sharded`)."""
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # stage A: heavy zlib+json decode, embarrassingly parallel per PAGE
-        for pdf in batches:
-            urls, idxs, jsons = [], [], []
-            for url, idx, blob in zip(
-                    pdf["url"], pdf["page_idx"], pdf["page_html"]):
-                try:
-                    pgs = decode_payload(bytes(blob))["pages"]
-                    # a decodable payload with zero pages is NOT
-                    # corrupt — mark it so stage B reproduces the
-                    # whole-doc path's empty-but-ok output
-                    page = pgs[0] if pgs else {"__no_pages__": True}
-                except Exception as e:  # quarantine with the REAL
-                    page = {"__error__":      # message (extract() parity)
-                            f"{type(e).__name__}: {e}"[:500]}
-                urls.append(url)
-                idxs.append(int(idx))
-                jsons.append(json.dumps(page, ensure_ascii=False,
-                                        sort_keys=True))
-            if urls:
-                yield pd.DataFrame(
-                    {"url": urls, "page_idx": idxs, "page_json": jsons})
+def _error_text(e: Exception) -> str:
+    # the quarantine message, as extract() words it
+    return f"{type(e).__name__}: {e}"[:500]
 
-    decoded = paged.mapInPandas(decode, _DECODED_SCHEMA)
 
+def _detect_pages(pages: DataFrame, min_q: int, max_q: int,
+                  shard_chars: int | None,
+                  shard_spans: int | None) -> DataFrame:
+    """Stage B: ``(url, page_idx, page_json[, proc_us])`` rows → one
+    EXTRACT_SCHEMA row per url (SHARDED_EXTRACT_SCHEMA rows when
+    ``shard_chars`` is set), through one url shuffle.
+
+    A page_json is a decoded page, or one of two markers:
+    ``{"__error__": msg}`` for an undecodable payload (the url
+    quarantines with that message when no page decoded) and
+    ``{"__no_pages__": true}`` for a decodable zero-page payload (the
+    url yields extract()'s empty-but-ok row).  When the input carries
+    ``proc_us``, its per-url sum is emitted on shard 0 (0 on the other
+    shards), so per-url sums stay the document's time."""
+    timed = "proc_us" in pages.columns
     sharding = shard_chars is not None
     if sharding and shard_spans is None:
         shard_spans = DEFAULT_SHARD_SPANS
     out_schema = SHARDED_EXTRACT_SCHEMA if sharding else EXTRACT_SCHEMA
+    if timed:
+        out_schema = StructType(
+            out_schema.fields + [StructField("proc_us", LongType())])
 
-    def _rows(row: dict) -> pd.DataFrame:
+    def _rows(row: dict, proc_us: int) -> pd.DataFrame:
         # single exit point: apply the shard rule (or pass through) so
         # the quarantine path and the ok path emit the same shape
-        if sharding:
-            return pd.DataFrame(shard_row(row, shard_chars, shard_spans))
-        return pd.DataFrame([row])
+        rows = (shard_row(row, shard_chars, shard_spans) if sharding
+                else [row])
+        if timed:
+            for r in rows:
+                r["proc_us"] = proc_us if r.get("shard_idx", 0) == 0 else 0
+        return pd.DataFrame(rows)
 
-    def detect(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        # stage B: the url-keyed stateful scan over rebuilt pages.
-        # Same quarantine contract as extract(): nothing a document
+    # no type hints: Spark infers a pandas eval type from complete
+    # hints only, and warns on every call about partial ones
+    def detect(key, pdf):
+        # the url-keyed stateful scan over rebuilt pages.  Same
+        # quarantine contract as extract(): nothing a document
         # contains may fail the task.
         url = key[0]
+        proc_us = int(pdf["proc_us"].sum()) if timed else 0
         try:
-            return _rows(_detect_one(url, pdf))
+            return _rows(_detect_one(url, pdf), proc_us)
         except Exception as e:
             return _rows({
                 "url": url, "extracted_text": None, "spans": [],
-                "status": "error",
-                "error": f"{type(e).__name__}: {e}"[:500],
-            })
+                "status": "error", "error": _error_text(e),
+            }, proc_us)
 
     def _detect_one(url: str, pdf: pd.DataFrame) -> dict:
         pages = []
@@ -194,7 +195,47 @@ def extract_paged(paged: DataFrame, min_q: int = 1, max_q: int = 50,
             "error": None if not corrupt else "some pages undecodable",
         }
 
-    return decoded.groupBy("url").applyInPandas(detect, out_schema)
+    return pages.groupBy("url").applyInPandas(detect, out_schema)
+
+
+def extract_paged(paged: DataFrame, min_q: int = 1, max_q: int = 50,
+                  shard_chars: int | None = None,
+                  shard_spans: int | None = None) -> DataFrame:
+    """(url, page_idx, page_html) → EXTRACT_SCHEMA rows, byte-identical
+    to ``extract()`` over the equivalent whole-doc table.
+
+    ``shard_chars`` (opt-in, round-7 ask #1): bound the OUTPUT row size
+    — a document whose assembled text exceeds ``shard_chars`` chars or
+    whose span list exceeds ``shard_spans`` (default
+    ``core.shard.DEFAULT_SHARD_SPANS``) is emitted as multiple
+    SHARDED_EXTRACT_SCHEMA rows under the ``core/shard.py`` rule, so the
+    durable write never has to materialize one hundreds-of-MB row
+    (the measured ~250 MB/slot OOM).  Byte identity holds under the
+    documented reassembly rule (:func:`reassemble_sharded`)."""
+
+    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # stage A: heavy zlib+json decode, embarrassingly parallel per PAGE
+        for pdf in batches:
+            urls, idxs, jsons = [], [], []
+            for url, idx, blob in zip(
+                    pdf["url"], pdf["page_idx"], pdf["page_html"]):
+                try:
+                    pgs = decode_payload(bytes(blob))["pages"]
+                    # a decodable payload with zero pages is NOT
+                    # corrupt — mark it so stage B reproduces the
+                    # whole-doc path's empty-but-ok output
+                    page = pgs[0] if pgs else {"__no_pages__": True}
+                except Exception as e:  # quarantine with the REAL
+                    page = {"__error__": _error_text(e)}  # message
+                urls.append(url)
+                idxs.append(int(idx))
+                jsons.append(_page_json(page))
+            if urls:
+                yield pd.DataFrame(
+                    {"url": urls, "page_idx": idxs, "page_json": jsons})
+
+    return _detect_pages(paged.mapInPandas(decode, _DECODED_SCHEMA),
+                         min_q, max_q, shard_chars, shard_spans)
 
 
 def reassemble_sharded(df: DataFrame) -> DataFrame:
@@ -293,45 +334,26 @@ def reassemble_sharded(df: DataFrame) -> DataFrame:
 GIANT_BYTES = 100_000
 
 
-def _page_rows_of(url, blob) -> list[tuple]:
-    """One document's (url, page_idx, page_html) page rows.  A payload
-    that fails to decode is forwarded whole as its own page row — the
-    paged pipeline's stage-A quarantine then flags it (nothing is
-    dropped); a decodable zero-page payload gets one empty-marker page
-    row so the url stays alive through the paged pipeline.  Shared by
-    :func:`explode_pages` and ``extract_auto``'s router."""
+def _giant_pages(blob) -> Iterator[tuple[int, str]]:
+    """One giant document's ``(page_idx, page_json)`` rows, decoded
+    once, in the router.  A payload that fails to decode yields one
+    ``__error__`` marker row with the real exception text, and a
+    decodable zero-page payload one ``__no_pages__`` marker row, so
+    stage B quarantines or empties the url exactly as ``extract()``
+    does (nothing is dropped).  A generator: the router flushes rows
+    in chunks, so one giant's page strings are never all held at
+    once."""
     blob = bytes(blob) if blob is not None else b""
     try:
         pages = decode_payload(blob)["pages"]
-    except Exception:
-        return [(url, 0, blob)]
+    except Exception as e:
+        yield 0, _page_json({"__error__": _error_text(e)})
+        return
     if not pages:
-        return [(url, 0, encode_payload({"v": 1, "pages": []}))]
-    return [
-        (url, int(p.get("page_idx", 0)),
-         encode_payload({"v": 1, "pages": [p]}))
-        for p in pages
-    ]
-
-
-def explode_pages(documents: DataFrame) -> DataFrame:
-    """(url, html) → one PAGED_SCHEMA row per page (see
-    :func:`_page_rows_of` for the quarantine contract)."""
-    src = documents.select("url", "html")
-
-    def split(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, idxs, payloads = [], [], []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                for u, idx, payload in _page_rows_of(url, blob):
-                    urls.append(u)
-                    idxs.append(idx)
-                    payloads.append(payload)
-            if urls:
-                yield pd.DataFrame(
-                    {"url": urls, "page_idx": idxs, "page_html": payloads})
-
-    return src.mapInPandas(split, PAGED_SCHEMA)
+        yield 0, _page_json({"__no_pages__": True})
+        return
+    for p in pages:
+        yield int(p.get("page_idx", 0)), _page_json(p)
 
 
 # marker value in ROUTED_SCHEMA.status for giant-doc page rows (never
@@ -341,7 +363,7 @@ _PAGE_STATUS = "__page__"
 ROUTED_SCHEMA = StructType(
     EXTRACT_SCHEMA.fields + [
         StructField("page_idx", IntegerType(), True),
-        StructField("page_html", BinaryType(), True),
+        StructField("page_json", StringType(), True),
     ])
 
 
@@ -354,18 +376,20 @@ def extract_auto(documents: DataFrame, min_q: int = 1, max_q: int = 50,
     ``mapInPandas`` router reads each document once — ordinary
     documents are extracted in place (the zero-shuffle whole-doc path,
     byte-identical by construction: same :func:`extract_one_row`);
-    documents above ``giant_bytes`` are exploded to page rows that
-    continue through ``extract_paged`` (page-parallel decode,
-    url-regrouped detect).  Output is byte-identical to ``extract()``
-    either way; routing only changes WHERE a document's work lands, so
-    one 1,000-page document cannot stall a task.
+    documents above ``giant_bytes`` are decoded in the router and
+    emitted as one page-JSON row per page, which reach the url-keyed
+    stage B (:func:`_detect_pages`, shared with ``extract_paged``)
+    through ONE url shuffle: router decode → url shuffle → stage B.
+    Output is byte-identical to ``extract()`` either way; routing only
+    changes WHERE a document's detect/assemble work lands, so one
+    1,000-page document cannot stall a task.
 
     Scale note: the routed output is persisted (DISK_ONLY) so the two
     consumers — finished rows and the giant-page branch — share ONE
     materialization instead of re-scanning the source: the cache holds
     extraction RESULTS plus the rare giant pages (a few percent of
     input size at web scale), never the raw input table.  Only the
-    rare giant pages cross the wire in the spread shuffle, and AQE
+    rare giant pages cross the wire in the url shuffle, and AQE
     coalesces the exchange when no giants exist.  DISK_ONLY is a
     measured decision (round 8): a memory-tier cache of the full
     output competing with 32 concurrent shuffle writers OOM'd an 8g
@@ -396,10 +420,10 @@ def extract_auto(documents: DataFrame, min_q: int = 1, max_q: int = 50,
     ``with_timing=True`` appends ``proc_us`` (matching
     ``extract(with_timing=True)``, the manifest pipeline's per-bucket
     metric source): measured per ordinary document in the router;
-    giant-routed documents report the router's explode time only
-    (their distributed page decode is not attributable to one task) —
-    a giant doc's ``proc_us`` therefore UNDERSTATES its true cost and
-    is NULL on the detect side, which the manifest sums treat as 0.
+    giant-routed documents report the router's decode and page
+    encoding time only, carried through stage B and stamped on shard
+    0 — their detect/assemble work in stage B is not timed, so a
+    giant doc's ``proc_us`` UNDERSTATES its true cost.
     """
     import time
 
@@ -418,7 +442,6 @@ def extract_auto(documents: DataFrame, min_q: int = 1, max_q: int = 50,
             schema.fields + [StructField("shard_idx", IntegerType(), False),
                              StructField("n_shards", IntegerType(), False)])
     if with_timing:
-        from pyspark.sql.types import LongType
         schema = StructType(
             schema.fields + [StructField("proc_us", LongType())])
     cols = [f.name for f in schema.fields]
@@ -445,7 +468,7 @@ def extract_auto(documents: DataFrame, min_q: int = 1, max_q: int = 50,
                 if size <= giant_bytes:
                     r = extract_one_row(url, blob, min_q, max_q)
                     r["page_idx"] = None
-                    r["page_html"] = None
+                    r["page_json"] = None
                     proc = (time.perf_counter_ns() - t0) // 1000
                     # sharding applies here too (zlib-bomb guard: a
                     # small payload can expand to a giant output row);
@@ -462,29 +485,31 @@ def extract_auto(documents: DataFrame, min_q: int = 1, max_q: int = 50,
                             yield _frame(rows)
                             rows = []
                 else:
-                    page_rows = _page_rows_of(url, blob)
-                    explode_us = (time.perf_counter_ns() - t0) // 1000
-                    for i, (u, idx, payload) in enumerate(page_rows):
+                    # the giant's router time, split over its page
+                    # rows so their per-url sum is the time itself;
+                    # the clock pauses while a full chunk is yielded
+                    spent_ns = stamped_us = 0
+                    for idx, page_json in _giant_pages(blob):
+                        spent_ns += time.perf_counter_ns() - t0
                         row = {
-                            "url": u, "extracted_text": None, "spans": [],
+                            "url": url, "extracted_text": None, "spans": [],
                             "status": _PAGE_STATUS, "error": None,
-                            "page_idx": idx, "page_html": payload,
+                            "page_idx": idx, "page_json": page_json,
                         }
                         if sharding:
                             # placeholder coordinates; the page rows are
-                            # dropped before extract_paged re-emits real
-                            # shard coordinates for the giant's output
+                            # dropped before stage B emits real shard
+                            # coordinates for the giant's output
                             row["shard_idx"] = 0
                             row["n_shards"] = 1
                         if with_timing:
-                            # stamp the explode cost on the FIRST page
-                            # row only, so the per-url sum stays the
-                            # router's actual time
-                            row["proc_us"] = explode_us if i == 0 else 0
+                            row["proc_us"] = spent_ns // 1000 - stamped_us
+                            stamped_us += row["proc_us"]
                         rows.append(row)
                         if len(rows) >= chunk_rows:
                             yield _frame(rows)
                             rows = []
+                        t0 = time.perf_counter_ns()
             if rows:
                 yield _frame(rows)
 
@@ -499,31 +524,18 @@ def extract_auto(documents: DataFrame, min_q: int = 1, max_q: int = 50,
     # the shuffle and the run completed 240k at 8g in 39.6 s.
     routed = docs.mapInPandas(route, schema).persist(
         StorageLevel.DISK_ONLY)
+    timing_cols = ["proc_us"] if with_timing else []
     done_cols = ([f.name for f in EXTRACT_SCHEMA.fields]
                  + (["shard_idx", "n_shards"] if sharding else [])
-                 + (["proc_us"] if with_timing else []))
+                 + timing_cols)
     done = routed.filter(F.col("status") != _PAGE_STATUS).select(*done_cols)
-    # repartition AFTER the router: one giant doc's pages must spread
-    # across tasks (the whole point of the route); the shuffle moves
-    # only the rare giant payloads
+    # the giant branch: the router's page rows go straight to stage B,
+    # whose url grouping is the branch's only shuffle; it moves only
+    # the rare giant pages
     giant_pages = routed.filter(F.col("status") == _PAGE_STATUS).select(
-        "url", "page_idx", "page_html").repartition("url", "page_idx")
-    giant_done = extract_paged(giant_pages, min_q, max_q,
-                               shard_chars=shard_chars,
-                               shard_spans=shard_spans)
-    if with_timing:
-        # the giant docs' router explode time, re-attached per url;
-        # the distributed decode/detect cost is deliberately NOT
-        # folded in (it belongs to many tasks, docstring note)
-        giant_us = (routed.filter(F.col("status") == _PAGE_STATUS)
-                    .groupBy("url").agg(F.sum("proc_us").alias("proc_us")))
-        giant_done = giant_done.join(giant_us, "url", "left")
-        if sharding:
-            # the join stamps every shard of a giant url — keep it on
-            # shard 0 only so per-url cpu sums don't scale with n_shards
-            giant_done = giant_done.withColumn(
-                "proc_us", F.when(F.col("shard_idx") == 0,
-                                  F.col("proc_us")).otherwise(F.lit(0)))
+        "url", "page_idx", "page_json", *timing_cols)
+    giant_done = _detect_pages(giant_pages, min_q, max_q,
+                               shard_chars, shard_spans)
     result = done.unionByName(giant_done)
     # cache-lifetime handle: long-lived sessions should release the
     # routed materialization once the result has been consumed —

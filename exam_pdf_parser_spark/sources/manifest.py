@@ -375,6 +375,22 @@ def _check_run_meta(out_dir: str, n_buckets: int) -> None:
         os.unlink(tmp)
 
 
+def _compact_if_due(out_dir: str, compact_after: int | None) -> dict | None:
+    """Run :func:`compact_manifest` when the manifest directory holds
+    more than ``compact_after`` visible files (``run_extraction``'s
+    retention policy); the compaction stats, or None."""
+    if compact_after is None or "://" in out_dir:
+        return None
+    mdir = os.path.join(out_dir, "manifest")
+    try:
+        n_files = sum(
+            1 for f in os.listdir(mdir)
+            if f.endswith(".parquet") and not f.startswith("."))
+    except FileNotFoundError:
+        n_files = 0
+    return compact_manifest(out_dir) if n_files > compact_after else None
+
+
 # sentinel: "caller did not choose" — resolves to the engine default
 # (DEFAULT_SHARD_CHARS when routing is on, None when the caller turned
 # routing off), so the safe default and the off-switch can coexist
@@ -398,7 +414,16 @@ def run_extraction(
 
     Returns summary stats.  Idempotent per bucket: rerunning after a
     crash only processes buckets absent from the manifest, and dynamic
-    partition overwrite replaces any half-written bucket dirs.
+    partition overwrite replaces any half-written bucket dirs.  A run
+    with no pending bucket in scope returns right after the manifest
+    read (``buckets_processed == 0``, ``wall_ms == 0``): no extraction
+    plan is built and no write job runs; only the ``compact_after``
+    retention check still applies.
+
+    The output is written through one exchange keyed by bucket, which
+    AQE sizes from the session's shuffle partitions: one parquet file
+    per ``bucket=N`` directory, with as many write tasks as the data
+    needs rather than one per bucket.
 
     **Safe by default (round-8 verdict ask #2)**: giant routing AND
     output-row sharding are ON unless explicitly disabled — at 100 TB
@@ -413,10 +438,11 @@ def run_extraction(
 
     ``route_giants=True`` (default) runs the size-routed
     ``extract_auto`` so a pathological multi-thousand-page document
-    takes the page-parallel path instead of stalling one task; its
-    ``proc_us`` then covers the router's explode only (see
-    ``extract_auto``), so giant-heavy buckets UNDERSTATE cpu_ms —
-    docs/sec and error metrics are exact either way.
+    takes the giant branch (router decode → url shuffle → stage B)
+    instead of stalling one task; its ``proc_us`` then covers the
+    router's decode only (see ``extract_auto``), so giant-heavy
+    buckets UNDERSTATE cpu_ms — docs/sec and error metrics are exact
+    either way.
 
     ``shard_chars`` (default ``core.shard.DEFAULT_SHARD_CHARS`` when
     routing is on; requires ``route_giants=True`` when set
@@ -464,6 +490,9 @@ def run_extraction(
                 f"bucket slice ids {bad} are outside "
                 f"range(n_buckets={n_buckets}) — a silent intersect "
                 "here would quietly shrink the backfill")
+    if shard_chars is not None and not route_giants:
+        raise ValueError("shard_chars requires route_giants=True "
+                         "(sharding lives on the routed path)")
     _check_run_meta(out_dir, n_buckets)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     docs = with_bucket(documents, n_buckets)
@@ -474,22 +503,36 @@ def run_extraction(
     scope = set(range(n_buckets)) if buckets is None \
         else set(buckets)
     target = sorted(scope - done)
+
+    def summary(wall_ms: int) -> dict:
+        return {
+            "run_id": run_id,
+            "buckets_processed": len(target),
+            "buckets_skipped": len(scope & done),
+            "wall_ms": wall_ms,
+            "compaction": _compact_if_due(out_dir, compact_after),
+        }
+
+    if not target:
+        # nothing pending in scope: build no plan, run no Spark job
+        return summary(0)
     if buckets is None:
         pending = docs if not done \
             else docs.filter(~F.col("bucket").isin(*done))
-    elif target:
-        pending = docs.filter(F.col("bucket").isin(target))
     else:
-        pending = docs.filter(F.lit(False))
+        pending = docs.filter(F.col("bucket").isin(target))
 
     t0 = time.perf_counter()
     # bucket is a pure function of url — recompute it on the output
     # instead of joining back to the input (saves a full shuffle), then
     # co-locate each bucket in one task so partitionBy writes one file
-    # per bucket dir instead of (tasks × buckets) small files.
-    if shard_chars is not None and not route_giants:
-        raise ValueError("shard_chars requires route_giants=True "
-                         "(sharding lives on the routed path)")
+    # per bucket dir instead of (tasks × buckets) small files.  The
+    # exchange is keyed by bucket with no partition count: AQE sizes
+    # the write-task count from the session's shuffle partitions and
+    # only ever COALESCES a repartition-by-column exchange, never
+    # splits it, so each bucket's rows still land in one task (a task
+    # may write several bucket dirs) — the same one file per bucket
+    # dir, without one task per bucket.
     if route_giants:
         from ..operators.extract_paged import extract_auto
         extracted = extract_auto(pending, min_q, max_q, with_timing=True,
@@ -504,7 +547,7 @@ def run_extraction(
         + (["shard_idx", "n_shards"] if shard_chars is not None else []) \
         + ["proc_us", "bucket"]
     sel = out.select(*out_cols)
-    (sel.repartition(n_buckets, F.col("bucket"))
+    (sel.repartition(F.col("bucket"))
         .write.mode("overwrite").partitionBy("bucket").parquet(ext_path))
     wall_ms = int((time.perf_counter() - t0) * 1000)
     if route_giants:
@@ -545,10 +588,9 @@ def run_extraction(
     # unsharded list, so it is shard-invariant by construction.
     doc0 = (F.coalesce(F.col("shard_idx"), F.lit(0)) == 0) \
         if "shard_idx" in read_schema.fieldNames() else F.lit(True)
-    pending_buckets = target
     stats = {
         r["bucket"]: r
-        for r in written.filter(F.col("bucket").isin(pending_buckets))
+        for r in written.filter(F.col("bucket").isin(target))
         .groupBy("bucket")
         .agg(
             F.sum(F.when(doc0, 1).otherwise(0)).alias("docs_in"),
@@ -557,7 +599,7 @@ def run_extraction(
                   .otherwise(0)).alias("errors"),
             cpu_col.alias("cpu_us"),
         ).collect()
-    } if pending_buckets else {}
+    }
 
     def row(b):
         s = stats.get(b)
@@ -569,26 +611,5 @@ def run_extraction(
         return (run_id, b, "done", int(s["rows_out"]), int(s["docs_in"]),
                 int(s["errors"]), wall_ms, cpu_ms, dps)
 
-    manifest_rows = [row(b) for b in pending_buckets]
-    if manifest_rows:
-        _commit_manifest(out_dir, run_id, manifest_rows, spark=spark)
-
-    compaction = None
-    if compact_after is not None and "://" not in out_dir:
-        mdir = os.path.join(out_dir, "manifest")
-        try:
-            n_files = sum(
-                1 for f in os.listdir(mdir)
-                if f.endswith(".parquet") and not f.startswith("."))
-        except FileNotFoundError:
-            n_files = 0
-        if n_files > compact_after:
-            compaction = compact_manifest(out_dir)
-
-    return {
-        "run_id": run_id,
-        "buckets_processed": len(pending_buckets),
-        "buckets_skipped": len(scope & done),
-        "wall_ms": wall_ms,
-        "compaction": compaction,
-    }
+    _commit_manifest(out_dir, run_id, [row(b) for b in target], spark=spark)
+    return summary(wall_ms)

@@ -102,22 +102,52 @@ def test_extract_auto_routes_and_matches_whole_doc(spark):
     assert got["https://bad.example/x"]["status"] == "error"
 
 
-def test_extract_auto_plan_shows_routed_union(spark):
+def _routed_plan(spark, with_timing: bool = False) -> str:
     from exam_pdf_parser_spark.operators.extract_paged import extract_auto
 
     docs = corpus_df(spark, 5, partitions=2)
-    plan = extract_auto(docs)._jdf.queryExecution().executedPlan().toString()
+    plan = extract_auto(docs, with_timing=with_timing)._jdf.queryExecution(
+    ).executedPlan().toString()
     assert "Union" in plan
-    # paged branch present (url-regrouped applyInPandas)...
+    # giant branch present (url-regrouped applyInPandas)...
     assert "FlatMapGroupsInPandas" in plan
-    # ...with exactly its two giant-side shuffles (page spread + url
-    # regroup); the ordinary branch contributes none
-    assert plan.count("Exchange hashpartitioning") == 2
+    # ...with exactly one shuffle, the url regroup; the ordinary
+    # branch contributes none
+    assert plan.count("Exchange hashpartitioning") == 1
     # single-scan routing: BOTH branches read the one cached router
     # output (InMemoryTableScan), never the source twice
     assert plan.count("InMemoryTableScan") == 2
     seg = plan.split("Union", 1)[1]          # Union's first child = small
     assert "Exchange" not in seg[:seg.index("InMemoryTableScan")]
+    # the router already decoded the giants: no decode stage between
+    # the url regroup and the cached router output
+    giant = plan.split("FlatMapGroupsInPandas", 1)[1]
+    assert "MapInPandas" not in giant[:giant.index("InMemoryTableScan")]
+    return plan
+
+
+def test_extract_auto_plan_shows_routed_union(spark):
+    _routed_plan(spark)
+
+
+def test_extract_auto_timed_plan_carries_proc_us_through_detect(spark):
+    """A giant's router time rides through stage B: no per-url
+    aggregate and no join back onto the detect output."""
+    from exam_pdf_parser_spark.operators.extract_paged import (
+        extract_auto, release_routed_cache,
+    )
+
+    plan = _routed_plan(spark, with_timing=True)
+    assert "HashAggregate" not in plan
+    assert "BroadcastHashJoin" not in plan
+    # the time lands once per url: on shard 0, never on the others
+    url_g, html_g = _giant_doc()
+    giant = spark.createDataFrame([(url_g, html_g)], "url string, html binary")
+    result = extract_auto(giant, with_timing=True, shard_chars=10_000)
+    proc = {r["shard_idx"]: r["proc_us"] for r in result.collect()}
+    release_routed_cache(result)
+    assert len(proc) > 1 and proc[0] > 0
+    assert all(us == 0 for i, us in proc.items() if i)
 
 
 def test_extract_auto_cache_is_disk_only(spark):

@@ -38,6 +38,57 @@ def test_run_then_resume_noop(spark, out_dir):
     assert s2["buckets_skipped"] == len(done)
 
 
+def test_resume_noop_builds_no_extraction(spark, out_dir, monkeypatch):
+    """With no bucket pending, a resume returns before building the
+    router or running an (empty) write job."""
+    from exam_pdf_parser_spark.operators import extract_paged
+
+    docs = corpus_df(spark, 20, partitions=2)
+    s1 = run_extraction(spark, docs, out_dir, "run1", n_buckets=N_BUCKETS)
+
+    def boom(*a, **k):
+        raise AssertionError("resume no-op built an extraction plan")
+
+    monkeypatch.setattr(extract_paged, "extract_auto", boom)
+    s2 = run_extraction(spark, docs, out_dir, "run2", n_buckets=N_BUCKETS)
+    assert s2["buckets_processed"] == 0
+    assert s2["buckets_skipped"] == s1["buckets_processed"] == N_BUCKETS
+
+
+@pytest.mark.parametrize("coalesce", ["true", "false"])
+def test_bucketed_write_one_file_per_bucket_dir(spark, out_dir, coalesce):
+    """The write exchange is keyed by bucket with no partition count,
+    so AQE picks the task count; every bucket dir still holds exactly
+    one data file, with fewer and with more buckets than shuffle
+    partitions.  With AQE coalescing off the write really runs one
+    task per shuffle partition — where an exchange not keyed by bucket
+    would leave several files in a bucket dir."""
+    import os
+
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(conf)
+    docs = corpus_df(spark, N_DOCS, partitions=4)
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for n_buckets in (max(1, parts // 2), parts * 2):
+        out = os.path.join(out_dir, f"b{n_buckets}")
+        spark.conf.set(conf, coalesce)
+        try:
+            s = run_extraction(spark, docs, out, "layout",
+                               n_buckets=n_buckets)
+        finally:
+            spark.conf.set(conf, prev)
+        assert s["buckets_processed"] == n_buckets
+        ext = os.path.join(out, "extracted")
+        dirs = sorted(d for d in os.listdir(ext) if d.startswith("bucket="))
+        assert dirs == [f"bucket={b}" for b in sorted(
+            {r["bucket"] for r in with_bucket(docs, n_buckets)
+             .select("bucket").collect()})]
+        for d in dirs:
+            files = [f for f in os.listdir(os.path.join(ext, d))
+                     if f.endswith(".parquet")]
+            assert len(files) == 1, (n_buckets, d, files)
+
+
 def test_resume_after_partial_failure(spark, out_dir):
     docs = corpus_df(spark, N_DOCS, partitions=4)
     full = run_extraction(spark, docs, out_dir, "full", n_buckets=N_BUCKETS)
