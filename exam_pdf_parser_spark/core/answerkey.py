@@ -114,8 +114,11 @@ def _parse_sub_block(raw: str, shared_passage: str | None) -> dict | None:
     }
 
 
-def parse_answer_md(text: str) -> list[dict]:
-    """Full two-pass parse; entries sorted by number."""
+def parse_answer_md(text: str | None) -> list[dict]:
+    """Full two-pass parse; entries sorted by number.  A NULL key
+    (``None``) parses as no key, like ``''``."""
+    if text is None:
+        return []
     entries: dict[int, dict] = {}
 
     for gmatch in _GROUP_SECTION_RE.finditer(text):

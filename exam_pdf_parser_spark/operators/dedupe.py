@@ -347,11 +347,9 @@ def block_grid_self_join(keys: DataFrame, id_col: str,
 
 
 def lsh_pairs_from_tokens(t: DataFrame,
-                          threshold: float = JACCARD_DUP,
                           band_cap: int | None = 5000) -> DataFrame:
     """The MinHash→band→verify pipeline over any (doc_id, token)
-    table — word tokens (``minhash_lsh_pairs``) or character shingles
-    (``shingle_minhash_pairs``) plug in the tokenization.
+    table, keeping pairs with exact Jaccard ≥ ``JACCARD_DUP``.
 
     The band self-join carries ONLY (doc_id, band_idx, band_key) —
     at web scale the token set IS the document, and shuffling it
@@ -438,25 +436,7 @@ def lsh_pairs_from_tokens(t: DataFrame,
         )
     )
     return out.filter(
-        F.col("n_inter").cast("double") / F.col("n_union") >= threshold)
-
-
-def shingle_minhash_pairs(documents: DataFrame, k: int = 5,
-                          threshold: float = JACCARD_DUP) -> DataFrame:
-    """Character k-shingle MinHash near-dup pairs — the
-    shingle→minhash→band→bucket-join pipeline.  Shingles are
-    order-SENSITIVE: a word-permuted copy shares its word set (token
-    Jaccard 1.0) but few shingles, so this tier separates true
-    near-copies from bag-of-words collisions.  Texts shorter than
-    ``k`` contribute their whole text as one shingle."""
-    shingles = F.expr(
-        f"transform(sequence(0, greatest(length(text) - {k}, 0)),"
-        f" i -> substring(text, i + 1, {k}))")
-    t = documents.select(
-        "doc_id",
-        F.explode(F.array_distinct(shingles)).alias("token"),
-    )
-    return lsh_pairs_from_tokens(t, threshold)
+        F.col("n_inter").cast("double") / F.col("n_union") >= JACCARD_DUP)
 
 
 # --- SimHash ------------------------------------------------------------------

@@ -127,7 +127,8 @@ def exam_info_table(parsed: DataFrame) -> DataFrame:
 
 
 def answer_key_table(corpus_with_md: DataFrame) -> DataFrame:
-    """(url, answer_md) → exploded answer-key rows (S6)."""
+    """(url, answer_md) → exploded answer-key rows (S6).  A row whose
+    ``answer_md`` is NULL or empty has no key and emits no rows."""
     src = corpus_with_md.select("url", "answer_md")
     cols = [f.name for f in ANSWER_KEY_SCHEMA.fields]
 

@@ -249,8 +249,8 @@ def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = v.select(
         "vec_id", "qv", _dot_q(F.col("qv"), F.col("qv")).alias("norm2"))
     # alias-QUALIFIED self-join: unqualified renamed columns over a
-    # shared lineage can silently mis-bind (pinned by the streaming
-    # near-dup parity test) — qualify every condition column
+    # shared lineage can silently mis-bind — qualify every condition
+    # column
     a, b = n.alias("a"), n.alias("b")
     pairs = (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))

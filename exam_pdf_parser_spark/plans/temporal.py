@@ -1,7 +1,6 @@
 """Temporal / ordered-sequence operator family over ``events``:
-batch sessionization, as-of join, lag deltas, calendar rollups — the
-relational counterparts of the streaming module, each with a DuckDB
-oracle.
+batch sessionization, as-of join, lag deltas, calendar rollups, each
+with a DuckDB oracle.
 
 Exactness: all time arithmetic in integer microseconds
 (``unix_micros`` ↔ ``epoch_us``); session ids are integer running
@@ -32,8 +31,7 @@ def register(name: str, sql: str | None):
 
 
 # --- batch sessionization (gap > 30 min starts a new session) ---------------
-# session_id = running count of gap-breaks per user; the batch twin of
-# streaming/events.sessionize.
+# session_id = running count of gap-breaks per user.
 @register("event_sessions", f"""
     WITH o AS (
       SELECT user_id, event_id, epoch_us(ts) AS us,
@@ -138,10 +136,10 @@ def event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- time-bucket rollups in ONE driver row: hourly tumbling windows over
-# events (batch twin of streaming windowed_event_counts) + calendar-month
-# rollup over orders.  Merged because the driver gate records at most 50
-# entries; both groupings remain distinct plans inside the union. ------------
+# --- time-bucket rollups in ONE driver row: hourly batch tumbling windows
+# over events + calendar-month rollup over orders.  Merged because the
+# driver gate records at most 50 entries; both groupings remain distinct
+# plans inside the union. -----------------------------------------------
 @register("time_bucket_rollup", """
     SELECT 'event_hour' AS series, date_trunc('hour', ts) AS bucket_start,
            event_type AS grp, count(*) AS n,

@@ -16,6 +16,11 @@ MEDIA_TIER = {f"{PKG}.operators.multimodal"} | {
     f"{PKG}.core.{m}"
     for m in ("jpeg", "tiff", "bmp", "gif", "audio", "avi", "mp4", "ebml")}
 
+# Package modules no production entry point reaches.  Compared with
+# ``==``, so deleting a media slice must shrink this set in the same
+# change.
+TEST_ONLY = MEDIA_TIER
+
 
 def _module_name(path: Path) -> str:
     parts = path.relative_to(ROOT).with_suffix("").parts
@@ -60,3 +65,33 @@ def test_media_tier_reached_only_by_tests():
     reached = {str(p.relative_to(ROOT)):
                sorted(_imported_modules(p) & MEDIA_TIER) for p in scope}
     assert {k: v for k, v in reached.items() if v} == {}
+
+
+def _entry_points() -> list[Path]:
+    """Every file that runs in production: the driver contract, the
+    CLI, the headline bench, the repo benchmark and the scripts."""
+    return ([ROOT / "__spark_entry__.py", ROOT / PKG / "__main__.py",
+             ROOT / "bench.py"]
+            + sorted((ROOT / "perfbench").rglob("*.py"))
+            + sorted((ROOT / "scripts").rglob("*.py")))
+
+
+def test_every_package_module_reached_from_an_entry_point():
+    """Walk package imports transitively from the entry points.  Every
+    package module must be reached, except the ``TEST_ONLY`` allow-list,
+    which must be exactly what is unreached (no stale entries).
+    Importing a module also runs its parents' ``__init__``, so a
+    package counts as reached when any module under it is."""
+    modules = {_module_name(p): p for p in (ROOT / PKG).rglob("*.py")}
+    assert len(modules) > 40          # the scan really covers the tree
+    todo = _entry_points()
+    reached = {_module_name(p) for p in todo} & set(modules)  # __main__ itself
+    while todo:
+        for name in _imported_modules(todo.pop()):
+            parts = name.split(".")
+            for i in range(1, len(parts) + 1):
+                mod = ".".join(parts[:i])
+                if mod in modules and mod not in reached:
+                    reached.add(mod)
+                    todo.append(modules[mod])
+    assert set(modules) - reached == TEST_ONLY

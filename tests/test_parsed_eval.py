@@ -14,7 +14,7 @@ from exam_pdf_parser_spark.core.fields import parse_question_fields
 from exam_pdf_parser_spark.core.scoring import eval_questions, summarize
 from exam_pdf_parser_spark.corpus.generator import generate_rows
 from exam_pdf_parser_spark.operators.evaluation import (
-    evaluate_questions, score_urls,
+    SCORE_SCHEMA, evaluate_questions, score_urls,
 )
 from exam_pdf_parser_spark.operators.extract import corpus_df
 from exam_pdf_parser_spark.operators.parsed import (
@@ -104,6 +104,46 @@ def test_scores_byte_identical_to_oracle(spark_tables, corpus_rows):
             # exact float equality — same code, same order, both sides
             assert g[k] == v, (url, k, g[k], v)
         assert not math.isnan(g["overall_score"])
+
+
+def test_null_answer_md_is_no_key(spark):
+    """A NULL ``answer_md`` means "no key", exactly like ``''``: the
+    key → eval → score and validation jobs complete, and the NULL url
+    comes out as the ``''`` url does, in Spark and in the oracle.  A
+    keyed url rides along so the empty results are not vacuous."""
+    from exam_pdf_parser_spark.core.oracle_x import (
+        x_eval_scores, x_validation_issues,
+    )
+
+    doc = generate_rows(1)[0]
+    rows = [{"url": "null", "html": doc["html"], "answer_md": None},
+            {"url": "empty", "html": doc["html"], "answer_md": ""},
+            {"url": "keyed", "html": doc["html"],
+             "answer_md": doc["answer_md"]}]
+    docs = spark.createDataFrame(
+        [(r["url"], r["html"], r["answer_md"]) for r in rows],
+        "url string, html binary, answer_md string")
+    parsed, key = parse_documents(docs), answer_key_table(docs)
+
+    def by_url(recs, fields):
+        out: dict[str, list] = {}
+        for r in recs:
+            out.setdefault(r["url"], []).append(
+                tuple(r[f] for f in fields))
+        return {u: sorted(v, key=repr) for u, v in out.items()}
+
+    assert {r["url"] for r in key.select("url").collect()} == {"keyed"}
+    score_fields = [f.name for f in SCORE_SCHEMA.fields[1:]]
+    issue_fields = ["level", "question_number", "rule", "message"]
+    spark_scores = by_url(score_urls(evaluate_questions(parsed, key))
+                          .collect(), score_fields)
+    spark_issues = by_url(validate(parsed, key).collect(), issue_fields)
+    oracle_scores = by_url(x_eval_scores(rows), score_fields)
+    oracle_issues = by_url(x_validation_issues(rows), issue_fields)
+    assert "keyed" in spark_scores and "keyed" in oracle_scores
+    for side in (spark_scores, spark_issues, oracle_scores, oracle_issues):
+        assert side.get("null") == side.get("empty")
+    assert spark_issues == oracle_issues
 
 
 def test_validation_issue_semantics(spark_tables):

@@ -201,35 +201,6 @@ def test_simhash_chunk_cap_drops_no_pairs(spark):
     assert capped == uncapped
 
 
-def test_shingle_minhash_order_sensitivity(spark):
-    """Character shingles separate true near-copies from bag-of-words
-    collisions: a word-permuted copy has token-Jaccard 1.0 but low
-    shingle overlap."""
-    from exam_pdf_parser_spark.operators.dedupe import shingle_minhash_pairs
-
-    base = ("the quick brown fox jumps over the lazy dog while the "
-            "patient cat watches from a warm windowsill every single day "
-            "of the long winter season without ever losing interest")
-    near = base.replace("warm", "cold", 1)          # one-word edit
-    permuted = " ".join(reversed(base.split()))     # same word SET
-    docs = spark.createDataFrame(
-        [(0, base), (1, near), (2, permuted),
-         (3, "a completely unrelated piece of text goes here")],
-        "doc_id: long, text: string")
-
-    got = {(r["doc_a"], r["doc_b"]): (r["n_inter"], r["n_union"])
-           for r in shingle_minhash_pairs(docs, k=5, threshold=0.6).collect()}
-    assert (0, 1) in got            # near-copy found
-    assert (0, 2) not in got        # permutation correctly rejected
-    assert (1, 2) not in got
-
-    def shingle_set(t, k=5):
-        return {t[i:i + k] for i in range(max(1, len(t) - k + 1))}
-
-    a, b = shingle_set(base), shingle_set(near)
-    assert got[(0, 1)] == (len(a & b), len(a | b))   # exact verification
-
-
 def test_exact_tier_guard_raises_on_unbounded_input(spark):
     """The all-pairs demo tiers must fail loudly (naming their bucketed
     scale twin) instead of launching a quadratic join on a large
