@@ -2,7 +2,7 @@
 
 Design (SURVEY.md §7.0, re-thought Spark-first): the reference's whole
 per-document loop (layout → detect → assemble; src/parser.py:34-77,
-src/cropper/detector.py:39-77) collapses into ONE ``mapInPandas`` over
+src/cropper/detector.py:39-77) collapses into ONE ``mapInArrow`` over
 the ``documents`` table.  Documents are independent, so the core
 extraction needs **no shuffle at all** — parallelism is across rows,
 Arrow-batched, and throughput scales linearly with cores/executors
@@ -59,6 +59,12 @@ EXTRACT_SCHEMA = StructType([
 ])
 
 
+def quarantine_message(e: Exception) -> str:
+    """The ``error`` text of a quarantined row, worded the same by every
+    extraction path: exception class and message, capped at 500 chars."""
+    return f"{type(e).__name__}: {e}"[:500]
+
+
 def span_dicts(regions) -> list[dict]:
     """Region list → SPAN_STRUCT dicts (shared by every extraction
     variant so the span shape can never skew between paths)."""
@@ -85,7 +91,7 @@ def extract_one_row(url, html, min_q: int = 1, max_q: int = 50) -> dict:
         extracted, regions = extract_document(bytes(html), min_q, max_q)
     except Exception as e:  # quarantine, never fail the task
         return {"url": url, "extracted_text": None, "spans": [],
-                "status": "error", "error": f"{type(e).__name__}: {e}"[:500]}
+                "status": "error", "error": quarantine_message(e)}
     return {"url": url, "extracted_text": extracted,
             "spans": span_dicts(regions), "status": "ok", "error": None}
 
@@ -154,7 +160,7 @@ def extract(documents: DataFrame, min_q: int = 1, max_q: int = 50,
                 except Exception as e:  # quarantine, never fail the task
                     texts.append(None)
                     status.append("error")
-                    errors.append(f"{type(e).__name__}: {e}"[:500])
+                    errors.append(quarantine_message(e))
                     procs.append((time.perf_counter_ns() - t0) // 1000)
                     offs.append(n)
                     continue

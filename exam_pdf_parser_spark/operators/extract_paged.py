@@ -45,7 +45,7 @@ from ..core.assemble import (
 )
 from ..core.detector import detect_regions
 from ..core.shard import DEFAULT_SHARD_SPANS, shard_row
-from .extract import EXTRACT_SCHEMA
+from .extract import EXTRACT_SCHEMA, quarantine_message, span_dicts
 
 # EXTRACT_SCHEMA + the shard coordinates (core/shard.py): emitted when
 # giant-output sharding is enabled so no single output row can exceed
@@ -100,11 +100,6 @@ def _page_json(page) -> str:
     return json.dumps(page, ensure_ascii=False, sort_keys=True)
 
 
-def _error_text(e: Exception) -> str:
-    # the quarantine message, as extract() words it
-    return f"{type(e).__name__}: {e}"[:500]
-
-
 def _detect_pages(pages: DataFrame, min_q: int, max_q: int,
                   shard_chars: int | None,
                   shard_spans: int | None) -> DataFrame:
@@ -151,7 +146,7 @@ def _detect_pages(pages: DataFrame, min_q: int, max_q: int,
         except Exception as e:
             return _rows({
                 "url": url, "extracted_text": None, "spans": [],
-                "status": "error", "error": _error_text(e),
+                "status": "error", "error": quarantine_message(e),
             }, proc_us)
 
     def _detect_one(url: str, pdf: pd.DataFrame) -> dict:
@@ -182,15 +177,7 @@ def _detect_pages(pages: DataFrame, min_q: int, max_q: int,
         return {
             "url": url,
             "extracted_text": assemble_text(pages),
-            "spans": [{
-                "question_number": r.question_number,
-                "page_idx": r.page_idx,
-                "x0": r.x0, "y0": r.y0, "x1": r.x1, "y1": r.y1,
-                "text_preview": r.text_preview,
-                "spans_page": r.spans_page,
-                "group_range": r.group_range,
-                "region_idx": r.region_idx,
-            } for r in regions],
+            "spans": span_dicts(regions),
             "status": "ok" if not corrupt else "partial",
             "error": None if not corrupt else "some pages undecodable",
         }
@@ -226,7 +213,7 @@ def extract_paged(paged: DataFrame, min_q: int = 1, max_q: int = 50,
                     # whole-doc path's empty-but-ok output
                     page = pgs[0] if pgs else {"__no_pages__": True}
                 except Exception as e:  # quarantine with the REAL
-                    page = {"__error__": _error_text(e)}  # message
+                    page = {"__error__": quarantine_message(e)}  # message
                 urls.append(url)
                 idxs.append(int(idx))
                 jsons.append(_page_json(page))
@@ -347,7 +334,7 @@ def _giant_pages(blob) -> Iterator[tuple[int, str]]:
     try:
         pages = decode_payload(blob)["pages"]
     except Exception as e:
-        yield 0, _page_json({"__error__": _error_text(e)})
+        yield 0, _page_json({"__error__": quarantine_message(e)})
         return
     if not pages:
         yield 0, _page_json({"__no_pages__": True})

@@ -1,4 +1,4 @@
-"""Multimodal column handling: image/audio/video as opaque ``binary``
+"""Multimodal column handling: media payloads as opaque ``binary``
 columns with typed metadata, processed in Arrow batches.
 
 The IMAGE path is fully real: PNG (full baseline spec — all five
@@ -11,21 +11,11 @@ JPEG-strips/deflate/PackBits, strip- or tile-organized, gray incl.
 BI_BITFIELDS, RLE4/RLE8, OS/2 core header) decode via the repo's
 stdlib codecs (``core/{png,gif,jpeg,tiff,bmp}.py``), with genuine
 pixel features (``image_pixel_features``) and pixel-level block-mean
-resize.  The AUDIO path (``core/audio.py``): WAV PCM 8/16/24/32 +
-WAVE_FORMAT_EXTENSIBLE, G.711 µ-law/a-law, mono+stereo IMA-ADPCM,
-AIFF/AIFF-C, Sun AU, AVI audio tracks and the PCM/G.711 tracks of
-ISO BMFF and Matroska — ``decode_audio`` + ``wav_audio_features``
-(duration, RMS, peak, zero crossings).  The VIDEO path: MJPEG/rawvideo-in-AVI
-(``core/avi.py`` RIFF walk + per-frame JPEG/BMP), MJPEG-in-BMFF
-(``core/mp4.py``), MJPEG-in-Matroska (``core/ebml.py``) and animated
-GIF — ``decode_video`` + per-frame ``video_frame_features`` (dims,
-mean intensity, motion) with image-style quarantine.  ``parse_meta``
-and ``track_inventory`` recognize only containers that some decoder
-here handles; BMFF/Matroska tracks in other codecs (H.264, VP9, AAC…)
-report their header metadata and ``decodable=false`` and fail loudly
-(``NotImplementedError``) at sample decode.  Spark-side everything is
-real and tested: schemas, batch shapes, ``mapInPandas`` signatures,
-partitioning, and a codec-free byte-histogram embedding.
+resize.  ``parse_meta`` recognizes only containers that some decoder
+here handles.  Audio and video exist only as kinds of the synthetic
+XMED1 container below: Spark-side its schemas, batch shapes,
+``mapInPandas`` signatures, partitioning, frame slicing and a
+codec-free byte-histogram embedding are real and tested.
 
 XMED1 payload format (synthetic): b"XMED1" + kind(1B: I/A/V) +
 width(2B) + height(2B) + n_frames(2B) + body bytes (seeded).
@@ -41,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType, BinaryType, BooleanType, FloatType, IntegerType,
+    ArrayType, BinaryType, FloatType, IntegerType,
     LongType, StringType, StructField, StructType,
 )
 
@@ -100,21 +90,14 @@ def parse_meta(payload: bytes) -> dict:
     """Decode the typed header: the synthetic container, plus REAL
     header-only metadata for every container the decoders here handle
     — PNG IHDR, JPEG SOF, GIF screen descriptor + frame count, TIFF
-    first IFD, BMP, AVI avih, ISO BMFF mp4/mov/m4a (moov/mvhd
-    duration, tkhd dims, hdlr kinds), Matroska/WebM EBML (Segment/Info
-    duration, Tracks dims), WAV fmt (incl. compressed codecs), AIFF,
-    AU.  Header probes never need a pixel/sample codec; see
-    ``decode_image`` / ``decode_audio`` / ``decode_video`` for what
-    PAYLOAD decode covers.  BMFF/EBML results carry an extra
-    ``duration_ms`` key for Python callers."""
+    first IFD and BMP.  Header probes never need a pixel codec; see
+    ``decode_image`` for what PAYLOAD decode covers."""
     if payload[:5] == MAGIC and len(payload) >= 12:
         kind = KINDS.get(chr(payload[5]))
         w, h, f = struct.unpack(">HHH", payload[6:12])
         return {"kind": kind, "width": w, "height": h, "n_frames": f,
                 "valid": "ok"}
-    for probe in (_png_dims, _jpeg_dims, _gif_dims, _tiff_bmp_dims,
-                  _avi_dims, _bmff_meta, _ebml_probe, _wav_meta,
-                  _aiff_au_meta):
+    for probe in (_png_dims, _jpeg_dims, _gif_dims, _tiff_bmp_dims):
         meta = probe(payload)
         if meta is not None:
             return meta
@@ -171,45 +154,6 @@ def _jpeg_dims(payload: bytes) -> dict | None:
     return None
 
 
-def _wav_meta(payload: bytes) -> dict | None:
-    """RIFF/WAVE header → (kind=audio, width=sample rate, height=
-    channels, n_frames=sample frames) — real audio metadata with no
-    codec work.  Walks the fmt chunk directly (``core/audio.py``), so
-    compressed WAVs (µ-law/a-law/ADPCM) report their headers too."""
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        return None
-    from ..core.audio import wav_info
-
-    try:
-        info = wav_info(payload)
-    except Exception:
-        info = None
-    if info is None:
-        return {"kind": "audio", "width": None, "height": None,
-                "n_frames": None, "valid": "corrupt"}
-    return {"kind": "audio", "width": info["rate"],
-            "height": info["channels"],
-            "n_frames": info["n_frames"], "valid": "ok"}
-
-
-def _aiff_au_meta(payload: bytes) -> dict | None:
-    """AIFF/AIFF-C and Sun AU headers → audio metadata."""
-    from ..core.audio import aiff_info, au_info
-
-    info = None
-    if payload[:4] == b"FORM" and payload[8:12] in (b"AIFF", b"AIFC"):
-        info = aiff_info(payload)
-    elif payload[:4] == b".snd":
-        info = au_info(payload)
-    if info is None:
-        return None
-    ok = info.get("rate") is not None
-    return {"kind": "audio", "width": info.get("rate"),
-            "height": info.get("channels"),
-            "n_frames": info.get("n_frames"),
-            "valid": "ok" if ok else "corrupt"}
-
-
 def _tiff_bmp_dims(payload: bytes) -> dict | None:
     """TIFF first-IFD / BMP header → real image dims, no pixel work."""
     from ..core.bmp import bmp_dims
@@ -220,50 +164,6 @@ def _tiff_bmp_dims(payload: bytes) -> dict | None:
         return None
     return {"kind": "image", "width": dims[0], "height": dims[1],
             "n_frames": 1, "valid": "ok"}
-
-
-def _avi_dims(payload: bytes) -> dict | None:
-    """AVI avih header → real video dims with no codec
-    (``core/avi.py`` bounded RIFF scan)."""
-    from ..core.avi import avi_meta
-
-    meta = avi_meta(payload)
-    if meta is None:
-        return None
-    return {"kind": "video", "width": meta["width"],
-            "height": meta["height"], "n_frames": meta["n_frames"],
-            "valid": "ok"}
-
-
-def _bmff_meta(payload: bytes) -> dict | None:
-    """ISO BMFF (mp4/mov/m4a) header metadata via ``core/mp4.py``:
-    dims from tkhd, duration from mvhd, kind from the hdlr track
-    handlers.  ``duration_ms`` rides along as an extra key for Python
-    callers (the Spark META_SCHEMA keeps its stable five columns).  A
-    moov-less payload (init segment / truncated progressive file) is
-    reported corrupt rather than fabricating dims."""
-    from ..core.mp4 import mp4_meta
-
-    m = mp4_meta(payload)
-    if m is None:
-        return None
-    return {"kind": m["kind"], "width": m["width"], "height": m["height"],
-            "n_frames": None, "duration_ms": m["duration_ms"],
-            "valid": "ok" if m["complete"] else "corrupt"}
-
-
-def _ebml_probe(payload: bytes) -> dict | None:
-    """Matroska/WebM header metadata via ``core/ebml.py``: dims from
-    Tracks/Video, duration from Segment/Info, kind from TrackType."""
-    from ..core.ebml import ebml_meta
-
-    m = ebml_meta(payload)
-    if m is None:
-        return None
-    ok = m["doctype"] is not None and m["n_tracks"] > 0
-    return {"kind": m["kind"], "width": m["width"], "height": m["height"],
-            "n_frames": None, "duration_ms": m["duration_ms"],
-            "valid": "ok" if ok else "corrupt"}
 
 
 def _gif_dims(payload: bytes) -> dict | None:
@@ -284,8 +184,8 @@ _I32_MAX = (1 << 31) - 1
 
 
 def _sat32(v: int | None) -> int | None:
-    """Saturate to the int32 schema column.  WAV frame counts are
-    uint32 (data size / block align), spec-legal beyond int32; silent
+    """Saturate to the int32 schema column.  A count read from a
+    payload header is outside input, not bounded by the schema; silent
     Arrow wraparound would report a wrong (possibly negative) count,
     so clamp at the schema max."""
     return v if v is None or v <= _I32_MAX else _I32_MAX
@@ -437,84 +337,6 @@ def sample_frames(media: DataFrame, every_n: int = 4) -> DataFrame:
     return src.mapInPandas(run, FRAME_SCHEMA)
 
 
-def encode_audio_wav(samples: np.ndarray, rate: int = 16_000) -> bytes:
-    """float32/float64 mono samples in [-1, 1] → 16-bit PCM WAV."""
-    import io
-    import wave
-
-    pcm = np.clip(samples, -1.0, 1.0)
-    pcm = (pcm * 32767.0).astype("<i2")
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(rate)
-        wf.writeframes(pcm.tobytes())
-    return buf.getvalue()
-
-
-def decode_audio(payload: bytes) -> tuple[np.ndarray, int]:
-    """REAL audio decode (``core/audio.py``, stdlib only): → (mono
-    float64 samples in [-1, 1], sample rate).  Supported: WAV with
-    PCM 8/16/24/32-bit, G.711 µ-law/a-law, and IMA-ADPCM (the
-    RIFF fmt chunk is walked directly — the stdlib ``wave`` module
-    refuses non-PCM); AIFF/AIFF-C; Sun AU (µ-law/a-law/PCM); an
-    AVI's interleaved audio track (reassembled as a WAV from the auds
-    WAVEFORMATEX + ``..wb`` chunks, then re-dispatched); and the
-    PCM/G.711 audio tracks of ISO BMFF and Matroska.  Multi-channel
-    input is averaged to mono.  Anything else raises
-    ``NotImplementedError``."""
-    from ..core.audio import decode_audio_any
-
-    return decode_audio_any(payload)
-
-
-AUDIO_FEATURE_SCHEMA = StructType([
-    StructField("media_id", LongType(), False),
-    StructField("sample_rate", IntegerType(), True),
-    StructField("duration_s", FloatType(), True),
-    StructField("rms", FloatType(), True),
-    StructField("peak", FloatType(), True),
-    StructField("zero_crossings", IntegerType(), True),
-    StructField("valid", StringType(), False),
-])
-
-
-def wav_audio_features(media: DataFrame) -> DataFrame:
-    """REAL decode + signal statistics per WAV payload (Arrow-batched,
-    no shuffle): duration, RMS, peak, zero-crossing count.  Corrupt or
-    non-WAV payloads quarantine as valid='corrupt', never dropped."""
-    src = media.select("media_id", "payload")
-    cols = [f.name for f in AUDIO_FEATURE_SCHEMA.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    x, rate = decode_audio(bytes(payload))
-                    rows.append({
-                        "media_id": int(mid), "sample_rate": rate,
-                        "duration_s": float(len(x) / rate),
-                        "rms": float(np.sqrt(np.mean(x * x))) if len(x)
-                        else 0.0,
-                        "peak": float(np.max(np.abs(x))) if len(x) else 0.0,
-                        "zero_crossings": int(np.sum(
-                            np.abs(np.diff(np.signbit(x))))) if len(x)
-                        else 0,
-                        "valid": "ok",
-                    })
-                except Exception:
-                    rows.append({
-                        "media_id": int(mid), "sample_rate": None,
-                        "duration_s": None, "rms": None, "peak": None,
-                        "zero_crossings": None, "valid": "corrupt",
-                    })
-            yield pd.DataFrame(rows, columns=cols)
-
-    return src.mapInPandas(run, AUDIO_FEATURE_SCHEMA)
-
-
 def decode_image(payload: bytes) -> np.ndarray:
     """Image decode via the repo's stdlib codecs: grayscale PNG
     (``core/png.py``), single-frame GIF incl. interlace
@@ -544,147 +366,6 @@ def decode_image(payload: bytes) -> np.ndarray:
     if payload[:2] == BMP_SIG:
         return decode_bmp_gray(payload)
     raise NotImplementedError("unrecognized image container stubbed")
-
-
-# --- REAL video pipeline: MJPEG-in-AVI (core/avi.py + core/jpeg.py) ----------
-
-
-def encode_video_avi(frames: list[np.ndarray], fps: int = 10) -> bytes:
-    """Grayscale frame arrays → an MJPEG AVI (each frame through the
-    stdlib JPEG encoder, wrapped in the RIFF container)."""
-    from ..core.avi import encode_avi_mjpeg
-    from ..core.jpeg import encode_jpeg_gray
-
-    h, w = frames[0].shape
-    return encode_avi_mjpeg([encode_jpeg_gray(f) for f in frames],
-                            w, h, fps)
-
-
-def decode_video(payload: bytes) -> list[np.ndarray]:
-    """REAL video decode for AVI: RIFF walk (``core/avi.py``) hands
-    each frame chunk to the stdlib JPEG decoder (MJPEG), or — when the
-    stream format declares BI_RGB 'rawvideo' — wraps the headerless
-    DIB pixel array with its strf BITMAPINFOHEADER as a BMP, reusing
-    the tested 1/4/8/16/24/32-bpp depth matrix.  Every other container
-    (mp4/webm/mkv — inter-frame codecs with no stdlib path) stays a
-    fail-loud stub for SAMPLE decode; their header metadata (dims,
-    duration, track kinds) parses via ``parse_meta`` (``core/mp4.py``,
-    ``core/ebml.py``)."""
-    from ..core.avi import decode_avi
-    from ..core.gif import GIF_SIGS, decode_gif_frames
-
-    if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-        frames, meta = decode_avi(payload)
-        if not frames:
-            raise ValueError("AVI with no video frame chunks")
-        strf = meta.get("strf")
-        if strf is not None and strf[16:20] == b"\x00\x00\x00\x00":
-            # biCompression == BI_RGB: raw DIB frames.  A BMP file is
-            # exactly BITMAPFILEHEADER + this strf (header+palette) +
-            # the pixel array, so synthesize one per frame.
-            off = 14 + len(strf)
-            return [decode_image(
-                b"BM" + struct.pack("<IHHI", off + len(f), 0, 0, off)
-                + strf + f) for f in frames]
-        return [decode_image(f) for f in frames]
-    if payload[:6] in GIF_SIGS:
-        # animated GIF: canvas-composited frames (transparency and
-        # disposal honored) — a single-frame GIF yields one frame
-        return decode_gif_frames(payload)
-    if len(payload) >= 12 and payload[4:8] == b"ftyp":
-        from ..core.mp4 import mp4_tracks
-
-        vids = [t for t in mp4_tracks(payload) if t["kind"] == "vide"]
-        mj = next((t for t in vids if t["codec"] == "jpeg"), None)
-        if mj is not None:
-            # MJPEG-in-BMFF: every stbl sample is a whole JPEG stream
-            return [decode_image(payload[o:o + s])
-                    for o, s in mj["samples"]]
-        codecs = sorted({t["codec"] for t in vids})
-        raise NotImplementedError(
-            f"BMFF video codec(s) {codecs or ['<none>']} are "
-            "inter-frame codecs with no stdlib path; only MJPEG "
-            "('jpeg') sample tracks decode — fail-loud by design")
-    if payload[:4] == b"\x1aE\xdf\xa3":
-        from ..core.ebml import mkv_tracks
-
-        vids = [t for t in mkv_tracks(payload) if t["kind"] == "video"]
-        mj = next(
-            (t for t in vids
-             if t["codec_id"] == "V_MJPEG"
-             or (t["codec_id"] == "V_MS/VFW/FOURCC"
-                 and t["codec_private"][16:20] == b"MJPG")), None)
-        if mj is not None:
-            # MJPEG-in-Matroska: every Block frame is a whole JPEG
-            return [decode_image(payload[o:o + s])
-                    for o, s in mj["frames"]]
-        codecs = sorted({t["codec_id"] for t in vids})
-        raise NotImplementedError(
-            f"Matroska video codec(s) {codecs or ['<none>']} are "
-            "inter-frame codecs with no stdlib path; only MJPEG "
-            "(V_MJPEG / VFW 'MJPG') tracks decode — fail-loud by "
-            "design")
-    raise NotImplementedError(
-        "only MJPEG/rawvideo-in-AVI, MJPEG-in-BMFF/Matroska and "
-        "animated GIF decode natively (core/{avi,mp4,ebml,gif,jpeg}"
-        ".py); other containers need real inter-frame codecs absent "
-        "from this environment — fail-loud by design")
-
-
-VIDEO_FRAME_FEATURE_SCHEMA = StructType([
-    StructField("media_id", LongType(), False),
-    StructField("frame_idx", IntegerType(), True),
-    StructField("width", IntegerType(), True),
-    StructField("height", IntegerType(), True),
-    StructField("mean_intensity", FloatType(), True),
-    StructField("motion", FloatType(), True),
-    StructField("valid", StringType(), False),
-])
-
-
-def video_frame_features(media: DataFrame, every_n: int = 1) -> DataFrame:
-    """REAL per-frame features for MJPEG-in-AVI payloads
-    (Arrow-batched, no shuffle): every ``every_n``-th frame decodes to
-    pixels and reports dimensions, mean intensity, and motion (mean
-    |Δ| vs the previous DECODED frame, scaled to [0,1]).  Same
-    quarantine contract as images: a corrupt or non-AVI payload yields
-    one valid='corrupt' row, never a failed task."""
-    src = media.filter(F.col("kind") == "video").select(
-        "media_id", "payload")
-    cols = [f.name for f in VIDEO_FRAME_FEATURE_SCHEMA.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    frames = decode_video(bytes(payload))
-                    prev = None
-                    for idx in range(0, len(frames), max(1, every_n)):
-                        img = frames[idx].astype(np.float64)
-                        motion = (
-                            float(np.mean(np.abs(img - prev)) / 255.0)
-                            if prev is not None and prev.shape == img.shape
-                            else None)
-                        rows.append({
-                            "media_id": int(mid), "frame_idx": idx,
-                            "width": int(img.shape[1]),
-                            "height": int(img.shape[0]),
-                            "mean_intensity": float(np.mean(img)),
-                            "motion": motion, "valid": "ok",
-                        })
-                        prev = img
-                except Exception:
-                    rows.append({
-                        "media_id": int(mid), "frame_idx": None,
-                        "width": None, "height": None,
-                        "mean_intensity": None, "motion": None,
-                        "valid": "corrupt",
-                    })
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    return src.mapInPandas(run, VIDEO_FRAME_FEATURE_SCHEMA)
 
 
 # --- REAL image pipeline over PNG payloads (core/png.py codec) ---------------
@@ -726,77 +407,43 @@ def png_media_corpus(spark: SparkSession, n: int, seed: int = 42,
 
 def real_media_corpus(spark: SparkSession, n: int, seed: int = 42,
                       partitions: int = 8) -> DataFrame:
-    """Deterministic media table that rotates through the REAL
+    """Deterministic image table that rotates through the REAL
     encoders this repo carries — the shape of a mixed crawl batch:
-    images cycle PNG/GIF/JPEG/TIFF (codec-rotated)/BMP, audio cycles
-    WAV-PCM/µ-law/IMA-ADPCM/AIFF/AU, video cycles the four
-    container paths MJPEG-AVI / rawvideo-AVI / MJPEG-in-BMFF /
-    MJPEG-in-Matroska.  Every payload round-trips through parse_meta
-    and its kind's feature operator (see ``test_real_media_corpus_mixed``
-    for the end-to-end drive)."""
-    from ..core.audio import encode_aiff, encode_au, encode_wav
-    from ..core.avi import encode_avi_raw8
+    rows cycle PNG/GIF/JPEG/TIFF (codec-rotated)/BMP.  Every payload
+    round-trips through parse_meta and ``image_pixel_features`` (see
+    ``test_real_media_corpus_mixed`` for the end-to-end drive)."""
     from ..core.bmp import encode_bmp_gray
-    from ..core.ebml import encode_mkv_mjpeg
     from ..core.gif import encode_gif_gray
     from ..core.jpeg import encode_jpeg_gray
-    from ..core.mp4 import encode_mp4_mjpeg
     from ..core.png import encode_png_gray
     from ..core.tiff import encode_tiff_gray
 
-    def one(i: int) -> tuple[str, bytes]:
+    def one(i: int) -> bytes:
         rng = np.random.default_rng(seed * 1_000_003 + i)
-        kind = ["image", "audio", "video"][i % 3]
-        if kind == "image":
-            w, h = 24 + (i % 6) * 8, 24 + (i % 4) * 8
-            yy, xx = np.mgrid[0:h, 0:w]
-            img = ((xx * 4 + yy * 2) % 240
-                   + rng.integers(0, 16, (h, w))).astype(np.uint8)
-            enc = (i // 3) % 5
-            if enc == 0:
-                return kind, encode_png_gray(img)
-            if enc == 1:
-                return kind, encode_gif_gray(img)
-            if enc == 2:
-                return kind, encode_jpeg_gray(img)
-            if enc == 3:
-                codec = ("none", "packbits", "lzw")[(i // 15) % 3]
-                pred = 2 if codec == "lzw" else 1
-                return kind, encode_tiff_gray(img, codec=codec,
-                                              predictor=pred)
-            return kind, encode_bmp_gray(img)
-        if kind == "audio":
-            t = np.arange(2000 + (i % 5) * 400) / 8000.0
-            sine = 0.4 * np.sin(2 * np.pi * (200 + i % 7 * 60) * t)
-            enc = (i // 3) % 5
-            if enc == 0:
-                return kind, encode_wav(sine, 8000, "pcm")
-            if enc == 1:
-                return kind, encode_wav(sine, 8000, "ulaw")
-            if enc == 2:
-                return kind, encode_wav(sine, 8000, "adpcm")
-            if enc == 3:
-                return kind, encode_aiff(sine, 8000)
-            return kind, encode_au(sine, 8000, "pcm16")
-        frames = [np.full((16, 16), (f * 37 + i) % 255, np.uint8)
-                  for f in range(3 + i % 4)]
-        enc = (i // 3) % 4
+        w, h = 24 + (i % 6) * 8, 24 + (i % 4) * 8
+        yy, xx = np.mgrid[0:h, 0:w]
+        img = ((xx * 4 + yy * 2) % 240
+               + rng.integers(0, 16, (h, w))).astype(np.uint8)
+        enc = i % 5
+        if enc == 0:
+            return encode_png_gray(img)
         if enc == 1:
-            return kind, encode_avi_raw8(frames, fps=10)
-        if enc >= 2:
-            jf = [encode_jpeg_gray(f) for f in frames]
-            mux = encode_mp4_mjpeg if enc == 2 else encode_mkv_mjpeg
-            return kind, mux(jf, 16, 16, fps=10)
-        return kind, encode_video_avi(frames, fps=10)
+            return encode_gif_gray(img)
+        if enc == 2:
+            return encode_jpeg_gray(img)
+        if enc == 3:
+            codec = ("none", "packbits", "lzw")[(i // 5) % 3]
+            pred = 2 if codec == "lzw" else 1
+            return encode_tiff_gray(img, codec=codec, predictor=pred)
+        return encode_bmp_gray(img)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = {"media_id": [], "kind": [], "payload": []}
             for i in pdf["id"]:
-                kind, payload = one(int(i))
                 rows["media_id"].append(int(i))
-                rows["kind"].append(kind)
-                rows["payload"].append(payload)
+                rows["kind"].append("image")
+                rows["payload"].append(one(int(i)))
             if rows["media_id"]:
                 yield pd.DataFrame(rows)
 
@@ -873,233 +520,3 @@ def resize_images(media: DataFrame, factor: int = 2) -> DataFrame:
                 yield pd.DataFrame(rows)
 
     return src.mapInPandas(run, MEDIA_SCHEMA)
-
-
-# --- Track inventory: the cheap routing pass before any decode ---------------
-
-TRACK_INVENTORY_SCHEMA = StructType([
-    StructField("media_id", LongType(), False),
-    StructField("container", StringType(), True),
-    StructField("track_idx", IntegerType(), True),
-    StructField("kind", StringType(), True),
-    StructField("codec", StringType(), True),
-    StructField("n_samples", IntegerType(), True),
-    StructField("decodable", BooleanType(), True),
-    StructField("valid", StringType(), False),
-])
-
-# WAVEFORMATEX tags the WAV decode matrix handles (PCM, G.711, IMA)
-_WAV_DECODABLE_TAGS = {0x0001, 0x0006, 0x0007, 0x0011}
-
-
-def track_inventory(payload: bytes) -> list[dict]:
-    """Per-track container inventory WITHOUT decoding any sample —
-    the cheap metadata pass a 100 TB crawl runs first, so the
-    expensive decode stage only ever sees payloads it can decode and
-    undecodable media is counted/routed, not discovered by exception.
-
-    Each row: ``{container, track_idx, kind, codec, n_samples,
-    decodable, valid}``.  ``decodable`` reflects this repo's shipped
-    codec matrix (header-level: an unusual in-stream feature can
-    still quarantine at decode time).  Malformed containers raise —
-    the Spark wrapper (``media_track_inventory``) quarantines them as
-    a single valid='corrupt' row."""
-
-    def row(container, idx, kind, codec, n, dec):
-        return {"container": container, "track_idx": idx, "kind": kind,
-                "codec": codec, "n_samples": n, "decodable": bool(dec),
-                "valid": "ok"}
-
-    # --- AVI: counting walk, no frame copies -------------------------
-    if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-        from ..core.avi import riff_chunks
-
-        end = min(len(payload),
-                  8 + struct.unpack_from("<I", payload, 4)[0])
-        streams: list[dict] = []
-        counts: dict[int, int] = {}
-
-        def walk(s, e):
-            for fourcc, body, size in riff_chunks(payload, s, e):
-                if fourcc == b"LIST":
-                    lt = payload[body:body + 4]
-                    if lt in (b"hdrl", b"strl", b"movi", b"rec "):
-                        walk(body + 4, body + size)
-                elif fourcc == b"strh" and size >= 8:
-                    st = payload[body:body + 4]
-                    streams.append({
-                        "kind": ("video" if st == b"vids" else
-                                 "audio" if st == b"auds" else "other"),
-                        "codec": None, "tag": None})
-                elif fourcc == b"strf" and streams:
-                    # size minimums mirror decode_avi's: a shorter strf
-                    # is dropped there, so it must not read decodable
-                    s0 = streams[-1]
-                    if s0["kind"] == "video" and size >= 40:
-                        comp = payload[body + 16:body + 20]
-                        s0["codec"] = (
-                            "rawvideo" if comp == b"\x00\x00\x00\x00"
-                            else comp.decode("latin-1").strip("\0 ")
-                            .lower())
-                    elif s0["kind"] == "audio" and size >= 16:
-                        (tag,) = struct.unpack_from("<H", payload, body)
-                        if tag == 0xFFFE and size >= 40:
-                            (tag,) = struct.unpack_from(
-                                "<H", payload, body + 24)
-                        s0["tag"] = tag
-                        s0["codec"] = f"wav_0x{tag:04x}"
-                elif fourcc[2:4] in (b"dc", b"db", b"wb") \
-                        and fourcc[:2].isdigit():
-                    si = int(fourcc[:2])
-                    counts[si] = counts.get(si, 0) + 1
-
-        walk(12, end)
-        if not streams:
-            raise ValueError("AVI without stream headers")
-        # decode_video/avi_audio_wav also need at least one chunk
-        return [row("avi", i, s0["kind"], s0["codec"], counts.get(i),
-                    bool(counts.get(i))
-                    and (s0["codec"] in ("mjpg", "rawvideo")
-                         if s0["kind"] == "video"
-                         else s0["tag"] in _WAV_DECODABLE_TAGS))
-                for i, s0 in enumerate(streams)]
-
-    # --- ISO BMFF: stbl walk ships (offset, size) tuples only --------
-    if len(payload) >= 12 and payload[4:8] == b"ftyp":
-        from ..core.mp4 import mp4_tracks
-
-        rows = []
-        for i, t in enumerate(mp4_tracks(payload)):
-            kind = ("video" if t["kind"] == "vide" else
-                    "audio" if t["kind"] == "soun" else "other")
-            if kind == "video":
-                dec = t["codec"] == "jpeg"
-            elif kind == "audio":
-                # the decoder also demands a sample rate, and the PCM
-                # widths mirror _decode_bmff_audio exactly: 'twos'
-                # ships the depths _pcm_to_float handles, 'sowt' is
-                # 16-bit by definition (any other declared depth
-                # refuses loudly in the decoder)
-                dec = bool(t["rate"]) and (
-                    t["codec"] in ("ulaw", "alaw")
-                    or (t["codec"] == "twos"
-                        and (t["sample_bits"] or 16) in (8, 16, 24, 32))
-                    or (t["codec"] == "sowt"
-                        and (t["sample_bits"] or 16) == 16)
-                    or (t["codec"] == "raw "
-                        and (t["sample_bits"] or 8) == 8))
-            else:
-                dec = False
-            rows.append(row("mp4", i, kind, t["codec"].strip(),
-                            len(t["samples"]), dec))
-        return rows
-
-    # --- Matroska/WebM: Cluster walk ships extents only --------------
-    if payload[:4] == b"\x1aE\xdf\xa3":
-        from ..core.ebml import mkv_tracks
-
-        rows = []
-        for i, t in enumerate(mkv_tracks(payload)):
-            kind = t["kind"] or "other"
-            cid = t["codec_id"]
-            if kind == "video":
-                dec = (cid == "V_MJPEG"
-                       or (cid == "V_MS/VFW/FOURCC"
-                           and t["codec_private"][16:20] == b"MJPG"))
-            elif kind == "audio":
-                if cid == "A_MS/ACM" and len(t["codec_private"]) >= 16:
-                    # rate/channels come from the WAVEFORMATEX itself
-                    (tag,) = struct.unpack_from(
-                        "<H", t["codec_private"], 0)
-                    dec = tag in _WAV_DECODABLE_TAGS
-                elif cid in ("A_PCM/INT/LIT", "A_PCM/INT/BIG"):
-                    # mirror the decode path: rate required, PCM width
-                    # must be one the sample machinery ships
-                    dec = bool(t["rate"]) and \
-                        (t["bit_depth"] or 16) in (8, 16, 24, 32)
-                elif cid == "A_PCM/FLOAT/IEEE":
-                    dec = bool(t["rate"]) and \
-                        t["bit_depth"] in (32, 64)
-                else:
-                    dec = False
-            else:
-                dec = False
-            rows.append(row("mkv", i, kind, cid, len(t["frames"]), dec))
-        return rows
-
-    # --- single-track formats: magic → one row -----------------------
-    meta = parse_meta(payload)
-    if meta["valid"] != "ok" or meta["kind"] is None:
-        raise ValueError("unrecognized or corrupt media container")
-    n = meta.get("n_frames")
-    if payload[:5] == MAGIC:
-        return [row("synthetic", 0, meta["kind"], "xmed1", n, True)]
-    if payload[:8] == b"\x89PNG\r\n\x1a\n":
-        return [row("png", 0, "image", "png", 1, True)]
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        return [row("gif", 0, "image", "gif-lzw", n, True)]
-    if payload[:2] == b"\xff\xd8":
-        return [row("jpeg", 0, "image", "jpeg", 1, True)]
-    if payload[:4] in (b"II*\x00", b"MM\x00*"):
-        return [row("tiff", 0, "image", "tiff", 1, True)]
-    if payload[:2] == b"BM":
-        return [row("bmp", 0, "image", "bmp", 1, True)]
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        from ..core.audio import wav_info
-
-        info = wav_info(payload) or {}
-        tag = info.get("format")
-        dec = tag in _WAV_DECODABLE_TAGS and (
-            tag != 0x0001
-            or info.get("bits_per_sample") in (8, 16, 24, 32))
-        return [row("wav", 0, "audio",
-                    f"wav_0x{tag:04x}" if tag is not None else None,
-                    n, dec)]
-    if payload[:4] == b"FORM" and payload[8:12] in (b"AIFF", b"AIFC"):
-        from ..core.audio import aiff_info
-
-        # aiff_info parses via the same stdlib module the decoder
-        # uses; an unsupported AIFC compression leaves rate None
-        info = aiff_info(payload) or {}
-        return [row("aiff", 0, "audio", "aiff", n,
-                    info.get("rate") is not None)]
-    if payload[:4] == b".snd":
-        from ..core.audio import au_info
-
-        info = au_info(payload) or {}
-        return [row("au", 0, "audio",
-                    f"au_enc{info.get('encoding')}", n,
-                    info.get("encoding") in (1, 2, 3, 27)
-                    and bool(info.get("rate")))]
-    # parse_meta recognized it but no container branch did: report the
-    # kind without codec detail rather than invent one
-    return [row("unknown", 0, meta["kind"], None, n, False)]
-
-
-def media_track_inventory(media: DataFrame) -> DataFrame:
-    """Arrow-batched, zero-shuffle track inventory over a media table:
-    one row per container track with its codec identity, sample count
-    and shipped-codec decodability — the routing predicate that keeps
-    undecodable payloads out of the expensive decode stages at crawl
-    scale.  Malformed containers quarantine as one valid='corrupt'
-    row, never dropped."""
-    src = media.select("media_id", "payload")
-    cols = [f.name for f in TRACK_INVENTORY_SCHEMA.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    for r in track_inventory(bytes(payload)):
-                        rows.append({"media_id": int(mid), **r})
-                except Exception:
-                    rows.append({
-                        "media_id": int(mid), "container": None,
-                        "track_idx": None, "kind": None, "codec": None,
-                        "n_samples": None, "decodable": None,
-                        "valid": "corrupt"})
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    return src.mapInPandas(run, TRACK_INVENTORY_SCHEMA)

@@ -492,84 +492,6 @@ def test_jpeg_codec_scales_linearly():
         "check the _BitReader accumulator masking")
 
 
-def _planted_video_frames(n=6, w=64, h=48):
-    import numpy as np
-
-    frames = []
-    for i in range(n):
-        yy, xx = np.mgrid[0:h, 0:w]
-        frames.append(((xx + yy + i * 9) % 256).astype(np.uint8))
-    return frames
-
-
-def test_mjpeg_avi_round_trip():
-    """Round-4 ask: video is no longer a pure stub — MJPEG-in-AVI
-    decodes natively (RIFF walk in core/avi.py + the stdlib JPEG
-    codec).  Planted round-trip: encode → header meta → per-frame
-    pixel closeness; other containers stay fail-loud."""
-    import numpy as np
-    import pytest
-
-    from exam_pdf_parser_spark.operators.multimodal import (
-        decode_video, encode_video_avi, parse_meta,
-    )
-
-    frames = _planted_video_frames()
-    blob = encode_video_avi(frames, fps=5)
-
-    m = parse_meta(blob)
-    assert (m["kind"], m["width"], m["height"], m["n_frames"],
-            m["valid"]) == ("video", 64, 48, 6, "ok")
-
-    dec = decode_video(blob)
-    assert len(dec) == 6
-    for d, f in zip(dec, frames):
-        assert d.shape == f.shape
-        # JPEG is lossy; the content must still track closely
-        assert float(np.mean(np.abs(
-            d.astype(float) - f.astype(float)))) < 4.0
-
-    # moov-less BMFF / Tracks-less EBML shells are structurally
-    # incomplete (ValueError, quarantined upstream) now that
-    # intra-frame tracks decode in both containers; genuinely unknown
-    # containers remain loud NotImplementedError stubs
-    with pytest.raises(ValueError):
-        decode_video(b"\x00\x00\x00\x18ftypisom" + b"\x00" * 64)
-    with pytest.raises(ValueError):
-        decode_video(b"\x1aE\xdf\xa3" + b"\x00" * 64)   # EBML/webm
-    with pytest.raises(NotImplementedError):
-        decode_video(b"FLV\x01" + b"\x00" * 64)         # unknown
-    # structurally broken AVI raises ValueError (quarantined upstream)
-    with pytest.raises(ValueError):
-        decode_video(b"RIFF\x10\x00\x00\x00AVI " + b"\x00" * 16)
-
-
-def test_video_frame_features_spark(spark):
-    """The Spark stage decodes real AVI payloads per frame and
-    quarantines corrupt ones — nothing fails the task."""
-    from exam_pdf_parser_spark.operators.multimodal import (
-        MEDIA_SCHEMA, encode_video_avi, video_frame_features,
-    )
-
-    blob = encode_video_avi(_planted_video_frames(), fps=5)
-    media = spark.createDataFrame(
-        [(1, "video", bytearray(blob)),
-         (2, "video", bytearray(b"RIFF garbage that is not an avi")),
-         (3, "image", bytearray(b"not even video"))],
-        MEDIA_SCHEMA)
-    rows = video_frame_features(media, every_n=2).collect()
-    by_id = {}
-    for r in rows:
-        by_id.setdefault(r["media_id"], []).append(r)
-    assert 3 not in by_id                      # kind filter
-    ok = sorted(by_id[1], key=lambda r: r["frame_idx"])
-    assert [r["frame_idx"] for r in ok] == [0, 2, 4]
-    assert all(r["valid"] == "ok" and r["width"] == 64 for r in ok)
-    assert ok[0]["motion"] is None             # no previous frame
-    assert ok[1]["motion"] is not None and ok[1]["motion"] > 0
-    assert [r["valid"] for r in by_id[2]] == ["corrupt"]
-
-
 def test_tiff_bmp_decode():
     """Baseline TIFF (none/PackBits strips, II and MM byte orders,
     gray + RGB) and uncompressed BMP (8-bit palette + 24-bit) decode
@@ -1347,8 +1269,7 @@ def test_jpeg_in_tiff_strips():
 
 def test_animated_gif_frames_composite():
     """decode_gif_frames composits subrectangles, transparency and
-    disposal onto the canvas; decode_video treats animated GIFs as a
-    native video container."""
+    disposal onto the canvas."""
     import struct
 
     import numpy as np
@@ -1356,8 +1277,6 @@ def test_animated_gif_frames_composite():
     from exam_pdf_parser_spark.core.gif import (
         _lzw_uncompressed, decode_gif_frames, decode_gif_gray,
     )
-    from exam_pdf_parser_spark.operators.multimodal import decode_video
-
     gct = bytes(v for i in range(256) for v in (i, i, i))  # luma == idx
     header = (b"GIF89a" + struct.pack("<HHBBB", 10, 10, 0x80 | 7, 0, 0)
               + gct)
@@ -1395,10 +1314,6 @@ def test_animated_gif_frames_composite():
     # the NEXT frame pastes over a background-restored region; outside
     # the repasted rect the background (index 0) shows through
     assert frames_d[2][3, 1] == 100               # untouched column
-
-    # decode_video dispatches GIF animations
-    vid = decode_video(payload)
-    assert len(vid) == 3 and np.array_equal(vid[0], frames[0])
 
     # single-frame equivalence with the first-frame decoder
     assert np.array_equal(decode_gif_gray(payload),
@@ -1535,55 +1450,35 @@ def test_codec_fuzz_no_hang_no_silent_success():
     bit-flipped payloads must raise a controlled exception quickly —
     never hang, loop, or return a plausible decode of garbage.  (The
     Spark stages turn these raises into valid='corrupt' rows.)"""
-    import warnings
-
     import numpy as np
 
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore", DeprecationWarning)
-        import audioop
-    from exam_pdf_parser_spark.core.audio import decode_audio_any
-    from exam_pdf_parser_spark.core.avi import decode_avi
     from exam_pdf_parser_spark.core.bmp import decode_bmp_gray
     from exam_pdf_parser_spark.core.gif import decode_gif_gray
     from exam_pdf_parser_spark.core.jpeg import decode_jpeg_gray
     from exam_pdf_parser_spark.core.png import decode_png_gray
     from exam_pdf_parser_spark.core.tiff import decode_tiff_gray
 
-    from exam_pdf_parser_spark.operators.multimodal import (
-        decode_audio, decode_video,
-    )
-
     decoders = [decode_png_gray, decode_gif_gray, decode_jpeg_gray,
-                decode_tiff_gray, decode_bmp_gray, decode_avi,
-                decode_audio_any, decode_video, decode_audio]
+                decode_tiff_gray, decode_bmp_gray]
     ok_errors = (ValueError, NotImplementedError, KeyError, IndexError,
                  EOFError, OSError, struct_error := __import__(
-                     "struct").error, audioop.error, ZeroDivisionError,
+                     "struct").error, ZeroDivisionError,
                  __import__("zlib").error)
 
     rng = np.random.default_rng(123)
     sigs = [b"\x89PNG\r\n\x1a\n", b"GIF89a", b"\xff\xd8\xff",
-            b"II*\x00", b"MM\x00*", b"BM", b"RIFF????AVI ",
-            b"RIFF????WAVE", b"FORM????AIFF", b".snd", b""]
+            b"II*\x00", b"MM\x00*", b"BM", b""]
     payloads = []
     for sig in sigs:
         for n in (0, 3, 17, 256):
             payloads.append(sig + bytes(
                 rng.integers(0, 256, n).astype(np.uint8)))
     # bit-flipped versions of real encodes
-    from exam_pdf_parser_spark.core.audio import encode_wav
     from exam_pdf_parser_spark.core.bmp import encode_bmp_gray
     from exam_pdf_parser_spark.core.tiff import encode_tiff_gray
-    from exam_pdf_parser_spark.core.ebml import encode_mkv_mjpeg
-    from exam_pdf_parser_spark.core.jpeg import encode_jpeg_gray
-    from exam_pdf_parser_spark.core.mp4 import encode_mp4_mjpeg
     img = np.arange(64, dtype=np.uint8).reshape(8, 8)
-    sine = 0.2 * np.sin(np.arange(500) / 9.0)
-    jf = [encode_jpeg_gray(img)] * 2
     for blob in (encode_tiff_gray(img, codec="lzw"),
-                 encode_bmp_gray(img), encode_wav(sine, 8000, "adpcm"),
-                 encode_mp4_mjpeg(jf, 8, 8), encode_mkv_mjpeg(jf, 8, 8)):
+                 encode_bmp_gray(img)):
         for _ in range(6):
             b = bytearray(blob)
             for _ in range(4):
@@ -1599,98 +1494,13 @@ def test_codec_fuzz_no_hang_no_silent_success():
                 pass           # controlled failure — the contract
 
 
-def test_header_meta_for_undecodable_formats():
-    """parse_meta reads REAL ISO BMFF and Matroska/WebM headers with
-    no sample codec: dims from tkhd / Tracks, duration from mvhd /
-    Info, kind from the track handlers.  A moov-less init segment
-    reports corrupt; flipped or truncated headers never raise."""
-    import struct
-
-    from exam_pdf_parser_spark.operators.multimodal import parse_meta
-
-    # --- ISO BMFF (mp4/m4a) and Matroska/WebM header metadata --------
-    def box(t, body):
-        return struct.pack(">I", 8 + len(body)) + t + body
-
-    def el(eid, body):
-        eb = eid.to_bytes(max(1, (eid.bit_length() + 7) // 8), "big")
-        n = len(body)
-        size = bytes([0x80 | n]) if n < 127 else struct.pack(
-            ">H", 0x4000 | n)
-        return eb + size + body
-
-    mvhd = box(b"mvhd", b"\x00" * 4 + struct.pack(">II", 0, 0)
-               + struct.pack(">II", 1000, 42000) + b"\x00" * 80)
-    tkhd = box(b"tkhd", b"\x00" * 4 + b"\x00" * 20 + b"\x00" * 52
-               + struct.pack(">II", 640 << 16, 360 << 16))
-    hdlr_v = box(b"hdlr", b"\x00" * 8 + b"vide" + b"\x00" * 13)
-    trak = box(b"trak", tkhd + box(b"mdia", hdlr_v))
-    mp4 = (box(b"ftyp", b"isom" + b"\x00\x00\x02\x00" + b"isomiso2")
-           + box(b"moov", mvhd + trak) + box(b"mdat", b"\x00" * 32))
-    m = parse_meta(mp4)
-    assert (m["kind"], m["width"], m["height"], m["valid"]) == \
-        ("video", 640, 360, "ok")
-    assert m["duration_ms"] == 42000
-
-    # audio-only BMFF (hdlr soun, 0x0 tkhd dims) → kind audio
-    hdlr_s = box(b"hdlr", b"\x00" * 8 + b"soun" + b"\x00" * 13)
-    tkhd0 = box(b"tkhd", b"\x00" * 4 + b"\x00" * 20 + b"\x00" * 52
-                + struct.pack(">II", 0, 0))
-    m4a = (box(b"ftyp", b"M4A " + b"\x00" * 8)
-           + box(b"moov", mvhd + box(
-               b"trak", tkhd0 + box(b"mdia", hdlr_s))))
-    m = parse_meta(m4a)
-    assert (m["kind"], m["width"], m["valid"]) == ("audio", None, "ok")
-
-    # moov-less init segment → corrupt, never fabricated dims
-    assert parse_meta(box(b"ftyp", b"isom" + b"\x00" * 8))["valid"] \
-        == "corrupt"
-
-    # WebM: EBML header (DocType) + Segment(Info(scale, dur), Tracks)
-    ebml_hdr = el(0x1A45DFA3, el(0x4282, b"webm"))
-    info = el(0x1549A966,
-              el(0x2AD7B1, (1_000_000).to_bytes(3, "big"))
-              + el(0x4489, struct.pack(">d", 33000.0)))
-    video = el(0xE0, el(0xB0, (1280).to_bytes(2, "big"))
-               + el(0xBA, (720).to_bytes(2, "big")))
-    track = el(0xAE, el(0x83, b"\x01") + video)
-    tracks = el(0x1654AE6B, track)
-    webm = ebml_hdr + el(0x18538067, info + tracks)
-    m = parse_meta(webm)
-    assert (m["kind"], m["width"], m["height"], m["valid"]) == \
-        ("video", 1280, 720, "ok")
-    assert m["duration_ms"] == 33000
-
-    # streamed Matroska: unknown-size Segment (all-ones vint) clamps
-    # to the buffer and still yields dims
-    streamed = ebml_hdr + b"\x18\x53\x80\x67\xff" + info + tracks
-    m = parse_meta(streamed)
-    assert (m["width"], m["height"], m["duration_ms"]) == \
-        (1280, 720, 33000)
-
-    # fuzz gate: byte-flipped and truncated BMFF/EBML never raise
-    import numpy as _np
-    _rng = _np.random.default_rng(5)
-    for blob in (mp4, m4a, webm, streamed):
-        for _ in range(8):
-            b = bytearray(blob)
-            for _ in range(4):
-                b[_rng.integers(0, len(b))] ^= 1 << _rng.integers(0, 8)
-            parse_meta(bytes(b))
-            parse_meta(bytes(b[: _rng.integers(1, len(b))]))
-
-
 def test_real_media_corpus_mixed(spark):
-    """A mixed batch of REAL formats — the shape of a crawl's media
-    partition — flows through every stage: metadata for all rows,
-    pixel features for every image, audio features for every audio
-    row, frame stats for every video across all FOUR
-    container paths (MJPEG-AVI, rawvideo-AVI, MJPEG-in-BMFF,
-    MJPEG-in-Matroska).  Nothing quarantines and every format family
-    is actually present."""
+    """A mixed batch of REAL image formats — the shape of a crawl's
+    media partition — flows through every stage: metadata and pixel
+    features for all 90 rows, across PNG, GIF, JPEG, TIFF and BMP.
+    Nothing quarantines and every format family is actually present."""
     from exam_pdf_parser_spark.operators.multimodal import (
         extract_metadata, image_pixel_features, real_media_corpus,
-        video_frame_features, wav_audio_features,
     )
 
     media = real_media_corpus(spark, 90, partitions=4).persist()
@@ -1698,264 +1508,27 @@ def test_real_media_corpus_mixed(spark):
         meta = extract_metadata(media).toPandas()
         assert len(meta) == 90
         assert (meta["valid"] == "ok").all()
-        by_kind = meta.groupby("kind").size().to_dict()
-        assert by_kind == {"image": 30, "audio": 30, "video": 30}
+        assert meta.groupby("kind").size().to_dict() == {"image": 90}
 
-        imgs = image_pixel_features(
-            media.filter("kind = 'image'")).toPandas()
-        assert len(imgs) == 30 and (imgs["valid"] == "ok").all()
+        imgs = image_pixel_features(media).toPandas()
+        assert len(imgs) == 90 and (imgs["valid"] == "ok").all()
         assert imgs["mean_intensity"].between(8, 247).all()
 
-        aud = wav_audio_features(
-            media.filter("kind = 'audio'")).toPandas()
-        assert len(aud) == 30 and (aud["valid"] == "ok").all()
-        assert (aud["sample_rate"] == 8000).all()
-        # a 0.4-amplitude sine has rms ~0.28 under every codec here
-        assert aud["rms"].between(0.2, 0.36).all()
-
-        vid = video_frame_features(
-            media.filter("kind = 'video'")).toPandas()
-        assert (vid["valid"] == "ok").all()
-        assert vid.groupby("media_id").size().between(3, 6).all()
-
-        # all four video container paths are actually present
+        # all five image containers are actually present
         def container(payload):
             b = bytes(payload)
-            if b[:4] == b"RIFF":
-                return "avi"
-            if b[4:8] == b"ftyp":
-                return "mp4"
-            if b[:4] == b"\x1aE\xdf\xa3":
-                return "mkv"
+            for sig, name in ((b"\x89PNG", "png"), (b"GIF8", "gif"),
+                              (b"\xff\xd8", "jpeg"), (b"II*\x00", "tiff"),
+                              (b"MM\x00*", "tiff"), (b"BM", "bmp")):
+                if b.startswith(sig):
+                    return name
             return "?"
 
-        vids = media.filter("kind = 'video'") \
-            .select("payload").toPandas()["payload"]
-        assert set(vids.map(container)) == {"avi", "mp4", "mkv"}
+        payloads = media.select("payload").toPandas()["payload"]
+        assert set(payloads.map(container)) == {
+            "png", "gif", "jpeg", "tiff", "bmp"}
     finally:
         media.unpersist()
-
-
-def test_compressed_audio_codecs_decode():
-    """Round-4+ follow-on to the mp3/ogg gap: every audio codec the
-    stdlib genuinely carries now decodes — G.711 µ-law/a-law and mono
-    IMA-ADPCM WAV (audioop, RIFF fmt walked directly), AIFF (aifc),
-    Sun AU — with header metadata and fail-loud stubs for the rest."""
-    import numpy as np
-    import pytest
-
-    from exam_pdf_parser_spark.core.audio import (
-        decode_audio_any, encode_aiff, encode_au, encode_wav,
-    )
-    from exam_pdf_parser_spark.operators.multimodal import parse_meta
-
-    t = np.arange(8000) / 8000.0
-    sine = 0.5 * np.sin(2 * np.pi * 440 * t)
-    cases = [
-        ("wav-pcm", encode_wav(sine, 8000, "pcm"), 1e-3),
-        ("wav-ulaw", encode_wav(sine, 8000, "ulaw"), 0.02),
-        ("wav-alaw", encode_wav(sine, 8000, "alaw"), 0.02),
-        # skip the first block's inherent IMA step-index cold ramp
-        ("wav-adpcm", encode_wav(sine, 8000, "adpcm"), 0.05),
-        ("aiff", encode_aiff(sine, 8000), 1e-3),
-        ("au-ulaw", encode_au(sine, 8000, "ulaw"), 0.02),
-        ("au-pcm16", encode_au(sine, 8000, "pcm16"), 1e-3),
-    ]
-    for name, blob, tol in cases:
-        x, rate = decode_audio_any(blob)
-        assert rate == 8000, name
-        n = min(len(x), 6000)
-        err = float(np.max(np.abs(x[50:n] - sine[50:n])))
-        assert err < tol, (name, err)
-        m = parse_meta(blob)
-        assert (m["kind"], m["width"], m["valid"]) == \
-            ("audio", 8000, "ok"), name
-        assert m["n_frames"] and m["n_frames"] >= 7999, name
-
-    # perceptual codecs stay loud stubs
-    with pytest.raises(NotImplementedError):
-        decode_audio_any(b"\xff\xfb\x90\x00" + b"\x00" * 64)   # mp3
-    with pytest.raises(NotImplementedError):
-        decode_audio_any(b"OggS" + b"\x00" * 64)               # ogg
-    # an unsupported WAV codec names itself
-    with pytest.raises(NotImplementedError, match="MP3"):
-        import struct
-        hdr = struct.pack("<HHIIHH", 85, 1, 8000, 8000, 1, 0)
-        body = (b"WAVE" + b"fmt " + struct.pack("<I", len(hdr)) + hdr
-                + b"data" + struct.pack("<I", 4) + b"\x00" * 4)
-        decode_audio_any(b"RIFF" + struct.pack("<I", len(body)) + body)
-
-
-def test_wav_extensible_24bit_stereo():
-    """WAVE_FORMAT_EXTENSIBLE (0xFFFE) wrapping PCM — the standard
-    container for 24-bit/multichannel WAV — resolves its real codec
-    from the SubFormat GUID and decodes bit-exactly (stereo averaged
-    to mono)."""
-    import struct
-
-    import numpy as np
-
-    from exam_pdf_parser_spark.core.audio import decode_audio_any
-
-    rate, nch = 8000, 2
-    t = np.arange(2000) / rate
-    left = (0.5 * np.sin(2 * np.pi * 440 * t) * 8388607).astype(np.int32)
-    right = (0.25 * np.sin(2 * np.pi * 220 * t) * 8388607).astype(np.int32)
-    inter = np.empty(2 * len(t), np.int32)
-    inter[0::2], inter[1::2] = left, right
-    raw = b"".join(int(v).to_bytes(3, "little", signed=True)
-                   for v in inter)
-    guid_pcm = bytes.fromhex("0100000000001000800000AA00389B71")
-    fmt = (struct.pack("<HHIIHH", 0xFFFE, nch, rate, rate * nch * 3,
-                       nch * 3, 24)
-           + struct.pack("<HHI", 22, 24, 3) + guid_pcm)
-    body = (b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(raw)) + raw)
-    x, got_rate = decode_audio_any(
-        b"RIFF" + struct.pack("<I", len(body)) + body)
-    want = (left / 8388608 + right / 8388608) / 2
-    assert got_rate == rate and len(x) == 2000
-    assert float(np.max(np.abs(x - want))) == 0.0
-
-
-def test_stereo_ima_adpcm_wav():
-    """Stereo IMA-ADPCM interleaves channels in 4-byte nibble groups
-    after two state headers; the decoder must de-interleave, decode
-    each channel with its own state, and re-interleave."""
-    import struct
-    import warnings
-
-    import numpy as np
-
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore", DeprecationWarning)
-        import audioop
-    from exam_pdf_parser_spark.core.audio import (
-        _swap_nibbles, decode_audio_any,
-    )
-
-    rate, n = 8000, 2041                 # one full block + partial
-    t = np.arange(n) / rate
-    left = (0.5 * np.sin(2 * np.pi * 330 * t) * 32767).astype("<i2")
-    right = (0.25 * np.sin(2 * np.pi * 550 * t) * 32767).astype("<i2")
-
-    # build the stereo blocks the way a standard muxer does
-    balign = 2048
-    samples_per_block = (balign - 8) // 8 * 8 + 1
-    blocks = []
-    states = [None, None]
-    for off in range(0, n, samples_per_block):
-        hdr = b""
-        chan_nibs = []
-        for c, chan in enumerate((left, right)):
-            blk = chan[off:off + samples_per_block]
-            pred = int(blk[0])
-            idx = states[c][1] if states[c] else 0
-            hdr += struct.pack("<hBB", pred, idx, 0)
-            rest = blk[1:]
-            if len(rest) % 8:
-                rest = rest[: len(rest) - len(rest) % 8]
-            nib, st = audioop.lin2adpcm(
-                rest.astype("<i2").tobytes(), 2, (pred, idx))
-            states[c] = st
-            chan_nibs.append(_swap_nibbles(nib))
-        groups = min(len(x) // 4 for x in chan_nibs)
-        body = b"".join(chan_nibs[0][g * 4:g * 4 + 4]
-                        + chan_nibs[1][g * 4:g * 4 + 4]
-                        for g in range(groups))
-        blocks.append((hdr + body).ljust(balign, b"\x00"))
-    data = b"".join(blocks)
-    fmt = struct.pack("<HHIIHH", 17, 2, rate, rate, balign, 4)
-    body = (b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data)
-    blob = b"RIFF" + struct.pack("<I", len(body)) + body
-
-    x, got_rate = decode_audio_any(blob)
-    assert got_rate == rate
-    want = (left.astype(float) + right.astype(float)) / 2 / 32768
-    m = min(len(x), n) - 100
-    err = float(np.max(np.abs(x[100:m] - want[100:m])))
-    assert err < 0.06, err               # ADPCM quantization only
-
-
-def test_ima_adpcm_low_nibble_first():
-    """Interop pin (review finding): WAV IMA-ADPCM stores each byte's
-    FIRST sample in the LOW nibble; audioop consumes the high nibble
-    first, so the decoder must nibble-swap.  With pred=0, idx=0
-    (step 7), nibble 7 decodes to +11 and nibble 0 to +0 — the byte
-    0x07 (low=7, high=0) must therefore yield samples [11, …], while
-    0x70 yields [0, 11]."""
-    import struct
-
-    import numpy as np
-
-    from exam_pdf_parser_spark.core.audio import _decode_ima_blocks
-
-    def block(byte):
-        return struct.pack("<hBB", 0, 0, 0) + bytes([byte])
-
-    s = np.frombuffer(_decode_ima_blocks(block(0x07), 1, 5), "<i2")
-    t = np.frombuffer(_decode_ima_blocks(block(0x70), 1, 5), "<i2")
-    assert list(s[:2]) == [0, 11]       # pred, then LOW nibble 7
-    assert list(t[:3]) == [0, 0, 11]    # pred, low nibble 0, then 7
-
-
-def test_audio_features_mixed_codecs(spark):
-    """wav_audio_features consumes every native codec and quarantines
-    the rest — nothing fails the task."""
-    import numpy as np
-
-    from exam_pdf_parser_spark.core.audio import encode_au, encode_wav
-    from exam_pdf_parser_spark.operators.multimodal import (
-        MEDIA_SCHEMA, wav_audio_features,
-    )
-
-    t = np.arange(4000) / 8000.0
-    sine = 0.25 * np.sin(2 * np.pi * 220 * t)
-    media = spark.createDataFrame(
-        [(1, "audio", bytearray(encode_wav(sine, 8000, "ulaw"))),
-         (2, "audio", bytearray(encode_au(sine, 8000, "pcm16"))),
-         (3, "audio", bytearray(b"\xff\xfb\x90\x00 not decodable"))],
-        MEDIA_SCHEMA)
-    rows = {r["media_id"]: r for r in wav_audio_features(media).collect()}
-    for mid in (1, 2):
-        assert rows[mid]["valid"] == "ok"
-        assert rows[mid]["sample_rate"] == 8000
-        assert abs(rows[mid]["rms"] - 0.25 / np.sqrt(2)) < 0.01
-    assert rows[3]["valid"] == "corrupt"
-
-
-def test_wav_audio_real_decode(spark):
-    """Audio is no longer a pure stub: PCM WAV decodes natively
-    (stdlib wave) — metadata, round trip, and Spark feature extraction
-    with quarantine."""
-    import numpy as np
-
-    from exam_pdf_parser_spark.operators.multimodal import (
-        MEDIA_SCHEMA, decode_audio, encode_audio_wav, parse_meta,
-        wav_audio_features,
-    )
-
-    t = np.arange(16_000) / 16_000.0
-    sine = (0.5 * np.sin(2 * np.pi * 440 * t)).astype(np.float64)
-    blob = encode_audio_wav(sine, 16_000)
-
-    m = parse_meta(blob)
-    assert (m["kind"], m["width"], m["height"], m["n_frames"],
-            m["valid"]) == ("audio", 16_000, 1, 16_000, "ok")
-
-    x, rate = decode_audio(blob)
-    assert rate == 16_000 and len(x) == 16_000
-    assert float(np.max(np.abs(x - sine))) < 1e-3    # 16-bit quantization
-
-    rows = [(0, "audio", blob), (1, "audio", b"not audio bytes")]
-    out = {r["media_id"]: r for r in wav_audio_features(
-        spark.createDataFrame(rows, MEDIA_SCHEMA)).collect()}
-    assert out[0]["valid"] == "ok"
-    assert abs(out[0]["duration_s"] - 1.0) < 1e-6
-    assert abs(out[0]["rms"] - 0.5 / np.sqrt(2)) < 0.01   # sine RMS
-    assert 800 < out[0]["zero_crossings"] < 960           # ~2x440 Hz
-    assert out[1]["valid"] == "corrupt"
 
 
 def test_cmyk_ycck_jpeg_decode():
@@ -2658,741 +2231,3 @@ def test_lossless_jpeg_in_tiff_strip():
     blob = bytes(out + strip)
 
     assert np.array_equal(decode_tiff_gray(blob), grid.astype(np.uint8))
-
-
-def test_rawvideo_avi_decode():
-    """Uncompressed (BI_RGB 'rawvideo') AVI: frames are headerless DIB
-    pixel arrays — bottom-up rows, 4-byte stride — whose geometry
-    lives only in the stream's BITMAPINFOHEADER.  The decoder wraps
-    strf+frame as a BMP per frame, so 8-bit palettized round-trips
-    pixel-exactly and a hand-built 24-bit BGR variant lands on the
-    truecolor channel-mean path."""
-    import struct
-
-    import numpy as np
-    import pytest
-
-    from exam_pdf_parser_spark.core.avi import decode_avi, encode_avi_raw8
-    from exam_pdf_parser_spark.operators.multimodal import decode_video
-
-    rng = np.random.RandomState(11)
-    frames = [rng.randint(0, 256, size=(5, 6)).astype(np.uint8)
-              for _ in range(3)]                 # w=6: stride pads to 8
-    blob = encode_avi_raw8(frames)
-    _, meta = decode_avi(blob)
-    assert meta["handler"] == b"DIB "
-    assert meta["strf"] is not None
-    dec = decode_video(blob)
-    assert len(dec) == 3
-    for got, want in zip(dec, frames):
-        assert np.array_equal(got, want)
-
-    # 24-bit BGR rawvideo, container built by hand (no palette):
-    # pixel (b,g,r) reduces by the BMP truecolor channel mean
-    h, w = 2, 3
-    stride = (w * 3 + 3) & ~3                    # 9 -> 12
-    px = rng.randint(0, 256, size=(h, w, 3)).astype(np.uint8)
-    rows = b"".join(
-        px[y].tobytes().ljust(stride, b"\0")
-        for y in range(h - 1, -1, -1))
-
-    def chunk(fourcc, body):
-        return fourcc + struct.pack("<I", len(body)) + body \
-            + (b"\0" if len(body) & 1 else b"")
-
-    def lst(t, body):
-        return chunk(b"LIST", t + body)
-
-    avih = struct.pack("<14I", 100_000, 0, 0, 0x10, 1, 0, 1,
-                       stride * h, w, h, 0, 0, 0, 0)
-    strh = (b"vids" + b"\0\0\0\0" + struct.pack("<I", 0)
-            + struct.pack("<HH", 0, 0)
-            + struct.pack("<8I", 0, 1, 10, 0, 1, stride * h,
-                          0xFFFFFFFF, 0) + struct.pack("<4H", 0, 0, w, h))
-    strf = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0,
-                       stride * h, 0, 0, 0, 0)
-    body = (b"AVI "
-            + lst(b"hdrl", chunk(b"avih", avih)
-                  + lst(b"strl", chunk(b"strh", strh)
-                        + chunk(b"strf", strf)))
-            + lst(b"movi", chunk(b"00db", rows)))
-    blob24 = b"RIFF" + struct.pack("<I", len(body)) + body
-    (got,) = decode_video(blob24)
-    want = px.astype(np.float64).mean(axis=2).astype(np.uint8)
-    assert np.array_equal(got, want)
-
-    # a short raw frame is a per-payload decode error (quarantined
-    # upstream), not a silent wrong-shape image
-    bad = blob24.replace(rows, rows[:-8] , 1)
-    with pytest.raises(ValueError):
-        decode_video(bad)
-
-
-def test_avi_audio_track_extraction():
-    """An AVI's interleaved ``..wb`` audio chunks + the ``auds``
-    WAVEFORMATEX reassemble into a WAV and decode through the existing
-    PCM matrix: samples concatenate across chunks in file order,
-    video+audio AVIs serve both tracks, and the no-audio /
-    no-video degenerate containers fail loud per track."""
-    import struct
-
-    import numpy as np
-    import pytest
-
-    from exam_pdf_parser_spark.core.avi import encode_avi_raw8
-    from exam_pdf_parser_spark.operators.multimodal import (
-        decode_audio, decode_video,
-    )
-
-    def chunk(fourcc, body):
-        return fourcc + struct.pack("<I", len(body)) + body \
-            + (b"\0" if len(body) & 1 else b"")
-
-    def lst(t, body):
-        return chunk(b"LIST", t + body)
-
-    samples = np.arange(-6000, 6000, 137, dtype=np.int16)
-    pcm = samples.tobytes()
-    cut = (len(pcm) // 4) * 2                    # split on a sample edge
-    wavefmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
-    a_strh = (b"auds" + b"\0\0\0\0" + struct.pack("<I", 0)
-              + struct.pack("<HH", 0, 0)
-              + struct.pack("<8I", 0, 1, 8000, 0, len(samples), 2,
-                            0xFFFFFFFF, 0) + struct.pack("<4H", 0, 0, 0, 0))
-
-    frame = np.full((2, 4), 90, np.uint8)
-    vid = encode_avi_raw8([frame])
-    # audio-only AVI: video decode fails loud, audio decodes
-    avih = struct.pack("<14I", 100_000, 0, 0, 0x10, 0, 0, 1,
-                       0, 0, 0, 0, 0, 0, 0)
-    body = (b"AVI "
-            + lst(b"hdrl", chunk(b"avih", avih)
-                  + lst(b"strl", chunk(b"strh", a_strh)
-                        + chunk(b"strf", wavefmt)))
-            + lst(b"movi", chunk(b"00wb", pcm[:cut])
-                  + chunk(b"00wb", pcm[cut:])))
-    audio_only = b"RIFF" + struct.pack("<I", len(body)) + body
-
-    x, rate = decode_audio(audio_only)
-    assert rate == 8000
-    assert np.array_equal(x, samples.astype(np.float64) / 32768.0)
-    with pytest.raises(ValueError, match="no video frame"):
-        decode_video(audio_only)
-
-    # video+audio AVI: two strl lists in one hdrl, interleaved movi
-    v_strh = (b"vids" + b"DIB " + struct.pack("<I", 0)
-              + struct.pack("<HH", 0, 0)
-              + struct.pack("<8I", 0, 1, 10, 0, 1, 8, 0xFFFFFFFF, 0)
-              + struct.pack("<4H", 0, 0, 4, 2))
-    palette = b"".join(struct.pack("<BBBB", v, v, v, 0)
-                       for v in range(256))
-    v_strf = struct.pack("<IiiHHIIiiII", 40, 4, 2, 1, 8, 0,
-                         8, 0, 0, 0, 0) + palette
-    dib = frame[1].tobytes() + frame[0].tobytes()     # bottom-up, w=4
-    both_body = (b"AVI "
-                 + lst(b"hdrl", chunk(b"avih", avih)
-                       + lst(b"strl", chunk(b"strh", v_strh)
-                             + chunk(b"strf", v_strf))
-                       + lst(b"strl", chunk(b"strh", a_strh)
-                             + chunk(b"strf", wavefmt)))
-                 + lst(b"movi", chunk(b"00db", dib)
-                       + chunk(b"01wb", pcm[:cut])
-                       + chunk(b"01wb", pcm[cut:])))
-    both = b"RIFF" + struct.pack("<I", len(both_body)) + both_body
-    x2, rate2 = decode_audio(both)
-    assert rate2 == 8000
-    assert np.array_equal(x2, x)
-    (f0,) = decode_video(both)
-    assert np.array_equal(f0, frame)
-
-    # video-only AVI has no audio stream
-    with pytest.raises(ValueError, match="audio stream"):
-        decode_audio(vid)
-
-
-def test_mp4_intra_frame_sample_decode():
-    """ISO BMFF sample extraction is pure container math: a hand-built
-    MP4 with an MJPEG ('jpeg') video track (one chunk, two samples —
-    within-chunk offsets advance by sample size) and a 'twos' BE-PCM
-    audio track split across two chunks with different
-    samples-per-chunk rules decodes with the codecs the repo already
-    ships.  Inter-frame codecs and inconsistent tables fail loud."""
-    import struct
-
-    import numpy as np
-    import pytest
-
-    from exam_pdf_parser_spark.core.jpeg import (
-        decode_jpeg_gray, encode_jpeg_gray,
-    )
-    from exam_pdf_parser_spark.operators.multimodal import (
-        decode_audio, decode_video,
-    )
-
-    def box(fourcc, body):
-        return struct.pack(">I", len(body) + 8) + fourcc + body
-
-    def u32(v):
-        return struct.pack(">I", v)
-
-    def u16(v):
-        return struct.pack(">H", v)
-
-    rng = np.random.RandomState(5)
-    imgs = [rng.randint(0, 256, size=(16, 16)).astype(np.uint8)
-            for _ in range(2)]
-    j = [encode_jpeg_gray(im) for im in imgs]
-    samples = np.arange(-500, 500, 100, dtype=">i2")      # 10 BE samples
-    pcm = samples.tobytes()
-
-    ftyp = box(b"ftyp", b"isom" + u32(0) + b"isom")
-    off_j1 = len(ftyp) + 8
-    off_j2 = off_j1 + len(j[0])
-    off_pcm = off_j2 + len(j[1])
-    mdat = box(b"mdat", j[0] + j[1] + pcm)
-
-    def hdlr(kind):
-        return box(b"hdlr", u32(0) + b"\0\0\0\0" + kind + b"\0" * 12)
-
-    def trak(kind, stbl_boxes):
-        return box(b"trak", box(b"mdia", hdlr(kind) + box(
-            b"minf", box(b"stbl", b"".join(stbl_boxes)))))
-
-    v_entry = u32(86) + b"jpeg" + b"\0" * 78
-    vtrak = trak(b"vide", [
-        box(b"stsd", u32(0) + u32(1) + v_entry),
-        box(b"stsz", u32(0) + u32(0) + u32(2)
-            + u32(len(j[0])) + u32(len(j[1]))),
-        box(b"stsc", u32(0) + u32(1) + u32(1) + u32(2) + u32(1)),
-        box(b"stco", u32(0) + u32(1) + u32(off_j1)),
-    ])
-    a_entry = (u32(36) + b"twos" + b"\0" * 6 + u16(1)
-               + u16(0) + u16(0) + u32(0)
-               + u16(1) + u16(16) + u16(0) + u16(0)
-               + u32(8000 << 16))
-    atrak = trak(b"soun", [
-        box(b"stsd", u32(0) + u32(1) + a_entry),
-        box(b"stsz", u32(0) + u32(2) + u32(10)),     # uniform 2 bytes
-        box(b"stsc", u32(0) + u32(2)
-            + u32(1) + u32(6) + u32(1)               # chunk 1: 6
-            + u32(2) + u32(4) + u32(1)),             # chunk 2: 4
-        box(b"stco", u32(0) + u32(2)
-            + u32(off_pcm) + u32(off_pcm + 12)),
-    ])
-    blob = ftyp + mdat + box(b"moov", vtrak + atrak)
-
-    frames = decode_video(blob)
-    assert len(frames) == 2
-    for got, src in zip(frames, j):
-        assert np.array_equal(got, decode_jpeg_gray(src))
-
-    x, rate = decode_audio(blob)
-    assert rate == 8000
-    assert np.array_equal(
-        x, samples.astype(np.float64) / 32768.0)
-
-    # inter-frame codec: fail loud naming the codec
-    avc = blob.replace(b"jpeg" + b"\0" * 10, b"avc1" + b"\0" * 10)
-    with pytest.raises(NotImplementedError, match="avc1"):
-        decode_video(avc)
-
-    # inconsistent table: stsz says 11 samples, chunks map only 10
-    bad = blob.replace(u32(2) + u32(10), u32(2) + u32(11))
-    with pytest.raises(ValueError, match="inconsistent"):
-        decode_audio(bad)
-
-
-def test_mp4_mkv_forward_writers_roundtrip():
-    """The minimal BMFF/Matroska muxers (corpus generators, test-vector
-    writers) round-trip through the independent readers: container
-    metadata reports the real dims/duration and every MJPEG sample
-    decodes byte-identical to the bare JPEG stream."""
-    import numpy as np
-
-    from exam_pdf_parser_spark.core.ebml import (
-        ebml_meta, encode_mkv_mjpeg,
-    )
-    from exam_pdf_parser_spark.core.jpeg import (
-        decode_jpeg_gray, encode_jpeg_gray,
-    )
-    from exam_pdf_parser_spark.core.mp4 import encode_mp4_mjpeg, mp4_meta
-    from exam_pdf_parser_spark.operators.multimodal import (
-        decode_video, parse_meta,
-    )
-
-    rng = np.random.RandomState(17)
-    imgs = [rng.randint(0, 256, size=(16, 24)).astype(np.uint8)
-            for _ in range(5)]
-    j = [encode_jpeg_gray(im) for im in imgs]
-
-    mp4 = encode_mp4_mjpeg(j, 24, 16, fps=10)
-    m = mp4_meta(mp4)
-    assert (m["kind"], m["width"], m["height"], m["duration_ms"],
-            m["n_video_tracks"], m["complete"]) == \
-        ("video", 24, 16, 500, 1, True)
-    for got, src in zip(decode_video(mp4), j, strict=True):
-        assert np.array_equal(got, decode_jpeg_gray(src))
-    assert parse_meta(mp4)["valid"] == "ok"
-
-    mkv = encode_mkv_mjpeg(j, 24, 16, fps=10)
-    m = ebml_meta(mkv)
-    assert (m["doctype"], m["kind"], m["width"], m["height"],
-            m["duration_ms"], m["n_video_tracks"]) == \
-        ("matroska", "video", 24, 16, 500, 1)
-    for got, src in zip(decode_video(mkv), j, strict=True):
-        assert np.array_equal(got, decode_jpeg_gray(src))
-    assert parse_meta(mkv)["valid"] == "ok"
-
-    # a frame large enough to need a multi-byte EBML size vint still
-    # blocks correctly (the 1-byte wire form caps at 126)
-    big = encode_jpeg_gray(
-        rng.randint(0, 256, size=(64, 64)).astype(np.uint8))
-    [got] = decode_video(encode_mkv_mjpeg([big], 64, 64))
-    assert np.array_equal(got, decode_jpeg_gray(big))
-
-
-def test_media_track_inventory(spark):
-    """The routing pass before any decode: per-track container/codec/
-    count/decodability rows without touching a single sample.  Every
-    corpus payload inventories ok and decodable (the corpus only uses
-    shipped codecs); stubbed codecs (VP9 video, AU G.721) report
-    decodable=false instead of surfacing as decode exceptions;
-    garbage quarantines as one corrupt row."""
-    import numpy as np
-
-    from exam_pdf_parser_spark.core.ebml import encode_mkv_mjpeg
-    from exam_pdf_parser_spark.core.jpeg import encode_jpeg_gray
-    from exam_pdf_parser_spark.operators.multimodal import (
-        MEDIA_SCHEMA, media_track_inventory, real_media_corpus,
-        track_inventory,
-    )
-
-    media = real_media_corpus(spark, 45, partitions=3)
-    inv = media_track_inventory(media).toPandas()
-    assert set(inv["media_id"]) == set(range(45))
-    assert (inv["valid"] == "ok").all()
-    assert inv["decodable"].all()
-    assert {"avi", "mp4", "mkv"} <= set(inv["container"])
-    assert {"wav", "aiff", "au"} <= set(
-        inv[inv["kind"] == "audio"]["container"])
-    # the AVI counting walk reports real frame counts (3..6 frames)
-    avi_vid = inv[(inv["container"] == "avi") & (inv["kind"] == "video")]
-    assert avi_vid["n_samples"].between(3, 6).all()
-
-    # stubbed codecs are ROUTED (decodable=false), not exceptions
-    jf = [encode_jpeg_gray(np.full((8, 8), 7, np.uint8))]
-    vp9 = encode_mkv_mjpeg(jf, 8, 8).replace(
-        b"V_MJPEG", b"V_VP9\x00\x00")
-    [r] = track_inventory(vp9)
-    assert (r["container"], r["codec"], r["decodable"]) == \
-        ("mkv", "V_VP9", False)
-    import struct
-
-    # AU with a non-PCM/G.711 encoding (G.721 = 23): routed, not True
-    au = b".snd" + struct.pack(">5I", 24, 100, 23, 8000, 1) \
-        + b"\x00" * 100
-    [r] = track_inventory(au)
-    assert (r["codec"], r["decodable"]) == ("au_enc23", False)
-
-    # garbage → one corrupt row through the Spark wrapper
-    bad = spark.createDataFrame(
-        [(99, "video", bytearray(b"garbage-not-a-container"))],
-        MEDIA_SCHEMA)
-    q = media_track_inventory(bad).toPandas()
-    assert len(q) == 1 and q.iloc[0]["valid"] == "corrupt"
-
-
-def test_container_hardening_review_fixes():
-    """Review regressions pinned: (a) co64 64-bit chunk offsets parse
-    (the fourcc probe read the size field, so co64 was silently
-    treated as 32-bit stco); (b) a hostile uniform-stsz sample count
-    quarantines via ValueError instead of materializing a ~4G-element
-    list (OOM); (c) streamed Matroska with UNKNOWN-SIZE Clusters
-    yields every Cluster's frames, not just the first; (d) BMFF
-    'raw ' audio with 16-bit samples fails loud instead of decoding
-    as 8-bit noise."""
-    import struct
-
-    import numpy as np
-    import pytest
-
-    from exam_pdf_parser_spark.core.jpeg import (
-        decode_jpeg_gray, encode_jpeg_gray,
-    )
-    from exam_pdf_parser_spark.operators.multimodal import (
-        decode_audio, decode_video,
-    )
-
-    rng = np.random.RandomState(23)
-    imgs = [rng.randint(0, 256, size=(16, 16)).astype(np.uint8)
-            for _ in range(2)]
-    j = [encode_jpeg_gray(im) for im in imgs]
-
-    # (a) a hand-built container whose chunk offsets live in a co64
-    # (64-bit) table decodes identically to the stco form
-    def box(fourcc, body):
-        return struct.pack(">I", len(body) + 8) + fourcc + body
-
-    def u32(v):
-        return struct.pack(">I", v)
-
-    ftyp = box(b"ftyp", b"isom" + u32(0) + b"isom")
-    off0 = len(ftyp) + 8
-    mdat = box(b"mdat", j[0] + j[1])
-    stbl = (box(b"stsd", u32(0) + u32(1) + u32(86) + b"jpeg"
-                + b"\0" * 78)
-            + box(b"stsz", u32(0) + u32(0) + u32(2)
-                  + u32(len(j[0])) + u32(len(j[1])))
-            + box(b"stsc", u32(0) + u32(1) + u32(1) + u32(2) + u32(1))
-            + box(b"co64", u32(0) + u32(1) + struct.pack(">Q", off0)))
-    trak = box(b"trak", box(b"mdia", box(
-        b"hdlr", u32(0) + b"\0\0\0\0" + b"vide" + b"\0" * 12)
-        + box(b"minf", box(b"stbl", stbl))))
-    blob = ftyp + mdat + box(b"moov", trak)
-    frames = decode_video(blob)
-    assert len(frames) == 2
-    for got, src in zip(frames, j):
-        assert np.array_equal(got, decode_jpeg_gray(src))
-
-    # (b) hostile uniform stsz: claims 2^32-1 samples of 2 bytes —
-    # must raise, not allocate
-    evil = blob.replace(u32(0) + u32(0) + u32(2) + u32(len(j[0])),
-                        u32(0) + u32(2) + u32(0xFFFFFFFF)
-                        + u32(len(j[0])))
-    with pytest.raises(ValueError, match="more bytes than the file"):
-        decode_video(evil)
-
-    # (c) streamed Matroska: an UNKNOWN-SIZE Cluster (size vint 0xFF)
-    # whose clamped body swallows two later KNOWN-SIZE sibling
-    # Clusters — all three frames must come out IN STREAM ORDER (a
-    # LIFO walk would emit frame 3 before frame 2), and a Tracks
-    # element that terminates the unknown-size body must still be
-    # found (it is only reachable inside the cluster walk)
-    def el(eid, body):
-        if len(body) <= 126:
-            size = bytes([0x80 | len(body)])
-        else:
-            assert len(body) <= 16382
-            size = struct.pack(">H", 0x4000 | len(body))
-        return eid + size + body
-
-    def uint(v):
-        return v.to_bytes(max(1, (v.bit_length() + 7) // 8), "big")
-
-    j3 = j + [encode_jpeg_gray(
-        rng.randint(0, 256, size=(16, 16)).astype(np.uint8))]
-    vtrack = el(b"\xae", el(b"\xd7", uint(1)) + el(b"\x83", uint(1))
-                + el(b"\x86", b"V_MJPEG"))
-    tracks = el(b"\x16\x54\xae\x6b", vtrack)
-    blks = [el(b"\xa3", b"\x81\x00\x00\x80" + js) for js in j3]
-    # unknown-size cluster: ID + size vint 0xFF, body runs on
-    clusters = (b"\x1f\x43\xb6\x75" + b"\xff" + blks[0]
-                + el(b"\x1f\x43\xb6\x75", blks[1])
-                + el(b"\x1f\x43\xb6\x75", blks[2]))
-    header = el(b"\x1a\x45\xdf\xa3", el(b"\x42\x82", b"matroska"))
-    mkv = header + el(b"\x18\x53\x80\x67", tracks + clusters)
-    frames = decode_video(mkv)
-    assert len(frames) == 3
-    for got, src in zip(frames, j3, strict=True):
-        assert np.array_equal(got, decode_jpeg_gray(src))
-
-    # Tracks AFTER the unknown-size Cluster (live-stream layout):
-    # the element ends the cluster body, so the walk must parse it
-    mkv2 = header + el(b"\x18\x53\x80\x67",
-                       b"\x1f\x43\xb6\x75" + b"\xff" + blks[0]
-                       + blks[1] + tracks)
-    frames = decode_video(mkv2)
-    assert len(frames) == 2
-    for got, src in zip(frames, j3[:2], strict=True):
-        assert np.array_equal(got, decode_jpeg_gray(src))
-
-    # (d) 16-bit 'raw ' BMFF audio: no defined mapping — fail loud
-    a_entry = (u32(36) + b"raw " + b"\0" * 6 + struct.pack(">H", 1)
-               + struct.pack(">HH", 0, 0) + u32(0)
-               + struct.pack(">HHHH", 1, 16, 0, 0)
-               + u32(8000 << 16))
-    atrak = box(b"trak", box(b"mdia", box(
-        b"hdlr", u32(0) + b"\0\0\0\0" + b"soun" + b"\0" * 12)
-        + box(b"minf", box(b"stbl",
-              box(b"stsd", u32(0) + u32(1) + a_entry)
-              + box(b"stsz", u32(0) + u32(2) + u32(4))
-              + box(b"stsc", u32(0) + u32(1) + u32(1) + u32(4)
-                    + u32(1))
-              + box(b"stco", u32(0) + u32(1) + u32(off0))))))
-    aud = ftyp + mdat + box(b"moov", atrak)
-    with pytest.raises(NotImplementedError, match="16-bit"):
-        decode_audio(aud)
-    # and the routing pass agrees: the same track reads decodable=False
-    from exam_pdf_parser_spark.operators.multimodal import (
-        track_inventory,
-    )
-    [r] = track_inventory(aud)
-    assert (r["codec"], r["decodable"]) == ("raw", False)
-
-
-def test_mkv_intra_frame_sample_decode():
-    """Matroska/WebM frame extraction is pure container math: a
-    hand-built MKV with an MJPEG video track (V_MS/VFW/FOURCC +
-    'MJPG' BITMAPINFOHEADER; unlaced SimpleBlocks) and an
-    A_PCM/INT/LIT audio track whose frames exercise ALL THREE lacing
-    modes (Xiph in a SimpleBlock, EBML in a BlockGroup/Block,
-    fixed-size) decodes with the codecs the repo already ships.
-    A_MS/ACM re-dispatches its WAVEFORMATEX CodecPrivate through the
-    WAV matrix; inter-frame codecs and broken lacing fail loud."""
-    import audioop
-    import struct
-
-    import numpy as np
-    import pytest
-
-    from exam_pdf_parser_spark.core.jpeg import (
-        decode_jpeg_gray, encode_jpeg_gray,
-    )
-    from exam_pdf_parser_spark.operators.multimodal import (
-        decode_audio, decode_video,
-    )
-
-    def el(eid, body):
-        # size vint: 1-byte (<=126) or 2-byte (<=16382) wire forms
-        if len(body) <= 126:
-            size = bytes([0x80 | len(body)])
-        else:
-            assert len(body) <= 16382
-            size = struct.pack(">H", 0x4000 | len(body))
-        return eid + size + body
-
-    def uint(v):
-        return v.to_bytes(max(1, (v.bit_length() + 7) // 8), "big")
-
-    rng = np.random.RandomState(11)
-    imgs = [rng.randint(0, 256, size=(16, 16)).astype(np.uint8)
-            for _ in range(2)]
-    j = [encode_jpeg_gray(im) for im in imgs]
-
-    # BITMAPINFOHEADER with biCompression='MJPG' at offset 16
-    bih = struct.pack("<IiiHH4sIiiII", 40, 16, 16, 1, 24, b"MJPG",
-                      0, 0, 0, 0, 0)
-    vtrack = el(b"\xae",                            # TrackEntry
-                el(b"\xd7", uint(1))                # TrackNumber
-                + el(b"\x83", uint(1))              # TrackType video
-                + el(b"\x86", b"V_MS/VFW/FOURCC")   # CodecID
-                + el(b"\x63\xa2", bih))             # CodecPrivate
-    atrack = el(b"\xae",
-                el(b"\xd7", uint(2))
-                + el(b"\x83", uint(2))
-                + el(b"\x86", b"A_PCM/INT/LIT")
-                + el(b"\xe1",                       # Audio
-                     el(b"\xb5", struct.pack(">f", 8000.0))
-                     + el(b"\x9f", uint(1))
-                     + el(b"\x62\x64", uint(16))))
-    tracks = el(b"\x16\x54\xae\x6b", vtrack + atrack)
-
-    pcm = np.arange(-1200, 1200, 100, dtype="<i2")  # 24 LE samples
-    raw = pcm.tobytes()                             # 48 bytes
-    # SimpleBlock flags: 0x80 keyframe; lacing bits 0x06 = mode<<1
-    # Xiph lacing (flags 0x82): frames of 6, 10, 8 bytes over raw[:24]
-    xiph = (b"\x82" + b"\x00\x00" + b"\x82" + b"\x02"
-            + bytes([6, 10]) + raw[:24])
-    # EBML lacing (flags 0x86): frames 2, 4, 2 over raw[24:32] —
-    # first size vint 0x82 (=2), one signed 1-byte delta vint
-    # 0x80|(2+63) (= +2 -> 4), last implied
-    ebml_block = (b"\x82" + b"\x00\x00" + b"\x86" + b"\x02"
-                  + bytes([0x82, 0x80 | (2 + 63)]) + raw[24:32])
-    # fixed-size lacing (flags 0x84): two 8-byte frames over raw[32:]
-    fixed = b"\x82" + b"\x00\x00" + b"\x84" + b"\x01" + raw[32:]
-    vb = [b"\x81" + b"\x00\x00" + b"\x80" + js for js in j]
-    cluster1 = el(b"\x1f\x43\xb6\x75",
-                  el(b"\xa3", vb[0]) + el(b"\xa3", xiph))
-    cluster2 = el(b"\x1f\x43\xb6\x75",
-                  el(b"\xa3", vb[1])
-                  + el(b"\xa0", el(b"\xa1", ebml_block))
-                  + el(b"\xa3", fixed))
-    header = el(b"\x1a\x45\xdf\xa3", el(b"\x42\x82", b"matroska"))
-    segment = el(b"\x18\x53\x80\x67", tracks + cluster1 + cluster2)
-    blob = header + segment
-
-    frames = decode_video(blob)
-    assert len(frames) == 2
-    for got, src in zip(frames, j):
-        assert np.array_equal(got, decode_jpeg_gray(src))
-
-    x, rate = decode_audio(blob)
-    assert rate == 8000
-    assert np.array_equal(x, pcm.astype(np.float64) / 32768.0)
-
-    # A_MS/ACM: CodecPrivate is a WAVEFORMATEX; µ-law (tag 7) decodes
-    # through the WAV matrix byte-for-byte like a .wav of the same data
-    ulaw = audioop.lin2ulaw(raw, 2)
-    wfx = struct.pack("<HHIIHH", 7, 1, 8000, 8000, 1, 8)
-    acm_track = el(b"\xae",
-                   el(b"\xd7", uint(2))
-                   + el(b"\x83", uint(2))
-                   + el(b"\x86", b"A_MS/ACM")
-                   + el(b"\x63\xa2", wfx)
-                   + el(b"\xe1", el(b"\x9f", uint(1))))
-    acm_blk = b"\x82" + b"\x00\x00" + b"\x80" + ulaw
-    acm = header + el(b"\x18\x53\x80\x67",
-                      el(b"\x16\x54\xae\x6b", acm_track)
-                      + el(b"\x1f\x43\xb6\x75", el(b"\xa3", acm_blk)))
-    xa, ra = decode_audio(acm)
-    assert ra == 8000
-    exp = np.frombuffer(audioop.ulaw2lin(ulaw, 2), "<i2") \
-        .astype(np.float64) / 32768.0
-    assert np.array_equal(xa, exp)
-
-    # inter-frame codec: fail loud naming the codec id
-    vp9 = blob.replace(b"V_MS/VFW/FOURCC", b"V_VP9" + b"\x00" * 10)
-    with pytest.raises(NotImplementedError, match="V_VP9"):
-        decode_video(vp9)
-    with pytest.raises(NotImplementedError, match="A_VORBIS"):
-        decode_audio(blob.replace(b"A_PCM/INT/LIT",
-                                  b"A_VORBIS" + b"\x00" * 5))
-    # Xiph sizes exceeding the body: ValueError (quarantined upstream)
-    with pytest.raises(ValueError):
-        decode_audio(blob.replace(bytes([6, 10]), bytes([6, 200])))
-
-
-def _mini_mp4_audio(codec: bytes, bits: int, pcm: bytes,
-                    sample_size: int) -> bytes:
-    """Minimal audio-only ISO BMFF: one soun trak, one chunk, uniform
-    sample size — just enough stbl for mp4_tracks."""
-    import struct
-
-    def box(fourcc, body):
-        return struct.pack(">I", len(body) + 8) + fourcc + body
-
-    def u32(v):
-        return struct.pack(">I", v)
-
-    def u16(v):
-        return struct.pack(">H", v)
-
-    ftyp = box(b"ftyp", b"isom" + u32(0) + b"isom")
-    off = len(ftyp) + 8
-    mdat = box(b"mdat", pcm)
-    n = len(pcm) // sample_size
-    entry = (u32(36) + codec + b"\0" * 6 + u16(1)
-             + u16(0) + u16(0) + u32(0)
-             + u16(1) + u16(bits) + u16(0) + u16(0)
-             + u32(8000 << 16))
-    hdlr = box(b"hdlr", u32(0) + b"\0\0\0\0" + b"soun" + b"\0" * 12)
-    stbl = (box(b"stsd", u32(0) + u32(1) + entry)
-            + box(b"stsz", u32(0) + u32(sample_size) + u32(n))
-            + box(b"stsc", u32(0) + u32(1) + u32(1) + u32(n) + u32(1))
-            + box(b"stco", u32(0) + u32(1) + u32(off)))
-    trak = box(b"trak", box(b"mdia", hdlr + box(
-        b"minf", box(b"stbl", stbl))))
-    return ftyp + mdat + box(b"moov", trak)
-
-
-def test_bmff_pcm_depth_mirror():
-    """ADVICE r6: the BMFF audio decodability mirror pins PCM widths
-    to what _decode_bmff_audio actually ships — a 'twos' track
-    declaring 20-bit and a 'sowt' track declaring 24-bit both route
-    decodable=false AND refuse loudly at decode time (mirror and
-    decode path agree on both sides); 'twos' 24-bit is a positive
-    control through the new width set."""
-    import numpy as np
-    import pytest
-
-    from exam_pdf_parser_spark.operators.multimodal import (
-        decode_audio, track_inventory,
-    )
-
-    blob20 = _mini_mp4_audio(b"twos", 20, b"\0" * 10, 5)
-    [r] = track_inventory(blob20)
-    assert (r["kind"], r["decodable"]) == ("audio", False)
-    with pytest.raises(NotImplementedError, match="20-bit"):
-        decode_audio(blob20)
-
-    blob_sowt = _mini_mp4_audio(b"sowt", 24, b"\0" * 12, 3)
-    [r] = track_inventory(blob_sowt)
-    assert r["decodable"] is False
-    with pytest.raises(NotImplementedError, match="sowt"):
-        decode_audio(blob_sowt)
-
-    samples = np.array([-(1 << 22), 0, 1 << 20, (1 << 23) - 1])
-    raw = b"".join((int(v) & 0xFFFFFF).to_bytes(3, "big")
-                   for v in samples)
-    blob = _mini_mp4_audio(b"twos", 24, raw, 3)
-    [r] = track_inventory(blob)
-    assert r["decodable"] is True
-    x, rate = decode_audio(blob)
-    assert rate == 8000
-    np.testing.assert_allclose(x, samples / 8388608.0)
-
-
-def test_mkv_writer_timestamp_guard():
-    """ADVICE r6: encode_mkv_mjpeg keeps every SimpleBlock in one
-    Cluster with signed-16-bit relative timestamps; past ~327 frames
-    at fps=10 it must fail with a clear ValueError, not an opaque
-    struct.error."""
-    import numpy as np
-    import pytest
-
-    from exam_pdf_parser_spark.core.ebml import encode_mkv_mjpeg
-    from exam_pdf_parser_spark.core.jpeg import encode_jpeg_gray
-    from exam_pdf_parser_spark.operators.multimodal import decode_video
-
-    jf = encode_jpeg_gray(np.full((8, 8), 3, np.uint8))
-    with pytest.raises(ValueError, match="SimpleBlock"):
-        encode_mkv_mjpeg([jf] * 330, 8, 8, fps=10)
-    assert len(decode_video(encode_mkv_mjpeg([jf] * 3, 8, 8))) == 3
-
-
-def test_multistream_avi_first_video_stream_wins():
-    """ADVICE r6: a two-video-stream AVI (MJPEG stream 0 + rawvideo
-    stream 1 with different geometry) decodes ONLY stream 0's chunks
-    under stream 0's strf — stream 1's strf must not override the
-    geometry/codec decision and its chunks must not mix in.
-    track_inventory still reports both streams."""
-    import struct
-
-    import numpy as np
-
-    from exam_pdf_parser_spark.core.avi import riff_chunk
-    from exam_pdf_parser_spark.core.jpeg import (
-        decode_jpeg_gray, encode_jpeg_gray,
-    )
-    from exam_pdf_parser_spark.operators.multimodal import (
-        decode_video, track_inventory,
-    )
-
-    rng = np.random.RandomState(11)
-    jpg = encode_jpeg_gray(rng.randint(0, 256, (16, 16)).astype(np.uint8))
-
-    def lst(t, b):
-        return riff_chunk(b"LIST", t + b)
-
-    avih = struct.pack("<14I", 100_000, 0, 0, 0x10, 1, 0, 2,
-                       0, 16, 16, 0, 0, 0, 0)
-    strh0 = (b"vids" + b"MJPG" + struct.pack("<I", 0)
-             + struct.pack("<HH", 0, 0)
-             + struct.pack("<8I", 0, 1, 10, 0, 1, len(jpg),
-                           0xFFFFFFFF, 0)
-             + struct.pack("<4H", 0, 0, 16, 16))
-    strf0 = struct.pack("<IiiHH4sI4i", 40, 16, 16, 1, 24, b"MJPG",
-                        16 * 16 * 3, 0, 0, 0, 0)
-    strh1 = (b"vids" + b"\x00\x00\x00\x00" + struct.pack("<I", 0)
-             + struct.pack("<HH", 0, 0)
-             + struct.pack("<8I", 0, 1, 10, 0, 1, 8, 0xFFFFFFFF, 0)
-             + struct.pack("<4H", 0, 0, 4, 2))
-    strf1 = struct.pack("<IiiHH4sI4i", 40, 4, 2, 1, 8,
-                        b"\x00\x00\x00\x00", 8, 0, 0, 0, 0)
-    hdrl = lst(b"hdrl", riff_chunk(b"avih", avih)
-               + lst(b"strl", riff_chunk(b"strh", strh0)
-                     + riff_chunk(b"strf", strf0))
-               + lst(b"strl", riff_chunk(b"strh", strh1)
-                     + riff_chunk(b"strf", strf1)))
-    movi = riff_chunk(b"LIST", b"movi"
-                      + riff_chunk(b"00dc", jpg)
-                      + riff_chunk(b"01dc", b"\xAA" * 8))
-    body = b"AVI " + hdrl + movi
-    blob = b"RIFF" + struct.pack("<I", len(body)) + body
-
-    [frame] = decode_video(blob)
-    assert np.array_equal(frame, decode_jpeg_gray(jpg))
-
-    inv = track_inventory(blob)
-    assert [(r["kind"], r["codec"], r["n_samples"]) for r in inv] == \
-        [("video", "mjpg", 1), ("video", "rawvideo", 1)]

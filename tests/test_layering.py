@@ -14,7 +14,7 @@ PKG = "exam_pdf_parser_spark"
 # is not part of it — crop encodes with it.
 MEDIA_TIER = {f"{PKG}.operators.multimodal"} | {
     f"{PKG}.core.{m}"
-    for m in ("jpeg", "tiff", "bmp", "gif", "audio", "avi", "mp4", "ebml")}
+    for m in ("jpeg", "tiff", "bmp", "gif")}
 
 # Package modules no production entry point reaches.  Compared with
 # ``==``, so deleting a media slice must shrink this set in the same
@@ -95,3 +95,26 @@ def test_every_package_module_reached_from_an_entry_point():
                     reached.add(mod)
                     todo.append(modules[mod])
     assert set(modules) - reached == TEST_ONLY
+
+
+# PEP 594: deprecated in 3.11, removed from the standard library in 3.13.
+REMOVED_IN_3_13 = {
+    "aifc", "audioop", "cgi", "cgitb", "chunk", "crypt", "imghdr",
+    "mailcap", "msilib", "nis", "nntplib", "ossaudiodev", "pipes",
+    "sndhdr", "spwd", "sunau", "telnetlib", "uu", "xdrlib"}
+
+
+def test_no_import_of_stdlib_modules_removed_in_3_13():
+    """Nothing the suite runs imports a module Python 3.13 no longer
+    ships, so the package, its tests and its tools keep running there."""
+    scope = sorted((ROOT / PKG).rglob("*.py"))
+    scope += sorted((ROOT / "tests").rglob("*.py"))
+    scope += sorted((ROOT / "scripts").rglob("*.py"))
+    scope += sorted((ROOT / "perfbench").rglob("*.py"))
+    scope += [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+    assert len(scope) > 80            # the scan really covers the tree
+    found = {str(p.relative_to(ROOT)):
+             sorted(m for m in _imported_modules(p)
+                    if m.split(".")[0] in REMOVED_IN_3_13)
+             for p in scope}
+    assert {k: v for k, v in found.items() if v} == {}
