@@ -86,7 +86,13 @@ def similarity(a: str, b: str) -> float:
         return 1.0
     if not a or not b:
         return 0.0
-    return SequenceMatcher(None, a.lower(), b.lower()).ratio()
+    a, b = a.lower(), b.lower()
+    # Most eval calls compare equal strings.  Below 200 chars
+    # SequenceMatcher's autojunk is off, so equal strings score exactly
+    # 1.0 and the matcher can be skipped.
+    if a == b and len(a) < 200:
+        return 1.0
+    return SequenceMatcher(None, a, b).ratio()
 
 
 def block_text(lines: list) -> str:

@@ -2,20 +2,15 @@
 columns with typed metadata, processed in Arrow batches.
 
 The IMAGE path is fully real: PNG (full baseline spec — all five
-color types, depths 1-16, all filters, Adam7), GIF (incl. animation
-compositing), baseline/progressive JPEG incl. EXIF orientation,
-12-bit precision and 4-component Adobe CMYK/YCCK frames,
-TIFF (none/LZW+predictor/
-JPEG-strips/deflate/PackBits, strip- or tile-organized, gray incl.
-16-bit/RGB/RGBA/palette/CMYK/YCbCr) and BMP (1/4/8/16/24/32-bit,
-BI_BITFIELDS, RLE4/RLE8, OS/2 core header) decode via the repo's
-stdlib codecs (``core/{png,gif,jpeg,tiff,bmp}.py``), with genuine
-pixel features (``image_pixel_features``) and pixel-level block-mean
-resize.  ``parse_meta`` recognizes only containers that some decoder
-here handles.  Audio and video exist only as kinds of the synthetic
-XMED1 container below: Spark-side its schemas, batch shapes,
-``mapInPandas`` signatures, partitioning, frame slicing and a
-codec-free byte-histogram embedding are real and tested.
+color types, depths 1-16, all filters, Adam7) and GIF (incl.
+animation compositing) decode via the repo's stdlib codecs
+(``core/{png,gif}.py``), with genuine pixel features
+(``image_pixel_features``) and pixel-level block-mean resize.
+``parse_meta`` recognizes only containers that some decoder here
+handles; any other container reads corrupt.  Audio and video exist
+only as kinds of the synthetic XMED1 container below: Spark-side its
+schemas, batch shapes, ``mapInPandas`` signatures, partitioning, frame
+slicing and a codec-free byte-histogram embedding are real and tested.
 
 XMED1 payload format (synthetic): b"XMED1" + kind(1B: I/A/V) +
 width(2B) + height(2B) + n_frames(2B) + body bytes (seeded).
@@ -89,15 +84,15 @@ def media_corpus(spark: SparkSession, n: int, seed: int = 42,
 def parse_meta(payload: bytes) -> dict:
     """Decode the typed header: the synthetic container, plus REAL
     header-only metadata for every container the decoders here handle
-    — PNG IHDR, JPEG SOF, GIF screen descriptor + frame count, TIFF
-    first IFD and BMP.  Header probes never need a pixel codec; see
-    ``decode_image`` for what PAYLOAD decode covers."""
+    — PNG IHDR and GIF screen descriptor + frame count.  Header probes
+    never need a pixel codec; see ``decode_image`` for what PAYLOAD
+    decode covers."""
     if payload[:5] == MAGIC and len(payload) >= 12:
         kind = KINDS.get(chr(payload[5]))
         w, h, f = struct.unpack(">HHH", payload[6:12])
         return {"kind": kind, "width": w, "height": h, "n_frames": f,
                 "valid": "ok"}
-    for probe in (_png_dims, _jpeg_dims, _gif_dims, _tiff_bmp_dims):
+    for probe in (_png_dims, _gif_dims):
         meta = probe(payload)
         if meta is not None:
             return meta
@@ -112,58 +107,6 @@ def _png_dims(payload: bytes) -> dict | None:
     w, h = struct.unpack(">II", payload[16:24])
     return {"kind": "image", "width": w, "height": h, "n_frames": 1,
             "valid": "ok"}
-
-
-def _jpeg_dims(payload: bytes) -> dict | None:
-    """JPEG: walk the marker stream from SOI to the first frame header
-    (SOF0-SOF15 except DHT/JPG/DAC), whose body is
-    ``precision u8, height u16be, width u16be``."""
-    if payload[:2] != b"\xff\xd8":
-        return None
-    i = 2
-    n = len(payload)
-    while i + 4 <= n:
-        if payload[i] != 0xFF:          # desynchronized marker stream
-            return None
-        marker = payload[i + 1]
-        if marker == 0xFF:              # fill byte
-            i += 1
-            continue
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            i += 2                      # standalone markers, no length
-            continue
-        seg_len = struct.unpack(">H", payload[i + 2:i + 4])[0]
-        if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-            if i + 9 > n:
-                return None
-            h, w = struct.unpack(">HH", payload[i + 5:i + 9])
-            if marker == 0xC3 and i + 10 <= n and payload[i + 9] in (2, 4):
-                # lossless CFA mosaic (CR2/DNG shape): the decoder
-                # re-interleaves nc samples per MCU, so the real
-                # raster width is SOF-width × nc
-                w *= payload[i + 9]
-            from ..core.jpeg import exif_orientation
-
-            if exif_orientation(payload) >= 5:   # transposing EXIF
-                w, h = h, w
-            return {"kind": "image", "width": w, "height": h,
-                    "n_frames": 1, "valid": "ok"}
-        if marker == 0xDA:              # scan start before any SOF
-            return None
-        i += 2 + seg_len
-    return None
-
-
-def _tiff_bmp_dims(payload: bytes) -> dict | None:
-    """TIFF first-IFD / BMP header → real image dims, no pixel work."""
-    from ..core.bmp import bmp_dims
-    from ..core.tiff import tiff_dims
-
-    dims = tiff_dims(payload) or bmp_dims(payload)
-    if dims is None:
-        return None
-    return {"kind": "image", "width": dims[0], "height": dims[1],
-            "n_frames": 1, "valid": "ok"}
 
 
 def _gif_dims(payload: bytes) -> dict | None:
@@ -339,32 +282,16 @@ def sample_frames(media: DataFrame, every_n: int = 4) -> DataFrame:
 
 def decode_image(payload: bytes) -> np.ndarray:
     """Image decode via the repo's stdlib codecs: grayscale PNG
-    (``core/png.py``), single-frame GIF incl. interlace
-    (``core/gif.py``, full variable-width LZW), baseline +
-    progressive JPEG (``core/jpeg.py``, Huffman + successive
-    approximation + IDCT, luma plane; 4-component Adobe CMYK/YCCK via
-    the ink transform), TIFF (``core/tiff.py`` —
-    none/LZW+predictor/JPEG-strips/deflate/PackBits, gray/RGB/RGBA/
-    palette/CMYK/YCbCr incl. subsampled data units) and BMP
-    (``core/bmp.py``, 1/4/8/16/24/32-bit incl. BI_BITFIELDS,
-    RLE4/RLE8 and the OS/2 core header) — all REAL, no raster
+    (``core/png.py``) and single-frame GIF incl. interlace
+    (``core/gif.py``, full variable-width LZW) — both REAL, no raster
     library.  Any other container raises ``NotImplementedError``."""
-    from ..core.bmp import BMP_SIG, decode_bmp_gray
     from ..core.gif import GIF_SIGS, decode_gif_gray
-    from ..core.jpeg import decode_jpeg_gray
     from ..core.png import PNG_SIG, decode_png_gray
-    from ..core.tiff import TIFF_SIGS, decode_tiff_gray
 
     if payload[:8] == PNG_SIG:
         return decode_png_gray(payload)
     if payload[:6] in GIF_SIGS:
         return decode_gif_gray(payload)
-    if payload[:2] == b"\xff\xd8":
-        return decode_jpeg_gray(payload)
-    if payload[:4] in TIFF_SIGS:
-        return decode_tiff_gray(payload)
-    if payload[:2] == BMP_SIG:
-        return decode_bmp_gray(payload)
     raise NotImplementedError("unrecognized image container stubbed")
 
 
@@ -409,14 +336,11 @@ def real_media_corpus(spark: SparkSession, n: int, seed: int = 42,
                       partitions: int = 8) -> DataFrame:
     """Deterministic image table that rotates through the REAL
     encoders this repo carries — the shape of a mixed crawl batch:
-    rows cycle PNG/GIF/JPEG/TIFF (codec-rotated)/BMP.  Every payload
-    round-trips through parse_meta and ``image_pixel_features`` (see
+    rows alternate PNG/GIF.  Every payload round-trips through
+    parse_meta and ``image_pixel_features`` (see
     ``test_real_media_corpus_mixed`` for the end-to-end drive)."""
-    from ..core.bmp import encode_bmp_gray
     from ..core.gif import encode_gif_gray
-    from ..core.jpeg import encode_jpeg_gray
     from ..core.png import encode_png_gray
-    from ..core.tiff import encode_tiff_gray
 
     def one(i: int) -> bytes:
         rng = np.random.default_rng(seed * 1_000_003 + i)
@@ -424,18 +348,9 @@ def real_media_corpus(spark: SparkSession, n: int, seed: int = 42,
         yy, xx = np.mgrid[0:h, 0:w]
         img = ((xx * 4 + yy * 2) % 240
                + rng.integers(0, 16, (h, w))).astype(np.uint8)
-        enc = i % 5
-        if enc == 0:
+        if i % 2 == 0:
             return encode_png_gray(img)
-        if enc == 1:
-            return encode_gif_gray(img)
-        if enc == 2:
-            return encode_jpeg_gray(img)
-        if enc == 3:
-            codec = ("none", "packbits", "lzw")[(i // 5) % 3]
-            pred = 2 if codec == "lzw" else 1
-            return encode_tiff_gray(img, codec=codec, predictor=pred)
-        return encode_bmp_gray(img)
+        return encode_gif_gray(img)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -64,6 +64,27 @@ def test_similarity_bounds_and_symmetry_of_equal(a, b):
     assert similarity(a, a) == 1.0 if a else similarity(a, a) == 1.0
 
 
+@settings(max_examples=300, deadline=None)
+@given(st.one_of(
+    st.tuples(text_st, text_st),
+    # equal strings around the 200-char autojunk boundary
+    st.integers(190, 210).flatmap(lambda n: st.text(
+        alphabet="abAB ", min_size=n, max_size=n).map(lambda t: (t, t))),
+    # strings that differ only in case
+    st.text(max_size=250).map(lambda t: (t, t.swapcase())),
+))
+def test_similarity_matches_plain_sequence_matcher(pair):
+    """The equal-string shortcut returns exactly what the matcher
+    would: the oracle and Spark share ``similarity``, so any drift
+    here would move every eval score on both sides."""
+    from difflib import SequenceMatcher
+
+    a, b = pair
+    want = (1.0 if not a and not b else 0.0 if not a or not b
+            else SequenceMatcher(None, a.lower(), b.lower()).ratio())
+    assert similarity(a, b) == want
+
+
 @given(text_st)
 def test_qstart_in_range_or_none(s):
     num, grp = detect_question_start(s)
@@ -218,50 +239,3 @@ def test_png_roundtrip_any_shape(w, h, seed):
     img = np.random.default_rng(seed).integers(
         0, 256, size=(h, w), dtype=np.uint8)
     assert (decode_png_gray(encode_png_gray(img)) == img).all()
-
-
-@given(st.binary(max_size=4000))
-@settings(max_examples=150, deadline=None)
-def test_packbits_roundtrip_any_bytes(data):
-    from exam_pdf_parser_spark.core.tiff import packbits, unpackbits
-
-    assert unpackbits(packbits(data)) == data
-
-
-@given(st.binary(max_size=6000))
-@settings(max_examples=100, deadline=None)
-def test_tiff_lzw_roundtrip_any_bytes(data):
-    from exam_pdf_parser_spark.core.tiff import lzw_decode, lzw_encode
-
-    assert lzw_decode(lzw_encode(data), len(data)) == data
-
-
-@given(st.integers(1, 48), st.integers(1, 48), st.integers(0, 2**32 - 1),
-       st.sampled_from(["none", "packbits", "lzw", "deflate"]),
-       st.sampled_from([1, 2]))
-@settings(max_examples=40, deadline=None)
-def test_tiff_roundtrip_any_shape_codec(w, h, seed, codec, predictor):
-    import numpy as np
-
-    from exam_pdf_parser_spark.core.tiff import (
-        decode_tiff_gray, encode_tiff_gray,
-    )
-
-    img = np.random.default_rng(seed).integers(
-        0, 256, size=(h, w), dtype=np.uint8)
-    blob = encode_tiff_gray(img, codec=codec, predictor=predictor)
-    assert (decode_tiff_gray(blob) == img).all()
-
-
-@given(st.integers(1, 40), st.integers(1, 40), st.integers(0, 2**32 - 1))
-@settings(max_examples=40, deadline=None)
-def test_bmp_roundtrip_any_shape(w, h, seed):
-    import numpy as np
-
-    from exam_pdf_parser_spark.core.bmp import (
-        decode_bmp_gray, encode_bmp_gray,
-    )
-
-    img = np.random.default_rng(seed).integers(
-        0, 256, size=(h, w), dtype=np.uint8)
-    assert (decode_bmp_gray(encode_bmp_gray(img)) == img).all()
