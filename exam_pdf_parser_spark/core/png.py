@@ -1,14 +1,12 @@
-"""Dependency-free PNG codec.
+"""Dependency-free PNG encoder, crop geometry and block rasterizer.
 
 The sandbox ships no raster library, but a valid PNG needs only
 ``zlib`` + CRC-framed chunks — so the crop sink (S11, reference
 src/cropper/cropper.py:73-74) can emit REAL image files any viewer
 opens, instead of stubbed bytes.  The encoder writes 8-bit-gray
-filter-0 scanlines; the decoder covers the full baseline spec a
-crawl serves — all five color types (gray, RGB, palette,
-gray+alpha, RGBA), bit depths 1/2/4/8/16, all five scanline filters
-incl. Average and Paeth, and Adam7 interlace — converting to the
-repo-wide channel-mean gray.
+filter-0 scanlines; ``pad_clamp`` and ``render_region`` turn a question
+region's layout blocks into the pixels it encodes.  The Spark crop sink
+and the single-node oracle share this one copy.
 
 Deterministic: fixed zlib level, no timestamps, no ancillary chunks.
 """
@@ -23,16 +21,17 @@ import numpy as np
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 PAD = 10.0  # crop padding, reference default src/cropper/cropper.py:64
+ZLIB_LEVEL = 6  # the oracle hash pins the compressed bytes
 
 
-def pad_clamp(bbox, page_w: float, page_h: float,
-              pad: float = PAD) -> tuple[float, float, float, float]:
-    """F16: ``max(0, x0-pad) … min(page_w, x1+pad)``
+def pad_clamp(bbox, page_w: float,
+              page_h: float) -> tuple[float, float, float, float]:
+    """F16: ``max(0, x0-PAD) … min(page_w, x1+PAD)``
     (src/cropper/cropper.py:64-71).  Lives beside the rasterizer so
     the Spark crop sink and the single-node oracle share ONE copy."""
     x0, y0, x1, y1 = bbox
-    return (max(0.0, x0 - pad), max(0.0, y0 - pad),
-            min(page_w, x1 + pad), min(page_h, y1 + pad))
+    return (max(0.0, x0 - PAD), max(0.0, y0 - PAD),
+            min(page_w, x1 + PAD), min(page_h, y1 + PAD))
 
 
 def _chunk(tag: bytes, data: bytes) -> bytes:
@@ -40,7 +39,7 @@ def _chunk(tag: bytes, data: bytes) -> bytes:
             + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
 
 
-def encode_png_gray(img: np.ndarray, compress_level: int = 6) -> bytes:
+def encode_png_gray(img: np.ndarray) -> bytes:
     """(h, w) uint8 array → PNG bytes (color type 0, bit depth 8,
     filter 0 per scanline)."""
     if img.ndim != 2 or img.dtype != np.uint8:
@@ -50,172 +49,9 @@ def encode_png_gray(img: np.ndarray, compress_level: int = 6) -> bytes:
     # prepend the filter byte (0 = None) to every scanline
     raw = np.concatenate(
         [np.zeros((h, 1), dtype=np.uint8), img], axis=1).tobytes()
-    idat = zlib.compress(raw, compress_level)
+    idat = zlib.compress(raw, ZLIB_LEVEL)
     return (PNG_SIG + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat)
             + _chunk(b"IEND", b""))
-
-
-_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
-_PNG_DEPTHS = {0: (1, 2, 4, 8, 16), 2: (8, 16), 3: (1, 2, 4, 8),
-               4: (8, 16), 6: (8, 16)}
-# Adam7 pass origins and strides (PNG spec §Interlace)
-_ADAM7 = ((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-          (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
-
-
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
-
-
-def _unfilter(raw: bytes, off: int, width_bytes: int, height: int,
-              bpp: int) -> tuple[np.ndarray, int]:
-    """One (sub)image's scanline stream (filter byte + width_bytes per
-    row) → (height, width_bytes) unfiltered bytes + bytes consumed.
-    All five filter types (None/Sub/Up/Average/Paeth)."""
-    out = np.zeros((height, width_bytes), np.uint8)
-    stride = width_bytes + 1
-    need = stride * height
-    if off + need > len(raw):
-        raise ValueError("PNG scanline data truncated")
-    zero_row = np.zeros(width_bytes, np.uint8)
-    for y in range(height):
-        filt = raw[off + y * stride]
-        start = off + y * stride + 1
-        prev = out[y - 1] if y else zero_row
-        if filt == 0:
-            out[y] = np.frombuffer(raw, np.uint8, width_bytes, start)
-        elif filt == 2:                  # Up — vectorizable
-            line = np.frombuffer(raw, np.uint8, width_bytes, start)
-            out[y] = (line.astype(np.uint16) + prev).astype(np.uint8)
-        elif filt == 1:                  # Sub — per-bpp-lane prefix sum
-            # out[x] = (line[x] + out[x-bpp]) mod 256 is a running sum
-            # within each of the bpp byte lanes; mod distributes over
-            # addition, so cumsum-then-mask is exact and vectorized
-            line = np.frombuffer(raw, np.uint8, width_bytes, start)
-            row = out[y]
-            for lane in range(bpp):
-                acc = np.cumsum(line[lane::bpp], dtype=np.uint64)
-                row[lane::bpp] = acc & 0xFF
-        elif filt in (3, 4):             # Average / Paeth
-            # the left-neighbor recurrence is inherently sequential
-            # (out[x] needs out[x-bpp] through a nonlinear >>1 / paeth
-            # predictor); byte-object indexing keeps the scalar loop
-            # as cheap as pure Python gets (measured ~1.7x over
-            # ndarray int() lookups on a 512x512 RGB all-Paeth image;
-            # Sub above is ~7.7x via the lane cumsum)
-            line = bytearray(raw[start:start + width_bytes])
-            pb = prev.tobytes()
-            if filt == 3:
-                for x in range(width_bytes):
-                    a = line[x - bpp] if x >= bpp else 0
-                    line[x] = (line[x] + ((a + pb[x]) >> 1)) & 0xFF
-            else:
-                for x in range(width_bytes):
-                    a = line[x - bpp] if x >= bpp else 0
-                    c = pb[x - bpp] if x >= bpp else 0
-                    line[x] = (line[x] + _paeth(a, pb[x], c)) & 0xFF
-            out[y] = np.frombuffer(bytes(line), np.uint8)
-        else:
-            raise ValueError(f"unsupported filter {filt}")
-    return out, need
-
-
-def _png_samples(rows: np.ndarray, w: int, depth: int,
-                 nch: int) -> np.ndarray:
-    """Unfiltered row bytes → (h, w, nch) uint8 samples.  16-bit
-    takes the big-endian high byte; sub-byte depths unpack MSB-first
-    (raw values — gray scaling happens at the end)."""
-    h = rows.shape[0]
-    if depth == 8:
-        return rows[:, : w * nch].reshape(h, w, nch)
-    if depth == 16:
-        return rows[:, : w * nch * 2].reshape(h, w, nch, 2)[:, :, :, 0]
-    bits = np.unpackbits(rows, axis=1)
-    weights = (1 << np.arange(depth - 1, -1, -1)).astype(np.uint8)
-    vals = (bits.reshape(h, -1, depth) * weights).sum(
-        axis=2).astype(np.uint8)
-    return vals[:, :w].reshape(h, w, 1)
-
-
-def decode_png_gray(data: bytes) -> np.ndarray:
-    """Full PNG → (h, w) uint8 gray: all five color types (gray,
-    RGB, palette, gray+alpha, RGBA), bit depths 1/2/4/8/16, all five
-    scanline filters, and Adam7 interlace.  Signature, chunk CRCs,
-    header combos and palette ranges are validated — structural
-    damage raises ``ValueError`` (Spark stages quarantine).  RGB
-    averages to the channel mean and alpha is ignored, matching the
-    other raster codecs' gray convention."""
-    if data[:8] != PNG_SIG:
-        raise ValueError("bad PNG signature")
-    pos = 8
-    w = h = None
-    idat, plte = b"", None
-    while pos + 12 <= len(data):
-        (length,) = struct.unpack(">I", data[pos:pos + 4])
-        tag = data[pos + 4:pos + 8]
-        body = data[pos + 8:pos + 8 + length]
-        if len(body) != length or pos + 12 + length > len(data):
-            raise ValueError("truncated PNG chunk")
-        (crc,) = struct.unpack(
-            ">I", data[pos + 8 + length:pos + 12 + length])
-        if zlib.crc32(tag + body) & 0xFFFFFFFF != crc:
-            raise ValueError(f"bad CRC in {tag!r}")
-        if tag == b"IHDR":
-            w, h, depth, ctype, comp, fmeth, interlace = struct.unpack(
-                ">IIBBBBB", body[:13])
-            if comp or fmeth or interlace > 1:
-                raise ValueError("PNG compression/filter/interlace "
-                                 "method out of spec")
-            if ctype not in _PNG_CHANNELS \
-                    or depth not in _PNG_DEPTHS[ctype]:
-                raise ValueError(
-                    f"PNG color type {ctype}/depth {depth} invalid")
-        elif tag == b"PLTE":
-            plte = body
-        elif tag == b"IDAT":
-            idat += body
-        elif tag == b"IEND":
-            break
-        pos += 12 + length
-    if w is None:
-        raise ValueError("missing IHDR")
-    if not w or not h:
-        raise ValueError("PNG with zero dimension")
-    raw = zlib.decompress(idat)
-    nch = _PNG_CHANNELS[ctype]
-    bpp = max(1, (depth * nch) // 8)
-    img = np.zeros((h, w, nch), np.uint8)
-    off = 0
-    for x0, y0, dx, dy in (_ADAM7 if interlace else ((0, 0, 1, 1),)):
-        pw = (w - x0 + dx - 1) // dx
-        ph = (h - y0 + dy - 1) // dy
-        if pw <= 0 or ph <= 0:
-            continue
-        width_bytes = (pw * depth * nch + 7) // 8
-        rows, used = _unfilter(raw, off, width_bytes, ph, bpp)
-        off += used
-        img[y0::dy, x0::dx] = _png_samples(rows, pw, depth, nch)
-    if off != len(raw):
-        raise ValueError("scanline size mismatch")
-    if ctype == 3:
-        if plte is None or len(plte) % 3:
-            raise ValueError("palette PNG without a valid PLTE")
-        pal = np.frombuffer(plte, np.uint8).reshape(-1, 3)
-        idx = img[:, :, 0]
-        if idx.max(initial=0) >= len(pal):
-            raise ValueError("PNG palette index out of range")
-        return pal.mean(axis=1).astype(np.uint8)[idx]
-    if ctype in (0, 4):
-        g = img[:, :, 0]
-        if depth < 8:                    # 0..2^d-1 → full 0..255
-            g = (g.astype(np.uint16)
-                 * (255 // ((1 << depth) - 1))).astype(np.uint8)
-        return np.ascontiguousarray(g)
-    return img[:, :, :3].mean(axis=2).astype(np.uint8)
 
 
 # deterministic shade per block type — the crop render is a
@@ -226,16 +62,16 @@ BLOCK_SHADES = {"text": 200, "image": 150, "table": 100}
 MAX_DIM = 512
 
 
-def render_region(blocks: list[dict], crop_bbox, scale: float = 1.0,
-                  max_dim: int = MAX_DIM) -> np.ndarray:
+def render_region(blocks: list[dict], crop_bbox) -> np.ndarray:
     """Rasterize the page blocks clipped to ``crop_bbox`` onto a white
     canvas: each intersecting block fills its intersection with a
-    per-type shade.  1 px per layout pt, capped at ``max_dim`` on the
+    per-type shade.  1 px per layout pt, capped at ``MAX_DIM`` on the
     long side (uniform downscale)."""
     x0, y0, x1, y1 = crop_bbox
     w_pt, h_pt = max(x1 - x0, 1.0), max(y1 - y0, 1.0)
-    if max(w_pt, h_pt) * scale > max_dim:
-        scale = max_dim / max(w_pt, h_pt)
+    scale = 1.0
+    if max(w_pt, h_pt) > MAX_DIM:
+        scale = MAX_DIM / max(w_pt, h_pt)
     w = max(1, int(round(w_pt * scale)))
     h = max(1, int(round(h_pt * scale)))
     img = np.full((h, w), 255, dtype=np.uint8)

@@ -9,7 +9,7 @@ import tempfile
 import pytest
 
 from exam_pdf_parser_spark.operators.compare import compare_runs, missed_by_all
-from exam_pdf_parser_spark.core.png import PNG_SIG, decode_png_gray
+from exam_pdf_parser_spark.core.png import PNG_SIG
 from exam_pdf_parser_spark.operators.crop import crop_regions, pad_clamp
 from exam_pdf_parser_spark.operators.extract import corpus_df
 from exam_pdf_parser_spark.operators.evaluation import evaluate_questions, score_urls
@@ -19,6 +19,8 @@ from exam_pdf_parser_spark.operators.parsed import (
 from exam_pdf_parser_spark.sources.report import (
     dump_golden_json, load_golden_json, markdown_summary, write_csv_report,
 )
+
+from .png_reader import read_png_gray
 
 N_DOCS = 15
 
@@ -69,7 +71,7 @@ def test_crop_sink(spark, docs):
     # crops are REAL PNGs: structurally valid (CRCs, IHDR, zlib) with
     # dimensions matching the padded bbox, and actual ink on the canvas
     for r in rows[:10]:
-        img = decode_png_gray(bytes(r["png"]))
+        img = read_png_gray(bytes(r["png"]))
         h, w = img.shape
         w_pt = max(r["x1"] - r["x0"], 1.0)
         h_pt = max(r["y1"] - r["y0"], 1.0)
@@ -153,14 +155,12 @@ def test_missed_by_all_empty_dict_raises():
 def test_png_codec_roundtrip():
     import numpy as np
 
-    from exam_pdf_parser_spark.core.png import (
-        encode_png_gray, decode_png_gray, render_region,
-    )
+    from exam_pdf_parser_spark.core.png import encode_png_gray, render_region
 
     rng = np.random.default_rng(7)
     img = rng.integers(0, 256, size=(37, 53), dtype=np.uint8)
     data = encode_png_gray(img)
-    assert (decode_png_gray(data) == img).all()
+    assert (read_png_gray(data) == img).all()
     # byte-determinism
     assert encode_png_gray(img) == data
 

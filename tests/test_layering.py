@@ -10,15 +10,6 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 PKG = "exam_pdf_parser_spark"
 
-# The multimodal media tier: reached only by its own tests.  core.png
-# is not part of it — crop encodes with it.
-MEDIA_TIER = {f"{PKG}.operators.multimodal", f"{PKG}.core.gif"}
-
-# Package modules no production entry point reaches.  Compared with
-# ``==``, so deleting a media slice must shrink this set in the same
-# change.
-TEST_ONLY = MEDIA_TIER
-
 
 def _module_name(path: Path) -> str:
     parts = path.relative_to(ROOT).with_suffix("").parts
@@ -49,22 +40,6 @@ def _imported_modules(path: Path) -> set[str]:
     return out
 
 
-def test_media_tier_reached_only_by_tests():
-    """No package module outside the media tier, no script, no
-    benchmark and not ``__spark_entry__.py`` imports the tier — so the
-    tier can be deleted slice by slice without touching a query."""
-    tier_files = {ROOT / (m.replace(".", "/") + ".py") for m in MEDIA_TIER}
-    scope = [p for p in sorted((ROOT / PKG).rglob("*.py"))
-             if p not in tier_files]
-    scope += sorted((ROOT / "scripts").rglob("*.py"))
-    scope += sorted((ROOT / "perfbench").rglob("*.py"))
-    scope += [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
-    assert len(scope) > 40            # the scan really covers the tree
-    reached = {str(p.relative_to(ROOT)):
-               sorted(_imported_modules(p) & MEDIA_TIER) for p in scope}
-    assert {k: v for k, v in reached.items() if v} == {}
-
-
 def _entry_points() -> list[Path]:
     """Every file that runs in production: the driver contract, the
     CLI, the headline bench, the repo benchmark and the scripts."""
@@ -76,8 +51,7 @@ def _entry_points() -> list[Path]:
 
 def test_every_package_module_reached_from_an_entry_point():
     """Walk package imports transitively from the entry points.  Every
-    package module must be reached, except the ``TEST_ONLY`` allow-list,
-    which must be exactly what is unreached (no stale entries).
+    package module must be reached: code only tests import is dead.
     Importing a module also runs its parents' ``__init__``, so a
     package counts as reached when any module under it is."""
     modules = {_module_name(p): p for p in (ROOT / PKG).rglob("*.py")}
@@ -95,7 +69,7 @@ def test_every_package_module_reached_from_an_entry_point():
                 if mod in modules and mod not in reached:
                     reached.add(mod)
                     todo.append(modules[mod])
-    assert set(modules) - reached == TEST_ONLY
+    assert set(modules) - reached == set()
 
 
 # PEP 594: deprecated in 3.11, removed from the standard library in 3.13.

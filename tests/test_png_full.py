@@ -1,22 +1,28 @@
-"""Full-spec PNG decode: hand-assembled files.
+"""PNG encoder output, checked by the strict test-side reader.
 
-The test carries its OWN chunk writer, scanline filters and Adam7
-pass arithmetic built from the PNG specification — the decoder must
-invert them.  Expected grays are computed here with the repo-wide
-channel-mean convention, plus one literal hand-worked Paeth vector.
+``core/png.py`` writes one shape: 8-bit gray, no interlace, filter 0 on
+every scanline.  ``tests/png_reader.py`` accepts exactly that shape, so
+the round trips in ``test_compare_crop_report.py`` and
+``test_properties.py`` hold the encoder to the PNG specification.  These
+tests pin both halves: the encoder's bytes and input guards, and the
+reader's refusal of every valid PNG the encoder never writes (scanline
+filters 1-4, colour, palette, low and 16-bit depths, alpha, Adam7).  A
+reader loosened to accept any of them fails here.  The files are built
+with this module's own chunk writer and forward filters.
 """
 
 from __future__ import annotations
 
+import hashlib
 import struct
 import zlib
 
 import numpy as np
 import pytest
 
-from exam_pdf_parser_spark.core.png import (
-    PNG_SIG, decode_png_gray, encode_png_gray,
-)
+from exam_pdf_parser_spark.core.png import PNG_SIG, encode_png_gray
+
+from .png_reader import read_png_gray
 
 
 def chunk(tag: bytes, body: bytes) -> bytes:
@@ -33,8 +39,7 @@ def png(w, h, depth, ctype, raw, plte=b"", interlace=0):
 
 
 def filt_rows(px: np.ndarray, filters: list[int], bpp: int) -> bytes:
-    """Spec-side (forward) filtering, written independently here:
-    the stream stores x - predictor, the decoder must add it back."""
+    """Spec-side (forward) filtering: the stream stores x - predictor."""
     h, wb = px.shape
     out = bytearray()
     prev = np.zeros(wb, np.int32)
@@ -65,166 +70,92 @@ def filt_rows(px: np.ndarray, filters: list[int], bpp: int) -> bytes:
 
 
 def test_rgb_all_filters():
-    """8-bit RGB through every filter type decodes to the channel
-    mean; the forward filters live in this file only."""
-    rng = np.random.default_rng(7)
-    h, w = 10, 9
-    px = rng.integers(0, 256, (h, w, 3)).astype(np.uint8)
-    raw = filt_rows(px.reshape(h, w * 3), [0, 1, 2, 3, 4], bpp=3)
-    got = decode_png_gray(png(w, h, 8, 2, raw))
-    assert np.array_equal(got, px.mean(axis=2).astype(np.uint8))
+    """Filter 0 gray reads back; any scanline filter 1-4 is refused,
+    and so is RGB under every filter type."""
+    w, h = 6, 5
+    px = np.random.default_rng(1).integers(0, 256, (h, w)).astype(np.uint8)
+    assert np.array_equal(read_png_gray(png(w, h, 8, 0,
+                                            filt_rows(px, [0], 1))), px)
+    for f in (1, 2, 3, 4):
+        raw = filt_rows(px, [0, f], bpp=1)
+        with pytest.raises(AssertionError, match="filter byte"):
+            read_png_gray(png(w, h, 8, 0, raw))
 
-
-def test_paeth_literal_vector():
-    """Hand-worked Paeth bytes: 2x2 gray, row0=[5, 9] stored raw,
-    row1 filtered with Paeth.  For x=0: a=0,c=0,b=5 -> predictor 5;
-    for x=1: a=row1[0]=7, b=9, c=5 -> p=11, pa=4,pb=2,pc=6 -> b=9.
-    Stored deltas: 7-5=2 and 12-9=3."""
-    raw = bytes([0, 5, 9,
-                 4, 2, 3])
-    got = decode_png_gray(png(2, 2, 8, 0, raw))
-    assert got.tolist() == [[5, 9], [7, 12]]
+    rgb = np.random.default_rng(2).integers(
+        0, 256, (h, w, 3)).astype(np.uint8)
+    for f in range(5):
+        raw = filt_rows(rgb.reshape(h, w * 3), [f], bpp=3)
+        with pytest.raises(AssertionError, match="IHDR"):
+            read_png_gray(png(w, h, 8, 2, raw))
 
 
 def test_palette_and_low_depths():
-    """4-bit palette indices map through PLTE's channel mean; 1-bit
-    gray scales to 0/255; 2-bit gray scales by 85."""
-    plte = bytes(v for i in (0, 60, 120, 180) for v in (i, i + 6, i))
-    # width 3, 4-bit: nibbles MSB-first, row padded to whole bytes
-    rows = [[0, 1, 2], [3, 2, 1]]
-    raw = bytearray()
-    for r in rows:
-        raw.append(0)
-        raw.append((r[0] << 4) | r[1])
-        raw.append(r[2] << 4)
-    got = decode_png_gray(png(3, 2, 4, 3, bytes(raw), plte))
-    exp = [[(0 + 6 + 0) // 3, (60 + 66 + 60) // 3, (120 + 126 + 120) // 3],
-           [(180 + 186 + 180) // 3, (120 + 126 + 120) // 3,
-            (60 + 66 + 60) // 3]]
-    assert got.tolist() == exp
+    """Palette files are refused with or without a PLTE chunk, and so
+    are 1-, 2- and 4-bit gray, each with a correctly sized stream."""
+    plte = bytes(v for i in range(4) for v in (i * 60,) * 3)
+    raw = bytes([0, 0, 1, 2, 0, 3, 2, 1])           # 3x2, 8-bit indices
+    with pytest.raises(AssertionError, match="PLTE"):
+        read_png_gray(png(3, 2, 8, 3, raw, plte))
+    with pytest.raises(AssertionError, match="IHDR"):
+        read_png_gray(png(3, 2, 8, 3, raw))
 
-    # 1-bit gray, width 10 (2 bytes/row)
-    bits = [1, 0, 1, 1, 0, 0, 1, 0, 1, 1]
-    b0 = int("".join(map(str, bits[:8])), 2)
-    b1 = bits[8] << 7 | bits[9] << 6
-    raw = bytes([0, b0, b1])
-    got = decode_png_gray(png(10, 1, 1, 0, raw))
-    assert got.tolist() == [[v * 255 for v in bits]]
-
-    # 2-bit gray: values 0..3 scale by 85
-    raw = bytes([0, (0 << 6) | (1 << 4) | (2 << 2) | 3])
-    got = decode_png_gray(png(4, 1, 2, 0, raw))
-    assert got.tolist() == [[0, 85, 170, 255]]
+    w = 10
+    for depth in (1, 2, 4):
+        row_bytes = (w * depth + 7) // 8
+        raw = bytes([0]) + bytes(range(row_bytes))
+        with pytest.raises(AssertionError, match="IHDR"):
+            read_png_gray(png(w, 1, depth, 0, raw))
 
 
 def test_16bit_rgba_gray_alpha():
-    """16-bit gray takes the high byte; RGBA and gray+alpha ignore
-    alpha (gray+alpha exercised with Paeth at bpp=2)."""
-    raw = bytes([0]) + struct.pack(">HHH", 0x0100, 0xFFFF, 0x9C40)
-    got = decode_png_gray(png(3, 1, 16, 0, raw))
-    assert got.tolist() == [[1, 255, 0x9C]]
-
-    px = np.array([[[10, 20, 30, 0], [90, 60, 30, 255]]], np.uint8)
-    raw = filt_rows(px.reshape(1, 8), [0], bpp=4)
-    got = decode_png_gray(png(2, 1, 8, 6, raw))
-    assert got.tolist() == [[20, 60]]
-
-    ga = np.array([[[7, 0], [250, 128], [13, 255]],
-                   [[9, 1], [200, 2], [77, 3]]], np.uint8)
-    raw = filt_rows(ga.reshape(2, 6), [4, 4], bpp=2)
-    got = decode_png_gray(png(3, 2, 8, 4, raw))
-    assert got.tolist() == [[7, 250, 13], [9, 200, 77]]
+    """16-bit gray, RGBA and gray+alpha are valid PNGs the encoder never
+    writes; each is refused at IHDR."""
+    cases = [
+        (16, 0, bytes([0, 0x12, 0x34, 0xAB, 0xCD, 0xFF, 0xFF])),  # 3x1
+        (8, 6, bytes([0, 10, 20, 30, 255, 40, 50, 60, 0])),      # 2x1
+        (8, 4, bytes([0, 7, 255, 9, 0, 11, 128])),               # 3x1
+    ]
+    widths = {0: 3, 6: 2, 4: 3}
+    for depth, ctype, raw in cases:
+        with pytest.raises(AssertionError, match="IHDR"):
+            read_png_gray(png(widths[ctype], 1, depth, ctype, raw))
 
 
 def test_adam7_interlace():
-    """5x5 8-bit gray, Adam7: the seven passes are extracted with the
-    spec's origin/stride table written out here; the decoder must
-    scatter them back to the original."""
-    img = np.arange(25, dtype=np.uint8).reshape(5, 5) * 9
-    raw = bytearray()
-    for x0, y0, dx, dy in ((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8),
-                           (2, 0, 4, 4), (0, 2, 2, 4), (1, 0, 2, 2),
-                           (0, 1, 1, 2)):
-        sub = img[y0::dy, x0::dx]
-        if sub.size == 0:
-            continue
-        for row in sub:
-            raw.append(0)
-            raw.extend(row.tobytes())
-    got = decode_png_gray(png(5, 5, 8, 0, bytes(raw), interlace=1))
-    assert np.array_equal(got, img)
-
-    # interlaced RGB too (pass widths change the per-row byte count)
-    rng = np.random.default_rng(3)
-    rgb = rng.integers(0, 256, (5, 5, 3)).astype(np.uint8)
-    raw = bytearray()
-    for x0, y0, dx, dy in ((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8),
-                           (2, 0, 4, 4), (0, 2, 2, 4), (1, 0, 2, 2),
-                           (0, 1, 1, 2)):
-        sub = rgb[y0::dy, x0::dx]
-        if sub.size == 0:
-            continue
-        for row in sub:
-            raw.append(0)
-            raw.extend(row.tobytes())
-    got = decode_png_gray(png(5, 5, 8, 2, bytes(raw), interlace=1))
-    assert np.array_equal(got, rgb.mean(axis=2).astype(np.uint8))
-
-
-try:
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-    _HYP = True
-except ImportError:                      # pragma: no cover
-    _HYP = False
-
-if _HYP:
-    @given(st.integers(1, 24), st.integers(1, 20),
-           st.integers(0, 2**32 - 1), st.sampled_from([0, 2, 4, 6]),
-           st.lists(st.integers(0, 4), min_size=1, max_size=6))
-    @settings(max_examples=60, deadline=None)
-    def test_decode_inverts_forward_filters_any_shape(
-            w, h, seed, ctype, filters):
-        """Property: for any shape, color type and per-row filter
-        mix, decoding the test's forward-filtered stream recovers
-        the image (channel-mean gray for color, alpha ignored)."""
-        nch = {0: 1, 2: 3, 4: 2, 6: 4}[ctype]
-        px = np.random.default_rng(seed).integers(
-            0, 256, (h, w, nch)).astype(np.uint8)
-        raw = filt_rows(px.reshape(h, w * nch), filters, bpp=nch)
-        got = decode_png_gray(png(w, h, 8, ctype, raw))
-        if ctype in (0, 4):
-            want = px[:, :, 0]
-        else:
-            want = px[:, :, :3].mean(axis=2).astype(np.uint8)
-        assert np.array_equal(got, want)
+    """Adam7 is refused by the IHDR flag alone.  A 1x1 image's single
+    pass has the same bytes as the plain stream, so only the flag can
+    tell them apart; the 2x2 stream is the hand-worked pass split
+    (pass 1: (0,0); pass 6: (0,1); pass 7: row 1)."""
+    assert np.array_equal(read_png_gray(png(1, 1, 8, 0, b"\x00\x07")),
+                          np.array([[7]], np.uint8))
+    with pytest.raises(AssertionError, match="IHDR"):
+        read_png_gray(png(1, 1, 8, 0, b"\x00\x07", interlace=1))
+    adam7 = bytes([0, 1, 0, 2, 0, 3, 4])
+    with pytest.raises(AssertionError, match="IHDR"):
+        read_png_gray(png(2, 2, 8, 0, adam7, interlace=1))
 
 
 def test_encoder_output_unchanged_and_guards():
-    """The repo encoder's output still decodes bit-exactly; invalid
-    combos, bad palettes and truncation raise (quarantine)."""
+    """The encoder's bytes are pinned and read back bit-exactly; it
+    refuses anything but a 2-D uint8 array; and the reader refuses
+    every truncation and every single-byte flip of its output."""
     img = np.arange(200, dtype=np.uint8).reshape(10, 20)
-    assert np.array_equal(decode_png_gray(encode_png_gray(img)), img)
-
-    with pytest.raises(ValueError, match="invalid"):
-        decode_png_gray(png(2, 1, 8, 5, bytes([0, 1, 2])))
-    with pytest.raises(ValueError, match="invalid"):
-        decode_png_gray(png(2, 1, 4, 2, bytes([0, 1])))
-    with pytest.raises(ValueError, match="PLTE"):
-        decode_png_gray(png(2, 1, 8, 3, bytes([0, 1, 2])))
-    with pytest.raises(ValueError, match="palette index"):
-        decode_png_gray(png(2, 1, 8, 3, bytes([0, 1, 9]),
-                            plte=bytes(6)))
-    with pytest.raises(ValueError):
-        decode_png_gray(png(4, 4, 8, 0, bytes([0, 1, 2])))  # short
-    # deterministic fuzz: flips/truncations raise or return sane dims
     blob = encode_png_gray(img)
+    assert np.array_equal(read_png_gray(blob), img)
+    assert hashlib.sha256(blob).hexdigest() == (
+        "85be1ff202381c63a9b1ab14121bd6515d8924739365b42c86bf365675a67d9c")
+
+    for bad in (img.astype(np.uint16), img.astype(np.float32),
+                img[None], img[0]):
+        with pytest.raises(ValueError, match="uint8"):
+            encode_png_gray(bad)
+
+    for n in range(len(blob)):
+        with pytest.raises(AssertionError):
+            read_png_gray(blob[:n])
     rng = np.random.default_rng(9)
     for _ in range(150):
         bad = bytearray(blob)
-        bad[int(rng.integers(8, len(bad)))] ^= int(rng.integers(1, 256))
-        try:
-            out = decode_png_gray(bytes(bad))
-            assert out.shape[0] <= 1 << 16 and out.shape[1] <= 1 << 16
-        except (ValueError, zlib.error):
-            pass
+        bad[int(rng.integers(0, len(bad)))] ^= int(rng.integers(1, 256))
+        with pytest.raises(AssertionError):
+            read_png_gray(bytes(bad))

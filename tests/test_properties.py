@@ -232,10 +232,10 @@ def test_classify_total_and_closed(number, text):
 def test_png_roundtrip_any_shape(w, h, seed):
     import numpy as np
 
-    from exam_pdf_parser_spark.core.png import (
-        decode_png_gray, encode_png_gray,
-    )
+    from exam_pdf_parser_spark.core.png import encode_png_gray
+
+    from .png_reader import read_png_gray
 
     img = np.random.default_rng(seed).integers(
         0, 256, size=(h, w), dtype=np.uint8)
-    assert (decode_png_gray(encode_png_gray(img)) == img).all()
+    assert (read_png_gray(encode_png_gray(img)) == img).all()
