@@ -6,8 +6,8 @@
     python -m exam_pdf_parser_spark evaluate  IN.parquet OUT_DIR
     python -m exam_pdf_parser_spark crop      IN.parquet OUT_DIR
     python -m exam_pdf_parser_spark run       IN.parquet OUT_DIR   (manifest+resume;
-        giant routing + row sharding ON by default — --no-route-giants /
-        --shard-chars N|0 --bucket-slice 0-15 --compact-after K)
+        row sharding ON by default — --shard-chars N|0
+        --bucket-slice 0-15 --compact-after K)
     python -m exam_pdf_parser_spark reassemble RUN_DIR OUT.parquet (sharded -> whole docs)
     python -m exam_pdf_parser_spark curate    IN.parquet OUT_DIR   (dedup/quality/lang gates)
     python -m exam_pdf_parser_spark gen-corpus N OUT.parquet       (synthetic input)
@@ -37,29 +37,16 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--run-id", default="cli")
     ap.add_argument(
-        "--giant-bytes", type=int, default=0,
-        help="extract: route payloads larger than this through the "
-             "page-parallel paged path (0 = whole-doc only)")
-    ap.add_argument(
         "--pdf", action="store_true",
         help="gen-corpus: emit the html column as REAL PDF bytes "
              "(core/pdf.py writer) instead of the XLAY1 container")
-    ap.add_argument(
-        "--route-giants", action="store_true",
-        help="run: deprecated no-op — giant routing is the default "
-             "since round 8; see --no-route-giants for the off-switch")
-    ap.add_argument(
-        "--no-route-giants", action="store_true",
-        help="run: disable giant routing AND output-row sharding "
-             "(the pre-round-8 whole-doc path; output carries no "
-             "shard columns)")
     ap.add_argument(
         "--shard-chars", type=int, default=None,
         help="run: output-row size bound (core/shard.py rule) — "
              "documents past the threshold write as (shard_idx, "
              "n_shards) rows; DEFAULT: core.shard.DEFAULT_SHARD_CHARS; "
-             "0 disables sharding while keeping giant routing; consume "
-             "with the reassemble command or "
+             "0 disables sharding (output carries no shard columns); "
+             "consume with the reassemble command or "
              "sources.manifest.read_extracted")
     ap.add_argument(
         "--bucket-slice", default=None,
@@ -225,12 +212,7 @@ def _dispatch(spark, args) -> int:
             extract, extracted_table, quarantine_table, spans_table,
         )
 
-        giant = getattr(args, "giant_bytes", 0)  # tests drive _dispatch
-        if giant:                                # with minimal arg stubs
-            from .operators.extract_paged import extract_auto
-            ext = extract_auto(docs, giant_bytes=giant).persist()
-        else:
-            ext = extract(docs).persist()
+        ext = extract(docs).persist()
         spans_table(ext).write.mode("overwrite").parquet(
             f"{args.output}/spans")
         extracted_table(ext).write.mode("overwrite").parquet(
@@ -238,9 +220,6 @@ def _dispatch(spark, args) -> int:
         quarantine_table(ext).write.mode("overwrite").parquet(
             f"{args.output}/quarantine")
         stats = ext.groupBy("status").count().collect()
-        if giant:
-            from .operators.extract_paged import release_routed_cache
-            release_routed_cache(ext)
         ext.unpersist()
         print(json.dumps({"command": "extract",
                           "status": {r["status"]: r["count"] for r in stats}}))
@@ -311,18 +290,11 @@ def _dispatch(spark, args) -> int:
                     bucket_subset.extend(range(int(lo), int(hi) + 1))
                 else:
                     bucket_subset.append(int(part))
-        # safe-by-default (round 8): routing + sharding are the engine
-        # defaults; --no-route-giants is the explicit off-switch and
-        # --shard-chars 0 keeps routing but disables row sharding
+        # row sharding is the engine default; --shard-chars 0 turns
+        # it off (tests drive _dispatch with minimal arg stubs)
         shard_arg = getattr(args, "shard_chars", None)
         kwargs = {}
-        if getattr(args, "no_route_giants", False):
-            if shard_arg:
-                print("--shard-chars requires giant routing — drop "
-                      "--no-route-giants", file=sys.stderr)
-                return 2
-            kwargs["route_giants"] = False
-        elif shard_arg is not None:
+        if shard_arg is not None:
             kwargs["shard_chars"] = shard_arg or None
         stats = run_extraction(
             spark, docs, args.output, args.run_id,

@@ -25,7 +25,7 @@ tests/test_shard_giants.py):
     with ``status='error'`` (null text) are never split.
 
 This module is pure Python — shared verbatim by the Spark stage
-(``operators/extract_paged.py``) and the tests/oracle, per the
+(``operators/extract.py``) and the tests/oracle, per the
 byte-identity invariant in CLAUDE.md.
 """
 

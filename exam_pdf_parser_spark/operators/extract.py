@@ -58,6 +58,14 @@ EXTRACT_SCHEMA = StructType([
     StructField("error", StringType(), True),
 ])
 
+# EXTRACT_SCHEMA + the shard coordinates (core/shard.py): the output
+# shape of ``extract(shard_chars=...)``
+SHARDED_EXTRACT_SCHEMA = StructType(
+    EXTRACT_SCHEMA.fields + [
+        StructField("shard_idx", IntegerType(), False),
+        StructField("n_shards", IntegerType(), False),
+    ])
+
 
 def quarantine_message(e: Exception) -> str:
     """The ``error`` text of a quarantined row, worded the same by every
@@ -82,22 +90,9 @@ def span_dicts(regions) -> list[dict]:
     ]
 
 
-def extract_one_row(url, html, min_q: int = 1, max_q: int = 50) -> dict:
-    """Single-document extraction row (EXTRACT_SCHEMA shape): the
-    per-doc body of :func:`extract`, shared with ``extract_auto``'s
-    router so the small-doc path is byte-identical by construction —
-    including the quarantine error string for corrupt/NULL payloads."""
-    try:
-        extracted, regions = extract_document(bytes(html), min_q, max_q)
-    except Exception as e:  # quarantine, never fail the task
-        return {"url": url, "extracted_text": None, "spans": [],
-                "status": "error", "error": quarantine_message(e)}
-    return {"url": url, "extracted_text": extracted,
-            "spans": span_dicts(regions), "status": "ok", "error": None}
-
-
 def extract(documents: DataFrame, min_q: int = 1, max_q: int = 50,
-            with_timing: bool = False) -> DataFrame:
+            with_timing: bool = False, shard_chars: int | None = None,
+            shard_spans: int | None = None) -> DataFrame:
     """documents(url, …, html, …) → (url, extracted_text, spans, status, error).
 
     Catalyst prunes unused input columns before the UDF (only ``url``
@@ -113,17 +108,31 @@ def extract(documents: DataFrame, min_q: int = 1, max_q: int = 50,
     processing time, measured inside the task) — the source of the
     manifest's per-partition throughput metrics.  Off by default so
     the byte-identity output contract stays timing-free.
+
+    ``shard_chars`` (off by default): bound every OUTPUT row under the
+    ``core/shard.py`` rule — a document whose text exceeds
+    ``shard_chars`` chars or whose span list exceeds ``shard_spans``
+    (default ``core.shard.DEFAULT_SHARD_SPANS``) is emitted as several
+    rows, and every row gains ``shard_idx``/``n_shards`` (before
+    ``proc_us``, which lands on shard 0 only, so per-url sums stay the
+    document's time).  Byte identity holds under
+    ``extract_paged.reassemble_sharded``.
     """
     import time
 
     import pyarrow as pa
+    from pyspark.sql.types import LongType
+
+    from ..core.shard import DEFAULT_SHARD_SPANS, shard_row
 
     docs = documents.select("url", "html")
-    schema = EXTRACT_SCHEMA
+    sharding = shard_chars is not None
+    if sharding and shard_spans is None:
+        shard_spans = DEFAULT_SHARD_SPANS
+    schema = SHARDED_EXTRACT_SCHEMA if sharding else EXTRACT_SCHEMA
     if with_timing:
-        from pyspark.sql.types import LongType
         schema = StructType(
-            EXTRACT_SCHEMA.fields + [StructField("proc_us", LongType())])
+            schema.fields + [StructField("proc_us", LongType())])
 
     # r10 (guide §4.2): the emitter builds the Arrow output DIRECTLY —
     # flat per-field lists + one offsets array assembled into the
@@ -142,45 +151,55 @@ def extract(documents: DataFrame, min_q: int = 1, max_q: int = 50,
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            urls = rb.column(0).to_pylist()
-            if not urls:     # empty batch → emit nothing (Arrow
+            in_urls = rb.column(0).to_pylist()
+            if not in_urls:  # empty batch → emit nothing (Arrow
                 continue     # list<struct> inference has no rows to see)
             htmls = rb.column(1).to_pylist()
-            texts, status, errors, procs = [], [], [], []
+            urls, texts, status, errors, procs = [], [], [], [], []
+            idxs, counts = [], []
             offs = [0]
             qn, pi = [], []
             x0, y0, x1, y1 = [], [], [], []
             tp, sp, gr, ri = [], [], [], []
             n = 0
-            for html in htmls:
+            for url, html in zip(in_urls, htmls):
                 t0 = time.perf_counter_ns()
                 try:
                     extracted, regions = extract_document(
                         bytes(html), min_q, max_q)
+                    st, err = "ok", None
                 except Exception as e:  # quarantine, never fail the task
-                    texts.append(None)
-                    status.append("error")
-                    errors.append(quarantine_message(e))
-                    procs.append((time.perf_counter_ns() - t0) // 1000)
+                    extracted, regions = None, []
+                    st, err = "error", quarantine_message(e)
+                proc = (time.perf_counter_ns() - t0) // 1000
+                # shard_row only takes len() of and slices the span
+                # list, so it shards the Region list as it stands
+                row = {"extracted_text": extracted, "spans": regions}
+                shards = (shard_row(row, shard_chars, shard_spans)
+                          if sharding
+                          else [dict(row, shard_idx=0, n_shards=1)])
+                for shard in shards:
+                    regs = shard["spans"]
+                    urls.append(url)
+                    texts.append(shard["extracted_text"])
+                    status.append(st)
+                    errors.append(err)
+                    procs.append(proc if shard["shard_idx"] == 0 else 0)
+                    idxs.append(shard["shard_idx"])
+                    counts.append(shard["n_shards"])
+                    for r in regs:
+                        qn.append(r.question_number)
+                        pi.append(r.page_idx)
+                        x0.append(r.x0)
+                        y0.append(r.y0)
+                        x1.append(r.x1)
+                        y1.append(r.y1)
+                        tp.append(r.text_preview)
+                        sp.append(r.spans_page)
+                        gr.append(r.group_range)
+                        ri.append(r.region_idx)
+                    n += len(regs)
                     offs.append(n)
-                    continue
-                texts.append(extracted)
-                status.append("ok")
-                errors.append(None)
-                for r in regions:
-                    qn.append(r.question_number)
-                    pi.append(r.page_idx)
-                    x0.append(r.x0)
-                    y0.append(r.y0)
-                    x1.append(r.x1)
-                    y1.append(r.y1)
-                    tp.append(r.text_preview)
-                    sp.append(r.spans_page)
-                    gr.append(r.group_range)
-                    ri.append(r.region_idx)
-                n += len(regions)
-                offs.append(n)
-                procs.append((time.perf_counter_ns() - t0) // 1000)
             struct = pa.StructArray.from_arrays(
                 [pa.array(qn, pa.int32()), pa.array(pi, pa.int32()),
                  pa.array(x0, pa.float64()), pa.array(y0, pa.float64()),
@@ -195,11 +214,12 @@ def extract(documents: DataFrame, min_q: int = 1, max_q: int = 50,
                     spans,
                     pa.array(status, pa.string()),
                     pa.array(errors, pa.string())]
-            names = ["url", "extracted_text", "spans", "status", "error"]
+            if sharding:
+                cols += [pa.array(idxs, pa.int32()),
+                         pa.array(counts, pa.int32())]
             if with_timing:
                 cols.append(pa.array(procs, pa.int64()))
-                names.append("proc_us")
-            yield pa.RecordBatch.from_arrays(cols, names=names)
+            yield pa.RecordBatch.from_arrays(cols, names=schema.names)
 
     return docs.mapInArrow(run, schema)
 

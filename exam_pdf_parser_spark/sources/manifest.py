@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from ..operators.extract import extract
+from ..core.shard import DEFAULT_SHARD_CHARS
 
 # Single source of truth for the manifest shape: the Spark DDL string
 # and the pyarrow schema used by the atomic local commit are BOTH
@@ -104,8 +104,7 @@ def restore_reader_batch(spark: SparkSession,
                          rows: int = SPARK_DEFAULT_READER_BATCH_ROWS,
                          ) -> None:
     """Undo :func:`read_extracted`'s session-wide parquet batch-size
-    lowering (symmetric to ``release_routed_cache`` on the cache
-    side).  Call AFTER every extraction-output DataFrame built by
+    lowering.  Call AFTER every extraction-output DataFrame built by
     ``read_extracted`` has been acted on (collected / written) —
     Spark's vectorized reader takes its capacity from the session
     SQLConf at action time, so restoring earlier silently re-widens
@@ -391,12 +390,6 @@ def _compact_if_due(out_dir: str, compact_after: int | None) -> dict | None:
     return compact_manifest(out_dir) if n_files > compact_after else None
 
 
-# sentinel: "caller did not choose" — resolves to the engine default
-# (DEFAULT_SHARD_CHARS when routing is on, None when the caller turned
-# routing off), so the safe default and the off-switch can coexist
-_ENGINE_DEFAULT = object()
-
-
 def run_extraction(
     spark: SparkSession,
     documents: DataFrame,
@@ -405,9 +398,8 @@ def run_extraction(
     n_buckets: int = 64,
     min_q: int = 1,
     max_q: int = 50,
-    route_giants: bool = True,
     compact_after: int | None = 64,
-    shard_chars=_ENGINE_DEFAULT,
+    shard_chars: int | None = DEFAULT_SHARD_CHARS,
     buckets: list[int] | None = None,
 ) -> dict:
     """Execute (or resume) a bucketed extraction run.
@@ -420,43 +412,29 @@ def run_extraction(
     plan is built and no write job runs; only the ``compact_after``
     retention check still applies.
 
-    The output is written through one exchange keyed by bucket, which
-    AQE sizes from the session's shuffle partitions: one parquet file
-    per ``bucket=N`` directory, with as many write tasks as the data
-    needs rather than one per bucket.
+    The plan is scan → one ``mapInArrow`` extraction
+    (``extract_paged.extract_auto``) → one exchange keyed by bucket →
+    write.  AQE sizes the write from the session's shuffle partitions:
+    one parquet file per ``bucket=N`` directory, with as many write
+    tasks as the data needs rather than one per bucket.  A giant
+    document is extracted in place like any other, and its ``proc_us``
+    is its whole extraction time.
 
-    **Safe by default (round-8 verdict ask #2)**: giant routing AND
-    output-row sharding are ON unless explicitly disabled — at 100 TB
-    the fat tail arrives whether or not the caller remembered a flag,
-    and the measured failure modes (a multi-thousand-page document
-    stalling one task; a ~250 MB output row OOMing the bucketed write
-    at 8g × 32 slots) are engine concerns, not ops guidance.  The
-    explicit off-switch is ``route_giants=False`` (whole-doc path, no
-    shard columns — the pre-round-8 behavior, kept for oracle-parity
-    tests and single-footer consumers that cannot read shard
-    coordinates).
-
-    ``route_giants=True`` (default) runs the size-routed
-    ``extract_auto`` so a pathological multi-thousand-page document
-    takes the giant branch (router decode → url shuffle → stage B)
-    instead of stalling one task; its ``proc_us`` then covers the
-    router's decode only (see ``extract_auto``), so giant-heavy
-    buckets UNDERSTATE cpu_ms — docs/sec and error metrics are exact
-    either way.
-
-    ``shard_chars`` (default ``core.shard.DEFAULT_SHARD_CHARS`` when
-    routing is on; requires ``route_giants=True`` when set
-    explicitly): bound every output ROW — documents whose extracted
-    text / span list exceed the threshold write as multiple
-    ``(shard_idx, n_shards)`` rows under the ``core/shard.py`` rule,
-    so the bucketed write never materializes one hundreds-of-MB row.
-    Pass ``shard_chars=None`` for routing WITHOUT row sharding.  Read
-    the output via :func:`read_extracted` (a mixed pre-shard/sharded
-    directory needs schema MERGE, not single-footer inference);
-    reassembly = ``operators.extract_paged.reassemble_sharded``
-    over that reader's output; manifest metrics
-    stay per-DOCUMENT (docs_in/errors count shard 0 only, rows_out
-    sums span slices — a partition of the unsharded list).
+    ``shard_chars`` (default ``core.shard.DEFAULT_SHARD_CHARS``) bounds
+    every output ROW: documents whose extracted text / span list
+    exceed the threshold write as multiple ``(shard_idx, n_shards)``
+    rows under the ``core/shard.py`` rule, so the bucketed write never
+    materializes one hundreds-of-MB row (the measured ~250 MB/slot
+    OOM at 8g × 32 slots).  It is on by default because the fat tail
+    arrives whether or not the caller remembered a flag.
+    ``shard_chars=None`` writes the plain EXTRACT_SCHEMA rows with no
+    shard columns, for single-footer consumers that cannot read shard
+    coordinates.  Read the output via :func:`read_extracted` (a mixed
+    pre-shard/sharded directory needs schema MERGE, not single-footer
+    inference); reassembly = ``operators.extract_paged.reassemble_sharded``
+    over that reader's output; manifest metrics stay per-DOCUMENT
+    (docs_in/errors count shard 0 only, rows_out sums span slices — a
+    partition of the unsharded list).
 
     ``buckets`` (round-7): restrict THIS run to a bucket subset — the
     operational shape of a sharded backfill ("process buckets 0–127
@@ -475,9 +453,6 @@ def run_extraction(
     lose nothing; see :func:`compact_manifest`).  ``None`` disables;
     object-store paths skip it automatically (local-FS-only op).
     """
-    if shard_chars is _ENGINE_DEFAULT:
-        from ..core.shard import DEFAULT_SHARD_CHARS
-        shard_chars = DEFAULT_SHARD_CHARS if route_giants else None
     if buckets is not None:
         if not buckets:
             raise ValueError(
@@ -490,9 +465,6 @@ def run_extraction(
                 f"bucket slice ids {bad} are outside "
                 f"range(n_buckets={n_buckets}) — a silent intersect "
                 "here would quietly shrink the backfill")
-    if shard_chars is not None and not route_giants:
-        raise ValueError("shard_chars requires route_giants=True "
-                         "(sharding lives on the routed path)")
     _check_run_meta(out_dir, n_buckets)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     docs = with_bucket(documents, n_buckets)
@@ -533,12 +505,9 @@ def run_extraction(
     # splits it, so each bucket's rows still land in one task (a task
     # may write several bucket dirs) — the same one file per bucket
     # dir, without one task per bucket.
-    if route_giants:
-        from ..operators.extract_paged import extract_auto
-        extracted = extract_auto(pending, min_q, max_q, with_timing=True,
-                                 shard_chars=shard_chars)
-    else:
-        extracted = extract(pending, min_q, max_q, with_timing=True)
+    from ..operators.extract_paged import extract_auto
+    extracted = extract_auto(pending, min_q, max_q, with_timing=True,
+                             shard_chars=shard_chars)
     out = extracted.withColumn(
         "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
 
@@ -550,12 +519,6 @@ def run_extraction(
     (sel.repartition(F.col("bucket"))
         .write.mode("overwrite").partitionBy("bucket").parquet(ext_path))
     wall_ms = int((time.perf_counter() - t0) * 1000)
-    if route_giants:
-        # the durable write above consumed the routed materialization;
-        # release it so repeated runs in one session don't accumulate
-        # cached extraction output (see extract_auto cache-lifetime note)
-        from ..operators.extract_paged import release_routed_cache
-        release_routed_cache(extracted)
 
     # per-bucket metrics from what was just written (read-back keeps the
     # numbers honest — they describe the durable output, not the plan).

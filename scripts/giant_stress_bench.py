@@ -1,27 +1,26 @@
 """Pathological giant-document stress (round-6 verdict ask #4): one
 ~50k-page document planted among ordinary docs, run through the
-durable pipeline with ``route_giants=True`` under the capped 8g JVM
-heap, asserting
+durable pipeline under the capped 8g JVM heap, asserting
 
-  * byte identity — the routed giant's extracted_text/spans equal the
-    whole-doc ``extract()`` of the same payload;
+  * byte identity — the giant's extracted_text/spans, reassembled from
+    its shard rows, equal the unsharded ``extract()`` of the same
+    payload;
+  * quarantine — the planted corrupt row is one ``error`` row;
   * no OOM — the run completes; per-process peak RSS of every Python
     worker is sampled from /proc and reported;
-  * the page-parallel path engages — the router's cache holds exactly
-    n_pages ``__page__`` rows for the giant.
+  * the no-op resume — a second run processes zero buckets.
 
 Usage: python scripts/giant_stress_bench.py [n_pages] [n_docs] [--no-shard]
 
-Since round 8 the DEFAULT mode passes NO routing/sharding knobs at all
-— ``run_extraction`` defaults are the safe ones (route on, shard at
-the core/shard.py threshold), so this script now certifies that a
-caller who remembered nothing survives the 50k-page giant at the exact
-config that OOM'd unsharded (8g heap × local[32], ~250 MB/slot), byte
-identity asserted through the shard reassembly rule.  ``--no-shard``
-keeps routing but disables row sharding (``shard_chars=None`` — the
-round-7 opt-out shape, retained for A/B continuity; it needs a heap
-that can absorb the giant's single output row).  ``--shard`` is
-accepted as a no-op for continuity with round-7 invocations.
+The DEFAULT mode passes NO sharding knob at all — ``run_extraction``
+defaults are the safe ones (shard at the core/shard.py threshold), so
+this script certifies that a caller who remembered nothing survives
+the 50k-page giant at the exact config that OOM'd unsharded (8g heap ×
+local[32], ~250 MB/slot), byte identity asserted through the shard
+reassembly rule.  ``--no-shard`` disables row sharding
+(``shard_chars=None``; it needs a heap that can absorb the giant's
+single output row).  ``--shard`` is accepted as a no-op for
+continuity with round-7 invocations.
 
 Prints one JSON line; results recorded in BENCH_SCALING.md.
 """
@@ -111,9 +110,6 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from exam_pdf_parser_spark.operators.extract import corpus_df, extract
-    from exam_pdf_parser_spark.operators.extract_paged import (
-        _PAGE_STATUS, extract_auto, release_routed_cache,
-    )
     from exam_pdf_parser_spark.session import get_spark
     from exam_pdf_parser_spark.sources.manifest import run_extraction
 
@@ -136,7 +132,8 @@ def main() -> None:
                       shuffle_partitions=int(cpus))
     url_g, html_g = build_giant(n_pages)
     giant_mb = len(html_g) / 1e6
-    # decoded working-set estimate: the router holds the parsed JSON
+    # decoded working-set estimate: the extracting task holds the
+    # parsed JSON
     decoded_mb = len(
         __import__("zlib").decompress(html_g[5:])) / 1e6 \
         if html_g[:5] == b"XLAY1" else float("nan")
@@ -154,15 +151,8 @@ def main() -> None:
          ("https://bad.example/x", bytearray(b"garbage payload"))],
         "url string, html binary"))
 
-    # engagement check: the router explodes the giant to exactly
-    # n_pages page rows (no silent whole-doc fallback)
     gdf = spark.createDataFrame(
         [(url_g, bytearray(html_g))], "url string, html binary")
-    routed = extract_auto(gdf)
-    n_page_rows = routed._routed_cache.filter(
-        F.col("status") == _PAGE_STATUS).count()
-    release_routed_cache(routed)
-    assert n_page_rows == n_pages, (n_page_rows, n_pages)
 
     mon = RssMonitor()
     mon.start()
@@ -211,7 +201,7 @@ def main() -> None:
     identical = (ref["extracted_text"] == got["extracted_text"]
                  and span_tuples(ref["spans"])
                  == span_tuples(got["spans"]))
-    assert identical, "routed giant diverged from whole-doc extract"
+    assert identical, "sharded giant diverged from unsharded extract"
 
     t0 = time.perf_counter()
     s2 = run_extraction(spark, mixed, OUT_DIR, "giant-resume",
@@ -231,7 +221,6 @@ def main() -> None:
         "wall_sec": round(wall, 1),
         "docs_per_sec": round((n_docs + 2) / wall, 1),
         "resume_noop_sec": round(resume, 1),
-        "route_page_rows": n_page_rows,
         "byte_identical": identical,
         "giant_spans": len(got["spans"]),
         "max_worker_rss_mb": round(mon.max_single_kb / 1024, 1),

@@ -178,7 +178,7 @@ def main() -> None:
         "metric": "million-soak",
         "n_docs": n_docs, "n_buckets": N_BUCKETS, "n_slices": n_slices,
         "compact_after": compact_after, "cpus": int(cpus),
-        "defaults": "route_giants+shard_chars engine defaults (r8)",
+        "defaults": "shard_chars engine default (r8)",
         "corpus_gen_sec": round(gen_wall, 1),
         "sliced_wall_sec": round(a_wall, 1),
         "sliced_docs_per_sec": round(n_docs / a_wall, 1),

@@ -141,13 +141,13 @@ def test_cli_sliced_sharded_run_and_reassemble(spark, corpus_path,
 
 def test_cli_reassemble_unsharded_and_partial_guard(spark, corpus_path,
                                                     tmp_path, capsys):
-    """reassemble works on a PLAIN run dir (--no-route-giants, the
-    round-8 off-switch: no shard columns anywhere) and refuses a
+    """reassemble works on a PLAIN run dir (--shard-chars 0, the
+    off-switch: no shard columns anywhere) and refuses a
     partially-backfilled dir unless --allow-partial."""
     out_dir = str(tmp_path / "r")
     rc = _dispatch(spark, _Args(command="run", input=corpus_path,
                                 output=out_dir, buckets=4, run_id="p0",
-                                bucket_slice="0-2", no_route_giants=True))
+                                bucket_slice="0-2", shard_chars=0))
     assert rc == 0
     capsys.readouterr()
     assert "shard_idx" not in spark.read.parquet(
@@ -170,7 +170,7 @@ def test_cli_reassemble_unsharded_and_partial_guard(spark, corpus_path,
     # finish the backfill → clean reassemble of the whole corpus
     rc = _dispatch(spark, _Args(command="run", input=corpus_path,
                                 output=out_dir, buckets=4, run_id="p1",
-                                bucket_slice="3", no_route_giants=True))
+                                bucket_slice="3", shard_chars=0))
     assert rc == 0
     capsys.readouterr()
     rc = _dispatch(spark, _Args(command="reassemble", input=out_dir,

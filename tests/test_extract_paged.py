@@ -1,58 +1,16 @@
-"""Paged (giant-doc skew) path: byte-identical to the whole-doc path,
-with the expected single url shuffle."""
+"""``extract_auto``: every document, giant or not, extracted in place
+by the one zero-shuffle ``mapInArrow`` pass, byte-identical to
+``extract()``."""
 
 from __future__ import annotations
 
-import pytest
-
 from exam_pdf_parser_spark.operators.extract import corpus_df, extract
-from exam_pdf_parser_spark.operators.extract_paged import (
-    extract_paged, paged_corpus_df,
-)
-
-N_DOCS = 25
-
-
-@pytest.fixture(scope="module")
-def tables(spark):
-    docs = corpus_df(spark, N_DOCS, partitions=3).persist()
-    paged = paged_corpus_df(spark, N_DOCS, partitions=3).persist()
-    yield docs, paged
-    docs.unpersist()
-    paged.unpersist()
-
-
-def test_paged_equals_whole_doc_byte_for_byte(spark, tables):
-    docs, paged = tables
-    whole = {r["url"]: r for r in extract(docs).collect()}
-    by_page = {r["url"]: r for r in extract_paged(paged).collect()}
-    assert set(whole) == set(by_page)
-    for url, w in whole.items():
-        p = by_page[url]
-        assert p["extracted_text"] == w["extracted_text"], url
-        assert [s.asDict() for s in p["spans"]] == \
-               [s.asDict() for s in w["spans"]], url
-        assert p["status"] == w["status"] == "ok"
-
-
-def test_paged_plan_has_single_url_shuffle(spark, tables):
-    _, paged = tables
-    plan = extract_paged(paged)._jdf.queryExecution(
-    ).executedPlan().toString()
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "FlatMapGroupsInPandas" in plan
-
-
-def test_page_rows_outnumber_docs(spark, tables):
-    docs, paged = tables
-    # the paged table really is page-granular (parallelism units)
-    assert paged.count() > docs.count() * 5
 
 
 def _giant_doc(n_pages: int = 1000) -> tuple[str, bytes]:
     """A pathological document: one ordinary doc's pages tiled out to
     ``n_pages`` with reindexed page_idx (content sanity is irrelevant —
-    byte-identity between the two paths is the contract)."""
+    byte identity with ``extract()`` is the contract)."""
     from exam_pdf_parser_spark.core.assemble import (
         decode_payload, encode_payload,
     )
@@ -72,14 +30,10 @@ def _giant_doc(n_pages: int = 1000) -> tuple[str, bytes]:
 
 
 def test_extract_auto_routes_and_matches_whole_doc(spark):
-    from pyspark.sql import functions as F
-
-    from exam_pdf_parser_spark.operators.extract_paged import (
-        GIANT_BYTES, extract_auto,
-    )
+    from exam_pdf_parser_spark.core.shard import DEFAULT_SHARD_CHARS
+    from exam_pdf_parser_spark.operators.extract_paged import extract_auto
 
     url_g, html_g = _giant_doc()
-    assert len(html_g) > GIANT_BYTES          # really routes
     docs = corpus_df(spark, 10, partitions=2).select("url", "html")
     mixed = docs.unionByName(
         spark.createDataFrame([(url_g, html_g), ("https://bad.example/x",
@@ -87,7 +41,9 @@ def test_extract_auto_routes_and_matches_whole_doc(spark):
                               "url string, html binary")).persist()
 
     want = {r["url"]: r for r in extract(mixed).collect()}
-    got = {r["url"]: r for r in extract_auto(mixed).collect()}
+    # at run_extraction's default threshold every doc here is one shard
+    got = {r["url"]: r for r in
+           extract_auto(mixed, shard_chars=DEFAULT_SHARD_CHARS).collect()}
     mixed.unpersist()
     assert set(got) == set(want)
     for url, w in want.items():
@@ -95,92 +51,86 @@ def test_extract_auto_routes_and_matches_whole_doc(spark):
         assert g["extracted_text"] == w["extracted_text"], url
         assert [s.asDict() for s in g["spans"]] == \
                [s.asDict() for s in w["spans"]], url
-    # the giant doc decoded through the paged branch
+    # the giant doc extracted in place
     assert got[url_g]["status"] == "ok"
     assert len(got[url_g]["spans"]) > 0
-    # corrupt payloads still quarantine (small branch)
+    # corrupt payloads still quarantine
     assert got["https://bad.example/x"]["status"] == "error"
 
 
-def _routed_plan(spark, with_timing: bool = False) -> str:
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_extract_auto_plan_is_one_map_in_arrow(spark):
+    """The pass ``run_extraction`` writes is one source scan into one
+    ``mapInArrow``: no exchange, no cache, no union, no pandas stage,
+    timed or not, sharded or not."""
+    from exam_pdf_parser_spark.core.shard import DEFAULT_SHARD_CHARS
     from exam_pdf_parser_spark.operators.extract_paged import extract_auto
 
-    docs = corpus_df(spark, 5, partitions=2)
-    plan = extract_auto(docs, with_timing=with_timing)._jdf.queryExecution(
-    ).executedPlan().toString()
-    assert "Union" in plan
-    # giant branch present (url-regrouped applyInPandas)...
-    assert "FlatMapGroupsInPandas" in plan
-    # ...with exactly one shuffle, the url regroup; the ordinary
-    # branch contributes none
-    assert plan.count("Exchange hashpartitioning") == 1
-    # single-scan routing: BOTH branches read the one cached router
-    # output (InMemoryTableScan), never the source twice
-    assert plan.count("InMemoryTableScan") == 2
-    seg = plan.split("Union", 1)[1]          # Union's first child = small
-    assert "Exchange" not in seg[:seg.index("InMemoryTableScan")]
-    # the router already decoded the giants: no decode stage between
-    # the url regroup and the cached router output
-    giant = plan.split("FlatMapGroupsInPandas", 1)[1]
-    assert "MapInPandas" not in giant[:giant.index("InMemoryTableScan")]
-    return plan
+    # a local-rows source, so a pandas stage in the plan can only be
+    # the extraction's own (corpus_df generates through mapInPandas)
+    rows = corpus_df(spark, 5, partitions=2).select("url", "html").collect()
+    docs = spark.createDataFrame(rows, "url string, html binary")
+    for with_timing in (False, True):
+        for shard_chars in (None, DEFAULT_SHARD_CHARS):
+            plan = _plan(extract_auto(docs, with_timing=with_timing,
+                                      shard_chars=shard_chars))
+            assert plan.count("MapInArrow") == 1, plan
+            for node in ("Exchange", "InMemoryTableScan", "Union",
+                         "MapInPandas", "FlatMapGroupsInPandas"):
+                assert node not in plan, (with_timing, node, plan)
 
 
-def test_extract_auto_plan_shows_routed_union(spark):
-    _routed_plan(spark)
+def test_run_extraction_write_plan_has_one_bucket_exchange(
+        spark, tmp_path, monkeypatch):
+    """``run_extraction``'s write is scan → ``mapInArrow`` → ONE
+    exchange, keyed by bucket → write."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from exam_pdf_parser_spark.sources.manifest import run_extraction
+
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def recording(self, *a, **k):
+        written.append(_plan(self._df))
+        return parquet(self, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording)
+    docs = corpus_df(spark, 6, partitions=2)
+    run_extraction(spark, docs, str(tmp_path / "run"), "plan", n_buckets=4)
+    assert len(written) == 1
+    plan = written[0]
+    assert plan.count("Exchange") == 1, plan
+    assert "Exchange hashpartitioning(bucket#" in plan, plan
+    assert plan.count("MapInArrow") == 1, plan
+    for node in ("InMemoryTableScan", "Union", "FlatMapGroupsInPandas"):
+        assert node not in plan, (node, plan)
 
 
-def test_extract_auto_timed_plan_carries_proc_us_through_detect(spark):
-    """A giant's router time rides through stage B: no per-url
-    aggregate and no join back onto the detect output."""
-    from exam_pdf_parser_spark.operators.extract_paged import (
-        extract_auto, release_routed_cache,
-    )
+def test_extract_auto_proc_us_lands_on_shard_0(spark):
+    """A sharded giant's time lands once per url: on shard 0, never on
+    the others."""
+    from exam_pdf_parser_spark.operators.extract_paged import extract_auto
 
-    plan = _routed_plan(spark, with_timing=True)
-    assert "HashAggregate" not in plan
-    assert "BroadcastHashJoin" not in plan
-    # the time lands once per url: on shard 0, never on the others
     url_g, html_g = _giant_doc()
     giant = spark.createDataFrame([(url_g, html_g)], "url string, html binary")
     result = extract_auto(giant, with_timing=True, shard_chars=10_000)
+    assert result.columns[-3:] == ["shard_idx", "n_shards", "proc_us"]
     proc = {r["shard_idx"]: r["proc_us"] for r in result.collect()}
-    release_routed_cache(result)
     assert len(proc) > 1 and proc[0] > 0
     assert all(us == 0 for i, us in proc.items() if i)
 
 
-def test_extract_auto_cache_is_disk_only(spark):
-    """Round-8 measured fix: the routed cache holds the ENTIRE
-    extraction output — a memory-tier level competing with 32
-    concurrent shuffle writers OOM'd an 8g heap at 240k docs while a
-    disk-only cache ran green (BENCH_SCALING.md §soak-under-defaults).
-    Pin the level so a convenience revert can't reintroduce the OOM."""
-    from pyspark.storagelevel import StorageLevel
-
-    from exam_pdf_parser_spark.operators.extract_paged import (
-        extract_auto, release_routed_cache,
-    )
-
-    docs = corpus_df(spark, 3, partitions=1)
-    result = extract_auto(docs)
-    assert result._routed_cache.storageLevel == StorageLevel.DISK_ONLY
-    release_routed_cache(result)
-
-
 def test_extract_auto_reads_source_once(spark):
-    """Round-4 ask: the router must scan the input a single time.  An
-    accumulator on an instrumented SOURCE counts rows actually read:
-    the old two-filter routing read every doc twice; the cached router
-    output must read each exactly once."""
-    import pandas as pd
-
-    from exam_pdf_parser_spark.operators.extract_paged import (
-        GIANT_BYTES, extract_auto,
-    )
+    """``extract_auto`` must scan the input a single time, giant
+    included.  An accumulator on an instrumented SOURCE counts rows
+    actually read."""
+    from exam_pdf_parser_spark.operators.extract_paged import extract_auto
 
     url_g, html_g = _giant_doc()
-    assert len(html_g) > GIANT_BYTES
     base = corpus_df(spark, 8, partitions=2).select("url", "html")
     mixed = base.unionByName(spark.createDataFrame(
         [(url_g, html_g)], "url string, html binary"))
@@ -198,35 +148,36 @@ def test_extract_auto_reads_source_once(spark):
     assert len(rows) == n_docs
     assert acc.value == n_docs, (
         f"source read {acc.value} rows for {n_docs} docs — "
-        "the routed scan is no longer single-pass")
+        "the scan is no longer single-pass")
 
 
 def test_extract_auto_edge_payload_parity(spark):
-    """Giant-side edge payloads keep full extract() parity: a decodable
-    payload with ZERO pages yields the same empty-ok row, and a corrupt
-    giant blob quarantines with the REAL exception message."""
+    """Large edge payloads keep full extract() parity, sharded: a
+    decodable payload with ZERO pages yields the same empty-ok row, and
+    a corrupt large blob quarantines with the REAL exception message,
+    each as one unsplit shard."""
     from exam_pdf_parser_spark.core.assemble import encode_payload
-    from exam_pdf_parser_spark.operators.extract_paged import (
-        GIANT_BYTES, extract_auto,
-    )
+    from exam_pdf_parser_spark.operators.extract_paged import extract_auto
 
-    # pad the empty-pages payload past the giant threshold via an
-    # incompressible junk field (contrived, but the invariant must hold)
+    # an empty-pages payload padded to >100 KB with an incompressible
+    # junk field (contrived, but the invariant must hold)
     import hashlib
     junk = "".join(hashlib.md5(str(i).encode()).hexdigest()
                    for i in range(8000))
     empty_giant = encode_payload({"v": 1, "pages": [], "junk": junk})
     corrupt_giant = b"\xff" + bytes(range(256)) * 500
-    assert len(empty_giant) > GIANT_BYTES
-    assert len(corrupt_giant) > GIANT_BYTES
+    assert min(len(empty_giant), len(corrupt_giant)) > 100_000
     docs = spark.createDataFrame(
         [("https://e.example/empty", empty_giant),
          ("https://e.example/corrupt", corrupt_giant)],
         "url string, html binary")
 
     want = {r["url"]: r for r in extract(docs).collect()}
-    got = {r["url"]: r for r in extract_auto(docs).collect()}
+    got = {r["url"]: r for r in
+           extract_auto(docs, shard_chars=10_000).collect()}
     assert set(got) == set(want)
+    assert all((g["shard_idx"], g["n_shards"]) == (0, 1)
+               for g in got.values())
     e_w, e_g = want["https://e.example/empty"], got["https://e.example/empty"]
     assert (e_g["status"], e_g["extracted_text"], list(e_g["spans"])) == \
         (e_w["status"], e_w["extracted_text"], list(e_w["spans"]))

@@ -40,7 +40,7 @@ def test_run_then_resume_noop(spark, out_dir):
 
 def test_resume_noop_builds_no_extraction(spark, out_dir, monkeypatch):
     """With no bucket pending, a resume returns before building the
-    router or running an (empty) write job."""
+    extraction or running an (empty) write job."""
     from exam_pdf_parser_spark.operators import extract_paged
 
     docs = corpus_df(spark, 20, partitions=2)
@@ -317,10 +317,9 @@ def test_killed_compaction_loses_nothing(spark, out_dir, monkeypatch):
 
 
 def test_run_extraction_routes_giants(spark, out_dir):
-    """route_giants=True sends an over-threshold document through the
-    page-parallel path inside the durable pipeline: output is
-    byte-identical to the whole-doc run, errors still quarantine, and
-    every bucket lands in the manifest."""
+    """A default run extracts a giant document in place inside the
+    durable pipeline: output is byte-identical to the unsharded run,
+    errors still quarantine, and every bucket lands in the manifest."""
     from tests.test_extract_paged import _giant_doc
 
     url_g, html_g = _giant_doc()
@@ -329,19 +328,19 @@ def test_run_extraction_routes_giants(spark, out_dir):
             [(url_g, html_g), ("https://bad.example/x", b"garbage")],
             "url string, html binary"))
 
-    s = run_extraction(spark, docs, out_dir, "auto", n_buckets=N_BUCKETS,
-                       route_giants=True)
+    s = run_extraction(spark, docs, out_dir, "auto", n_buckets=N_BUCKETS)
     assert s["buckets_processed"] == N_BUCKETS
     written = spark.read.parquet(f"{out_dir}/extracted")
     got = {r["url"]: r for r in written.collect()}
     assert got[url_g]["status"] == "ok" and len(got[url_g]["spans"]) > 0
     assert got["https://bad.example/x"]["status"] == "error"
 
-    # byte parity with the plain whole-doc pipeline
+    # byte parity with the unsharded pipeline
     import shutil
     ref_dir = out_dir + "_ref"
     try:
-        run_extraction(spark, docs, ref_dir, "ref", n_buckets=N_BUCKETS)
+        run_extraction(spark, docs, ref_dir, "ref", n_buckets=N_BUCKETS,
+                       shard_chars=None)
         want = {r["url"]: r for r in
                 spark.read.parquet(f"{ref_dir}/extracted").collect()}
         assert set(got) == set(want)
@@ -576,13 +575,13 @@ def test_shard_toggle_on_existing_dir_keeps_doc_metrics(spark, out_dir):
 
     # pass 1: unsharded slice over every other bucket — leaves
     # pre-shard footers (no shard_idx column) in the directory
-    # (route_giants=False is the round-8 off-switch: the pre-shard
-    # vintage this mixed-directory scenario needs)
+    # (shard_chars=None: the pre-shard vintage this mixed-directory
+    # scenario needs)
     run_extraction(spark, mixed, out_dir, "plain", n_buckets=N_BUCKETS,
-                   buckets=others, route_giants=False)
+                   buckets=others, shard_chars=None)
     # pass 2: resume the giant's bucket with sharding ON
     run_extraction(spark, mixed, out_dir, "sharded", n_buckets=N_BUCKETS,
-                   buckets=[gb], route_giants=True, shard_chars=SHARD_CHARS)
+                   buckets=[gb], shard_chars=SHARD_CHARS)
 
     n_docs = mixed.count()
     docs_in_bucket = (with_bucket(mixed, N_BUCKETS)
@@ -618,10 +617,10 @@ def test_shard_toggle_on_existing_dir_keeps_doc_metrics(spark, out_dir):
 
 
 def test_run_extraction_safe_defaults(spark, out_dir, tmp_path):
-    """Round-8 verdict ask #2: a DEFAULT-ARGS run routes giants and
-    shards output rows (the fat tail arrives whether or not the caller
-    remembered a flag); route_giants=False is the explicit off-switch
-    restoring the pre-round-8 plain schema."""
+    """Round-8 verdict ask #2: a DEFAULT-ARGS run shards output rows
+    (the fat tail arrives whether or not the caller remembered a
+    flag); shard_chars=None is the explicit off-switch restoring the
+    plain schema."""
     docs = corpus_df(spark, 6, partitions=2)
     run_extraction(spark, docs, out_dir, "defaults", n_buckets=N_BUCKETS)
     raw = spark.read.option("mergeSchema", "true").parquet(
@@ -634,15 +633,9 @@ def test_run_extraction_safe_defaults(spark, out_dir, tmp_path):
 
     off = str(tmp_path / "off")
     run_extraction(spark, docs, off, "off", n_buckets=N_BUCKETS,
-                   route_giants=False)
+                   shard_chars=None)
     raw_off = spark.read.parquet(f"{off}/extracted")
     assert not ({"shard_idx", "n_shards"} & set(raw_off.columns))
-
-    # explicit shard_chars without routing stays a loud error
-    with pytest.raises(ValueError, match="route_giants"):
-        run_extraction(spark, docs, str(tmp_path / "bad"), "bad",
-                       n_buckets=N_BUCKETS, route_giants=False,
-                       shard_chars=1000)
 
     # content identity across the two defaults regimes
     a = {(r["url"]): r for r in read_extracted(spark, out_dir)
@@ -701,8 +694,8 @@ def test_corrupt_run_meta_fails_with_guidance(spark, out_dir):
 
 
 def test_reassemble_handles_unsharded_run_dir(spark, out_dir):
-    """A run with the round-8 OFF-SWITCH (route_giants=False, the
-    pre-round-8 plain path) has NO shard columns anywhere —
+    """A run with the OFF-SWITCH (shard_chars=None, the plain
+    schema) has NO shard columns anywhere —
     read_extracted must normalize them in and reassembly must pass
     whole rows through (round-7 review #1)."""
     from exam_pdf_parser_spark.operators.extract import extract
@@ -712,7 +705,7 @@ def test_reassemble_handles_unsharded_run_dir(spark, out_dir):
 
     docs = corpus_df(spark, 6, partitions=2)
     run_extraction(spark, docs, out_dir, "plain", n_buckets=N_BUCKETS,
-                   route_giants=False)
+                   shard_chars=None)
     rx = read_extracted(spark, out_dir)
     assert {"shard_idx", "n_shards"} <= set(rx.columns)
     back = {r["url"]: r for r in reassemble_sharded(
@@ -762,8 +755,7 @@ def test_read_extracted_lowering_logged_and_restorable(
     """r8 ADVICE: the sticky session-conf lowering announces itself
     (one INFO line naming the conf and the way back) and
     restore_reader_batch gives mixed-workload sessions the wide
-    default back — symmetric to release_routed_cache on the cache
-    side."""
+    default back."""
     import logging
 
     from exam_pdf_parser_spark.sources.manifest import (

@@ -13,7 +13,7 @@ from exam_pdf_parser_spark.core.shard import (
 )
 from exam_pdf_parser_spark.operators.extract import corpus_df, extract
 from exam_pdf_parser_spark.operators.extract_paged import (
-    GIANT_BYTES, extract_auto, reassemble_sharded, release_routed_cache,
+    extract_auto, reassemble_sharded,
 )
 
 # --- pure shard rule ---------------------------------------------------------
@@ -108,7 +108,6 @@ def sharded_run(spark):
     """One sharded extract_auto over ordinary + giant + corrupt docs,
     against the unsharded extract() reference."""
     url_g, html_g = _giant_doc()
-    assert len(html_g) > GIANT_BYTES               # really routes
     docs = corpus_df(spark, 8, partitions=2).select("url", "html")
     mixed = docs.unionByName(spark.createDataFrame(
         [(url_g, html_g), ("https://bad.example/x", b"garbage payload")],
@@ -117,7 +116,6 @@ def sharded_run(spark):
     sharded = extract_auto(mixed, shard_chars=SHARD_CHARS,
                            shard_spans=SHARD_SPANS)
     rows = sharded.collect()
-    release_routed_cache(sharded)
     back = {r["url"]: r for r in reassemble_sharded(
         spark.createDataFrame(rows, sharded.schema)).collect()}
     mixed.unpersist()
@@ -126,7 +124,7 @@ def sharded_run(spark):
 
 def test_sharded_rows_bounded(sharded_run):
     url_g, want, rows, _ = sharded_run
-    # the row-size guarantee holds on EVERY row, both branches
+    # the row-size guarantee holds on EVERY row
     for r in rows:
         if r["extracted_text"] is not None:
             assert len(r["extracted_text"]) <= SHARD_CHARS, r["url"]
@@ -142,8 +140,8 @@ def test_sharded_rows_bounded(sharded_run):
     bad = by_url["https://bad.example/x"]
     assert len(bad) == 1 and bad[0]["status"] == "error" \
         and bad[0]["n_shards"] == 1
-    # ordinary docs shard through the ORDINARY branch whenever their
-    # output exceeds the bound (the zlib-bomb guard): verify per doc
+    # ordinary docs shard too whenever their output exceeds the bound
+    # (the zlib-bomb guard): verify per doc
     for url, w in want.items():
         n = max(1,
                 -(-len(w["extracted_text"] or "") // SHARD_CHARS),
@@ -180,7 +178,7 @@ def test_run_extraction_sharded_manifest(spark, tmp_path):
 
     out = str(tmp_path / "sharded_run")
     s1 = run_extraction(spark, mixed, out, "r1", n_buckets=8,
-                        route_giants=True, shard_chars=SHARD_CHARS)
+                        shard_chars=SHARD_CHARS)
     assert s1["buckets_processed"] == 8
 
     written = spark.read.parquet(f"{out}/extracted")
@@ -201,20 +199,9 @@ def test_run_extraction_sharded_manifest(spark, tmp_path):
                [s.asDict() for s in w["spans"]], url
 
     s2 = run_extraction(spark, mixed, out, "r2", n_buckets=8,
-                        route_giants=True, shard_chars=SHARD_CHARS)
+                        shard_chars=SHARD_CHARS)
     mixed.unpersist()
     assert s2["buckets_processed"] == 0            # resume no-op
-
-
-def test_shard_chars_requires_route_giants(spark, tmp_path):
-    """Since the round-8 default flip, the conflict needs BOTH knobs
-    explicit: routing turned off plus a shard threshold."""
-    from exam_pdf_parser_spark.sources.manifest import run_extraction
-
-    docs = corpus_df(spark, 2, partitions=1).select("url", "html")
-    with pytest.raises(ValueError, match="route_giants"):
-        run_extraction(spark, docs, str(tmp_path / "x"), "r",
-                       n_buckets=2, route_giants=False, shard_chars=1000)
 
 
 def test_reassemble_tolerates_null_shard_coords(spark):
