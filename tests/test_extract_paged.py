@@ -110,11 +110,16 @@ def test_run_extraction_write_plan_has_one_bucket_exchange(
         assert node not in plan, (node, plan)
 
 
-def test_extract_auto_proc_us_lands_on_shard_0(spark):
-    """A sharded giant's time lands once per url: on shard 0, never on
-    the others."""
+def test_extract_auto_timed_plan_carries_proc_us_through_detect(spark):
+    """A giant's time rides through the one detect pass: no per-url
+    aggregate and no join back onto the detect output, and it lands
+    once per url: on shard 0, never on the others."""
     from exam_pdf_parser_spark.operators.extract_paged import extract_auto
 
+    docs = corpus_df(spark, 3, partitions=1)
+    plan = _plan(extract_auto(docs, with_timing=True))
+    assert "HashAggregate" not in plan
+    assert "BroadcastHashJoin" not in plan
     url_g, html_g = _giant_doc()
     giant = spark.createDataFrame([(url_g, html_g)], "url string, html binary")
     result = extract_auto(giant, with_timing=True, shard_chars=10_000)
