@@ -35,6 +35,10 @@ from .textfuncs import block_text, detect_question_start, is_section_header
 DEFAULT_PAGE_SIZE = (842.0, 1191.0)  # src/cropper/detector.py:54-55
 PREVIEW_LEN = 80                     # src/cropper/detector.py:170
 CONTINUATION_PREVIEW = "(continuation from previous page)"  # :180
+# question-number bounds: every caller detects from MIN_Q; only the
+# compare-configs run lowers the upper bound
+MIN_Q = 1
+MAX_Q = 50
 # a layout block whose entire text is a "+N" point marker
 # (src/evaluator.py:134-145 — the reference's line-final +N strip)
 _PLUS_BLOCK_RE = re.compile(r"^\+(\d+)$")

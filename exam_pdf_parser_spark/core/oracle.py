@@ -11,17 +11,9 @@ test_crop.py:17-62 45/45 region assertion).
 from __future__ import annotations
 
 from .assemble import extract_document
+from .detector import MAX_Q, MIN_Q
 
-SPAN_COLUMNS = [
-    "url", "question_number", "page_idx",
-    "x0", "y0", "x1", "y1",
-    "text_preview", "spans_page", "group_range", "region_idx",
-]
-
-
-def oracle_spans_and_text(
-    rows: list[dict], min_q: int = 1, max_q: int = 50
-) -> tuple[list[dict], list[dict]]:
+def oracle_spans_and_text(rows: list[dict]) -> tuple[list[dict], list[dict]]:
     """Return ``(span_rows, extracted_rows)`` for corpus rows.
 
     Deterministic given the rows; row order: input order, regions in
@@ -30,7 +22,7 @@ def oracle_spans_and_text(
     span_rows: list[dict] = []
     extracted_rows: list[dict] = []
     for row in rows:
-        text, regions = extract_document(row["html"], min_q, max_q)
+        text, regions = extract_document(row["html"], MIN_Q, MAX_Q)
         extracted_rows.append({"url": row["url"], "extracted_text": text})
         for r in regions:
             span_rows.append({

@@ -31,18 +31,19 @@ import re
 
 from .answerkey import parse_answer_md
 from .assemble import extract_document
+from .detector import MAX_Q, MIN_Q
 from .fields import (
     PASSAGE_TYPES, WRITTEN_TYPES, parse_exam_title, parse_question_fields,
 )
 from .oracle import oracle_spans_and_text
 from .scoring import eval_questions, summarize
-from .textfuncs import similarity
+from .textfuncs import BLANK_CHARS, FOOT_MARKERS, NAV_SEP_MIN, similarity
 
 LISTENING = "듣기"
 
 
-def _parsed_by_url(rows: list[dict], min_q: int = 1,
-                   max_q: int = 50) -> dict[str, list[dict]]:
+def _parsed_by_url(rows: list[dict],
+                   max_q: int = MAX_Q) -> dict[str, list[dict]]:
     out: dict[str, list[dict]] = {}
     for row in rows:
         # whole-document quarantine mirrors the Spark side's per-doc
@@ -50,7 +51,7 @@ def _parsed_by_url(rows: list[dict], min_q: int = 1,
         # clean hash mismatch, not a crosscheck crash — so title/field
         # parsing sits inside the try, not just extract_document.
         try:
-            _, regions = extract_document(row["html"], min_q, max_q)
+            _, regions = extract_document(row["html"], MIN_Q, max_q)
             title = parse_exam_title(regions)
             qs = []
             for q in parse_question_fields(regions):
@@ -288,10 +289,6 @@ def x_eval_scores(rows: list[dict]) -> list[dict]:
 
 # --- x_boilerplate_strip ------------------------------------------------------
 
-NAV_SEP_MIN = 3
-FOOT_MARKERS = ("©", "all rights reserved", "privacy", "sitemap")
-
-
 def _main_text(text: str) -> str:
     kept = []
     for line in text.split("\n"):
@@ -300,7 +297,7 @@ def _main_text(text: str) -> str:
         low = line.lower()
         if any(m in low for m in FOOT_MARKERS):
             continue
-        if line.strip() == "":
+        if line.strip(BLANK_CHARS) == "":
             continue
         kept.append(line)
     return "\n".join(kept)

@@ -47,24 +47,16 @@ _QNUM_BRACKET = [QNUM_PATTERNS[0], QNUM_PATTERNS[2]]
 _QNUM_CJK = [QNUM_PATTERNS[1]]
 _QNUM_DIGIT = [QNUM_PATTERNS[3], QNUM_PATTERNS[4]]
 
-
-def strip_md_fences(raw: str) -> str:
-    """F17: strip markdown code fences from a JSON-ish payload.
-
-    Semantic parity with src/explainer.py:101-107, re-expressed: keep
-    the content between the first fence pair (to end-of-string when
-    the fence is unclosed) and drop a leading ``json`` language tag.
-    Unfenced input passes through stripped.  (The reference also
-    rsplits the kept segment on a closing fence, but that segment is
-    fence-free by construction, so the step is a no-op and is not
-    reproduced.)"""
-    raw = raw.strip()
-    if not raw.startswith("```"):
-        return raw
-    inner = raw[3:].split("```", 1)[0]
-    if inner.startswith("json"):
-        inner = inner[4:]
-    return inner.strip()
+# Line-level boilerplate rules of ``x_boilerplate_strip``, shared by the
+# JVM strip (operators.htmlstrip) and the oracle (core.oracle_x).
+NAV_SEP_MIN = 3           # ≥3 "|" separators → navigation line
+FOOT_MARKERS = ("©", "all rights reserved", "privacy", "sitemap")
+# A line of only these is blank: the 29 characters ``str.isspace()``
+# accepts, i.e. what ``str.strip()`` removes (Spark's ``trim`` removes
+# U+0020 alone, so it cannot decide blankness).
+BLANK_CHARS = ("\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680\u2000\u2001"
+               "\u2002\u2003\u2004\u2005\u2006\u2007\u2008\u2009\u200a"
+               "\u2028\u2029\u202f\u205f\u3000")
 
 
 def normalize_text(text: str) -> str:

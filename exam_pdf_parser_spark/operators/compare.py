@@ -1,7 +1,6 @@
 """Run-vs-run comparison (J6: scripts/validate.py:626-750 — the A/B
 model diff, re-expressed as a full-outer join with per-field similarity
-columns) and the hard-question intersection (A14:
-scripts/run_comparison.py:314-326).
+columns).
 """
 
 from __future__ import annotations
@@ -58,20 +57,4 @@ def compare_runs(a: DataFrame, b: DataFrame) -> DataFrame:
         .alias("points_delta"),
         (F.coalesce("nch_a", F.lit(0)) - F.coalesce("nch_b", F.lit(0)))
         .alias("choices_delta"),
-    )
-
-
-def missed_by_all(qevals_by_run: dict[str, DataFrame]) -> DataFrame:
-    """A14: questions not found by ANY run (bool_and over found)."""
-    if not qevals_by_run:
-        raise ValueError("missed_by_all requires at least one run")
-    tagged = None
-    for name, df in qevals_by_run.items():
-        t = df.select("url", "number", F.col("found").alias("f"))
-        tagged = t if tagged is None else tagged.unionAll(t)
-    return (
-        tagged.groupBy("url", "number")
-        .agg(F.max(F.col("f").cast("int")).alias("any_found"))
-        .filter("any_found = 0")
-        .select("url", "number")
     )

@@ -22,7 +22,7 @@ from pyspark.sql.types import (
 )
 
 from ..core.assemble import decode_payload
-from ..core.detector import detect_regions
+from ..core.detector import MAX_Q, MIN_Q, detect_regions
 from ..core.png import PAD, encode_png_gray, pad_clamp, render_region
 
 __all__ = ["PAD", "pad_clamp", "crop_regions", "CROP_SCHEMA"]
@@ -40,8 +40,7 @@ CROP_SCHEMA = StructType([
 ])
 
 
-def crop_regions(documents: DataFrame,
-                 min_q: int = 1, max_q: int = 50) -> DataFrame:
+def crop_regions(documents: DataFrame) -> DataFrame:
     """documents(url, html) → one crop row per (question, page) with the
     reference's file-naming scheme ``q{n:02d}`` / ``q{n:02d}_p{k}``
     (src/cropper/cropper.py:76-79)."""
@@ -63,7 +62,7 @@ def crop_regions(documents: DataFrame,
                 page_blocks = {
                     p.get("page_idx", 0): p.get("blocks", []) for p in pages
                 }
-                regions = detect_regions(pages, min_q, max_q)
+                regions = detect_regions(pages, MIN_Q, MAX_Q)
                 multi = {r.question_number for r in regions if r.spans_page}
                 for r in regions:
                     pw, ph = sizes.get(r.page_idx, [842, 1191])

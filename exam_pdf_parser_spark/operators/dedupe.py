@@ -250,8 +250,8 @@ def block_grid_self_join(keys: DataFrame, id_col: str,
                          cap: int | None,
                          carry: tuple = ()) -> DataFrame:
     """Distinct candidate id pairs sharing a key, with bounded task
-    granularity (shared by the MinHash band join and the embedding
-    LSH bucket join — same hot-key failure mode).
+    granularity (shared by the MinHash band join and the simhash chunk
+    join — same hot-key failure mode).
 
     ``cap=None``: plain self equi-join — a key shared by m rows
     generates its m² joined rows inside ONE task.  Otherwise keys
@@ -385,9 +385,8 @@ def lsh_pairs_from_tokens(t: DataFrame,
     # two semi-join sides); localCheckpoint materializes it once so
     # the band join isn't recomputed per consumer (lazy — computed on
     # the query's first action).  A band key shared by m near-identical
-    # docs (duplicate-heavy crawl) is the same hot-key hazard as the
-    # embedding LSH buckets — the shared block-grid guard bounds that
-    # task at ~band_cap² join work.
+    # docs (duplicate-heavy crawl) is a hot key — the shared block-grid
+    # guard bounds that task at ~band_cap² join work.
     cands = block_grid_self_join(
         bands, "doc_id", ["band_idx", "band_key"],
         "doc_a", "doc_b", band_cap,
@@ -489,11 +488,10 @@ def simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(combine_sql).alias("simhash"))
 
 
-def connected_components(pairs: DataFrame, src: str = "doc_a",
-                         dst: str = "doc_b", max_iter: int = 50,
-                         method: str = "star",
-                         stats: dict | None = None) -> DataFrame:
-    """Transitive closure over a near-dup pair graph → cluster ids.
+def connected_components(pairs: DataFrame, max_iter: int = 50,
+                         method: str = "star") -> DataFrame:
+    """Transitive closure over a near-dup pair graph (``doc_a``,
+    ``doc_b``) → cluster ids.
 
     Production dedup keeps ONE document per connected component of the
     similarity graph; pairs alone under-merge (A~B, B~C must collapse
@@ -513,32 +511,26 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
 
     Both fail loudly past ``max_iter`` rather than returning partial
     labels (phantom clusters with zero keepers downstream).
-
-    ``stats``: pass a dict to receive ``{"rounds": <count>}`` — the
-    scale-evidence harness (scripts/starcc_bench.py) uses it to verify
-    the O(log² n) round bound on planted graphs.
     """
     if method == "propagate":
-        return _cc_propagate(pairs, src, dst, max_iter)
+        return _cc_propagate(pairs, max_iter)
     if method != "star":
         raise ValueError(f"unknown connected-components method {method!r}")
 
     edges0 = (
-        pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
     nodes = (
-        pairs.select(F.col(src).alias("node"))
-        .unionAll(pairs.select(F.col(dst).alias("node")))
+        pairs.select(F.col("doc_a").alias("node"))
+        .unionAll(pairs.select(F.col("doc_b").alias("node")))
         .distinct()
         .localCheckpoint(eager=True)
     )
     edges = edges0.localCheckpoint(eager=True)
     converged = False
-    rounds = 0
     for _ in range(max_iter):
-        rounds += 1
         # large-star: every node links its LARGER neighbors to the
         # minimum of its closed neighborhood
         sym = edges.unionAll(
@@ -578,8 +570,6 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
         raise RuntimeError(
             f"connected_components(star) did not converge within "
             f"{max_iter} rounds; raise max_iter")
-    if stats is not None:
-        stats["rounds"] = rounds
     # fixpoint is a forest of stars: every non-root points at its
     # component min, roots have no outgoing edge → label themselves
     labels = (
@@ -593,16 +583,16 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
     return labels
 
 
-def _cc_propagate(pairs: DataFrame, src: str = "doc_a",
-                  dst: str = "doc_b", max_iter: int = 50) -> DataFrame:
+def _cc_propagate(pairs: DataFrame, max_iter: int) -> DataFrame:
     """Min-label propagation twin (O(diameter) shuffle rounds): every
     node repeatedly adopts the smallest id among itself and its
     neighbors until a fixpoint.  Used as the independent parity check
     for the star contraction."""
     F_ = F
     edges = (
-        pairs.select(F_.col(src).alias("a"), F_.col(dst).alias("b"))
-        .unionAll(pairs.select(F_.col(dst).alias("a"), F_.col(src).alias("b")))
+        pairs.select(F_.col("doc_a").alias("a"), F_.col("doc_b").alias("b"))
+        .unionAll(pairs.select(F_.col("doc_b").alias("a"),
+                               F_.col("doc_a").alias("b")))
         .distinct()
         .persist()
     )
@@ -649,20 +639,19 @@ def _cc_propagate(pairs: DataFrame, src: str = "doc_a",
     return labels
 
 
-def dedup_clusters(documents: DataFrame, pairs: DataFrame,
-                   id_col: str = "doc_id", max_iter: int = 50) -> DataFrame:
+def dedup_clusters(documents: DataFrame, pairs: DataFrame) -> DataFrame:
     """Full dedup decision table: every document with its cluster id
     and keep/drop flag (keep = smallest id in the component; isolated
     documents keep themselves)."""
-    comps = connected_components(pairs, max_iter=max_iter)
+    comps = connected_components(pairs)
     return (
-        documents.select(id_col)
-        .join(comps, F.col(id_col) == comps.node, "left_outer")
+        documents.select("doc_id")
+        .join(comps, F.col("doc_id") == comps.node, "left_outer")
         .select(
-            id_col,
-            F.coalesce("component", F.col(id_col)).alias("cluster_id"),
+            "doc_id",
+            F.coalesce("component", F.col("doc_id")).alias("cluster_id"),
         )
-        .withColumn("keep", F.col(id_col) == F.col("cluster_id"))
+        .withColumn("keep", F.col("doc_id") == F.col("cluster_id"))
     )
 
 

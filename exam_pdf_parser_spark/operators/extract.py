@@ -245,16 +245,6 @@ def extracted_table(extracted: DataFrame) -> DataFrame:
     )
 
 
-def salted_repartition(df: DataFrame, num_partitions: int, salt_mod: int = 16) -> DataFrame:
-    """Break key-level url skew before a heavy per-row stage
-    (SURVEY.md §4 item 1): a per-ROW salt spreads even identical urls
-    (re-crawls, duplicate WARC records) over ``salt_mod`` partitions —
-    a salt derived from the key itself could never do that.  Placement
-    is allowed to vary run-to-run; row content is untouched."""
-    salt = F.floor(F.rand(7) * salt_mod).cast("int")
-    return df.repartition(num_partitions, F.pmod(F.hash("url"), F.lit(10**9)) + salt)
-
-
 # ---------------------------------------------------------------------------
 # Distributed corpus generation (same pure function as the driver-side
 # generator — byte-identical either way).

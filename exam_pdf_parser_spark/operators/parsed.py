@@ -17,6 +17,7 @@ from pyspark.sql.types import (
 
 from ..core.answerkey import parse_answer_md
 from ..core.assemble import extract_document
+from ..core.detector import MAX_Q, MIN_Q
 from ..core.fields import parse_exam_title, parse_question_fields
 
 CHOICE_STRUCT = ArrayType(StructType([
@@ -60,8 +61,7 @@ ANSWER_KEY_SCHEMA = StructType([
 _PARSED_COLS = [f.name for f in PARSED_SCHEMA.fields if f.name != "url"]
 
 
-def parse_documents(documents: DataFrame,
-                    min_q: int = 1, max_q: int = 50) -> DataFrame:
+def parse_documents(documents: DataFrame, max_q: int = MAX_Q) -> DataFrame:
     """documents(url, html) → parsed question rows (FIXTURES.md §4).
 
     One decode+detect+field pass per row; corrupt payloads are skipped
@@ -73,7 +73,7 @@ def parse_documents(documents: DataFrame,
             out = {c: [] for c in ["url", *_PARSED_COLS]}
             for url, html in zip(pdf["url"], pdf["html"]):
                 try:
-                    _, regions = extract_document(bytes(html), min_q, max_q)
+                    _, regions = extract_document(bytes(html), MIN_Q, max_q)
                 except Exception:
                     continue
                 title = parse_exam_title(regions)

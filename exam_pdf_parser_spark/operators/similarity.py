@@ -1,18 +1,13 @@
 """Similarity search over the ``embeddings`` table
 (``embedding: array<float>``, 64-dim).
 
-Two tiers:
-  * **driver-checked exact tier** (this module's QUERIES): embeddings
-    quantized per-element to integers (``floor(x*1000 + 0.5)``) so dot
-    products are order-independent integer sums — bit-exact in Spark
-    AND DuckDB (integer-valued doubles below 2^53 sum exactly).
-    Brute-force top-k (``ann_topk_dot``, numpy int64 GEMM per Arrow
-    batch) and all-pairs near-dups (``embedding_near_dups``) are
-    value-hash comparable.
-  * **LSH scale path** (``embedding_near_pairs_lsh``): multi-table
-    random-hyperplane bucketing replaces the near-dup tier's all-pairs
-    theta join with a bucket-key equi-join, then verifies candidates
-    by exact float cosine.
+The driver-checked exact tier (this module's QUERIES): embeddings are
+quantized per-element to integers (``floor(x*1000 + 0.5)``) so dot
+products are order-independent integer sums — bit-exact in Spark AND
+DuckDB (integer-valued doubles below 2^53 sum exactly).  Brute-force
+top-k (``ann_topk_dot``, numpy int64 GEMM per Arrow batch) and
+all-pairs near-dups (``embedding_near_dups``) are value-hash
+comparable.
 """
 
 from __future__ import annotations
@@ -214,8 +209,7 @@ def ann_topk_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # verdict: vacuous row).  The DEMO threshold sits in the distribution's
 # upper tail instead — ~100 pairs at sf0.01 and sf0.1 — so the gate
 # hash covers real values; semantics (thresholded quantized cosine) are
-# unchanged, and the realistic-threshold behavior is covered by the LSH
-# twin's planted-cluster tests.
+# unchanged.
 NEAR_DUP_COS = 0.35
 
 
@@ -235,16 +229,13 @@ NEAR_DUP_COS = 0.35
 def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT (demo/oracle) tier: all-pairs quantized cosine over a
     pushed ``vec_id < NEAR_DUP_SCOPE`` slice.  Quadratic by
-    construction — guarded by ``assert_exact_tier``.  The corpus-scale
-    path is :func:`embedding_near_pairs_lsh` (hyperplane-LSH bucket
-    join, ids-only candidates, exact-precision verify, recall ≥ 0.95
-    gated in tests)."""
+    construction — guarded by ``assert_exact_tier``."""
     from .dedupe import EXACT_TIER_MAX, assert_exact_tier
 
     e = load(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < NEAR_DUP_SCOPE)
     assert_exact_tier(e, EXACT_TIER_MAX,
-                      "similarity.embedding_near_pairs_lsh")
+                      "dedupe.block_grid_self_join over LSH buckets")
     v = e.select("vec_id", _quantized(F.col("embedding")).alias("qv"))
     n = v.select(
         "vec_id", "qv", _dot_q(F.col("qv"), F.col("qv")).alias("norm2"))
@@ -262,120 +253,3 @@ def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos = F.col("dot_q") / (
         F.sqrt(F.col("na").cast("double")) * F.sqrt(F.col("nb").cast("double")))
     return pairs.filter(cos >= NEAR_DUP_COS).select("vec_a", "vec_b", "dot_q")
-
-
-def _bucket_candidate_pairs(sigs: DataFrame,
-                            bucket_cap: int | None) -> DataFrame:
-    """(vec_id, table, bucket) signatures → distinct candidate id
-    pairs sharing any (table, bucket) key.
-
-    ``bucket_cap=None``: plain self equi-join — a bucket of size m
-    generates its m² joined rows inside ONE task per table.
-    Otherwise, buckets above the cap are split into a g×g salted
-    block grid (g = ceil(m/cap)): side A fixes block ba =
-    xxhash64(vec_a) % g and replicates across the g values of bb,
-    side B symmetrically, so every pair still meets in exactly one
-    (ba, bb) block and per-task join work is bounded by ~cap²
-    regardless of bucket size.  Output is identical either way
-    (asserted in pytest); the hot-bucket list is a tiny broadcast.
-    The TOTAL candidate volume of a hot bucket stays quadratic by
-    definition — the guard bounds task granularity so no straggler /
-    OOM task forms; when all-pairs output itself is the problem,
-    dedup should consume connected-component clusters, not pairs.
-    """
-    from .dedupe import block_grid_self_join
-
-    return block_grid_self_join(
-        sigs, "vec_id", ["table", "bucket"], "vec_a", "vec_b", bucket_cap)
-
-
-def embedding_near_pairs_lsh(
-    embeddings: DataFrame, threshold: float = 0.8,
-    n_planes: int = 8, n_tables: int = 8, seed: int = 7,
-    bucket_cap: int | None = 5000,
-) -> DataFrame:
-    """Scale path for thresholded near-dup PAIR generation — replaces
-    the exact tier's all-pairs theta join (`embedding_near_dups`) with
-    multi-table random-hyperplane bucketing.
-
-    Candidates are pairs sharing a (table, bucket) sign-pattern key in
-    ANY of ``n_tables`` independent tables — an equi-join self-join
-    whose shuffle carries ONLY (vec_id, table, bucket); the vectors
-    join back onto the (small) candidate-pair set for exact cosine
-    verification, so nothing heavy rides through the bucket explode
-    (same design as the banded MinHash verification).  Precision is
-    exact (every emitted pair passes the true cosine test); recall
-    rises with ``n_tables`` — the pytest recall gate plants clustered
-    near-dups and requires ≥ 0.95 vs the exact tier.
-
-    Hot-bucket skew (round 4): a near-duplicate-heavy crawl can put a
-    large fraction of vectors into ONE (table, bucket) key, and the
-    self-join then goes quadratic inside a single task.  Buckets
-    larger than ``bucket_cap`` are therefore split into a g×g salted
-    block grid (g = ceil(size/cap)): side A is salted by
-    xxhash64(vec_a) and replicated across the g B-blocks, side B
-    symmetrically, so every pair still meets in exactly one block and
-    per-task join work is bounded by cap² REGARDLESS of bucket size —
-    output is identical to the unsalted join (asserted in pytest),
-    only its placement changes.  The hot-bucket list itself is a tiny
-    broadcast (one row per over-cap bucket).  ``bucket_cap=None``
-    disables the guard (kept for the A/B bench).
-
-    Returns (vec_a, vec_b, cosine) with cosine ≥ threshold.
-    """
-    first = embeddings.select("embedding").first()
-    if first is None:   # empty corpus → empty pair table, same schema
-        return embeddings.sparkSession.createDataFrame(
-            [], "vec_a: long, vec_b: long, cosine: double")
-    dim = len(first["embedding"])
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_tables, n_planes, dim))
-    sc = embeddings.sparkSession.sparkContext
-    bp = sc.broadcast(planes)
-
-    from pyspark.sql.types import (
-        IntegerType, LongType, StructField, StructType,
-    )
-    sig_schema = StructType([
-        StructField("vec_id", LongType()),
-        StructField("table", IntegerType()),
-        StructField("bucket", LongType()),
-    ])
-
-    def sig(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pls = bp.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            frames = []
-            for t in range(pls.shape[0]):
-                bits = (m @ pls[t].T) > 0
-                buckets = bits @ (1 << np.arange(n_planes, dtype=np.int64))
-                frames.append(pd.DataFrame({
-                    "vec_id": pdf["vec_id"], "table": t, "bucket": buckets,
-                }))
-            yield pd.concat(frames, ignore_index=True)
-
-    sigs = embeddings.select("vec_id", "embedding").mapInPandas(
-        sig, sig_schema)
-    cands = _bucket_candidate_pairs(sigs, bucket_cap)
-    ea = embeddings.select(F.col("vec_id").alias("vec_a"),
-                           F.col("embedding").alias("emb_a"))
-    eb = embeddings.select(F.col("vec_id").alias("vec_b"),
-                           F.col("embedding").alias("emb_b"))
-
-    def _dot(x, y):
-        return F.aggregate(
-            F.zip_with(x.cast("array<double>"), y.cast("array<double>"),
-                       lambda p, q: p * q),
-            F.lit(0.0), lambda acc, v: acc + v)
-
-    cos = _dot(F.col("emb_a"), F.col("emb_b")) / (
-        F.sqrt(_dot(F.col("emb_a"), F.col("emb_a")))
-        * F.sqrt(_dot(F.col("emb_b"), F.col("emb_b"))) + F.lit(1e-12))
-    return (
-        cands.join(ea, "vec_a").join(eb, "vec_b")
-        .select("vec_a", "vec_b", cos.alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )

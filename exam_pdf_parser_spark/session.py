@@ -38,7 +38,6 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
-    ship_package: bool = True,
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -76,7 +75,6 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
-    if ship_package:
-        # Cluster-mode distribution path; harmless no-op benefit on local.
-        spark.sparkContext.addPyFile(package_zip())
+    # Cluster-mode distribution path; harmless no-op benefit on local.
+    spark.sparkContext.addPyFile(package_zip())
     return spark

@@ -62,14 +62,16 @@ def with_bucket(documents: DataFrame, n_buckets: int) -> DataFrame:
         F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
 
 
-def completed_buckets(spark: SparkSession, out_dir: str,
-                      attempts: int = 3) -> list[int]:
+_MANIFEST_READ_ATTEMPTS = 3
+
+
+def completed_buckets(spark: SparkSession, out_dir: str) -> list[int]:
     path = os.path.join(out_dir, "manifest")
     # a reader racing compact_manifest's unlink step can list a file
     # that vanishes before the scan — retry (the compacted file carries
     # the same rows), and fall back to "no manifest" (resume everything;
     # idempotent overwrite makes that correct, just not free)
-    for i in range(attempts):
+    for i in range(_MANIFEST_READ_ATTEMPTS):
         try:
             mdf = spark.read.parquet(path)
             return [
@@ -92,30 +94,8 @@ def completed_buckets(spark: SparkSession, out_dir: str,
 # the same scan at a few MB/task with negligible per-batch overhead.
 DEFAULT_READER_BATCH_ROWS = 256
 _BATCH_SIZE_CONF = "spark.sql.parquet.columnarReaderBatchSize"
-# Spark's shipped default for the conf above (sql/core SQLConf
-# PARQUET_VECTORIZED_READER_BATCH_SIZE) — what restore_reader_batch
-# returns a session to.
-SPARK_DEFAULT_READER_BATCH_ROWS = 4096
 
 _LOG = logging.getLogger(__name__)
-
-
-def restore_reader_batch(spark: SparkSession,
-                         rows: int = SPARK_DEFAULT_READER_BATCH_ROWS,
-                         ) -> None:
-    """Undo :func:`read_extracted`'s session-wide parquet batch-size
-    lowering.  Call AFTER every extraction-output DataFrame built by
-    ``read_extracted`` has been acted on (collected / written) —
-    Spark's vectorized reader takes its capacity from the session
-    SQLConf at action time, so restoring earlier silently re-widens
-    those pending blob-heavy scans too.
-
-    Caveat (r8 ADVICE #2): the default restores to Spark's own 4096
-    even if the session ran at an intentionally LOWER value before
-    ``read_extracted`` ever touched it — mixed-workload callers that
-    tune the reader batch themselves should pass ``rows=`` explicitly
-    with the value they want back."""
-    spark.conf.set(_BATCH_SIZE_CONF, str(rows))
 
 
 def read_extracted(spark: SparkSession, out_dir: str,
@@ -146,25 +126,25 @@ def read_extracted(spark: SparkSession, out_dir: str,
     ``ParquetOptions``/``ParquetPartitionReaderFactory`` classes), and
     a set-and-restore around this lazy ``read`` would be a no-op lie.
     An already-lower session value is respected; pass ``None`` to
-    leave the conf untouched entirely.  A mixed-workload session that
-    later wants the wide default back for narrow tables should call
-    :func:`restore_reader_batch` after its extraction reads have been
-    ACTED on (collected/written), not merely built; the lowering
-    itself is announced via a ``logging`` INFO line (r8 ADVICE)."""
+    leave the conf untouched entirely.  The lowering is announced via
+    a ``logging`` INFO line naming the conf and the value it lowered
+    from (r8 ADVICE); a mixed-workload session that later wants that
+    value back for narrow tables sets it with ``spark.conf.set`` after
+    its extraction reads have been ACTED on (collected/written), not
+    merely built."""
     if reader_batch_rows is not None:
         current = int(spark.conf.get(_BATCH_SIZE_CONF))
         if current > reader_batch_rows:
             # announce the session-wide side effect once per lowering
-            # (subsequent read_extracted calls are no-ops until
-            # restore_reader_batch raises it again) — mixed-workload
-            # consumers otherwise see unrelated narrow scans slow down
-            # with no visible cause (r8 ADVICE)
+            # (subsequent read_extracted calls are no-ops until the
+            # caller raises it again) — mixed-workload consumers
+            # otherwise see unrelated narrow scans slow down with no
+            # visible cause (r8 ADVICE)
             _LOG.info(
                 "read_extracted: lowering session conf %s %d -> %d "
-                "(blob-heavy extraction rows; call "
-                "restore_reader_batch(spark) after extraction reads "
-                "are acted on to get the wide default back)",
-                _BATCH_SIZE_CONF, current, reader_batch_rows)
+                "(blob-heavy extraction rows; spark.conf.set it back "
+                "to %d once extraction reads are acted on)",
+                _BATCH_SIZE_CONF, current, reader_batch_rows, current)
             spark.conf.set(_BATCH_SIZE_CONF, str(reader_batch_rows))
     df = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(out_dir, "extracted"))

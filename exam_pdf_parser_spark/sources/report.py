@@ -1,13 +1,10 @@
-"""Report/golden sinks (S8-S10).
+"""Report/golden sinks (S8, S10).
 
 S8 golden JSON: canonical writer matching the reference's
 ``json.dump(..., ensure_ascii=False, indent=2)``
 (scripts/batch_parser.py:81) with sorted keys pinned — goldens must be
 byte-stable across runs (SURVEY.md §4 item 3: no wall-clock in
 outputs).
-
-S9 CSV report: distributed csv write of a metrics table
-(scripts/batch_parser.py:117-127).
 
 S10 markdown summary: driver-side formatting of small collected
 aggregates (scripts/full_flow.py:92-142) — explicitly NOT a
@@ -17,8 +14,6 @@ distributed op; inputs must already be aggregated.
 from __future__ import annotations
 
 import json
-
-from pyspark.sql import DataFrame
 
 
 def dump_golden_json(rows: list[dict], path: str) -> None:
@@ -31,22 +26,6 @@ def dump_golden_json(rows: list[dict], path: str) -> None:
 def load_golden_json(path: str) -> list[dict]:
     with open(path, encoding="utf-8") as f:
         return json.load(f)
-
-
-def load_json_report(path: str) -> list[dict]:
-    """S7 ingest variant tolerating markdown-fenced JSON (F17 — the
-    reference strips fences from model-produced JSON before parsing,
-    src/explainer.py:101-107; report files that round-tripped through
-    such tooling carry the same wrapper)."""
-    from ..core.textfuncs import strip_md_fences
-
-    with open(path, encoding="utf-8") as f:
-        return json.loads(strip_md_fences(f.read()))
-
-
-def write_csv_report(df: DataFrame, path: str) -> None:
-    """S9: header CSV sink for metrics tables."""
-    df.write.mode("overwrite").option("header", True).csv(path)
 
 
 def markdown_summary(title: str, score_rows: list[dict]) -> str:

@@ -1,11 +1,12 @@
-"""Adversarial hot-bucket skew A/B for the LSH pair join (round 4).
+"""Adversarial hot-bucket skew A/B for the bucketed pair join (round 4).
 
 Plants a corpus with ~30% of vectors near-identical — they share one
 (table, bucket) key in every hyperplane table, the worst case for the
-bucket self-join — and measures the CANDIDATE-JOIN stage
-(`_bucket_candidate_pairs`) with the g×g block-grid guard off
-(``bucket_cap=None``: the hot bucket's m² join rows are generated in
-ONE task) vs on (per-task work bounded by ~cap²).
+bucket self-join — and measures the candidate join
+(`dedupe.block_grid_self_join`, the guard behind the MinHash and
+simhash pair queries) with the g×g block-grid guard off
+(``cap=None``: the hot bucket's m² join rows are generated in ONE
+task) vs on (per-task work bounded by ~cap²).
 
 Two readings per variant:
   * wall seconds (best-of-2) — at local scale the balanced dedup
@@ -73,9 +74,7 @@ def _job_task_profile(spark, job_ids: list[int]) -> dict:
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from exam_pdf_parser_spark.operators.similarity import (
-        _bucket_candidate_pairs,
-    )
+    from exam_pdf_parser_spark.operators.dedupe import block_grid_self_join
     from exam_pdf_parser_spark.session import get_spark
 
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 40000
@@ -116,6 +115,10 @@ def main() -> None:
             F.sum(F.xxhash64("vec_a", "vec_b")
                   .cast("decimal(38,0)")).alias("h")).first()
 
+    def candidate_pairs(bucket_cap):
+        return block_grid_self_join(sigs, "vec_id", ["table", "bucket"],
+                                    "vec_a", "vec_b", bucket_cap)
+
     sc = spark.sparkContext
 
     def timed(bucket_cap, reps=2):
@@ -123,18 +126,18 @@ def main() -> None:
         for _ in range(reps):
             before = max(sc.statusTracker().getJobIdsForGroup() or [-1])
             t0 = time.perf_counter()
-            _bucket_candidate_pairs(sigs, bucket_cap).count()
+            candidate_pairs(bucket_cap).count()
             runs.append(round(time.perf_counter() - t0, 3))
             after = sc.statusTracker().getJobIdsForGroup() or []
             jobs = [j for j in after if j > before]
         prof = _job_task_profile(spark, jobs)   # profile the last rep
         return min(runs), runs, prof
 
-    _bucket_candidate_pairs(sigs, cap).count()     # warm pools
+    candidate_pairs(cap).count()     # warm pools
     capped_sec, capped_runs, capped_prof = timed(cap)
     uncapped_sec, uncapped_runs, uncapped_prof = timed(None)
-    ck_c = checksum(_bucket_candidate_pairs(sigs, cap))
-    ck_u = checksum(_bucket_candidate_pairs(sigs, None))
+    ck_c = checksum(candidate_pairs(cap))
+    ck_u = checksum(candidate_pairs(None))
     assert (ck_c["n"], ck_c["h"]) == (ck_u["n"], ck_u["h"]), (ck_c, ck_u)
 
     print(json.dumps({

@@ -1,14 +1,11 @@
-"""Tests for A/B compare (J6), crop sink (S11), report sinks (S8-S10)
+"""Tests for A/B compare (J6), crop sink (S11), report sinks (S8, S10)
 and exam_info (A11/F10)."""
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 import pytest
 
-from exam_pdf_parser_spark.operators.compare import compare_runs, missed_by_all
+from exam_pdf_parser_spark.operators.compare import compare_runs
 from exam_pdf_parser_spark.core.png import PNG_SIG
 from exam_pdf_parser_spark.operators.crop import crop_regions, pad_clamp
 from exam_pdf_parser_spark.operators.extract import corpus_df
@@ -17,7 +14,7 @@ from exam_pdf_parser_spark.operators.parsed import (
     answer_key_table, exam_info_table, parse_documents,
 )
 from exam_pdf_parser_spark.sources.report import (
-    dump_golden_json, load_golden_json, markdown_summary, write_csv_report,
+    dump_golden_json, load_golden_json, markdown_summary,
 )
 
 from .png_reader import read_png_gray
@@ -49,15 +46,6 @@ def test_compare_different_configs(spark, docs):
     only_a = diff.filter("in_a AND NOT in_b")
     assert only_a.count() > 0
     assert only_a.filter("number <= 10").count() == 0
-
-
-def test_missed_by_all(spark):
-    qe = spark.createDataFrame(
-        [("u", 1, True), ("u", 2, False)], "url string, number int, found boolean")
-    qe2 = spark.createDataFrame(
-        [("u", 1, False), ("u", 2, False)], "url string, number int, found boolean")
-    rows = missed_by_all({"a": qe, "b": qe2}).collect()
-    assert [(r["url"], r["number"]) for r in rows] == [("u", 2)]
 
 
 def test_crop_sink(spark, docs):
@@ -135,21 +123,11 @@ def test_golden_json_roundtrip_stable(tmp_path):
     assert load_golden_json(p1) == rows
 
 
-def test_csv_and_markdown_reports(spark, docs, tmp_path):
+def test_markdown_summary_report(docs):
     scores = score_urls(evaluate_questions(
-        parse_documents(docs), answer_key_table(docs))).persist()
-    out = os.path.join(tempfile.gettempdir(), "csv_report_test")
-    write_csv_report(scores, out)
-    back = spark.read.option("header", True).csv(out)
-    assert back.count() == N_DOCS
-    md = markdown_summary("eval", [r.asDict() for r in scores.collect()])
+        parse_documents(docs), answer_key_table(docs))).collect()
+    md = markdown_summary("eval", [r.asDict() for r in scores])
     assert "mean overall score" in md and md.count("\n") > N_DOCS
-    scores.unpersist()
-
-
-def test_missed_by_all_empty_dict_raises():
-    with pytest.raises(ValueError):
-        missed_by_all({})
 
 
 def test_png_codec_roundtrip():

@@ -753,14 +753,13 @@ def test_read_extracted_bounds_reader_batch_size(spark, out_dir):
 def test_read_extracted_lowering_logged_and_restorable(
         spark, out_dir, caplog):
     """r8 ADVICE: the sticky session-conf lowering announces itself
-    (one INFO line naming the conf and the way back) and
-    restore_reader_batch gives mixed-workload sessions the wide
-    default back."""
+    (one INFO line naming the conf and the value it lowered from), and
+    setting that value back gives mixed-workload sessions the wide
+    batch again until the next extraction read."""
     import logging
 
     from exam_pdf_parser_spark.sources.manifest import (
-        DEFAULT_READER_BATCH_ROWS, SPARK_DEFAULT_READER_BATCH_ROWS,
-        _BATCH_SIZE_CONF, restore_reader_batch,
+        DEFAULT_READER_BATCH_ROWS, _BATCH_SIZE_CONF,
     )
 
     docs = corpus_df(spark, 4, partitions=2)
@@ -771,22 +770,22 @@ def test_read_extracted_lowering_logged_and_restorable(
         with caplog.at_level(
                 logging.INFO, logger="exam_pdf_parser_spark"):
             read_extracted(spark, out_dir)
-            n_lower_lines = sum(
-                _BATCH_SIZE_CONF in r.message for r in caplog.records)
-            assert n_lower_lines == 1
-            assert any("restore_reader_batch" in r.message
-                       for r in caplog.records)
+            lines = [r.getMessage() for r in caplog.records
+                     if _BATCH_SIZE_CONF in r.getMessage()]
+            assert len(lines) == 1
+            assert "4096 -> 256" in lines[0]
+            assert "back to 4096" in lines[0]
             # a second read at the already-lowered value is silent
             read_extracted(spark, out_dir)
-            assert sum(_BATCH_SIZE_CONF in r.message
-                       for r in caplog.records) == n_lower_lines
+            assert sum(_BATCH_SIZE_CONF in r.getMessage()
+                       for r in caplog.records) == 1
 
-        restore_reader_batch(spark)
-        assert int(spark.conf.get(_BATCH_SIZE_CONF)) == \
-            SPARK_DEFAULT_READER_BATCH_ROWS
-        # and the next extraction read lowers (and logs) again
-        read_extracted(spark, out_dir)
-        assert int(spark.conf.get(_BATCH_SIZE_CONF)) == \
-            DEFAULT_READER_BATCH_ROWS
+            spark.conf.set(_BATCH_SIZE_CONF, "4096")
+            # and the next extraction read lowers (and logs) again
+            read_extracted(spark, out_dir)
+            assert int(spark.conf.get(_BATCH_SIZE_CONF)) == \
+                DEFAULT_READER_BATCH_ROWS
+            assert sum(_BATCH_SIZE_CONF in r.getMessage()
+                       for r in caplog.records) == 2
     finally:
         spark.conf.set(_BATCH_SIZE_CONF, prev)

@@ -1,6 +1,5 @@
 """Scale-path mechanics: bucketed co-located joins, binaryFile
-ingestion, salted repartitioning under host skew, streaming
-extraction — each asserting the property that matters at 100 TB,
+ingestion, streaming extraction, hot-key join guards — each asserting the property that matters at 100 TB,
 not just that code runs."""
 
 from __future__ import annotations
@@ -10,7 +9,7 @@ import os
 from pyspark.sql import functions as F
 
 from exam_pdf_parser_spark.operators.extract import (
-    corpus_df, extract, salted_repartition, spans_table,
+    corpus_df, extract, spans_table,
 )
 
 
@@ -66,26 +65,6 @@ def test_binaryfile_ingestion_path(spark, tmp_path):
     assert n_spans == len(gold_spans)
 
 
-def test_salted_repartition_breaks_host_skew(spark):
-    """Host-level skew (20% of urls on host000): salted repartitioning
-    must spread the hot host across many partitions."""
-    docs = corpus_df(spark, 400, partitions=4)
-    hot = docs.filter(F.col("url").contains("host000"))
-    n_hot = hot.count()
-    assert n_hot > 30  # generator plants ~20% on host000
-
-    salted = salted_repartition(docs, 16, salt_mod=8)
-    dist = (
-        salted.filter(F.col("url").contains("host000"))
-        .select(F.spark_partition_id().alias("pid"))
-        .groupBy("pid").count().collect()
-    )
-    parts_with_hot = len(dist)
-    max_share = max(r["count"] for r in dist) / n_hot
-    assert parts_with_hot >= 6          # spread over many partitions
-    assert max_share < 0.5              # no partition owns the host
-
-
 def test_streaming_extraction(spark, tmp_path):
     """The extraction core runs unchanged on a file stream (stateless
     mapInPandas is streaming-compatible) — ingest-as-it-lands mode."""
@@ -109,30 +88,6 @@ def test_streaming_extraction(spark, tmp_path):
     assert len(rows) == 12
     assert all(r["status"] == "ok" and r["n"] > 0 for r in rows)
     q.stop()
-
-
-def test_salted_repartition_spreads_identical_urls(spark):
-    # duplicate urls (re-crawls) are THE skew case a key-derived salt
-    # can never fix — the per-row salt must spread them
-    one = spark.createDataFrame(
-        [("https://hot.example/dup", i) for i in range(400)],
-        "url string, i int")
-    salted = salted_repartition(one, 16, salt_mod=8)
-    dist = (
-        salted.select(F.spark_partition_id().alias("pid"))
-        .groupBy("pid").count().collect()
-    )
-    assert len(dist) >= 6
-    assert max(r["count"] for r in dist) / 400 < 0.5
-
-
-def test_partition_stats(spark):
-    from exam_pdf_parser_spark.sources.io import partition_stats
-
-    docs = corpus_df(spark, 64, partitions=4)
-    stats = partition_stats(docs).collect()
-    assert sum(r["n_rows"] for r in stats) == 64
-    assert len(stats) == 4
 
 
 def test_minhash_band_cap_drops_no_pairs(spark):

@@ -1,105 +1,50 @@
-"""Similarity tiers: the LSH near-pair scale path against the exact
-pair set, and the exact ``ann_topk_dot`` scorer against the Catalyst
-expression semantics it replaced."""
+"""Similarity tiers: the block-grid guard of the bucketed pair join on
+a hot bucket, and the exact ``ann_topk_dot`` scorer against the
+Catalyst expression semantics it replaced."""
 
 from __future__ import annotations
 
-SF = "/root/testdata/sf0.001"
 
-
-def test_lsh_pair_generation_recall_vs_exact(spark):
-    """The bucketed pair generator must recover ≥95% of the true
-    thresholded pairs (planted near-dup clusters), with exact
-    precision — every emitted pair passes the true cosine test."""
-    import numpy as np
-
-    from exam_pdf_parser_spark.operators.similarity import (
-        embedding_near_pairs_lsh,
-    )
-
-    rng = np.random.default_rng(42)
-    dim, n_bases, n_noise = 64, 30, 60
-    bases = rng.standard_normal((n_bases, dim))
-    vecs = []
-    for base in bases:
-        for _ in range(3):  # base + jitter → within-cluster cos ≈ 0.99
-            vecs.append(base + 0.15 * rng.standard_normal(dim))
-    vecs.extend(rng.standard_normal(dim) for _ in range(n_noise))
-    mat = np.array(vecs, dtype=np.float32).astype(np.float64)
-
-    norm = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    gram = norm @ norm.T
-    truth = {
-        (i, j)
-        for i in range(len(mat)) for j in range(i + 1, len(mat))
-        if gram[i, j] >= 0.95
-    }
-    assert len(truth) >= n_bases  # the plant worked
-
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in mat[i]]) for i in range(len(mat))],
-        "vec_id: long, embedding: array<float>",
-    )
-    found = {
-        (r["vec_a"], r["vec_b"])
-        for r in embedding_near_pairs_lsh(df, threshold=0.95).collect()
-    }
-    recall = len(found & truth) / len(truth)
-    assert recall >= 0.95, (recall, len(truth), len(found))
-    assert found <= truth  # exact verification → no false positives
-
-
-def test_lsh_pair_bucket_join_carries_ids_only(spark):
-    from exam_pdf_parser_spark.operators.similarity import (
-        embedding_near_pairs_lsh,
-    )
-    from exam_pdf_parser_spark.sources.io import load
-
-    emb = load(spark, SF, "embeddings")
-    plan = embedding_near_pairs_lsh(
-        emb)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-    for line in plan.splitlines():
-        # the bucket self-join must not shuffle embedding vectors
-        assert not ("bucket" in line and "emb_a" in line), line
-
-
-def _hot_bucket_corpus(n=1200, hot_frac=0.3, dim=32, seed=11):
-    """~30% of vectors are near-identical → they share one
-    (table, bucket) sign pattern in EVERY LSH table (the adversarial
-    near-duplicate-heavy crawl)."""
+def _hot_bucket_signatures(n=1200, hot_frac=0.3, dim=32, seed=11,
+                           n_tables=8, n_planes=8):
+    """(vec_id, table, bucket) random-hyperplane signatures of a corpus
+    whose ~30% near-identical vectors share one (table, bucket) key in
+    EVERY table (the adversarial near-duplicate-heavy crawl)."""
     import numpy as np
 
     rng = np.random.default_rng(seed)
     n_hot = int(n * hot_frac)
     base = rng.standard_normal(dim)
-    hot = base + 0.02 * rng.standard_normal((n_hot, dim))
-    rest = rng.standard_normal((n - n_hot, dim))
-    return np.vstack([hot, rest]), n_hot
+    mat = np.vstack([base + 0.02 * rng.standard_normal((n_hot, dim)),
+                     rng.standard_normal((n - n_hot, dim))])
+    planes = np.random.default_rng(7).standard_normal(
+        (n_tables, n_planes, dim))
+    weights = 1 << np.arange(n_planes, dtype=np.int64)
+    rows = [(i, t, int(b)) for t in range(n_tables)
+            for i, b in enumerate(((mat @ planes[t].T) > 0) @ weights)]
+    return rows, n_hot
 
 
 def test_hot_bucket_cap_drops_no_pairs(spark):
-    """Round-4 top ask: on a corpus with ~30% of vectors in one LSH
-    bucket, the g×g block-grid guard must change only WHERE the join
-    work runs — the emitted pair set is identical to the unguarded
-    join (no drops, no extras), with the guard genuinely engaged."""
-    from exam_pdf_parser_spark.operators.similarity import (
-        embedding_near_pairs_lsh,
-    )
+    """Round-4 top ask: with ~30% of vectors in one bucket, the g×g
+    block-grid guard must change only WHERE the join work runs — the
+    candidate pair set is identical to the unguarded join (no drops,
+    no extras), with the guard genuinely engaged."""
+    from exam_pdf_parser_spark.operators.dedupe import block_grid_self_join
 
-    mat, n_hot = _hot_bucket_corpus()
+    rows, n_hot = _hot_bucket_signatures()
     cap = 100
     assert n_hot > 3 * cap          # hot bucket far beyond the cap
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in mat[i]]) for i in range(len(mat))],
-        "vec_id: long, embedding: array<float>").persist()
+    sigs = spark.createDataFrame(
+        rows, "vec_id: long, table: int, bucket: long").persist()
 
-    capped = {(r["vec_a"], r["vec_b"]) for r in embedding_near_pairs_lsh(
-        df, threshold=0.9, bucket_cap=cap).collect()}
-    uncapped = {(r["vec_a"], r["vec_b"]) for r in embedding_near_pairs_lsh(
-        df, threshold=0.9, bucket_cap=None).collect()}
-    df.unpersist()
+    def pairs(bucket_cap):
+        return {(r["vec_a"], r["vec_b"]) for r in block_grid_self_join(
+            sigs, "vec_id", ["table", "bucket"], "vec_a", "vec_b",
+            bucket_cap).collect()}
+
+    capped, uncapped = pairs(cap), pairs(None)
+    sigs.unpersist()
     assert len(uncapped) >= n_hot * (n_hot - 1) // 4   # hot cluster found
     assert capped == uncapped
 

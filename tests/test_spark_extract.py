@@ -7,7 +7,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from exam_pdf_parser_spark.core.oracle import SPAN_COLUMNS, oracle_spans_and_text
+from exam_pdf_parser_spark.core.oracle import oracle_spans_and_text
 from exam_pdf_parser_spark.corpus.generator import generate_rows
 from exam_pdf_parser_spark.operators.extract import (
     DOCUMENTS_SCHEMA, corpus_df, extract, extracted_table, spans_table,
@@ -28,9 +28,9 @@ def documents(spark, corpus_rows):
     return spark.createDataFrame(data, DOCUMENTS_SCHEMA)
 
 
-def _sorted_spans(df: pd.DataFrame) -> pd.DataFrame:
+def _sorted_spans(df: pd.DataFrame, cols: list[str]) -> pd.DataFrame:
     return (
-        df[SPAN_COLUMNS]
+        df[cols]
         .sort_values(["url", "question_number", "region_idx"])
         .reset_index(drop=True)
     )
@@ -40,7 +40,9 @@ def test_spark_spans_byte_identical_to_oracle(spark, documents, corpus_rows):
     gold_spans, _ = oracle_spans_and_text(corpus_rows)
     got = spans_table(extract(documents)).toPandas()
     want = pd.DataFrame(gold_spans)
-    got, want = _sorted_spans(got), _sorted_spans(want)
+    # the oracle rows name the span columns; Spark must carry each one
+    cols = list(gold_spans[0])
+    got, want = _sorted_spans(got, cols), _sorted_spans(want, cols)
     # exact comparison — doubles are integer-valued by construction,
     # strings must match byte-for-byte
     pd.testing.assert_frame_equal(got, want, check_dtype=False)

@@ -113,33 +113,6 @@ def test_plus_marker_is_block_scoped():
     assert not _PLUS_BLOCK_RE.match("a+3")
 
 
-def test_strip_md_fences_reference_parity():
-    """F17 (src/explainer.py:101-107): fenced / language-tagged /
-    unfenced payloads."""
-    from exam_pdf_parser_spark.core.textfuncs import strip_md_fences
-
-    assert strip_md_fences('```json\n[{"a": 1}]\n```') == '[{"a": 1}]'
-    assert strip_md_fences('```\n{"b": 2}\n```') == '{"b": 2}'
-    assert strip_md_fences(' {"c": 3} ') == '{"c": 3}'
-    # trailing prose after the closing fence is cut, as in the reference
-    assert strip_md_fences('```json\n[1, 2]\n``` trailing') == '[1, 2]'
-    # a fence character run inside the body survives the rsplit cut
-    assert strip_md_fences('```json\n"x``y"\n```') == '"x``y"'
-
-
-def test_load_json_report_fenced(tmp_path):
-    import json
-
-    from exam_pdf_parser_spark.sources.report import load_json_report
-
-    p = tmp_path / "r.json"
-    rows = [{"url": "u", "score": 1.5}]
-    p.write_text("```json\n" + json.dumps(rows) + "\n```", encoding="utf-8")
-    assert load_json_report(str(p)) == rows
-    p.write_text(json.dumps(rows), encoding="utf-8")
-    assert load_json_report(str(p)) == rows
-
-
 def test_question_start_gate_is_pure_speedup():
     """The first-char gate added in round 7 must be EXACTLY equivalent
     to the ungated ordered cascade — property-tested over adversarial
