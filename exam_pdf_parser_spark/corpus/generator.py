@@ -89,10 +89,10 @@ def _sentence(rng: random.Random, pool: list[str], lo: int, hi: int) -> str:
     return " ".join(rng.choice(pool) for _ in range(rng.randint(lo, hi)))
 
 
-def _choices_text(rng: random.Random, n: int = 5) -> list[str]:
+def _choices_text(rng: random.Random) -> list[str]:
     circles = sorted(CIRCLE_DIGITS, key=CIRCLE_DIGITS.get)
     return [
-        f"{circles[i]} {_sentence(rng, _EN_WORDS, 2, 5)}" for i in range(n)
+        f"{circles[i]} {_sentence(rng, _EN_WORDS, 2, 5)}" for i in range(5)
     ]
 
 
@@ -406,8 +406,8 @@ def build_answer_md(questions: list[dict], group_starts: dict[int, int]) -> str:
     return "\n".join(out)
 
 
-def generate_rows(n_docs: int, seed: int = 42) -> list[dict]:
+def generate_rows(n_docs: int) -> list[dict]:
     """Driver-side corpus for tests.  Distributed path: see
     ``operators.extract.corpus_df`` which maps the same function over
     ``spark.range``."""
-    return [build_document(i, seed) for i in range(n_docs)]
+    return [build_document(i) for i in range(n_docs)]

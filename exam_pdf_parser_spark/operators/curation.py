@@ -45,7 +45,6 @@ def _with_stats(documents: DataFrame) -> DataFrame:
 def curate(
     documents: DataFrame,
     min_tokens: int = MIN_TOKENS,
-    min_uniq_ratio: float = MIN_UNIQ_RATIO,
     langs: list[str] | None = None,
 ) -> DataFrame:
     """(doc_id, text, lang, …) → same rows + (tokens, uniq_ratio,
@@ -74,7 +73,7 @@ def curate(
     d = d.withColumn("_rn", F.row_number().over(w))
     is_dup = F.col("text").isNotNull() & (F.col("_rn") > 1)
     bad_quality = (F.col("tokens") < min_tokens) | \
-        (F.col("uniq_ratio") < min_uniq_ratio)
+        (F.col("uniq_ratio") < MIN_UNIQ_RATIO)
     bad_lang = (F.lit(False) if langs is None
                 else ~F.col("lang").isin(*langs))
     reason = (
@@ -91,9 +90,8 @@ def curate(
 
 
 def budget_sample(documents: DataFrame, budget_tokens: int,
-                  by: str = "lang",
                   durable_pin: str | None = None) -> DataFrame:
-    """Deterministic greedy mixer: per ``by`` group, rank docs by
+    """Deterministic greedy mixer: per ``lang`` group, rank docs by
     (uniq_ratio desc, doc_id asc) and keep the prefix whose running
     token total stays within ``budget_tokens``.  Prefix semantics —
     a document that would overflow the budget stops its group even if
@@ -103,7 +101,7 @@ def budget_sample(documents: DataFrame, budget_tokens: int,
     Scale path, NOT a per-group window: ``Window.partitionBy(lang)``
     would put each language in ONE task (a handful of giant sorts at
     corpus scale).  Instead the ranking is a range-partitioned global
-    sort on (by, uniq desc, doc_id) — parallel within every group —
+    sort on (lang, uniq desc, doc_id) — parallel within every group —
     and the running total is an exact two-pass distributed prefix sum:
     pass 1 collects per-(partition, group) token sums (a tiny table),
     pass 2 adds each partition's broadcast offset to its local running
@@ -126,7 +124,7 @@ def budget_sample(documents: DataFrame, budget_tokens: int,
     import pandas as pd
 
     d = _with_stats(documents)
-    sort_keys = [F.col(by), F.desc("uniq_ratio"), F.asc("doc_id")]
+    sort_keys = [F.col("lang"), F.desc("uniq_ratio"), F.asc("doc_id")]
     sorted_frame = (
         d.repartitionByRange(*sort_keys)
         .sortWithinPartitions(*sort_keys)
@@ -138,7 +136,7 @@ def budget_sample(documents: DataFrame, budget_tokens: int,
         sorted_frame.write.mode("overwrite").parquet(durable_pin)
         # re-read: a read task may hold several (whole) pids or split
         # one pid's file, so re-gather each pid into one task and
-        # restore its row order — deterministic because (by, uniq
+        # restore its row order — deterministic because (lang, uniq
         # desc, doc_id) totally orders rows within a pid
         ordered = (
             documents.sparkSession.read.parquet(durable_pin)
@@ -147,7 +145,7 @@ def budget_sample(documents: DataFrame, budget_tokens: int,
         )
 
     part_sums = (
-        ordered.groupBy("_pid", by)
+        ordered.groupBy("_pid", "lang")
         .agg(F.sum("tokens").alias("t"))
         .collect()
     )
@@ -161,7 +159,7 @@ def budget_sample(documents: DataFrame, budget_tokens: int,
     offsets: dict[str, int] = {}
     running: dict[str, int] = {}
     for r in sorted(part_sums, key=lambda r: r["_pid"]):
-        key = r[by] if r[by] is not None else NULLKEY
+        key = r["lang"] if r["lang"] is not None else NULLKEY
         offsets[f"{r['_pid']}\x01{key}"] = running.get(key, 0)
         running[key] = running.get(key, 0) + (r["t"] or 0)
     bc = documents.sparkSession.sparkContext.broadcast(offsets)
@@ -182,7 +180,7 @@ def budget_sample(documents: DataFrame, budget_tokens: int,
             if not len(pdf):
                 continue
             gk = (pdf["_pid"].astype("int64").astype(str) + "\x01"
-                  + pdf[by].fillna(NULLKEY))  # groupby drops NaN keys
+                  + pdf["lang"].fillna(NULLKEY))  # groupby drops NaN keys
             toks = pdf["tokens"].astype("int64")
             cums = toks.groupby(gk, sort=False).cumsum()
             bases = {g: carry.get(g, off.get(g, 0))

@@ -92,7 +92,7 @@ def span_dicts(regions) -> list[dict]:
 
 def extract(documents: DataFrame, min_q: int = 1, max_q: int = 50,
             with_timing: bool = False, shard_chars: int | None = None,
-            shard_spans: int | None = None) -> DataFrame:
+            shard_spans: int | None = None, tally=None) -> DataFrame:
     """documents(url, …, html, …) → (url, extracted_text, spans, status, error).
 
     Catalyst prunes unused input columns before the UDF (only ``url``
@@ -105,8 +105,7 @@ def extract(documents: DataFrame, min_q: int = 1, max_q: int = 50,
     scripts/batch_parser.py:84-89).
 
     ``with_timing=True`` appends a ``proc_us`` column (per-document
-    processing time, measured inside the task) — the source of the
-    manifest's per-partition throughput metrics.  Off by default so
+    processing time, measured inside the task).  Off by default so
     the byte-identity output contract stays timing-free.
 
     ``shard_chars`` (off by default): bound every OUTPUT row under the
@@ -117,15 +116,23 @@ def extract(documents: DataFrame, min_q: int = 1, max_q: int = 50,
     ``proc_us``, which lands on shard 0 only, so per-url sums stay the
     document's time).  Byte identity holds under
     ``extract_paged.reassemble_sharded``.
+
+    ``tally`` (off by default): a ``sources.manifest.PartitionTally``
+    accumulator.  The input then needs an int ``bucket`` column, and
+    each task adds ``{partition id: {bucket: [docs, spans, errors,
+    proc_us]}}`` summed per INPUT document (spans unsharded) once its
+    batches are done.  The output is the same with or without it.
     """
     import time
 
     import pyarrow as pa
+    from pyspark import TaskContext
     from pyspark.sql.types import LongType
 
     from ..core.shard import DEFAULT_SHARD_SPANS, shard_row
 
-    docs = documents.select("url", "html")
+    docs = documents.select(
+        "url", "html", *(["bucket"] if tally is not None else []))
     sharding = shard_chars is not None
     if sharding and shard_spans is None:
         shard_spans = DEFAULT_SHARD_SPANS
@@ -150,11 +157,14 @@ def extract(documents: DataFrame, min_q: int = 1, max_q: int = 50,
     ])
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        per_bucket: dict[int, list[int]] = {}
         for rb in batches:
             in_urls = rb.column(0).to_pylist()
             if not in_urls:  # empty batch → emit nothing (Arrow
                 continue     # list<struct> inference has no rows to see)
             htmls = rb.column(1).to_pylist()
+            keys = (rb.column(2).to_pylist() if tally is not None
+                    else [None] * len(in_urls))
             urls, texts, status, errors, procs = [], [], [], [], []
             idxs, counts = [], []
             offs = [0]
@@ -162,7 +172,7 @@ def extract(documents: DataFrame, min_q: int = 1, max_q: int = 50,
             x0, y0, x1, y1 = [], [], [], []
             tp, sp, gr, ri = [], [], [], []
             n = 0
-            for url, html in zip(in_urls, htmls):
+            for url, html, key in zip(in_urls, htmls, keys):
                 t0 = time.perf_counter_ns()
                 try:
                     extracted, regions = extract_document(
@@ -172,6 +182,12 @@ def extract(documents: DataFrame, min_q: int = 1, max_q: int = 50,
                     extracted, regions = None, []
                     st, err = "error", quarantine_message(e)
                 proc = (time.perf_counter_ns() - t0) // 1000
+                if tally is not None:
+                    t = per_bucket.setdefault(key, [0, 0, 0, 0])
+                    t[0] += 1
+                    t[1] += len(regions)
+                    t[2] += st == "error"
+                    t[3] += proc
                 # shard_row only takes len() of and slices the span
                 # list, so it shards the Region list as it stands
                 row = {"extracted_text": extracted, "spans": regions}
@@ -220,6 +236,8 @@ def extract(documents: DataFrame, min_q: int = 1, max_q: int = 50,
             if with_timing:
                 cols.append(pa.array(procs, pa.int64()))
             yield pa.RecordBatch.from_arrays(cols, names=schema.names)
+        if tally is not None:
+            tally.add({TaskContext.get().partitionId(): per_bucket})
 
     return docs.mapInArrow(run, schema)
 

@@ -24,7 +24,7 @@ from .extract import extract
 def extract_auto(documents: DataFrame, min_q: int = 1, max_q: int = 50,
                  with_timing: bool = False,
                  shard_chars: int | None = None,
-                 shard_spans: int | None = None) -> DataFrame:
+                 shard_spans: int | None = None, tally=None) -> DataFrame:
     """The extraction ``run_extraction`` writes: ``extract()`` over
     every document, giant or not, in one source scan and one
     ``mapInArrow`` with no exchange.
@@ -37,11 +37,13 @@ def extract_auto(documents: DataFrame, min_q: int = 1, max_q: int = 50,
     bounded too.  Byte identity holds under :func:`reassemble_sharded`.
 
     ``with_timing=True`` appends ``proc_us`` (the document's whole
-    extraction time, on shard 0; 0 on the other shards), the manifest
-    pipeline's per-bucket metric source.
+    extraction time, on shard 0; 0 on the other shards).  ``tally``
+    (see ``extract()``) counts the manifest's per-bucket stats in the
+    same pass.
     """
     return extract(documents, min_q, max_q, with_timing=with_timing,
-                   shard_chars=shard_chars, shard_spans=shard_spans)
+                   shard_chars=shard_chars, shard_spans=shard_spans,
+                   tally=tally)
 
 
 def release_routed_cache(result: DataFrame) -> None:

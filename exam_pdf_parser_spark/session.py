@@ -17,7 +17,7 @@ _PKG_DIR = Path(__file__).resolve().parent
 _REPO_ROOT = _PKG_DIR.parent
 
 
-def package_zip(out_dir: str | None = None) -> str:
+def package_zip() -> str:
     """Build the ``--py-files`` artifact for spark-submit / addPyFile.
 
     On a real cluster the executors don't share the driver's
@@ -26,7 +26,7 @@ def package_zip(out_dir: str | None = None) -> str:
     """
     import tempfile
 
-    out = Path(out_dir or tempfile.gettempdir()) / "exam_pdf_parser_spark.zip"
+    out = Path(tempfile.gettempdir()) / "exam_pdf_parser_spark.zip"
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as zf:
         for py in sorted(_PKG_DIR.rglob("*.py")):
             zf.write(py, py.relative_to(_REPO_ROOT))

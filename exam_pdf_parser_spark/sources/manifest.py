@@ -4,7 +4,8 @@ Work is keyed by ``url_bucket = pmod(xxhash64(url), n_buckets)`` — the
 same bucketing an Iceberg table would declare (``bucket(N, url)``).
 A run writes extraction output partitioned by bucket with DYNAMIC
 partition overwrite, then appends one manifest row per completed
-bucket.  Crash recovery = anti-join pending buckets against the
+bucket, with stats its extraction tasks tallied as they emitted (no
+read-back).  Crash recovery = anti-join pending buckets against the
 manifest: finished buckets are never recomputed, half-written bucket
 directories are overwritten idempotently on retry.
 
@@ -28,9 +29,9 @@ import os
 import re
 import time
 
+from pyspark import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
 
 from ..core.shard import DEFAULT_SHARD_CHARS
 
@@ -56,6 +57,19 @@ def _arrow_manifest_schema():
                       for n, t in _MANIFEST_FIELDS])
 
 
+class PartitionTally(AccumulatorParam):
+    """``{partition id: per-bucket stats}``, where a partition's later
+    entry REPLACES its earlier one: a retried, speculative or
+    recomputed task cannot count its documents twice."""
+
+    def zero(self, value: dict) -> dict:
+        return {}
+
+    def addInPlace(self, a: dict, b: dict) -> dict:
+        a.update(b)
+        return a
+
+
 def with_bucket(documents: DataFrame, n_buckets: int) -> DataFrame:
     return documents.withColumn(
         "bucket",
@@ -66,22 +80,33 @@ _MANIFEST_READ_ATTEMPTS = 3
 
 
 def completed_buckets(spark: SparkSession, out_dir: str) -> list[int]:
+    """Buckets a committed manifest row marks ``done``.  A local
+    manifest is read with pyarrow on the driver (``_commit_manifest``
+    writes it that way), so the check starts no Spark job."""
+    import pyarrow.parquet as pq
+
     path = os.path.join(out_dir, "manifest")
+    local = "://" not in out_dir
     # a reader racing compact_manifest's unlink step can list a file
     # that vanishes before the scan — retry (the compacted file carries
     # the same rows), and fall back to "no manifest" (resume everything;
     # idempotent overwrite makes that correct, just not free)
     for i in range(_MANIFEST_READ_ATTEMPTS):
+        if local and not os.path.isdir(path):
+            return []   # a fresh dir
         try:
-            mdf = spark.read.parquet(path)
-            return [
-                r["bucket"]
-                for r in mdf.filter(F.col("status") == "done")
-                .select("bucket").distinct().collect()
-            ]
+            if not local:
+                mdf = spark.read.parquet(path).filter("status = 'done'")
+                return [r["bucket"] for r in
+                        mdf.select("bucket").distinct().collect()]
+            done = set()
+            for f in os.listdir(path):
+                if f.endswith(".parquet") and not f.startswith((".", "_")):
+                    t = pq.read_table(os.path.join(path, f)).to_pydict()
+                    done.update(b for b, st in zip(t["bucket"], t["status"])
+                                if st == "done")
+            return sorted(done)
         except Exception:
-            if not os.path.isdir(path) and "://" not in out_dir:
-                return []
             time.sleep(0.05 * (i + 1))
     return []
 
@@ -398,7 +423,10 @@ def run_extraction(
     one parquet file per ``bucket=N`` directory, with as many write
     tasks as the data needs rather than one per bucket.  A giant
     document is extracted in place like any other, and its ``proc_us``
-    is its whole extraction time.
+    is its whole extraction time.  The manifest rows are summed from
+    what the extraction tasks tallied (:class:`PartitionTally`) once
+    the write returns; nothing is read back, so a fresh full run starts
+    two Spark jobs: the exchange's map stage and the write.
 
     ``shard_chars`` (default ``core.shard.DEFAULT_SHARD_CHARS``) bounds
     every output ROW: documents whose extracted text / span list
@@ -413,8 +441,8 @@ def run_extraction(
     pre-shard/sharded directory needs schema MERGE, not single-footer
     inference); reassembly = ``operators.extract_paged.reassemble_sharded``
     over that reader's output; manifest metrics stay per-DOCUMENT
-    (docs_in/errors count shard 0 only, rows_out sums span slices — a
-    partition of the unsharded list).
+    (docs_in/errors count each input document once, rows_out its
+    unsharded span list).
 
     ``buckets`` (round-7): restrict THIS run to a bucket subset — the
     operational shape of a sharded backfill ("process buckets 0–127
@@ -468,91 +496,41 @@ def run_extraction(
     if not target:
         # nothing pending in scope: build no plan, run no Spark job
         return summary(0)
-    if buckets is None:
-        pending = docs if not done \
-            else docs.filter(~F.col("bucket").isin(*done))
-    else:
-        pending = docs.filter(F.col("bucket").isin(target))
+    pending = docs if buckets is None and not done \
+        else docs.filter(F.col("bucket").isin(target))
 
     t0 = time.perf_counter()
-    # bucket is a pure function of url — recompute it on the output
-    # instead of joining back to the input (saves a full shuffle), then
-    # co-locate each bucket in one task so partitionBy writes one file
-    # per bucket dir instead of (tasks × buckets) small files.  The
-    # exchange is keyed by bucket with no partition count: AQE sizes
-    # the write-task count from the session's shuffle partitions and
-    # only ever COALESCES a repartition-by-column exchange, never
-    # splits it, so each bucket's rows still land in one task (a task
-    # may write several bucket dirs) — the same one file per bucket
-    # dir, without one task per bucket.
+    # bucket is a pure function of url: recompute it on the output
+    # instead of joining back to the input.  The exchange is keyed by
+    # bucket with no partition count; AQE only ever COALESCES such an
+    # exchange, so each bucket's rows land in one task (which may write
+    # several bucket dirs) and partitionBy writes one file per dir.
     from ..operators.extract_paged import extract_auto
+    tally = spark.sparkContext.accumulator({}, PartitionTally())
     extracted = extract_auto(pending, min_q, max_q, with_timing=True,
-                             shard_chars=shard_chars)
-    out = extracted.withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
-
-    ext_path = os.path.join(out_dir, "extracted")
-    out_cols = ["url", "extracted_text", "spans", "status", "error"] \
-        + (["shard_idx", "n_shards"] if shard_chars is not None else []) \
-        + ["proc_us", "bucket"]
-    sel = out.select(*out_cols)
-    (sel.repartition(F.col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(ext_path))
+                             shard_chars=shard_chars, tally=tally)
+    out = with_bucket(extracted, n_buckets)
+    (out.repartition(F.col("bucket")).write.mode("overwrite")
+        .partitionBy("bucket").parquet(os.path.join(out_dir, "extracted")))
     wall_ms = int((time.perf_counter() - t0) * 1000)
 
-    # per-bucket metrics from what was just written (read-back keeps the
-    # numbers honest — they describe the durable output, not the plan).
-    # Pending buckets are the id-space complement of the manifest — no
-    # extra pass over the source.  Buckets that turned out empty still
-    # get a zero-row manifest entry so resume never revisits them.
-    # wall_ms is the RUN wall stamped on each of its bucket rows (group
-    # by run_id for timing; the column is run-level).  cpu_ms and
-    # docs_per_cpu_sec ARE per-bucket: summed from the in-task per-doc
-    # proc_us column — the north rule's per-partition throughput metric.
-    # read back under THIS run's explicit schema (all-nullable), never
-    # schema inference: the stats below only describe pending buckets —
-    # dirs the dynamic-partition overwrite just replaced with this
-    # run's files — so the write schema IS their schema.  Inference
-    # picks one arbitrary file footer, which on a mixed pre-shard /
-    # sharded directory can hide shard_idx (a 75-shard giant would
-    # count as docs_in=75), and fails outright when a slice run's
-    # buckets produced zero rows (a partitioned write of no data emits
-    # only _SUCCESS).  Files outside the pending buckets that lack a
-    # column (old pre-proc_us or pre-shard dirs) read it as NULL and
-    # are filtered out by the bucket predicate anyway.
-    read_schema = StructType(
-        [StructField(f.name, f.dataType, True) for f in sel.schema.fields])
-    written = spark.read.schema(read_schema).parquet(ext_path)
-    # coalesce: rows whose file lacks proc_us read NULL — sum as 0
-    cpu_col = F.sum(F.coalesce(F.col("proc_us"), F.lit(0)))
-    # sharded output: a document is counted once via its shard-0 row
-    # (unsharded runs carry no shard_idx column — every row is the
-    # document).  rows_out sums span-slice sizes, a partition of the
-    # unsharded list, so it is shard-invariant by construction.
-    doc0 = (F.coalesce(F.col("shard_idx"), F.lit(0)) == 0) \
-        if "shard_idx" in read_schema.fieldNames() else F.lit(True)
-    stats = {
-        r["bucket"]: r
-        for r in written.filter(F.col("bucket").isin(target))
-        .groupBy("bucket")
-        .agg(
-            F.sum(F.when(doc0, 1).otherwise(0)).alias("docs_in"),
-            F.sum(F.size("spans")).alias("rows_out"),
-            F.sum(F.when(doc0 & (F.col("status") == "error"), 1)
-                  .otherwise(0)).alias("errors"),
-            cpu_col.alias("cpu_us"),
-        ).collect()
-    }
+    # per-bucket [docs, spans, errors, proc_us] from the tally: the
+    # write succeeded and dynamic overwrite replaced exactly these
+    # buckets' dirs, so the stats describe what is durable.  A pending
+    # bucket with no documents gets a zero-row entry so resume never
+    # revisits it.  wall_ms is the RUN wall stamped on each of its
+    # bucket rows; cpu_ms and docs_per_cpu_sec are per bucket.
+    stats: dict[int, list[int]] = {}
+    for per_bucket in tally.value.values():
+        for b, counts in per_bucket.items():
+            stats[b] = [x + y for x, y in
+                        zip(stats.get(b, (0, 0, 0, 0)), counts)]
 
     def row(b):
-        s = stats.get(b)
-        if s is None:
-            return (run_id, b, "done", 0, 0, 0, wall_ms, 0, 0.0)
-        cpu_us = s["cpu_us"] or 0
-        cpu_ms = int(cpu_us // 1000)
-        dps = float(s["docs_in"]) / (cpu_us / 1e6) if cpu_us else 0.0
-        return (run_id, b, "done", int(s["rows_out"]), int(s["docs_in"]),
-                int(s["errors"]), wall_ms, cpu_ms, dps)
+        docs_in, rows_out, errors, cpu_us = stats.get(b, (0, 0, 0, 0))
+        dps = docs_in / (cpu_us / 1e6) if cpu_us else 0.0
+        return (run_id, b, "done", rows_out, docs_in, errors, wall_ms,
+                cpu_us // 1000, dps)
 
     _commit_manifest(out_dir, run_id, [row(b) for b in target], spark=spark)
     return summary(wall_ms)

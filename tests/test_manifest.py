@@ -540,8 +540,7 @@ def test_empty_slice_on_fresh_dir_marks_buckets_done(spark, out_dir):
     """A slice whose buckets hold no documents must still commit
     zero-row 'done' stamps — including on a FRESH out_dir, where the
     partitioned write of no data emits only _SUCCESS and there is no
-    parquet file to infer a schema from (round-7 review fix: the
-    read-back uses the run's explicit write schema, never inference)."""
+    parquet file to infer a schema from."""
     docs = corpus_df(spark, 4, partitions=2)
     used = {r["bucket"] for r in with_bucket(docs, N_BUCKETS)
             .select("bucket").distinct().collect()}
@@ -559,10 +558,9 @@ def test_empty_slice_on_fresh_dir_marks_buckets_done(spark, out_dir):
 def test_shard_toggle_on_existing_dir_keeps_doc_metrics(spark, out_dir):
     """Resuming an out_dir whose earlier buckets were written UNSHARDED
     with sharding enabled must still count DOCUMENTS, not shard rows,
-    in the new buckets' manifest stats.  Round-7 review fix: schema
-    INFERENCE on the mixed directory can pick a pre-shard footer and
-    lose shard_idx (docs_in would then count every shard); the
-    read-back now pins the run's explicit write schema."""
+    in the new buckets' manifest stats: the extraction tasks tally
+    input documents, so no pre-shard footer in the mixed directory can
+    make docs_in count shard rows."""
     from tests.test_shard_giants import SHARD_CHARS, _giant_doc
 
     url_g, html_g = _giant_doc()
@@ -789,3 +787,129 @@ def test_read_extracted_lowering_logged_and_restorable(
                        for r in caplog.records) == 2
     finally:
         spark.conf.set(_BATCH_SIZE_CONF, prev)
+
+
+def _readback_oracle(spark, out_dir, buckets):
+    """Per-bucket ``(docs_in, rows_out, errors, cpu_ms)`` aggregated from
+    the written output: the read-back ``run_extraction`` ran after its
+    write before the extraction tasks tallied the stats themselves."""
+    written = read_extracted(spark, out_dir, reader_batch_rows=None)
+    doc0 = F.col("shard_idx") == 0
+    return {
+        r["bucket"]: (r["docs_in"], r["rows_out"], r["errors"],
+                      r["cpu_us"] // 1000)
+        for r in written.filter(F.col("bucket").isin(buckets))
+        .groupBy("bucket")
+        .agg(F.sum(F.when(doc0, 1).otherwise(0)).alias("docs_in"),
+             F.sum(F.size("spans")).alias("rows_out"),
+             F.sum(F.when(doc0 & (F.col("status") == "error"), 1)
+                   .otherwise(0)).alias("errors"),
+             F.sum("proc_us").alias("cpu_us"))
+        .collect()
+    }
+
+
+def test_tallied_stats_equal_the_readback_oracle(spark, out_dir):
+    """Every manifest row's counts equal the aggregate of what was
+    written, on a corpus with a quarantined payload, a giant that
+    shards, a slice holding an empty bucket and a resumed second run."""
+    from tests.test_shard_giants import SHARD_CHARS, _giant_doc
+
+    n_buckets = 16
+    url_g, html_g = _giant_doc()
+    docs = corpus_df(spark, 12, partitions=3).select("url", "html") \
+        .unionByName(spark.createDataFrame(
+            [(url_g, html_g), ("https://bad.example/x", b"garbage")],
+            "url string, html binary")).persist()
+    bucket_of = {r["url"]: r["bucket"] for r in
+                 with_bucket(docs, n_buckets).select("url", "bucket")
+                 .collect()}
+    empty = sorted(set(range(n_buckets)) - set(bucket_of.values()))
+    first = sorted({bucket_of[url_g], bucket_of["https://bad.example/x"],
+                    empty[0]})
+    assert len(first) == 3, "giant, corrupt doc and empty bucket apart"
+
+    run_extraction(spark, docs, out_dir, "slice", n_buckets=n_buckets,
+                   buckets=first, shard_chars=SHARD_CHARS)
+    s = run_extraction(spark, docs, out_dir, "rest", n_buckets=n_buckets,
+                       shard_chars=SHARD_CHARS)
+    assert s["buckets_processed"] == n_buckets - len(first)
+    docs.unpersist()
+
+    rows = spark.read.parquet(f"{out_dir}/manifest").collect()
+    assert sorted(r["bucket"] for r in rows) == list(range(n_buckets))
+    oracle = _readback_oracle(spark, out_dir, list(range(n_buckets)))
+    for r in rows:
+        want = oracle.get(r["bucket"], (0, 0, 0, 0))
+        assert (r["docs_in"], r["rows_out"], r["errors"], r["cpu_ms"]) \
+            == want, (r["run_id"], r["bucket"])
+    by_bucket = {r["bucket"]: r for r in rows}
+    assert by_bucket[empty[0]]["run_id"] == "slice"
+    assert by_bucket[empty[0]]["docs_in"] == 0
+    assert by_bucket[bucket_of["https://bad.example/x"]]["errors"] == 1
+    assert sum(r["docs_in"] for r in rows) == len(bucket_of)
+    # the giant really sharded: its bucket wrote more rows than docs
+    written = read_extracted(spark, out_dir, reader_batch_rows=None)
+    gb = bucket_of[url_g]
+    assert written.filter(F.col("bucket") == gb).count() > \
+        by_bucket[gb]["docs_in"]
+
+
+def test_partition_tally_replaces_a_partitions_entry(spark):
+    """Adding the same partition id twice keeps only the later entry,
+    so a task that runs again (a retry, a speculative copy, a
+    recomputed stage) is counted once."""
+    from exam_pdf_parser_spark.operators.extract import extract
+    from exam_pdf_parser_spark.sources.manifest import PartitionTally
+
+    acc = spark.sparkContext.accumulator({}, PartitionTally())
+    acc.add({0: {3: [1, 2, 0, 10]}})
+    acc.add({1: {5: [1, 1, 1, 7]}})
+    acc.add({0: {3: [2, 4, 0, 30]}})
+    assert acc.value == {0: {3: [2, 4, 0, 30]}, 1: {5: [1, 1, 1, 7]}}
+
+    # the same extraction run twice over an unpersisted source tallies
+    # what one run does (proc_us differs between runs; counts must not)
+    tally = spark.sparkContext.accumulator({}, PartitionTally())
+    docs = with_bucket(corpus_df(spark, 6, partitions=2), N_BUCKETS)
+    extracted = extract(docs, tally=tally)
+
+    def counts():
+        return {p: {b: c[:3] for b, c in per.items()}
+                for p, per in tally.value.items()}
+
+    extracted.collect()
+    once = counts()
+    extracted.collect()
+    assert counts() == once
+    assert sorted(once) == [0, 1]
+    assert sum(c[0] for per in once.values() for c in per.values()) == 6
+
+
+def test_run_extraction_starts_one_job_and_its_write(spark, out_dir):
+    """A fresh full run is the exchange's map stage (the extraction)
+    and the write — at most 2 Spark jobs, nothing read back — and a
+    no-op resume starts none."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def jobs(fn) -> int:
+        group = f"job-count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        # job-start events reach the status store through the async
+        # listener bus: drain it before counting
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    docs = corpus_df(spark, N_DOCS, partitions=4)
+    fresh = jobs(lambda: run_extraction(spark, docs, out_dir, "fresh",
+                                        n_buckets=N_BUCKETS))
+    assert 0 < fresh <= 2, fresh
+    noop = jobs(lambda: run_extraction(spark, docs, out_dir, "noop",
+                                       n_buckets=N_BUCKETS))
+    assert noop == 0, noop
