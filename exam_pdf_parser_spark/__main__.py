@@ -228,10 +228,11 @@ def _dispatch(spark, args) -> int:
     if args.command == "parse":
         from .operators.parsed import parse_documents
 
-        parsed = parse_documents(docs)
-        parsed.write.mode("overwrite").parquet(f"{args.output}/parsed")
+        out = f"{args.output}/parsed"
+        parse_documents(docs).write.mode("overwrite").parquet(out)
+        # count the written rows: a count of the stage would rerun it
         print(json.dumps({"command": "parse",
-                          "questions": parsed.count()}))
+                          "questions": spark.read.parquet(out).count()}))
         return 0
 
     if args.command == "validate":
@@ -272,9 +273,10 @@ def _dispatch(spark, args) -> int:
     if args.command == "crop":
         from .operators.crop import crop_regions
 
-        crops = crop_regions(docs)
-        crops.write.mode("overwrite").parquet(f"{args.output}/crops")
-        print(json.dumps({"command": "crop", "crops": crops.count()}))
+        out = f"{args.output}/crops"
+        crop_regions(docs).write.mode("overwrite").parquet(out)
+        print(json.dumps({"command": "crop",
+                          "crops": spark.read.parquet(out).count()}))
         return 0
 
     if args.command == "run":

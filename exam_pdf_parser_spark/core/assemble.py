@@ -35,7 +35,7 @@ try:  # r10: orjson parses the layout JSON ~6x faster than stdlib and
 except ImportError:  # pragma: no cover
     _json_loads = json.loads
 
-from .detector import Region, detect_regions, page_columns
+from .detector import MAX_Q, MIN_Q, Region, detect_regions, page_columns
 from .textfuncs import block_text, page_framed_text
 
 PAYLOAD_MAGIC = b"XLAY1"
@@ -115,13 +115,14 @@ def annotate_block_texts(pages: list[dict]) -> None:
 
 
 def extract_document(
-    html: bytes, min_q: int = 1, max_q: int = 50
+    html: bytes, min_q: int = MIN_Q, max_q: int = MAX_Q
 ) -> tuple[str, list[Region]]:
     """Decode one document and run the full deterministic extraction.
 
     Returns ``(extracted_text, regions)``.  This is THE per-document
-    unit of work — called once per row inside the Spark ``mapInPandas``
-    stage and once per row by the single-node oracle.
+    unit of work — called once per row inside the Spark ``mapInArrow``
+    stages (``operators.extract.map_rows``) and once per row by the
+    single-node oracle.
     """
     pages = decode_payload(html).get("pages", [])
     annotate_block_texts(pages)

@@ -5,7 +5,7 @@ Single source of truth for the stateful per-document scan (SURVEY.md
 executed in BOTH places:
 
   * the single-node oracle (``core.oracle``) — golden producer, and
-  * inside the Spark ``mapInPandas`` extraction stage
+  * inside the Spark ``mapInArrow`` extraction stage
     (``operators.extract``) — one call per document row, batched by
     Arrow; documents are independent so parallelism is across rows.
 

@@ -46,10 +46,10 @@ def _parsed_by_url(rows: list[dict],
                    max_q: int = MAX_Q) -> dict[str, list[dict]]:
     out: dict[str, list[dict]] = {}
     for row in rows:
-        # whole-document quarantine mirrors the Spark side's per-doc
-        # mapInPandas contract: a parse-stage bug must surface as a
-        # clean hash mismatch, not a crosscheck crash — so title/field
-        # parsing sits inside the try, not just extract_document.
+        # whole-document quarantine, as in the Spark stage's row
+        # emitter (operators.extract.map_rows): a document whose decode,
+        # detect or title/field parse raises is dropped, so a parse bug
+        # surfaces as a clean hash mismatch, not a crosscheck crash.
         try:
             _, regions = extract_document(row["html"], MIN_Q, max_q)
             title = parse_exam_title(regions)
@@ -350,38 +350,20 @@ def x_exam_info(rows: list[dict]) -> list[dict]:
 # --- x_crop_manifest ------------------------------------------------------------
 
 def x_crop_manifest(rows: list[dict]) -> list[dict]:
-    from .assemble import decode_payload
-    from .detector import detect_regions
-    from .png import encode_png_gray, pad_clamp, render_region
+    from .png import crop_document
 
     out = []
     for row in rows:
+        # whole-document quarantine, as in _parsed_by_url
         try:
-            payload = decode_payload(row["html"])
+            crops = crop_document(row["html"])
         except Exception:
             continue
-        pages = payload.get("pages", [])
-        sizes = {p.get("page_idx", 0): (p.get("page_size") or [842, 1191])
-                 for p in pages}
-        page_blocks = {p.get("page_idx", 0): p.get("blocks", [])
-                       for p in pages}
-        regions = detect_regions(pages)
-        multi = {r.question_number for r in regions if r.spans_page}
-        for r in regions:
-            pw, ph = sizes.get(r.page_idx, [842, 1191])
-            bbox = pad_clamp((r.x0, r.y0, r.x1, r.y1), pw, ph)
-            name = (f"q{r.question_number:02d}_p{r.page_idx}"
-                    if r.question_number in multi
-                    else f"q{r.question_number:02d}")
-            img = render_region(page_blocks.get(r.page_idx, []), bbox)
-            out.append({
-                "url": row["url"],
-                "question_number": r.question_number,
-                "page_idx": r.page_idx,
-                "file_name": f"{name}.png",
-                "x0": bbox[0], "y0": bbox[1], "x1": bbox[2], "y1": bbox[3],
-                "png_bytes": len(encode_png_gray(img)),
-            })
+        out.extend({
+            "url": row["url"], "question_number": qn, "page_idx": page,
+            "file_name": name, "x0": x0, "y0": y0, "x1": x1, "y1": y1,
+            "png_bytes": len(png),
+        } for qn, page, name, x0, y0, x1, y1, png in crops)
     return out
 
 

@@ -5,7 +5,8 @@ The sandbox ships no raster library, but a valid PNG needs only
 src/cropper/cropper.py:73-74) can emit REAL image files any viewer
 opens, instead of stubbed bytes.  The encoder writes 8-bit-gray
 filter-0 scanlines; ``pad_clamp`` and ``render_region`` turn a question
-region's layout blocks into the pixels it encodes.  The Spark crop sink
+region's layout blocks into the pixels it encodes, and
+``crop_document`` runs all three over one payload.  The Spark crop sink
 and the single-node oracle share this one copy.
 
 Deterministic: fixed zlib level, no timestamps, no ancillary chunks.
@@ -17,6 +18,9 @@ import struct
 import zlib
 
 import numpy as np
+
+from .assemble import decode_payload
+from .detector import detect_regions
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -90,3 +94,27 @@ def render_region(blocks: list[dict], crop_bbox) -> np.ndarray:
         shade = BLOCK_SHADES.get(b.get("type", "text"), 200)
         img[py0:min(py1, h), px0:min(px1, w)] = shade
     return img
+
+
+def crop_document(html: bytes) -> list[tuple]:
+    """One payload → its crops, one per (question, page): ``(
+    question_number, page_idx, file_name, x0, y0, x1, y1, png)`` with
+    the padded bbox and the reference's file-naming scheme
+    ``q{n:02d}`` / ``q{n:02d}_p{k}`` (src/cropper/cropper.py:76-79)."""
+    pages = decode_payload(html).get("pages", [])
+    sizes = {p.get("page_idx", 0): (p.get("page_size") or [842, 1191])
+             for p in pages}
+    page_blocks = {p.get("page_idx", 0): p.get("blocks", []) for p in pages}
+    regions = detect_regions(pages)
+    multi = {r.question_number for r in regions if r.spans_page}
+    out = []
+    for r in regions:
+        pw, ph = sizes.get(r.page_idx, [842, 1191])
+        bbox = pad_clamp((r.x0, r.y0, r.x1, r.y1), pw, ph)
+        name = (f"q{r.question_number:02d}_p{r.page_idx}"
+                if r.question_number in multi
+                else f"q{r.question_number:02d}")
+        img = render_region(page_blocks.get(r.page_idx, []), bbox)
+        out.append((r.question_number, r.page_idx, f"{name}.png", *bbox,
+                    encode_png_gray(img)))
+    return out

@@ -13,17 +13,13 @@ PDF renderer, so layout geometry is the honest pixel source).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType, DoubleType, IntegerType, StringType, StructField, StructType,
 )
 
-from ..core.assemble import decode_payload
-from ..core.detector import MAX_Q, MIN_Q, detect_regions
-from ..core.png import PAD, encode_png_gray, pad_clamp, render_region
+from ..core.png import PAD, crop_document, pad_clamp
+from .extract import map_rows
 
 __all__ = ["PAD", "pad_clamp", "crop_regions", "CROP_SCHEMA"]
 
@@ -41,48 +37,11 @@ CROP_SCHEMA = StructType([
 
 
 def crop_regions(documents: DataFrame) -> DataFrame:
-    """documents(url, html) → one crop row per (question, page) with the
-    reference's file-naming scheme ``q{n:02d}`` / ``q{n:02d}_p{k}``
-    (src/cropper/cropper.py:76-79)."""
-    src = documents.select("url", "html")
+    """documents(url, html) → one crop row per (question, page)
+    (``core.png.crop_document``).  A document whose decode, detect or
+    render raises is dropped whole."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    payload = decode_payload(bytes(html))
-                except Exception:
-                    continue
-                pages = payload.get("pages", [])
-                sizes = {
-                    p.get("page_idx", 0): (p.get("page_size") or [842, 1191])
-                    for p in pages
-                }
-                page_blocks = {
-                    p.get("page_idx", 0): p.get("blocks", []) for p in pages
-                }
-                regions = detect_regions(pages, MIN_Q, MAX_Q)
-                multi = {r.question_number for r in regions if r.spans_page}
-                for r in regions:
-                    pw, ph = sizes.get(r.page_idx, [842, 1191])
-                    bbox = pad_clamp((r.x0, r.y0, r.x1, r.y1), pw, ph)
-                    name = (f"q{r.question_number:02d}_p{r.page_idx}"
-                            if r.question_number in multi
-                            else f"q{r.question_number:02d}")
-                    img = render_region(
-                        page_blocks.get(r.page_idx, []), bbox)
-                    rows.append({
-                        "url": url,
-                        "question_number": r.question_number,
-                        "page_idx": r.page_idx,
-                        "file_name": f"{name}.png",
-                        "x0": bbox[0], "y0": bbox[1],
-                        "x1": bbox[2], "y1": bbox[3],
-                        "png": encode_png_gray(img),
-                    })
-            if rows:
-                yield pd.DataFrame(rows, columns=[f.name for f in
-                                                  CROP_SCHEMA.fields])
+    def row(_state, url, html):
+        return [(url, *c) for c in crop_document(bytes(html))]
 
-    return src.mapInPandas(run, CROP_SCHEMA)
+    return map_rows(documents.select("url", "html"), CROP_SCHEMA, row)

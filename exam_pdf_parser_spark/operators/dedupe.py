@@ -488,8 +488,7 @@ def simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(combine_sql).alias("simhash"))
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 50,
-                         method: str = "star") -> DataFrame:
+def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     """Transitive closure over a near-dup pair graph (``doc_a``,
     ``doc_b``) → cluster ids.
 
@@ -498,25 +497,16 @@ def connected_components(pairs: DataFrame, max_iter: int = 50,
     to one cluster).  Returns (node, component) with component = min
     node id reachable.  Deterministic (min is order-free).
 
-    ``method="star"`` (default): alternating large-star / small-star
-    contraction (Kiveris et al., *Connected Components in MapReduce
-    and Beyond*, SoCC'14) — converges in O(log² n) rounds INDEPENDENT
-    of graph diameter, so a 100 TB near-dup graph with long chained
-    template pages (diameter ≫ 50) still finishes; each round is two
-    self-join+groupBy shuffles on node ids, localCheckpoint'd so plans
-    stay flat.
+    Alternating large-star / small-star contraction (Kiveris et al.,
+    *Connected Components in MapReduce and Beyond*, SoCC'14) —
+    converges in O(log² n) rounds INDEPENDENT of graph diameter, so a
+    100 TB near-dup graph with long chained template pages (diameter
+    ≫ 50) still finishes; each round is two self-join+groupBy shuffles
+    on node ids, localCheckpoint'd so plans stay flat.
 
-    ``method="propagate"``: round-3 min-label propagation — O(diameter)
-    rounds; kept as the independent parity twin for tests.
-
-    Both fail loudly past ``max_iter`` rather than returning partial
+    Fails loudly past ``max_iter`` rather than returning partial
     labels (phantom clusters with zero keepers downstream).
     """
-    if method == "propagate":
-        return _cc_propagate(pairs, max_iter)
-    if method != "star":
-        raise ValueError(f"unknown connected-components method {method!r}")
-
     edges0 = (
         pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
         .filter(F.col("a") != F.col("b"))
@@ -568,7 +558,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 50,
         edges = new_edges
     if not converged:
         raise RuntimeError(
-            f"connected_components(star) did not converge within "
+            f"connected_components did not converge within "
             f"{max_iter} rounds; raise max_iter")
     # fixpoint is a forest of stars: every non-root points at its
     # component min, roots have no outgoing edge → label themselves
@@ -580,62 +570,6 @@ def connected_components(pairs: DataFrame, max_iter: int = 50,
         .select("node",
                 F.coalesce("comp", F.col("node")).alias("component"))
     )
-    return labels
-
-
-def _cc_propagate(pairs: DataFrame, max_iter: int) -> DataFrame:
-    """Min-label propagation twin (O(diameter) shuffle rounds): every
-    node repeatedly adopts the smallest id among itself and its
-    neighbors until a fixpoint.  Used as the independent parity check
-    for the star contraction."""
-    F_ = F
-    edges = (
-        pairs.select(F_.col("doc_a").alias("a"), F_.col("doc_b").alias("b"))
-        .unionAll(pairs.select(F_.col("doc_b").alias("a"),
-                               F_.col("doc_a").alias("b")))
-        .distinct()
-        .persist()
-    )
-    labels = (
-        edges.select(F_.col("a").alias("node"))
-        .distinct()
-        .withColumn("component", F_.col("node"))
-    )
-    converged = False
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.b == labels.node)
-            .groupBy(F_.col("a").alias("node"))
-            .agg(F_.min("component").alias("nbr_component"))
-        )
-        updated = (
-            labels.join(neighbor_min, "node", "left_outer")
-            .select(
-                "node",
-                F_.least(
-                    F_.col("component"),
-                    F_.coalesce("nbr_component", F_.col("component")),
-                ).alias("component"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            updated.alias("u")
-            .join(labels.alias("l"), "node")
-            .filter(F_.col("u.component") != F_.col("l.component"))
-            .limit(1).count()
-        )
-        labels = updated
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
-    if not converged:
-        # returning partial labels would silently create phantom
-        # clusters with zero keepers downstream — fail loudly instead
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iter} "
-            f"iterations (graph diameter too large); raise max_iter")
     return labels
 
 
@@ -682,7 +616,7 @@ def _dedup_clusters_sql() -> str:
 @register("dedup_cluster_assignment", _dedup_clusters_sql())
 def dedup_cluster_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-facing cluster decision table: MinHash LSH pairs →
-    connected components (min-label propagation) → keep/drop per doc.
+    connected components (star contraction) → keep/drop per doc.
     The DuckDB twin computes the same closure with a recursive CTE."""
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < PAIR_SCOPE)
     pairs = minhash_lsh_pairs(spark, sf_dir)

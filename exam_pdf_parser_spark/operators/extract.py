@@ -73,25 +73,60 @@ def quarantine_message(e: Exception) -> str:
     return f"{type(e).__name__}: {e}"[:500]
 
 
+def map_rows(rows: DataFrame, schema: StructType, row, error_row=None,
+             task_end=None) -> DataFrame:
+    """The one Python emitter of every per-document stage: a single
+    ``mapInArrow`` over ``rows``' columns that builds ``schema``'s
+    Arrow columns directly.
+
+    ``row(state, *values)`` returns the output tuples of one input row,
+    in ``schema``'s field order (a struct value may be a tuple or a
+    dict).  If it raises, the row is quarantined, never the task:
+    ``error_row(state, exc, *values)`` returns its output instead, and
+    without ``error_row`` the row is dropped.  ``state`` is a dict
+    private to the task; ``task_end(state)`` runs after the task's
+    last batch.  A batch with no output rows yields nothing.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        state: dict = {}
+        for rb in batches:
+            out = []
+            for values in zip(*(c.to_pylist() for c in rb.columns)):
+                try:
+                    out.extend(row(state, *values))
+                except Exception as e:  # quarantine, never fail the task
+                    if error_row is not None:
+                        out.extend(error_row(state, e, *values))
+            if out:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(col, f.type)
+                     for col, f in zip(zip(*out), arrow_schema)],
+                    schema=arrow_schema)
+        if task_end is not None:
+            task_end(state)
+
+    return rows.mapInArrow(run, schema)
+
+
+def _span_tuple(r) -> tuple:
+    """A detector Region as a SPAN_STRUCT value, in field order."""
+    return (r.question_number, r.page_idx, r.x0, r.y0, r.x1, r.y1,
+            r.text_preview, r.spans_page, r.group_range, r.region_idx)
+
+
 def span_dicts(regions) -> list[dict]:
-    """Region list → SPAN_STRUCT dicts (shared by every extraction
-    variant so the span shape can never skew between paths)."""
-    return [
-        {
-            "question_number": r.question_number,
-            "page_idx": r.page_idx,
-            "x0": r.x0, "y0": r.y0, "x1": r.x1, "y1": r.y1,
-            "text_preview": r.text_preview,
-            "spans_page": r.spans_page,
-            "group_range": r.group_range,
-            "region_idx": r.region_idx,
-        }
-        for r in regions
-    ]
+    """Region list → SPAN_STRUCT dicts (the span shape of every
+    extraction output, keyed by field name)."""
+    return [dict(zip(SPAN_STRUCT.names, _span_tuple(r))) for r in regions]
 
 
-def extract(documents: DataFrame, min_q: int = 1, max_q: int = 50,
-            with_timing: bool = False, shard_chars: int | None = None,
+def extract(documents: DataFrame, with_timing: bool = False,
+            shard_chars: int | None = None,
             shard_spans: int | None = None, tally=None) -> DataFrame:
     """documents(url, …, html, …) → (url, extracted_text, spans, status, error).
 
@@ -125,7 +160,6 @@ def extract(documents: DataFrame, min_q: int = 1, max_q: int = 50,
     """
     import time
 
-    import pyarrow as pa
     from pyspark import TaskContext
     from pyspark.sql.types import LongType
 
@@ -141,105 +175,46 @@ def extract(documents: DataFrame, min_q: int = 1, max_q: int = 50,
         schema = StructType(
             schema.fields + [StructField("proc_us", LongType())])
 
-    # r10 (guide §4.2): the emitter builds the Arrow output DIRECTLY —
-    # flat per-field lists + one offsets array assembled into the
-    # list<struct> spans column — instead of handing pandas a
-    # list-of-dicts object column per row and paying pyarrow's
-    # dict-walking conversion for ~35 span structs per document.
-    # Output is hash-identical to the mapInPandas form (verified over
-    # the full sf1 corpus) and the quarantine contract is unchanged.
-    span_pa = pa.struct([
-        ("question_number", pa.int32()), ("page_idx", pa.int32()),
-        ("x0", pa.float64()), ("y0", pa.float64()),
-        ("x1", pa.float64()), ("y1", pa.float64()),
-        ("text_preview", pa.string()), ("spans_page", pa.bool_()),
-        ("group_range", pa.string()), ("region_idx", pa.int32()),
-    ])
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        per_bucket: dict[int, list[int]] = {}
-        for rb in batches:
-            in_urls = rb.column(0).to_pylist()
-            if not in_urls:  # empty batch → emit nothing (Arrow
-                continue     # list<struct> inference has no rows to see)
-            htmls = rb.column(1).to_pylist()
-            keys = (rb.column(2).to_pylist() if tally is not None
-                    else [None] * len(in_urls))
-            urls, texts, status, errors, procs = [], [], [], [], []
-            idxs, counts = [], []
-            offs = [0]
-            qn, pi = [], []
-            x0, y0, x1, y1 = [], [], [], []
-            tp, sp, gr, ri = [], [], [], []
-            n = 0
-            for url, html, key in zip(in_urls, htmls, keys):
-                t0 = time.perf_counter_ns()
-                try:
-                    extracted, regions = extract_document(
-                        bytes(html), min_q, max_q)
-                    st, err = "ok", None
-                except Exception as e:  # quarantine, never fail the task
-                    extracted, regions = None, []
-                    st, err = "error", quarantine_message(e)
-                proc = (time.perf_counter_ns() - t0) // 1000
-                if tally is not None:
-                    t = per_bucket.setdefault(key, [0, 0, 0, 0])
-                    t[0] += 1
-                    t[1] += len(regions)
-                    t[2] += st == "error"
-                    t[3] += proc
-                # shard_row only takes len() of and slices the span
-                # list, so it shards the Region list as it stands
-                row = {"extracted_text": extracted, "spans": regions}
-                shards = (shard_row(row, shard_chars, shard_spans)
-                          if sharding
-                          else [dict(row, shard_idx=0, n_shards=1)])
-                for shard in shards:
-                    regs = shard["spans"]
-                    urls.append(url)
-                    texts.append(shard["extracted_text"])
-                    status.append(st)
-                    errors.append(err)
-                    procs.append(proc if shard["shard_idx"] == 0 else 0)
-                    idxs.append(shard["shard_idx"])
-                    counts.append(shard["n_shards"])
-                    for r in regs:
-                        qn.append(r.question_number)
-                        pi.append(r.page_idx)
-                        x0.append(r.x0)
-                        y0.append(r.y0)
-                        x1.append(r.x1)
-                        y1.append(r.y1)
-                        tp.append(r.text_preview)
-                        sp.append(r.spans_page)
-                        gr.append(r.group_range)
-                        ri.append(r.region_idx)
-                    n += len(regs)
-                    offs.append(n)
-            struct = pa.StructArray.from_arrays(
-                [pa.array(qn, pa.int32()), pa.array(pi, pa.int32()),
-                 pa.array(x0, pa.float64()), pa.array(y0, pa.float64()),
-                 pa.array(x1, pa.float64()), pa.array(y1, pa.float64()),
-                 pa.array(tp, pa.string()), pa.array(sp, pa.bool_()),
-                 pa.array(gr, pa.string()), pa.array(ri, pa.int32())],
-                fields=list(span_pa))
-            spans = pa.ListArray.from_arrays(pa.array(offs, pa.int32()),
-                                             struct)
-            cols = [pa.array(urls, pa.string()),
-                    pa.array(texts, pa.string()),
-                    spans,
-                    pa.array(status, pa.string()),
-                    pa.array(errors, pa.string())]
+    def emit(state, url, bucket, text, regions, status, error):
+        proc = (time.perf_counter_ns() - state["t0"]) // 1000
+        # shard_row only takes len() of and slices the span list, so
+        # it shards the Region list as it stands
+        doc = {"extracted_text": text, "spans": regions}
+        shards = (shard_row(doc, shard_chars, shard_spans) if sharding
+                  else [dict(doc, shard_idx=0, n_shards=1)])
+        out = []
+        for s in shards:
+            cols = [url, s["extracted_text"],
+                    [_span_tuple(r) for r in s["spans"]], status, error]
             if sharding:
-                cols += [pa.array(idxs, pa.int32()),
-                         pa.array(counts, pa.int32())]
+                cols += [s["shard_idx"], s["n_shards"]]
             if with_timing:
-                cols.append(pa.array(procs, pa.int64()))
-            yield pa.RecordBatch.from_arrays(cols, names=schema.names)
+                cols.append(proc if s["shard_idx"] == 0 else 0)
+            out.append(cols)
         if tally is not None:
-            tally.add({TaskContext.get().partitionId(): per_bucket})
+            t = state.setdefault("buckets", {}).setdefault(
+                bucket, [0, 0, 0, 0])
+            t[0] += 1
+            t[1] += len(regions)
+            t[2] += status == "error"
+            t[3] += proc
+        return out
 
-    return docs.mapInArrow(run, schema)
+    def row(state, url, html, bucket=None):
+        state["t0"] = time.perf_counter_ns()
+        text, regions = extract_document(bytes(html))
+        return emit(state, url, bucket, text, regions, "ok", None)
+
+    def error_row(state, e, url, html, bucket=None):
+        return emit(state, url, bucket, None, [], "error",
+                    quarantine_message(e))
+
+    def task_end(state):
+        tally.add({TaskContext.get().partitionId():
+                   state.get("buckets", {})})
+
+    return map_rows(docs, schema, row, error_row,
+                    task_end if tally is not None else None)
 
 
 def quarantine_table(extracted: DataFrame) -> DataFrame:

@@ -21,8 +21,7 @@ from pyspark.sql import DataFrame
 from .extract import extract
 
 
-def extract_auto(documents: DataFrame, min_q: int = 1, max_q: int = 50,
-                 with_timing: bool = False,
+def extract_auto(documents: DataFrame, with_timing: bool = False,
                  shard_chars: int | None = None,
                  shard_spans: int | None = None, tally=None) -> DataFrame:
     """The extraction ``run_extraction`` writes: ``extract()`` over
@@ -41,7 +40,7 @@ def extract_auto(documents: DataFrame, min_q: int = 1, max_q: int = 50,
     (see ``extract()``) counts the manifest's per-bucket stats in the
     same pass.
     """
-    return extract(documents, min_q, max_q, with_timing=with_timing,
+    return extract(documents, with_timing=with_timing,
                    shard_chars=shard_chars, shard_spans=shard_spans,
                    tally=tally)
 

@@ -1,15 +1,13 @@
 """Stage C as Spark operators: the ``parsed`` table (structured
 question fields) and the ``answer_key`` table.
 
-Both are single ``mapInPandas`` passes — no shuffle; cross-document
-work stays relational downstream (validation/evaluation).
+Both are single ``mapInArrow`` passes through the shared row emitter
+(``operators.extract.map_rows``) — no shuffle; cross-document work
+stays relational downstream (validation/evaluation).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType, BooleanType, IntegerType, StringType, StructField, StructType,
@@ -19,6 +17,7 @@ from ..core.answerkey import parse_answer_md
 from ..core.assemble import extract_document
 from ..core.detector import MAX_Q, MIN_Q
 from ..core.fields import parse_exam_title, parse_question_fields
+from .extract import map_rows
 
 CHOICE_STRUCT = ArrayType(StructType([
     StructField("number", IntegerType(), False),
@@ -58,36 +57,24 @@ ANSWER_KEY_SCHEMA = StructType([
     StructField("points", IntegerType(), False),
 ])
 
-_PARSED_COLS = [f.name for f in PARSED_SCHEMA.fields if f.name != "url"]
+# the per-question fields, between url and the per-document exam_title
+_PARSED_COLS = PARSED_SCHEMA.names[1:-1]
 
 
 def parse_documents(documents: DataFrame, max_q: int = MAX_Q) -> DataFrame:
     """documents(url, html) → parsed question rows (FIXTURES.md §4).
 
-    One decode+detect+field pass per row; corrupt payloads are skipped
-    silently here (they surface via ``extract``'s quarantine)."""
-    docs = documents.select("url", "html")
+    One decode+detect+field pass per row; a document whose parse
+    raises anywhere is dropped whole (corrupt payloads surface via
+    ``extract``'s quarantine)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {c: [] for c in ["url", *_PARSED_COLS]}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                try:
-                    _, regions = extract_document(bytes(html), MIN_Q, max_q)
-                except Exception:
-                    continue
-                title = parse_exam_title(regions)
-                for row in parse_question_fields(regions):
-                    out["url"].append(url)
-                    for c in _PARSED_COLS:
-                        out[c].append(title if c == "exam_title"
-                                      else row[c])
-            if out["url"]:
-                # empty frames infer float64 columns, which Arrow cannot
-                # convert to list<struct> — emit nothing instead
-                yield pd.DataFrame(out)
+    def row(_state, url, html):
+        _, regions = extract_document(bytes(html), MIN_Q, max_q)
+        title = parse_exam_title(regions)
+        return [(url, *(q[c] for c in _PARSED_COLS), title)
+                for q in parse_question_fields(regions)]
 
-    return docs.mapInPandas(run, PARSED_SCHEMA)
+    return map_rows(documents.select("url", "html"), PARSED_SCHEMA, row)
 
 
 def exam_info_table(parsed: DataFrame) -> DataFrame:
@@ -128,19 +115,12 @@ def exam_info_table(parsed: DataFrame) -> DataFrame:
 
 def answer_key_table(corpus_with_md: DataFrame) -> DataFrame:
     """(url, answer_md) → exploded answer-key rows (S6).  A row whose
-    ``answer_md`` is NULL or empty has no key and emits no rows."""
-    src = corpus_with_md.select("url", "answer_md")
-    cols = [f.name for f in ANSWER_KEY_SCHEMA.fields]
+    ``answer_md`` is NULL or empty has no key and emits no rows; one
+    whose parse raises is dropped."""
+    cols = ANSWER_KEY_SCHEMA.names[1:]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            for url, md in zip(pdf["url"], pdf["answer_md"]):
-                for e in parse_answer_md(md):
-                    out["url"].append(url)
-                    for c in cols[1:]:
-                        out[c].append(e[c])
-            if out["url"]:
-                yield pd.DataFrame(out)
+    def row(_state, url, md):
+        return [(url, *(e[c] for c in cols)) for e in parse_answer_md(md)]
 
-    return src.mapInPandas(run, ANSWER_KEY_SCHEMA)
+    return map_rows(corpus_with_md.select("url", "answer_md"),
+                    ANSWER_KEY_SCHEMA, row)

@@ -401,8 +401,6 @@ def run_extraction(
     out_dir: str,
     run_id: str,
     n_buckets: int = 64,
-    min_q: int = 1,
-    max_q: int = 50,
     compact_after: int | None = 64,
     shard_chars: int | None = DEFAULT_SHARD_CHARS,
     buckets: list[int] | None = None,
@@ -507,7 +505,7 @@ def run_extraction(
     # several bucket dirs) and partitionBy writes one file per dir.
     from ..operators.extract_paged import extract_auto
     tally = spark.sparkContext.accumulator({}, PartitionTally())
-    extracted = extract_auto(pending, min_q, max_q, with_timing=True,
+    extracted = extract_auto(pending, with_timing=True,
                              shard_chars=shard_chars, tally=tally)
     out = with_bucket(extracted, n_buckets)
     (out.repartition(F.col("bucket")).write.mode("overwrite")

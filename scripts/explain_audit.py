@@ -82,7 +82,7 @@ NOTES = {
         "+ two-pass prefix sum (no per-group Window node — the fat "
         "language never lands in one task, measured in "
         "BENCH_SCALING.md).",
-    "x_extract_spans": "zero exchanges — mapInPandas extraction core "
+    "x_extract_spans": "zero exchanges — mapInArrow extraction core "
         "+ narrow explode (pytest-asserted).",
 }
 

@@ -127,7 +127,7 @@ only **{raw_speedup:.2f}×** over the same {N_LOW}→{N_HIGH} pair
 (efficiency {raw_eff:.3f}) — the host throttles clocks under full
 32-core load.  Relative to that hardware ceiling the engine achieves
 **{normalized:.3f}** ({"MET" if normalized >= 0.8 else "NOT MET"} vs the 0.8 target).
-The extraction core is shuffle-free (one mapInPandas pass over
+The extraction core is shuffle-free (one mapInArrow pass over
 independent documents), so on a real multi-executor cluster — where
 adding executors adds *machines*, not contended sibling cores — the
 per-core throughput at N executors carries to 4N.

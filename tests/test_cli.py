@@ -66,8 +66,10 @@ def test_cli_parse_and_crop(spark, corpus_path, tmp_path, capsys):
     rc = _dispatch(spark, _Args(command="crop", input=corpus_path,
                                 output=str(tmp_path / "c")))
     assert rc == 0
-    crops = spark.read.parquet(str(tmp_path / "c" / "crops"))
-    assert crops.count() > 200
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["crops"] > 200
+    assert spark.read.parquet(str(tmp_path / "c" / "crops")).count() == \
+        out["crops"]
 
 
 def test_cli_run_and_resume(spark, corpus_path, tmp_path, capsys):

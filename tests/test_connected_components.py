@@ -38,10 +38,28 @@ def test_long_chain_converges(spark):
     assert comp.count() == n + 1
 
 
+def _union_find_components(edges) -> dict[int, int]:
+    """Pure-Python oracle: node → smallest node id in its component."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
 def test_star_matches_propagation_on_planted_graphs(spark):
-    """Round-4 ask: the default large-star/small-star contraction must
-    label exactly like the independent min-label propagation twin on
-    planted graphs (chains, stars, cliques, forests, random)."""
+    """The large-star/small-star contraction must label exactly like an
+    independent union-find on planted graphs (chains, stars, cliques,
+    forests, random)."""
     import random
 
     rng = random.Random(404)
@@ -56,27 +74,26 @@ def test_star_matches_propagation_on_planted_graphs(spark):
         g = [(a, b) for a, b in g if a != b]
         pairs = spark.createDataFrame(g, "doc_a long, doc_b long")
         star = {r["node"]: r["component"] for r in
-                connected_components(pairs, method="star").collect()}
-        prop = {r["node"]: r["component"] for r in
-                connected_components(pairs, method="propagate").collect()}
-        assert star == prop, g
+                connected_components(pairs).collect()}
+        assert star == _union_find_components(g), g
 
 
 def test_star_converges_sublinearly_on_deep_chain(spark):
     """A diameter-200 chain must converge in ~log rounds: star
-    contraction finishes within 15 rounds where propagation needs
-    ~200 (and correctly fails loudly at the same budget)."""
+    contraction finishes within 15 rounds (label propagation would
+    need ~200), and a budget too small fails loudly instead of
+    returning partial labels."""
     import pytest
 
     n = 200
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "doc_a long, doc_b long")
-    comp = connected_components(pairs, max_iter=15, method="star")
+    comp = connected_components(pairs, max_iter=15)
     rows = comp.collect()
     assert len(rows) == n + 1
     assert {r["component"] for r in rows} == {0}
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_iter=15, method="propagate")
+        connected_components(pairs, max_iter=1)
 
 
 def test_end_to_end_with_minhash_pairs(spark):

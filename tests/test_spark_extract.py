@@ -97,8 +97,8 @@ def test_corrupt_payload_quarantined_not_fatal(spark, documents):
 
 
 def test_all_corrupt_partition_survives(spark):
-    # a partition where EVERY payload is garbage must not break Arrow
-    # conversion (empty pandas frames infer float64 for list<struct>)
+    # a partition where EVERY payload is garbage must not break the
+    # row emitter: parse_documents has no output rows in any batch
     import datetime
 
     from exam_pdf_parser_spark.operators.parsed import parse_documents
@@ -115,46 +115,83 @@ def test_all_corrupt_partition_survives(spark):
 
 
 def test_adversarial_payloads_always_quarantine(spark):
-    """Fuzz the quarantine contract: truncations, bit flips, foreign
-    bytes, wrong-shape JSON — every row comes back with status ok or
-    error, one row per input, never a task failure."""
-    import json
+    """Hostile-input sweep over every per-document stage: truncations,
+    bit flips, foreign bytes and wrong-shape JSON behind a valid XLAY1
+    header.  ``extract`` returns one row per input, status ok or error;
+    ``parse_documents`` and ``crop_regions`` keep the control row's
+    output, drop the bad rows and match their single-node oracles
+    (``core/oracle_x``) row for row; ``answer_key_table`` survives
+    NULL, empty and garbage keys.  No stage may fail the job."""
+    import datetime
     import random
-    import zlib
 
     from exam_pdf_parser_spark.core.assemble import encode_payload
+    from exam_pdf_parser_spark.core.oracle_x import (
+        x_crop_manifest, x_parsed_questions,
+    )
     from exam_pdf_parser_spark.corpus.generator import build_document
-    from exam_pdf_parser_spark.operators.extract import (
-        DOCUMENTS_SCHEMA, extract,
+    from exam_pdf_parser_spark.core.answerkey import parse_answer_md
+    from exam_pdf_parser_spark.operators.crop import crop_regions
+    from exam_pdf_parser_spark.operators.parsed import (
+        answer_key_table, parse_documents,
     )
 
-    valid = build_document(0)["html"]
+    control = build_document(0)
+    valid = control["html"]
     rng = random.Random(99)
     payloads: list[bytes] = [
+        valid,                                                 # control
         b"", b"garbage", b"\x00" * 64,
         valid[: len(valid) // 2],          # truncated mid-stream
         valid[:-1], valid[:5],
-        zlib.compress(b"not json at all"),
-        zlib.compress(json.dumps({"v": 1}).encode()),          # no pages
-        zlib.compress(json.dumps({"v": 1, "pages": 3}).encode()),
-        zlib.compress(json.dumps(
-            {"v": 1, "pages": [{"blocks": "nope"}]}).encode()),
+        b"XLAY1" + b"not zlib",
+        encode_payload({"v": 1}),                              # no pages
+        encode_payload({"v": 1, "pages": 3}),
+        encode_payload({"v": 1, "pages": [{"blocks": "nope"}]}),
+        encode_payload({"pages": [{"blocks": 5}]}),
+        encode_payload({"pages": ["x"]}),
+        encode_payload({"pages": [{"blocks": [{"lines": 5}]}]}),
         encode_payload({"v": 1, "pages": []}),                 # empty doc
-        valid,                                                 # control
     ]
     for _ in range(10):                    # random single-byte flips
         b = bytearray(valid)
         b[rng.randrange(len(b))] ^= 0xFF
         payloads.append(bytes(b))
+    ctl = "u://0"
+    rows = [{"url": f"u://{i}", "html": p} for i, p in enumerate(payloads)]
+    docs = spark.createDataFrame(
+        [(r["url"], datetime.datetime(2025, 1, 1), r["html"], "t", "ko")
+         for r in rows], DOCUMENTS_SCHEMA)
 
-    import datetime
-    rows = [(f"u://{i}", datetime.datetime(2025, 1, 1), p, "t", "ko")
-            for i, p in enumerate(payloads)]
-    out = extract(spark.createDataFrame(rows, DOCUMENTS_SCHEMA)).collect()
+    out = extract(docs).collect()
     assert len(out) == len(payloads)       # nothing dropped, no crash
     by_url = {r["url"]: r for r in out}
     for r in out:
         assert r["status"] in ("ok", "error")
         if r["status"] == "error":
             assert r["error"]
-    assert by_url[f"u://{len(payloads) - 11}"]["status"] == "ok"  # control
+    assert by_url[ctl]["status"] == "ok"
+
+    # parse: every field the x_parsed_questions oracle carries except
+    # the choices JSON, whose text Spark's to_json renders
+    keys = ("url", "number", "question_text", "question_type", "passage",
+            "points", "group_range", "spans_page", "n_regions")
+    parsed = sorted(tuple(r[k] for k in keys)
+                    for r in parse_documents(docs).collect())
+    assert parsed == sorted(tuple(r[k] for k in keys)
+                            for r in x_parsed_questions(rows))
+    assert ctl in {p[0] for p in parsed}
+
+    crops = sorted(
+        (r["url"], r["question_number"], r["page_idx"], r["file_name"],
+         r["x0"], r["y0"], r["x1"], r["y1"], len(r["png"]))
+        for r in crop_regions(docs).collect())
+    assert crops == sorted(tuple(r.values()) for r in x_crop_manifest(rows))
+    assert ctl in {c[0] for c in crops}
+
+    keys_in = [(ctl, control["answer_md"]), ("k://null", None),
+               ("k://empty", ""), ("k://junk", "\x00### 문제 x\n답: ⑥⑥")]
+    key = answer_key_table(spark.createDataFrame(
+        keys_in, "url string, answer_md string")).collect()
+    assert {r["url"] for r in key} == {ctl}
+    assert len(key) == len(parse_answer_md(control["answer_md"]))
