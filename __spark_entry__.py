@@ -37,6 +37,7 @@ def _corpus_from_docids(
 
     from exam_pdf_parser_spark.corpus.generator import build_document
     from exam_pdf_parser_spark.operators.extract import DOCUMENTS_SCHEMA
+    from exam_pdf_parser_spark.sources.io import load
 
     schema = StructType(
         DOCUMENTS_SCHEMA.fields
@@ -68,8 +69,7 @@ def _corpus_from_docids(
         sf_dir.encode() + src + finger.encode()).hexdigest()[:12]
     cache = os.path.join(tempfile.gettempdir(), f"epps_corpus_{tag}")
     if not os.path.exists(os.path.join(cache, "_SUCCESS")):
-        ids = spark.read.parquet(
-            f"{sf_dir}/documents.parquet").select("doc_id")
+        ids = load(spark, sf_dir, "documents").select("doc_id")
         # r10: the ids frame is a single small parquet file → ONE scan
         # partition, so generation used to run in one task (~6 ms/doc
         # serially: minutes at sf1) and the cache landed as one file /
@@ -91,7 +91,9 @@ def _corpus_from_docids(
 
         ids.mapInPandas(gen, schema).write.mode("overwrite").parquet(cache)
 
-    df = spark.read.parquet(cache)
+    # the declared schema (the one the cache was written with) keeps
+    # this read free of a footer-inference job at build time
+    df = spark.read.schema(schema).parquet(cache)
     if with_answer_key:
         return df
     return df.select(*[f.name for f in DOCUMENTS_SCHEMA.fields])

@@ -276,15 +276,20 @@ def block_grid_self_join(keys: DataFrame, id_col: str,
     value for in-join verification).  They must be functionally
     dependent on the id so the pair-dedup pick is stable.
 
-    Build-time job: when ``cap`` is set, ``keys.count()`` (which sizes
-    the grid) runs as one Spark job while the DataFrame is built.
+    Build-time job: when ``cap`` is set, ``keys.count()`` runs as one
+    Spark job while the DataFrame is built (it also materializes the
+    checkpoint every consumer reads).  At ``n_rows <= cap`` no key can
+    occur more than ``cap`` times, so no key is hot, every block is
+    (0, 0) and the grid would only repeat the plain join; the plain
+    join is returned, with no hot-key aggregate, broadcast or
+    repartition.  Only ``n_rows > cap`` builds the grid.
     """
     if cap is not None:
-        # three consumers read `keys` (hot counts + both join sides);
-        # without a pin each recomputes the whole upstream signature
-        # pipeline.  The checkpointed frame is ids+keys only — tiny
-        # relative to the corpus — and lazy (materialized on the
-        # query's first action).
+        # up to three consumers read `keys` (hot counts + both join
+        # sides); without a pin each recomputes the whole upstream
+        # signature pipeline.  The checkpointed frame is ids+keys
+        # only — tiny relative to the corpus — and the count() below
+        # materializes it.
         keys = keys.localCheckpoint(eager=False)
         # r10 (guide §2): the grid's explicit partition count is now
         # DERIVED FROM INPUT SIZE instead of pinned to the core count.
@@ -305,7 +310,7 @@ def block_grid_self_join(keys: DataFrame, id_col: str,
                     *key_cols)
     out_cols = ([out_a, out_b] + [an for _, an, _ in carry]
                 + [bn for _, _, bn in carry])
-    if cap is None:
+    if cap is None or n_rows <= cap:
         return (
             a.join(b, list(key_cols))
             .filter(F.col(out_a) < F.col(out_b))
@@ -361,7 +366,11 @@ def lsh_pairs_from_tokens(t: DataFrame,
     Build-time job: ``cands.count()`` (which picks the broadcast hint
     for the first verification join) runs the band join as a Spark
     job while the DataFrame is built, after ``block_grid_self_join``'s
-    own ``keys.count()`` when ``band_cap`` is set.
+    own ``keys.count()`` when ``band_cap`` is set.  Both counts also
+    materialize the checkpoints their consumers read, so they stay on
+    purpose: on the ``curation_queries`` tables a fully lazy build (no
+    counts, with or without the checkpoints) lost more at exec time
+    than it saved at build time.
     """
     sigs = t.groupBy("doc_id").agg(
         *[F.min(F.md5(F.concat(F.lit(f"{s}:"), F.col("token"))))

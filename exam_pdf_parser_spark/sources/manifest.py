@@ -32,8 +32,10 @@ import time
 from pyspark import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from ..core.shard import DEFAULT_SHARD_CHARS
+from ..operators.extract import SHARDED_EXTRACT_SCHEMA
 
 # Single source of truth for the manifest shape: the Spark DDL string
 # and the pyarrow schema used by the atomic local commit are BOTH
@@ -122,6 +124,14 @@ _BATCH_SIZE_CONF = "spark.sql.parquet.columnarReaderBatchSize"
 
 _LOG = logging.getLogger(__name__)
 
+# what run_extraction writes under extracted/: the sharded rows, the
+# per-document timing and the bucket partition column
+EXTRACTED_SCHEMA = StructType(
+    SHARDED_EXTRACT_SCHEMA.fields + [
+        StructField("proc_us", LongType()),
+        StructField("bucket", IntegerType()),
+    ])
+
 
 def read_extracted(spark: SparkSession, out_dir: str,
                    reader_batch_rows: int | None =
@@ -130,16 +140,19 @@ def read_extracted(spark: SparkSession, out_dir: str,
 
     A directory accumulated across runs may MIX pre-shard and sharded
     bucket files (``run_extraction`` gained ``shard_chars`` in round
-    7); plain ``spark.read.parquet`` infers the schema from one
-    arbitrary file footer, which on such a directory can silently
-    drop the ``shard_idx``/``n_shards`` columns — and a downstream
+    7, and ``shard_chars=None`` still writes no shard columns); plain
+    ``spark.read.parquet`` infers the schema from one arbitrary file
+    footer, which on such a directory can silently drop the
+    ``shard_idx``/``n_shards`` columns — and a downstream
     ``reassemble_sharded`` then truncates every sharded document to
-    its first chunk.  This reader merges footers instead
-    (``mergeSchema`` — one extra footer pass, worth it on a possibly
-    mixed directory; a dir written by a single run has a uniform
-    schema and never needs it) and normalizes missing/NULL shard
-    coordinates to ``(0, 1)`` — "this row is the whole document" —
-    so the output is always reassembly-safe.
+    its first chunk.  This reader declares the full written schema
+    instead (:data:`EXTRACTED_SCHEMA`), so no footer is read to build
+    the DataFrame, and a file without shard columns reads them as
+    NULL.  NULL shard coordinates are normalized to ``(0, 1)`` —
+    "this row is the whole document" — so the output is always
+    reassembly-safe.  Build-time job: the listing of the ``bucket=N``
+    directories, which Spark runs as a job once there are more than
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32).
 
     ``reader_batch_rows`` (safe-by-default, round 8): LOWERS the
     session's parquet columnar batch size to this bound if it is
@@ -171,21 +184,13 @@ def read_extracted(spark: SparkSession, out_dir: str,
                 "to %d once extraction reads are acted on)",
                 _BATCH_SIZE_CONF, current, reader_batch_rows, current)
             spark.conf.set(_BATCH_SIZE_CONF, str(reader_batch_rows))
-    df = spark.read.option("mergeSchema", "true").parquet(
+    df = spark.read.schema(EXTRACTED_SCHEMA).parquet(
         os.path.join(out_dir, "extracted"))
-    # normalize unconditionally: consumers always see the shard
-    # coordinates, so a dir with no sharded generation at all (the
-    # common case) feeds reassembly/dedup logic the same shape as a
-    # mixed one — every row (0, 1) = "the whole document"
-    if "shard_idx" in df.columns:
-        df = (df.withColumn(
-                  "shard_idx", F.coalesce("shard_idx", F.lit(0)))
-                .withColumn(
-                  "n_shards", F.coalesce("n_shards", F.lit(1))))
-    else:
-        df = (df.withColumn("shard_idx", F.lit(0))
-                .withColumn("n_shards", F.lit(1)))
-    return df
+    # a dir with no sharded generation at all feeds reassembly/dedup
+    # logic the same shape as a mixed one — every row (0, 1) = "the
+    # whole document"
+    return (df.withColumn("shard_idx", F.coalesce("shard_idx", F.lit(0)))
+              .withColumn("n_shards", F.coalesce("n_shards", F.lit(1))))
 
 
 def _commit_manifest(out_dir: str, run_id: str, rows: list[tuple],
@@ -436,9 +441,10 @@ def run_extraction(
     ``shard_chars=None`` writes the plain EXTRACT_SCHEMA rows with no
     shard columns, for single-footer consumers that cannot read shard
     coordinates.  Read the output via :func:`read_extracted` (a mixed
-    pre-shard/sharded directory needs schema MERGE, not single-footer
-    inference); reassembly = ``operators.extract_paged.reassemble_sharded``
-    over that reader's output; manifest metrics stay per-DOCUMENT
+    pre-shard/sharded directory needs the declared full schema, not
+    single-footer inference); reassembly =
+    ``operators.extract_paged.reassemble_sharded`` over that reader's
+    output; manifest metrics stay per-DOCUMENT
     (docs_in/errors count each input document once, rows_out its
     unsharded span list).
 

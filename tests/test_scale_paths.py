@@ -136,6 +136,31 @@ def test_block_grid_exchanges_resist_aqe_coalescing(spark):
     assert "REPARTITION_BY_COL" not in plan
 
 
+def test_block_grid_skipped_when_no_key_can_be_hot(spark):
+    """At ``n_rows <= cap`` no key can occur more than ``cap`` times,
+    so the guard's grid would be one (0, 0) block repeating the plain
+    join: the plan carries no numbered repartition, and the pairs
+    equal the unguarded join's."""
+    from exam_pdf_parser_spark.operators.dedupe import block_grid_self_join
+
+    sigs = spark.createDataFrame(
+        [(i, 0, i % 3) for i in range(50)],
+        "doc_id: long, table: int, bucket: long")
+
+    def pairs(df):
+        return {(r["a"], r["b"]) for r in df.collect()}
+
+    uncapped = pairs(block_grid_self_join(
+        sigs, "doc_id", ["table", "bucket"], "a", "b", None))
+    assert len(uncapped) == 136 + 136 + 120    # keys of 17, 17, 16 ids
+    for cap in (50, 500):                  # n_rows == cap, n_rows < cap
+        shortcut = block_grid_self_join(
+            sigs, "doc_id", ["table", "bucket"], "a", "b", cap)
+        plan = shortcut._jdf.queryExecution().executedPlan().toString()
+        assert "REPARTITION_BY_NUM" not in plan
+        assert pairs(shortcut) == uncapped
+
+
 def test_simhash_chunk_cap_drops_no_pairs(spark):
     """Same guard, SimHash path: identical docs share every chunk key;
     capped and uncapped pigeonhole joins must emit the same pairs."""
