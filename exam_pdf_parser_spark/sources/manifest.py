@@ -2,12 +2,14 @@
 
 Work is keyed by ``url_bucket = pmod(xxhash64(url), n_buckets)`` — the
 same bucketing an Iceberg table would declare (``bucket(N, url)``).
-A run writes extraction output partitioned by bucket with DYNAMIC
-partition overwrite, then appends one manifest row per completed
-bucket, with stats its extraction tasks tallied as they emitted (no
-read-back).  Crash recovery = anti-join pending buckets against the
-manifest: finished buckets are never recomputed, half-written bucket
-directories are overwritten idempotently on retry.
+A run writes one parquet file per bucket it processed and replaces
+exactly those ``bucket=N`` directories (dynamic-overwrite semantics:
+a bucket the run wrote nothing for is left as it was), then appends
+one manifest row per completed bucket, with stats its extraction
+tasks tallied as they emitted (no read-back).  Crash recovery =
+anti-join pending buckets against the manifest: finished buckets are
+never recomputed, half-written bucket directories are overwritten
+idempotently on retry.
 
 Reference analogues: the resumable job store (src/server.py:52-69),
 batch CSV report (scripts/batch_parser.py:117-127), layout cache
@@ -16,6 +18,9 @@ bucket lineage (SURVEY.md §4 item 2).
 
 Layout:
   {out_dir}/extracted/bucket=<n>/*.parquet   extraction output
+  {out_dir}/_staging-<token>/                a local run's task files
+                                              until the driver renames
+                                              them into extracted/
   {out_dir}/manifest/*.parquet               (run_id, bucket, status,
                                               rows_out, docs_in,
                                               errors, wall_ms)
@@ -121,6 +126,7 @@ def completed_buckets(spark: SparkSession, out_dir: str) -> list[int]:
 # the same scan at a few MB/task with negligible per-batch overhead.
 DEFAULT_READER_BATCH_ROWS = 256
 _BATCH_SIZE_CONF = "spark.sql.parquet.columnarReaderBatchSize"
+_LISTING_CONF = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
 _LOG = logging.getLogger(__name__)
 
@@ -150,9 +156,15 @@ def read_extracted(spark: SparkSession, out_dir: str,
     the DataFrame, and a file without shard columns reads them as
     NULL.  NULL shard coordinates are normalized to ``(0, 1)`` —
     "this row is the whole document" — so the output is always
-    reassembly-safe.  Build-time job: the listing of the ``bucket=N``
-    directories, which Spark runs as a job once there are more than
-    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32).
+    reassembly-safe.  Building the DataFrame starts no Spark job: for a
+    local ``out_dir`` the ``bucket=N`` directories are listed on the
+    driver.  Spark lists them with a job once there are more than
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32), so
+    the threshold is raised around the ``.parquet()`` call and restored
+    after it.  That window is not thread-safe: a DataFrame another
+    thread builds in the same session meanwhile lists serially too.  A
+    ``"://"`` path keeps Spark's listing job, which spreads a remote
+    store's per-directory LIST latency over tasks.
 
     ``reader_batch_rows`` (safe-by-default, round 8): LOWERS the
     session's parquet columnar batch size to this bound if it is
@@ -184,8 +196,17 @@ def read_extracted(spark: SparkSession, out_dir: str,
                 "to %d once extraction reads are acted on)",
                 _BATCH_SIZE_CONF, current, reader_batch_rows, current)
             spark.conf.set(_BATCH_SIZE_CONF, str(reader_batch_rows))
-    df = spark.read.schema(EXTRACTED_SCHEMA).parquet(
-        os.path.join(out_dir, "extracted"))
+    reader = spark.read.schema(EXTRACTED_SCHEMA)
+    path = os.path.join(out_dir, "extracted")
+    if "://" in out_dir:
+        df = reader.parquet(path)
+    else:
+        prev = spark.conf.get(_LISTING_CONF)
+        spark.conf.set(_LISTING_CONF, str(2**31 - 1))
+        try:
+            df = reader.parquet(path)
+        finally:
+            spark.conf.set(_LISTING_CONF, prev)
     # a dir with no sharded generation at all feeds reassembly/dedup
     # logic the same shape as a mixed one — every row (0, 1) = "the
     # whole document"
@@ -400,6 +421,96 @@ def _compact_if_due(out_dir: str, compact_after: int | None) -> dict | None:
     return compact_manifest(out_dir) if n_files > compact_after else None
 
 
+def _bucket_file_writer(staging: str):
+    """The ``mapInArrow`` function of a local write: rows arrive
+    sorted by ``bucket``, and each bucket's run of rows goes to one
+    parquet file, written with pyarrow under the task attempt's own
+    directory in ``staging``, without the ``bucket`` column (the
+    directory name carries it).  One ``ParquetWriter`` is open at a
+    time.  Yields one ``(bucket, path)`` row per file written."""
+
+    def write(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        # taskAttemptId is unique in the application, so a retried,
+        # speculative or resubmitted attempt never shares a directory
+        task_dir = os.path.join(
+            staging, f"{ctx.partitionId()}-{ctx.taskAttemptId()}")
+        written: list[tuple[int, str]] = []
+        writer = None
+        try:
+            for rb in batches:
+                runs = pc.run_end_encode(rb.column("bucket"))
+                data = rb.drop_columns(["bucket"])
+                start = 0
+                for end, b in zip(runs.run_ends.to_pylist(),
+                                  runs.values.to_pylist()):
+                    if not written or written[-1][0] != b:
+                        if writer is not None:
+                            writer.close()
+                        os.makedirs(task_dir, exist_ok=True)
+                        path = os.path.join(task_dir, f"bucket-{b}.parquet")
+                        writer = pq.ParquetWriter(path, data.schema)
+                        written.append((b, path))
+                    writer.write_batch(data.slice(start, end - start))
+                    start = end
+        finally:
+            if writer is not None:
+                writer.close()
+        if written:
+            buckets, paths = zip(*written)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(buckets, pa.int32()), pa.array(paths)],
+                names=["bucket", "path"])
+
+    return write
+
+
+def _write_buckets(out: DataFrame, out_dir: str) -> None:
+    """Write ``out`` (rows with a ``bucket`` column) as one parquet file
+    per bucket under ``{out_dir}/extracted/bucket=N``, replacing only
+    the buckets that have rows.
+
+    A ``"://"`` out_dir goes through Spark's writer with dynamic
+    partition overwrite.  A local one is written by the tasks with
+    pyarrow (:func:`_bucket_file_writer`) into a staging directory and
+    committed by the driver: for each ``(bucket, path)`` a successful
+    task reported, the old bucket directory is removed and the file is
+    renamed into a fresh one.  A failed attempt's partial file is never
+    reported, so it is never committed.  No file goes through Hadoop's
+    FileSystem, so none gets a ``.crc`` sidecar or a permission call
+    (which forks ``chmod`` per file on a host without ``libhadoop``).
+    Like :func:`_commit_manifest`, this assumes a path without a scheme
+    is a POSIX filesystem the executors share with the driver."""
+    import shutil
+    import uuid
+
+    ext = os.path.join(out_dir, "extracted")
+    by_bucket = out.repartition(F.col("bucket"))
+    if "://" in out_dir:
+        (by_bucket.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket").parquet(ext))
+        return
+    token = uuid.uuid4().hex[:12]
+    staging = os.path.join(os.path.abspath(out_dir), f"_staging-{token}")
+    files = (by_bucket.sortWithinPartitions("bucket")
+             .mapInArrow(_bucket_file_writer(staging),
+                         "bucket int, path string")
+             .collect())
+    for b, path in files:
+        bdir = os.path.join(ext, f"bucket={b}")
+        shutil.rmtree(bdir, ignore_errors=True)
+        os.makedirs(bdir)
+        os.rename(path, os.path.join(bdir, f"part-{token}.parquet"))
+    shutil.rmtree(staging, ignore_errors=True)
+    os.makedirs(ext, exist_ok=True)
+
+
 def run_extraction(
     spark: SparkSession,
     documents: DataFrame,
@@ -413,8 +524,8 @@ def run_extraction(
     """Execute (or resume) a bucketed extraction run.
 
     Returns summary stats.  Idempotent per bucket: rerunning after a
-    crash only processes buckets absent from the manifest, and dynamic
-    partition overwrite replaces any half-written bucket dirs.  A run
+    crash only processes buckets absent from the manifest, and the
+    write replaces any half-written dir of a bucket it writes.  A run
     with no pending bucket in scope returns right after the manifest
     read (``buckets_processed == 0``, ``wall_ms == 0``): no extraction
     plan is built and no write job runs; only the ``compact_after``
@@ -422,14 +533,23 @@ def run_extraction(
 
     The plan is scan → one ``mapInArrow`` extraction
     (``extract_paged.extract_auto``) → one exchange keyed by bucket →
-    write.  AQE sizes the write from the session's shuffle partitions:
-    one parquet file per ``bucket=N`` directory, with as many write
-    tasks as the data needs rather than one per bucket.  A giant
-    document is extracted in place like any other, and its ``proc_us``
-    is its whole extraction time.  The manifest rows are summed from
-    what the extraction tasks tallied (:class:`PartitionTally`) once
-    the write returns; nothing is read back, so a fresh full run starts
-    two Spark jobs: the exchange's map stage and the write.
+    write.  For a local ``out_dir`` the write is a sort by bucket
+    within each task and a second ``mapInArrow`` that writes each
+    bucket's rows to one parquet file with pyarrow; the driver
+    collects one ``(bucket, path)`` row per file and renames the files
+    into their ``bucket=N`` directories, replacing only those buckets
+    (see :func:`_write_buckets`; this assumes a path without a scheme
+    is a POSIX filesystem the executors share with the driver).  A
+    ``"://"`` out_dir is written by Spark's writer with dynamic
+    partition overwrite, set on the write, not on the session.  AQE
+    sizes the write from the session's shuffle partitions: one parquet
+    file per ``bucket=N`` directory, with as many write tasks as the
+    data needs rather than one per bucket.  A giant document is
+    extracted in place like any other, and its ``proc_us`` is its whole
+    extraction time.  The manifest rows are summed from what the
+    extraction tasks tallied (:class:`PartitionTally`) once the write
+    returns; nothing is read back, so a fresh full run starts two Spark
+    jobs: the exchange's map stage and the write.
 
     ``shard_chars`` (default ``core.shard.DEFAULT_SHARD_CHARS``) bounds
     every output ROW: documents whose extracted text / span list
@@ -478,7 +598,6 @@ def run_extraction(
                 f"range(n_buckets={n_buckets}) — a silent intersect "
                 "here would quietly shrink the backfill")
     _check_run_meta(out_dir, n_buckets)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     docs = with_bucket(documents, n_buckets)
 
     done = set(completed_buckets(spark, out_dir))
@@ -508,19 +627,16 @@ def run_extraction(
     # instead of joining back to the input.  The exchange is keyed by
     # bucket with no partition count; AQE only ever COALESCES such an
     # exchange, so each bucket's rows land in one task (which may write
-    # several bucket dirs) and partitionBy writes one file per dir.
+    # several bucket dirs) and the write makes one file per dir.
     from ..operators.extract_paged import extract_auto
     tally = spark.sparkContext.accumulator({}, PartitionTally())
     extracted = extract_auto(pending, with_timing=True,
                              shard_chars=shard_chars, tally=tally)
-    out = with_bucket(extracted, n_buckets)
-    (out.repartition(F.col("bucket")).write.mode("overwrite")
-        .partitionBy("bucket").parquet(os.path.join(out_dir, "extracted")))
+    _write_buckets(with_bucket(extracted, n_buckets), out_dir)
     wall_ms = int((time.perf_counter() - t0) * 1000)
 
     # per-bucket [docs, spans, errors, proc_us] from the tally: the
-    # write succeeded and dynamic overwrite replaced exactly these
-    # buckets' dirs, so the stats describe what is durable.  A pending
+    # write succeeded and replaced exactly these buckets' dirs, so the stats describe what is durable.  A pending
     # bucket with no documents gets a zero-row entry so resume never
     # revisits it.  wall_ms is the RUN wall stamped on each of its
     # bucket rows; cpu_ms and docs_per_cpu_sec are per bucket.

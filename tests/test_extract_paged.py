@@ -85,27 +85,27 @@ def test_extract_auto_plan_is_one_map_in_arrow(spark):
 
 def test_run_extraction_write_plan_has_one_bucket_exchange(
         spark, tmp_path, monkeypatch):
-    """``run_extraction``'s write is scan → ``mapInArrow`` → ONE
-    exchange, keyed by bucket → write."""
-    from pyspark.sql.readwriter import DataFrameWriter
-
+    """``run_extraction``'s write is scan → ``mapInArrow`` extraction →
+    ONE exchange, keyed by bucket → ``mapInArrow`` file writer, whose
+    rows the driver collects."""
     from exam_pdf_parser_spark.sources.manifest import run_extraction
 
-    written = []
-    parquet = DataFrameWriter.parquet
-
-    def recording(self, *a, **k):
-        written.append(_plan(self._df))
-        return parquet(self, *a, **k)
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", recording)
     docs = corpus_df(spark, 6, partitions=2)
+    frame = type(docs)
+    written = []
+    collect = frame.collect
+
+    def recording(self):
+        written.append(_plan(self))
+        return collect(self)
+
+    monkeypatch.setattr(frame, "collect", recording)
     run_extraction(spark, docs, str(tmp_path / "run"), "plan", n_buckets=4)
     assert len(written) == 1
     plan = written[0]
     assert plan.count("Exchange") == 1, plan
     assert "Exchange hashpartitioning(bucket#" in plan, plan
-    assert plan.count("MapInArrow") == 1, plan
+    assert plan.count("MapInArrow") == 2, plan
     for node in ("InMemoryTableScan", "Union", "FlatMapGroupsInPandas"):
         assert node not in plan, (node, plan)
 

@@ -136,7 +136,7 @@ def test_killed_run_never_marks_done_without_data(spark, out_dir,
     real_rename = os.rename
 
     def killed_rename(src, dst):
-        if "manifest" in str(dst):
+        if f"{os.sep}manifest{os.sep}" in str(dst):
             raise OSError("simulated kill mid manifest commit")
         return real_rename(src, dst)
 
@@ -913,3 +913,135 @@ def test_run_extraction_starts_one_job_and_its_write(spark, out_dir):
     noop = jobs(lambda: run_extraction(spark, docs, out_dir, "noop",
                                        n_buckets=N_BUCKETS))
     assert noop == 0, noop
+
+
+def test_read_extracted_builds_without_a_listing_job(spark, out_dir):
+    """Past ``parallelPartitionDiscovery.threshold`` (32) bucket dirs,
+    Spark lists a directory with a job; ``read_extracted`` lists a
+    local one on the driver, so building the reader starts no job and
+    a full read is one scan job.  The session threshold is restored."""
+    import os
+    import uuid
+
+    conf = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    before = spark.conf.get(conf)
+    run_extraction(spark, corpus_df(spark, 150, partitions=4), out_dir,
+                   "wide", n_buckets=64)
+    n_dirs = len(os.listdir(os.path.join(out_dir, "extracted")))
+    assert n_dirs > int(before), n_dirs
+    sc = spark.sparkContext
+
+    def jobs(fn) -> int:
+        group = f"job-count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    built = []
+    assert jobs(lambda: built.append(read_extracted(spark, out_dir))) == 0
+    assert spark.conf.get(conf) == before
+    assert jobs(lambda: built[0].write.format("noop")
+                .mode("overwrite").save()) == 1
+
+
+def test_local_write_replaces_only_the_buckets_it_writes(spark, out_dir):
+    """A local run commits each bucket file it wrote by rename into a
+    fresh ``bucket=N`` dir: a stale file in a pending bucket's dir is
+    gone, a done bucket's file is untouched, nothing goes through
+    Hadoop (no ``.crc`` sidecar), the run's staging dir is removed and
+    another run's leftover staging dir is neither read nor touched."""
+    import os
+
+    docs = corpus_df(spark, N_DOCS, partitions=4)
+    run_extraction(spark, docs, out_dir, "first", n_buckets=N_BUCKETS,
+                   buckets=[0, 1, 2, 3])
+    ext = os.path.join(out_dir, "extracted")
+    (done_name,) = os.listdir(os.path.join(ext, "bucket=0"))
+    done_file = os.path.join(ext, "bucket=0", done_name)
+    mtime = os.stat(done_file).st_mtime_ns
+    stale_dir = os.path.join(ext, "bucket=5")
+    os.makedirs(stale_dir)
+    shutil.copy(done_file, os.path.join(stale_dir, "part-x.parquet"))
+    old_staging = os.path.join(out_dir, "_staging-old", "0-0")
+    os.makedirs(old_staging)
+    shutil.copy(done_file, os.path.join(old_staging, "bucket-5.parquet"))
+
+    s = run_extraction(spark, docs, out_dir, "rest", n_buckets=N_BUCKETS)
+    assert s["buckets_processed"] == N_BUCKETS - 4
+    (new_name,) = os.listdir(stale_dir)
+    assert new_name != "part-x.parquet" and new_name.endswith(".parquet")
+    assert os.stat(done_file).st_mtime_ns == mtime
+    crc = [f for _, _, fs in os.walk(ext) for f in fs if f.endswith(".crc")]
+    assert crc == []
+    assert sorted(os.listdir(out_dir)) == [
+        "_staging-old", "extracted", "manifest", "run_meta.json"]
+    assert os.listdir(old_staging) == ["bucket-5.parquet"]
+    urls = [r["url"] for r in read_extracted(spark, out_dir)
+            .select("url").collect()]
+    assert len(urls) == len(set(urls)) == N_DOCS
+
+
+def test_resume_across_spark_and_local_writers(spark, out_dir):
+    """Buckets written through a ``file://`` URI (Spark's writer) and
+    the rest resumed through the plain local path read back as one
+    table: sharded rows reassemble to ``extract()``, and only the
+    local write is free of Hadoop's ``.crc`` sidecars."""
+    import os
+
+    from exam_pdf_parser_spark.operators.extract import extract
+    from exam_pdf_parser_spark.operators.extract_paged import (
+        reassemble_sharded,
+    )
+
+    docs = corpus_df(spark, N_DOCS, partitions=4)
+    first = [0, 1, 2, 3]
+    run_extraction(spark, docs, f"file://{out_dir}", "spark-writer",
+                   n_buckets=N_BUCKETS, shard_chars=2_000, buckets=first)
+    s = run_extraction(spark, docs, out_dir, "local-writer",
+                       n_buckets=N_BUCKETS, shard_chars=2_000)
+    assert (s["buckets_processed"], s["buckets_skipped"]) == (4, 4)
+
+    ext = os.path.join(out_dir, "extracted")
+    for b in range(N_BUCKETS):
+        crc = [f for f in os.listdir(os.path.join(ext, f"bucket={b}"))
+               if f.endswith(".crc")]
+        assert bool(crc) == (b in first), (b, crc)
+    rx = read_extracted(spark, out_dir)
+    assert rx.filter("n_shards > 1").count() > 0
+    back = {r["url"]: r for r in reassemble_sharded(
+        rx.drop("proc_us", "bucket")).collect()}
+    want = {r["url"]: r for r in extract(docs).collect()}
+    assert set(back) == set(want)
+    for url, w in want.items():
+        assert back[url]["extracted_text"] == w["extracted_text"], url
+        assert back[url]["status"] == w["status"], url
+        assert [x.asDict() for x in back[url]["spans"]] == \
+               [x.asDict() for x in w["spans"]], url
+
+
+def test_run_extraction_leaves_session_overwrite_mode_alone(spark,
+                                                            out_dir):
+    """Neither writer changes the session's partition overwrite mode,
+    and a ``"://"`` run still overwrites dynamically under a STATIC
+    session: a second slice run keeps the first slice's buckets."""
+    import os
+
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "STATIC")
+    try:
+        docs = corpus_df(spark, 20, partitions=2)
+        run_extraction(spark, docs, os.path.join(out_dir, "local"), "l",
+                       n_buckets=4)
+        assert spark.conf.get(conf) == "STATIC"
+        uri = f"file://{os.path.join(out_dir, 'uri')}"
+        run_extraction(spark, docs, uri, "u0", n_buckets=4, buckets=[0, 1])
+        run_extraction(spark, docs, uri, "u1", n_buckets=4)
+        assert spark.conf.get(conf) == "STATIC"
+    finally:
+        spark.conf.set(conf, prev)
+    assert read_extracted(spark, uri).count() == 20
