@@ -32,6 +32,7 @@ import json
 import logging
 import os
 import re
+import threading
 import time
 
 from pyspark import AccumulatorParam
@@ -127,6 +128,7 @@ def completed_buckets(spark: SparkSession, out_dir: str) -> list[int]:
 DEFAULT_READER_BATCH_ROWS = 256
 _BATCH_SIZE_CONF = "spark.sql.parquet.columnarReaderBatchSize"
 _LISTING_CONF = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_LISTING_LOCK = threading.Lock()
 
 _LOG = logging.getLogger(__name__)
 
@@ -156,15 +158,16 @@ def read_extracted(spark: SparkSession, out_dir: str,
     the DataFrame, and a file without shard columns reads them as
     NULL.  NULL shard coordinates are normalized to ``(0, 1)`` —
     "this row is the whole document" — so the output is always
-    reassembly-safe.  Building the DataFrame starts no Spark job: for a
-    local ``out_dir`` the ``bucket=N`` directories are listed on the
-    driver.  Spark lists them with a job once there are more than
+    reassembly-safe.  Building the DataFrame starts no Spark job: the
+    ``bucket=N`` directories are listed on the driver.  Spark lists
+    them with a job once there are more than
     ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32), so
     the threshold is raised around the ``.parquet()`` call and restored
     after it.  That window is not thread-safe: a DataFrame another
-    thread builds in the same session meanwhile lists serially too.  A
-    ``"://"`` path keeps Spark's listing job, which spreads a remote
-    store's per-directory LIST latency over tasks.
+    thread builds in the same session meanwhile lists on the driver
+    too.  Concurrent ``read_extracted`` calls take the window one at a
+    time (a module lock), so none of them restores another's raised
+    value and leaves it behind.
 
     ``reader_batch_rows`` (safe-by-default, round 8): LOWERS the
     session's parquet columnar batch size to this bound if it is
@@ -198,9 +201,7 @@ def read_extracted(spark: SparkSession, out_dir: str,
             spark.conf.set(_BATCH_SIZE_CONF, str(reader_batch_rows))
     reader = spark.read.schema(EXTRACTED_SCHEMA)
     path = os.path.join(out_dir, "extracted")
-    if "://" in out_dir:
-        df = reader.parquet(path)
-    else:
+    with _LISTING_LOCK:
         prev = spark.conf.get(_LISTING_CONF)
         spark.conf.set(_LISTING_CONF, str(2**31 - 1))
         try:
@@ -481,9 +482,11 @@ def _write_buckets(out: DataFrame, out_dir: str) -> None:
     committed by the driver: for each ``(bucket, path)`` a successful
     task reported, the old bucket directory is removed and the file is
     renamed into a fresh one.  A failed attempt's partial file is never
-    reported, so it is never committed.  No file goes through Hadoop's
-    FileSystem, so none gets a ``.crc`` sidecar or a permission call
-    (which forks ``chmod`` per file on a host without ``libhadoop``).
+    reported, so it is never committed, and the staging directory is
+    removed whether the write succeeds or fails.  No file goes through
+    Hadoop's FileSystem, so none gets a ``.crc`` sidecar or a
+    permission call (which forks ``chmod`` per file on a host without
+    ``libhadoop``).
     Like :func:`_commit_manifest`, this assumes a path without a scheme
     is a POSIX filesystem the executors share with the driver."""
     import shutil
@@ -498,16 +501,20 @@ def _write_buckets(out: DataFrame, out_dir: str) -> None:
         return
     token = uuid.uuid4().hex[:12]
     staging = os.path.join(os.path.abspath(out_dir), f"_staging-{token}")
-    files = (by_bucket.sortWithinPartitions("bucket")
-             .mapInArrow(_bucket_file_writer(staging),
-                         "bucket int, path string")
-             .collect())
-    for b, path in files:
-        bdir = os.path.join(ext, f"bucket={b}")
-        shutil.rmtree(bdir, ignore_errors=True)
-        os.makedirs(bdir)
-        os.rename(path, os.path.join(bdir, f"part-{token}.parquet"))
-    shutil.rmtree(staging, ignore_errors=True)
+    try:
+        files = (by_bucket.sortWithinPartitions("bucket")
+                 .mapInArrow(_bucket_file_writer(staging),
+                             "bucket int, path string")
+                 .collect())
+        for b, path in files:
+            bdir = os.path.join(ext, f"bucket={b}")
+            shutil.rmtree(bdir, ignore_errors=True)
+            os.makedirs(bdir)
+            os.rename(path, os.path.join(bdir, f"part-{token}.parquet"))
+    finally:
+        # a failed write leaves its attempts' files here; remove them
+        # as Spark's writer removes its _temporary dir on abort
+        shutil.rmtree(staging, ignore_errors=True)
     os.makedirs(ext, exist_ok=True)
 
 

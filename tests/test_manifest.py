@@ -25,6 +25,22 @@ def out_dir():
     shutil.rmtree(d, ignore_errors=True)
 
 
+def _jobs(sc, fn) -> int:
+    """The number of Spark jobs ``fn()`` starts."""
+    import uuid
+
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    # job-start events reach the status store through the async
+    # listener bus: drain it before counting
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_run_then_resume_noop(spark, out_dir):
     docs = corpus_df(spark, N_DOCS, partitions=4)
     s1 = run_extraction(spark, docs, out_dir, "run1", n_buckets=N_BUCKETS)
@@ -890,28 +906,13 @@ def test_run_extraction_starts_one_job_and_its_write(spark, out_dir):
     """A fresh full run is the exchange's map stage (the extraction)
     and the write — at most 2 Spark jobs, nothing read back — and a
     no-op resume starts none."""
-    import uuid
-
     sc = spark.sparkContext
-
-    def jobs(fn) -> int:
-        group = f"job-count-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-        finally:
-            sc._jsc.clearJobGroup()
-        # job-start events reach the status store through the async
-        # listener bus: drain it before counting
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
     docs = corpus_df(spark, N_DOCS, partitions=4)
-    fresh = jobs(lambda: run_extraction(spark, docs, out_dir, "fresh",
-                                        n_buckets=N_BUCKETS))
+    fresh = _jobs(sc, lambda: run_extraction(spark, docs, out_dir, "fresh",
+                                             n_buckets=N_BUCKETS))
     assert 0 < fresh <= 2, fresh
-    noop = jobs(lambda: run_extraction(spark, docs, out_dir, "noop",
-                                       n_buckets=N_BUCKETS))
+    noop = _jobs(sc, lambda: run_extraction(spark, docs, out_dir, "noop",
+                                            n_buckets=N_BUCKETS))
     assert noop == 0, noop
 
 
@@ -921,7 +922,6 @@ def test_read_extracted_builds_without_a_listing_job(spark, out_dir):
     local one on the driver, so building the reader starts no job and
     a full read is one scan job.  The session threshold is restored."""
     import os
-    import uuid
 
     conf = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     before = spark.conf.get(conf)
@@ -930,22 +930,52 @@ def test_read_extracted_builds_without_a_listing_job(spark, out_dir):
     n_dirs = len(os.listdir(os.path.join(out_dir, "extracted")))
     assert n_dirs > int(before), n_dirs
     sc = spark.sparkContext
-
-    def jobs(fn) -> int:
-        group = f"job-count-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-        finally:
-            sc._jsc.clearJobGroup()
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
     built = []
-    assert jobs(lambda: built.append(read_extracted(spark, out_dir))) == 0
+    assert _jobs(sc, lambda: built.append(
+        read_extracted(spark, out_dir))) == 0
     assert spark.conf.get(conf) == before
-    assert jobs(lambda: built[0].write.format("noop")
-                .mode("overwrite").save()) == 1
+    assert _jobs(sc, lambda: built[0].write.format("noop")
+                 .mode("overwrite").save()) == 1
+
+
+def test_failed_local_write_leaves_no_staging_dir(spark, out_dir,
+                                                  monkeypatch):
+    """A writer task that fails after writing bucket files fails the
+    run; the files it staged are removed, none is committed to
+    ``extracted/`` and no bucket is marked done."""
+    import os
+
+    import exam_pdf_parser_spark.sources.manifest as mf
+
+    real_writer = mf._bucket_file_writer
+
+    def failing_writer(staging):
+        write = real_writer(staging)
+
+        def fail_after_writing(batches):
+            yield from write(batches)
+            raise RuntimeError("planted writer failure")
+
+        return fail_after_writing
+
+    monkeypatch.setattr(mf, "_bucket_file_writer", failing_writer)
+    docs = corpus_df(spark, N_DOCS, partitions=4)
+    # one writer task: no other attempt is still writing into the
+    # staging dir when the failed job returns to the driver
+    conf = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "1")
+    try:
+        with pytest.raises(Exception, match="planted writer failure"):
+            run_extraction(spark, docs, out_dir, "failed",
+                           n_buckets=N_BUCKETS)
+    finally:
+        spark.conf.set(conf, prev)
+    assert [f for f in os.listdir(out_dir)
+            if f.startswith("_staging-")] == []
+    ext = os.path.join(out_dir, "extracted")
+    assert not os.path.isdir(ext) or os.listdir(ext) == []
+    assert completed_buckets(spark, out_dir) == []
 
 
 def test_local_write_replaces_only_the_buckets_it_writes(spark, out_dir):
